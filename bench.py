@@ -312,11 +312,11 @@ def run_sweep(spark, sf_dir: str, names, plan_fn, sf) -> dict:
     the totals as ambient-noise-suspect (read with BASELINE.md's
     s-per-calib ledger; never compare absolute seconds across
     rounds). A per-query second pass within one session is
-    deliberately NOT taken: the dedup/graph families memoize within
-    a session, so warm reps measure cache hits, not plans — the
-    drift retry in main() cycles the SparkSession instead, which
-    evicts those per-session memos (graph_queries._EDGE_MEMO et al
-    key on the session object)."""
+    deliberately NOT taken: the dedup/graph families reuse persisted
+    intermediates within a session, so warm reps measure cache hits,
+    not plans — the drift retry in main() cycles the SparkSession
+    instead, which evicts them (catalog.cached keys on the session
+    object)."""
     load_start = _loadavg_1m()
     # warmup: JVM/codegen/parquet footer caches
     materialize(plan_fn(names[0])(spark, sf_dir))

@@ -15,6 +15,7 @@ same names SQL-side.
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,39 +42,72 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Session-keyed LAZY reader memo — the engine's catalog. One
-# ``spark.read.parquet`` costs ~150 ms of driver-side work (file
-# listing, footer read, schema resolution) and the query surface
-# re-loads the same ten immutable tables hundreds of times per session
-# (~27 s of a 91-query bench sweep, r17 measurement). A real engine
-# resolves a table through its metastore once; this memo is that, and
-# nothing more: the cached object is an UNMATERIALIZED DataFrame —
-# no rows are computed or pinned, every query still executes from the
-# parquet inputs. Keyed on session IDENTITY (the bench's drift retry
-# cycles the SparkSession precisely to evict per-session memos) and
-# bounded FIFO so long-lived multi-corpus processes can't accrete
-# entries. Safe because the sf corpora are immutable once generated
-# (generation happens in a subprocess before any load; the committed
-# testdata is read-only).
-_READER_MEMO: list[tuple[SparkSession, str, dict[str, DataFrame]]] = []
-_READER_MEMO_MAX = 8
+# The session cache: the one place the engine keeps state across the
+# queries of a session. Lazy table readers, persisted intermediates a
+# query family shares, and profiled table statistics all live here,
+# each under a name. Invariants:
+# - a key holds ONE value, built for one (session, sf_dir); asking for
+#   it under another session or directory replaces it, so a process
+#   cycling sessions or corpora pins at most one value per key. Keys
+#   hold the session strongly (every cached DataFrame does anyway), and
+#   cycling the session is how the bench's drift retry empties it.
+# - replacing a value unpersists it and drops every entry naming its
+#   key in ``deps``, transitively: a frame derived from a persisted
+#   parent never outlives it, nor pins blocks of a stale corpus.
+# - cached frames use persist(), never a checkpoint, so a lost block is
+#   recomputed from lineage instead of failing every later query. After
+#   spark.catalog.clearCache() the entries stay, and their frames
+#   recompute on every use until a replacement persists them again.
+# Safe because the sf corpora are immutable once generated.
+_CACHE: dict[str, tuple[SparkSession, str, Any, tuple[str, ...]]] = {}
+
+
+def cached(
+    spark: SparkSession,
+    sf_dir: str,
+    key: str,
+    build: Callable[[], Any],
+    deps: tuple[str, ...] = (),
+) -> Any:
+    """The value ``build()`` returns, built once per (session, sf_dir).
+    ``deps`` names the keys the value was derived from."""
+    entry = _CACHE.get(key)
+    if entry is not None and entry[0] is spark and entry[1] == sf_dir:
+        return entry[2]
+    _evict(key)
+    value = build()
+    _CACHE[key] = (spark, sf_dir, value, tuple(deps))
+    return value
+
+
+def _evict(key: str) -> None:
+    entry = _CACHE.pop(key, None)
+    if entry is None:
+        return
+    value = entry[2]
+    for df in value if isinstance(value, tuple) else (value,):
+        # only frames this cache persisted: unpersisting a plain frame
+        # would drop any cached plan it happens to match
+        if isinstance(df, DataFrame) and df.is_cached:
+            try:
+                df.unpersist()
+            except Exception:
+                pass  # a stopped session can't (and needn't) unpersist
+    for dependent in [k for k, e in _CACHE.items() if key in e[3]]:
+        _evict(dependent)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table as a lazy DataFrame. One ``spark.read.parquet`` costs
+    ~150 ms of driver-side listing, footer and schema work, and the
+    query surface loads the same ten tables hundreds of times per
+    session, so the reader is cached the way a metastore resolves a
+    table once. No rows are computed or pinned."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    for sess, cached_dir, tables in _READER_MEMO:
-        if sess is spark and cached_dir == sf_dir:
-            df = tables.get(name)
-            if df is None:
-                df = _read_table(spark, sf_dir, name)
-                tables[name] = df
-            return df
-    df = _read_table(spark, sf_dir, name)
-    _READER_MEMO.append((spark, sf_dir, {name: df}))
-    if len(_READER_MEMO) > _READER_MEMO_MAX:
-        del _READER_MEMO[0]
-    return df
+    return cached(
+        spark, sf_dir, f"table:{name}", lambda: _read_table(spark, sf_dir, name)
+    )
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

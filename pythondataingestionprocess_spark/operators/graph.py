@@ -106,11 +106,11 @@ def _closed_triangles(edges: DataFrame, materialize):
       here.
     - ``"persist"`` — lazy StorageLevel caching with RECOMPUTABLE
       lineage for deg (the caller persists ``closed`` and brings its
-      own persisted edges). The session-memo path
+      own persisted edges). The session-cache path
       (plans/graph_queries._graph_chain): cached frames OUTLIVE the
       query there, and a checkpoint's severed lineage would make any
       lost block unrecoverable for every later graph query in the
-      session (r18, per the r7 _EDGE_MEMO rationale / r17 ADVICE).
+      session.
       ``oriented`` is deliberately NOT cached: both wedge sides read
       it, but it is one cheap projection over the cached edges+deg
       join, and skipping the cache avoids a third block set and the

@@ -14,20 +14,18 @@ mergeable sketch state, constant per-task memory, declared rank-error
 bound — but it is NOT bit-identical to the exact interpolation, so a
 query whose oracle demands exact values cannot switch unconditionally.
 
-``choose_quantile_form`` resolves the trade the same way
-``containment_pairs_auto`` does for the shingle self-join: profile the
-data with one cheap aggregate (the deciding statistic lives in the
-DATA — max per-group value count — where Catalyst's stats cannot see
-it), then pick the physical form. Below the limit the exact aggregate
-runs and matches the oracle bit-for-bit; above it the sketch runs and
-the single-buffer plan is never built. The profile pass is map-side
-partial-aggregated (a count shuffle of |groups| rows), trivially
-amortized against the percentile pass it guards.
+``max_group_count`` + ``choose_quantile_form`` resolve the trade the
+same way ``containment_pairs_auto`` does for the shingle self-join:
+profile the data with one cheap aggregate (the deciding statistic
+lives in the DATA — max per-group value count — where Catalyst's stats
+cannot see it), then pick the physical form. Below the limit the exact
+aggregate runs and matches the oracle bit-for-bit; above it the sketch
+runs and the single-buffer plan is never built. The profile pass is
+map-side partial-aggregated (a count shuffle of |groups| rows),
+trivially amortized against the percentile pass it guards.
 """
 
 from __future__ import annotations
-
-import weakref
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,33 +45,13 @@ EXACT_VALUE_LIMIT = 20_000_000
 SKETCH_ACCURACY = 10_000
 
 
-def choose_quantile_form(
-    df: DataFrame,
-    value_col: str,
-    group_cols: tuple[str, ...] = (),
-    exact_limit: int | None = None,
-) -> str:
-    """``"exact"`` when the largest percentile group holds at most
-    ``exact_limit`` non-null values (module EXACT_VALUE_LIMIT when
-    None — resolved at call time so tests can lower it), else
-    ``"sketch"``. One profiling aggregate; the returned scalar is
-    metadata-sized."""
-    if exact_limit is None:
-        exact_limit = EXACT_VALUE_LIMIT
-    key = (weakref.ref(df), value_col, tuple(group_cols), exact_limit)
-    # weakref entries (r17 ADVICE): a strong DataFrame reference here
-    # pinned dead sessions (transitively, via the frame) until 16
-    # newer entries pushed them out; dead refs are swept on every
-    # lookup instead. Identity semantics are unchanged — ref() returns
-    # the SAME object the catalog memo hands out, or None once it is
-    # collected (and a collected frame can never be looked up again).
-    _FORM_MEMO[:] = [e for e in _FORM_MEMO if e[0][0]() is not None]
-    for cached_key, cached_form in _FORM_MEMO:
-        if (
-            cached_key[0]() is df
-            and cached_key[1:] == key[1:]
-        ):
-            return cached_form
+def max_group_count(
+    df: DataFrame, value_col: str, group_cols: tuple[str, ...] = ()
+) -> int:
+    """Non-null ``value_col`` values in the largest percentile group
+    (the whole frame when ``group_cols`` is empty). One profiling
+    aggregate; the result is a table statistic, so plan call sites keep
+    it in the session cache instead of re-running the count job."""
     counted = df.filter(F.col(value_col).isNotNull())
     if group_cols:
         per_group = counted.groupBy(*group_cols).agg(
@@ -82,28 +60,17 @@ def choose_quantile_form(
         row = per_group.agg(F.max("n").alias("n")).first()
     else:
         row = counted.agg(F.count(F.lit(1)).alias("n")).first()
-    n = row["n"] if row and row["n"] is not None else 0
-    form = "exact" if n <= exact_limit else "sketch"
-    _FORM_MEMO.append((key, form))
-    if len(_FORM_MEMO) > _FORM_MEMO_MAX:
-        del _FORM_MEMO[0]
-    return form
+    return row["n"] if row and row["n"] is not None else 0
 
 
-# Profiling-count memo — TABLE STATISTICS, not result caching: the
-# chooser's output is a metadata scalar derived from an immutable
-# table's row counts, exactly what an engine reads from its metastore
-# stats instead of re-running a count job per query (r17 optimization;
-# one count job per bench invocation of each quantile-form face).
-# Keyed on DataFrame IDENTITY (the catalog's session-keyed reader memo
-# returns the same lazy frame per (session, sf_dir, table), so
-# identity keys both the session and the data); a derived or
-# ad-hoc frame is a fresh object and always re-profiles. Bounded FIFO;
-# the DataFrame key rides a WEAKREF (r17 ADVICE) so a dead entry
-# never pins its frame or session, and collected entries are swept on
-# lookup.
-_FORM_MEMO: list[tuple[tuple, str]] = []
-_FORM_MEMO_MAX = 16
+def choose_quantile_form(n: int, exact_limit: int | None = None) -> str:
+    """``"exact"`` when the largest percentile group holds at most
+    ``exact_limit`` values (module EXACT_VALUE_LIMIT when None —
+    resolved at call time so tests can lower it), else ``"sketch"``.
+    ``n`` is ``max_group_count`` of the percentile input."""
+    if exact_limit is None:
+        exact_limit = EXACT_VALUE_LIMIT
+    return "exact" if n <= exact_limit else "sketch"
 
 
 def quantile_expr(

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pythondataingestionprocess_spark.catalog import load_table
+from pythondataingestionprocess_spark.catalog import cached, load_table
 from pythondataingestionprocess_spark.operators.graph import (
     _closed_triangles,
     clustering_coefficient_from_chain,
@@ -105,105 +105,63 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_count_from_chain(*_graph_chain(spark, sf_dir))
 
 
-# Per-(session, sf_dir) memo of the materialized co-purchase edge
-# list: both graph queries consume the SAME edge table, and an engine
-# would materialize it once — same pattern (and session-identity
-# keying) as llm_heavy._lsh_pairs_cached. persist(), NOT
-# localCheckpoint (r7 review): a checkpoint severs lineage, so lost
-# executor blocks would kill every later graph query in the session;
-# persist recomputes transparently. Each query's own internal
-# checkpoints then start from the cached blocks. BOUNDED (r7 ADVICE):
-# one entry per session — switching sf_dir (or a long-lived process
-# cycling sessions) unpersists and evicts the stale entry instead of
-# accreting cached blocks and session references for process life.
-_EDGE_MEMO: list[tuple[SparkSession, str, DataFrame]] = []
-
-
+# The materialized co-purchase edge list: both graph queries consume
+# the SAME edge table, so the session cache holds it once, persisted.
+# Each query's own internal checkpoints then start from the cached
+# blocks.
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for sess, cached_dir, df in _EDGE_MEMO:
-        if sess is spark and cached_dir == sf_dir:
-            return df
-    # evict everything else: entries for other sf_dirs on this session
-    # and entries pinned to dead/other sessions alike
-    for sess, _cached_dir, df in _EDGE_MEMO:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # a stopped session can't (and needn't) unpersist
-    _EDGE_MEMO.clear()
+    return cached(spark, sf_dir, "copurchase_edges", lambda: _build_edges(spark, sf_dir))
+
+
+def _build_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")
-    # Per-order co-purchase pairs WITHOUT a self-join (r18, guide §2.4
-    # "remove shuffles outright"): collect the order's distinct part
-    # set (collect_set dedups, sort_array orders it so u < v holds by
-    # construction) and expand pairs map-side — one exchange on
-    # l_orderkey + the final pair distinct, versus the old
-    # distinct-exchange + self-join + distinct (three data passes, one
-    # of them a join whose per-order groups the grouping already
-    # gives us). Basket sizes are order-bounded (single digits on this
-    # schema and any realistic basket), so the in-row expansion is
-    # O(basket²) with tiny constants — the same sorted-array pair
-    # expansion as operators/dedup.bucket_candidate_pairs' small
-    # branch. Identical edge set (verified exceptAll == 0 both ways at
-    # sf0.1); ~15% faster warm locally and one fewer shuffle+scan at
-    # scale.
+    # Per-order co-purchase pairs WITHOUT a self-join: collect the
+    # order's distinct part set (collect_set dedups, sort_array orders
+    # it so u < v holds by construction) and expand pairs map-side —
+    # one exchange on l_orderkey + the final pair distinct, versus a
+    # distinct-exchange + self-join + distinct. Basket sizes are
+    # order-bounded (single digits on this schema and any realistic
+    # basket), so the in-row expansion is O(basket²) with tiny
+    # constants — the same sorted-array pair expansion as
+    # operators/dedup.bucket_candidate_pairs' small branch. Single-part
+    # baskets are filtered out BEFORE the expansion, so the pair
+    # expression never sees an array it can't index and needs no
+    # empty-array branch (whose element type would come from coercing
+    # array<null>).
     ids = (
         lineitem.filter(F.col("l_quantity") >= 26)
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ids"))
+        .filter(F.size("ids") >= 2)
     )
     pair_sql = (
-        "CASE WHEN size(ids) >= 2 THEN "
         "flatten(transform(sequence(1, size(ids) - 1), "
         "i -> transform(slice(ids, i + 1, size(ids) - i), "
-        "j -> struct(ids[i - 1] AS u, j AS v)))) "
-        "ELSE array() END"
+        "j -> struct(ids[i - 1] AS u, j AS v))))"
     )
-    edges = (
+    return (
         ids.select(F.explode(F.expr(pair_sql)).alias("p"))
         .select(F.col("p.u"), F.col("p.v"))
         .distinct()
         .persist()
     )
-    _EDGE_MEMO.append((spark, sf_dir, edges))
-    return edges
-
-
-# The full (edges, deg, closed-triangles) chain, shared by BOTH graph
-# queries (r17 optimization): the wedge self-join + closure semi-join
-# is the expensive half of either query, and the two aggregate the
-# SAME triangle set — an engine materializes that intermediate once.
-# ``closed`` rides a persist() (recomputable lineage, same rationale
-# as _EDGE_MEMO); eviction mirrors _EDGE_MEMO's one-entry bound.
-_CHAIN_MEMO: list[tuple[SparkSession, str, tuple[DataFrame, DataFrame, DataFrame]]] = []
 
 
 def _graph_chain(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    for sess, cached_dir, chain in _CHAIN_MEMO:
-        if sess is spark and cached_dir == sf_dir:
-            return chain
-    for _sess, _cached_dir, chain in _CHAIN_MEMO:
-        for df in chain[1:]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # a stopped session can't (and needn't) unpersist
-    _CHAIN_MEMO.clear()
-    # "persist" mode (r18, r17 ADVICE): the memoized chain outlives
-    # its building query, so every cached frame keeps RECOMPUTABLE
-    # lineage (deg and closed persist()ed over the persisted edge
-    # memo) instead of localCheckpoint's severed-lineage blocks —
-    # a lost block now recomputes transparently instead of failing
-    # every later graph query in the session; eviction unpersists
-    # deg AND closed (the old path only released closed). Locally the
-    # lazy persists also drop three eager checkpoint barrier jobs
-    # from the first graph face's wall.
-    edges, deg, closed = _closed_triangles(
-        _copurchase_edges(spark, sf_dir), materialize="persist"
-    )
-    closed = closed.persist()
-    _CHAIN_MEMO.append((spark, sf_dir, (edges, deg, closed)))
+    """The full (edges, deg, closed-triangles) chain, shared by BOTH
+    graph queries: the wedge self-join + closure semi-join is the
+    expensive half of either query, and the two aggregate the SAME
+    triangle set. deg and closed are persisted over the cached edges
+    (recomputable lineage, see the catalog cache), and move with them."""
+    edges = _copurchase_edges(spark, sf_dir)
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        _, deg, closed = _closed_triangles(edges, materialize="persist")
+        return deg, closed.persist()
+
+    deg, closed = cached(spark, sf_dir, "graph_chain", build, deps=("copurchase_edges",))
     return edges, deg, closed
 
 

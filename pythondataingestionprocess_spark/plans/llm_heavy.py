@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pythondataingestionprocess_spark.catalog import load_table
+from pythondataingestionprocess_spark.catalog import cached, load_table
 from pythondataingestionprocess_spark.operators import dedup as dd
 from pythondataingestionprocess_spark.operators import similarity as sim
 from pythondataingestionprocess_spark.plans.registry import query
@@ -52,73 +52,37 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.jaccard_pairs(sh, "doc_id", 0.5)
 
 
-# The LSH pair stage is the registry's single most expensive plan and
-# two queries need its output (the pair list itself, and the connected-
-# components grouping built on top of it). Memoize the persisted
-# DataFrame per (session, sf_dir) so a full registry sweep — the
-# driver's CORRECTNESS pass runs every query in one session — pays for
-# signature+bucket+verify exactly once. Keyed on session identity, not
-# id(), so a restarted session can never alias a dead entry. BOUNDED
-# to one live entry with eviction, same as graph_queries._EDGE_MEMO
-# (r7 ADVICE there; r13 review found this twin never got the
-# back-port — a long-lived driver cycling sessions/sf_dirs accreted
-# cached blocks and pinned dead sessions against GC).
-_PAIR_MEMO: list[tuple[SparkSession, str, tuple[DataFrame, ...]]] = []
-
-# The session's ONE tokenize+shingle pass over the documents table
-# (r18): the full-corpus shingle-array table is the warehouse
-# artifact every MinHash-family face derives from — the batch pair
-# screen (signatures + both verify sides) AND the incremental face's
-# corpus index (a doc-grain filter of the same table). One memo,
-# same session-identity keying and one-entry eviction as _PAIR_MEMO.
-_DOC_SH_MEMO: list[tuple[SparkSession, str, DataFrame]] = []
-
-
+# The session's ONE tokenize+shingle pass over the documents table:
+# the full-corpus shingle-array table every MinHash-family face derives
+# from — the batch pair screen (signatures + both verify sides) and the
+# incremental face's corpus index (a doc-grain filter of the same
+# table). Spark recomputes a common subtree once per reference, so
+# without the persist the text pipeline would run under the banded
+# subtree and again per verify join side.
 def _doc_sh_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for sess, cached_dir, df in _DOC_SH_MEMO:
-        if sess is spark and cached_dir == sf_dir:
-            return df
-    for _sess, _cached_dir, df in _DOC_SH_MEMO:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # a stopped session can't (and needn't) unpersist
-    _DOC_SH_MEMO.clear()
-    docs = load_table(spark, sf_dir, "documents")
-    doc_sh = dd.shingle_array_table(docs, "doc_id", "text", 3).persist()
-    _DOC_SH_MEMO.append((spark, sf_dir, doc_sh))
-    return doc_sh
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        return dd.shingle_array_table(docs, "doc_id", "text", 3).persist()
+
+    return cached(spark, sf_dir, "doc_sh", build)
 
 
+# The LSH pair stage is the registry's single most expensive plan and
+# four faces consume its output (the pair list, connected-components
+# grouping, keep-one, incremental components), so a full registry
+# sweep in one session pays for signature+bucket+verify exactly once.
 def _lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for sess, cached_dir, frames in _PAIR_MEMO:
-        if sess is spark and cached_dir == sf_dir:
-            return frames[0]
-    for _sess, _cached_dir, frames in _PAIR_MEMO:
-        for df in frames:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # a stopped session can't (and needn't) unpersist
-    _PAIR_MEMO.clear()
-    docs = load_table(spark, sf_dir, "documents")
-    # One tokenize+shingle pass, not three (r18): the shared
-    # shingle-array table feeds BOTH verify-side joins and, via
-    # banded_from_shingle_arrays, the signature stage — Spark
-    # recomputes common subtrees per reference, so without the persist
-    # the text-processing pipeline ran once under the banded subtree
-    # and once per verify join side. persist() keeps lineage
-    # recomputable; the table itself rides _DOC_SH_MEMO so the
-    # incremental face's corpus index shares the same pass.
-    doc_sh = _doc_sh_cached(spark, sf_dir)
-    banded = dd.banded_from_shingle_arrays(
-        doc_sh, "doc_id", num_hashes=64, bands=16, seed=42
-    )
-    pairs = dd.minhash_lsh_pairs(
-        docs, "doc_id", "text", threshold=0.5, banded=banded, doc_sh=doc_sh
-    ).persist()
-    _PAIR_MEMO.append((spark, sf_dir, (pairs,)))
-    return pairs
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        doc_sh = _doc_sh_cached(spark, sf_dir)
+        banded = dd.banded_from_shingle_arrays(
+            doc_sh, "doc_id", num_hashes=64, bands=16, seed=42
+        )
+        return dd.minhash_lsh_pairs(
+            docs, "doc_id", "text", threshold=0.5, banded=banded, doc_sh=doc_sh
+        ).persist()
+
+    return cached(spark, sf_dir, "lsh_pairs", build, deps=("doc_sh",))
 
 
 @query("dedup_minhash_lsh", oracle=_JACCARD_ORACLE, tags=("dedup", "lsh"))
@@ -269,26 +233,6 @@ WHERE list_sum(list_transform(list_zip(a.e, b.e), z -> z[1] * z[2]))
 """
 
 
-# Sizing-count memo for the cosine face — table statistics, not result
-# caching (the catalog-memo rationale): the auto-bits rule needs ONE
-# scalar, the corpus row count, which is fully determined by the
-# immutable embeddings table; re-running the count job on every
-# invocation is a per-query profiling pass an engine would serve from
-# stats. Session-identity keyed like every other memo.
-_COSINE_N_MEMO: list[tuple[SparkSession, str, int]] = []
-
-
-def _cosine_corpus_count(spark: SparkSession, sf_dir: str, corpus: DataFrame) -> int:
-    for sess, cached_dir, n in _COSINE_N_MEMO:
-        if sess is spark and cached_dir == sf_dir:
-            return n
-    n = corpus.count()
-    _COSINE_N_MEMO.append((spark, sf_dir, n))
-    if len(_COSINE_N_MEMO) > 8:
-        del _COSINE_N_MEMO[0]
-    return n
-
-
 @query("dedup_embedding_cosine", oracle=_COSINE_DUP_ORACLE, tags=("dedup", "similarity"))
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup over a corpus with planted duplicate
@@ -322,7 +266,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select("vec_id", "embedding").unionAll(
         dupes.select("vec_id", "embedding")
     )
-    bits = dd.auto_lsh_bits(_cosine_corpus_count(spark, sf_dir, corpus))
+    # the corpus row count is a table statistic of the immutable
+    # embeddings table: an engine serves it from stats rather than
+    # re-running the count job per query
+    bits = dd.auto_lsh_bits(cached(spark, sf_dir, "cosine_corpus_n", corpus.count))
     banded = sim.rademacher_bucket_rows(
         corpus, "vec_id", "embedding",
         bits_per_table=bits, n_tables=_COSINE_TABLES, seed=_COSINE_SEED,
@@ -813,6 +760,7 @@ def dedup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- incremental dedup / keep-one
 
+# The WHERE clause replays _split_new_batch's new-batch/corpus split.
 _INCR_ORACLE = f"""
 WITH sh AS ({_SHINGLE_SQL}),
 sizes AS (SELECT doc_id, COUNT(*) n FROM sh GROUP BY 1),
@@ -879,47 +827,36 @@ def dedup_cosine_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Corpus-side LSH index for the incremental face (r18, mirroring the
-# graph-chain/_PAIR_MEMO pattern): the corpus's banded signatures and
-# shingle arrays are a PRECOMPUTED index at scale — built once when
-# the corpus is indexed, not once per ingest batch — so the session
-# builds them once and every batch screen pays only the NEW side's
-# tokenize + shingle + minhash. persist() keeps lineage recomputable;
-# bounded to one live entry with eviction, keyed on session identity.
-_INCR_INDEX_MEMO: list[tuple[SparkSession, str, tuple[DataFrame, ...]]] = []
+def _split_new_batch(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(new batch, existing corpus) rows of a doc-grain frame: doc_id ≡
+    3 mod 7 stands in for today's crawl, the rest for the corpus."""
+    is_new = F.col("doc_id") % 7 == 3
+    return df.filter(is_new), df.filter(~is_new)
 
 
+# Corpus-side LSH index for the incremental face: at scale the corpus's
+# banded signatures and shingle arrays are a PRECOMPUTED index, built
+# once when the corpus is indexed, not once per ingest batch — so the
+# session builds them once and every batch screen pays only the NEW
+# side's tokenize + shingle + minhash. The corpus shingle arrays are a
+# doc-grain FILTER of the session's shared shingle table: filter
+# commutes with the row-wise tokenize+shingle map, so the rows equal
+# shingle_array_table(corpus, ...) while the text pass is shared with
+# the batch pair screen. (A lone incremental call in a fresh session
+# shingles all docs rather than 6/7 of them — +1/7 of one map stage,
+# against −1 full pass whenever a pairs-family face shares the
+# session.)
 def _incr_corpus_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    for sess, cached_dir, frames in _INCR_INDEX_MEMO:
-        if sess is spark and cached_dir == sf_dir:
-            return frames[0], _doc_sh_cached(spark, sf_dir).filter(
-                F.col("doc_id") % 7 != 3
-            )
-    for _sess, _cached_dir, frames in _INCR_INDEX_MEMO:
-        for df in frames:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # a stopped session can't (and needn't) unpersist
-    _INCR_INDEX_MEMO.clear()
-    # the corpus's shingle arrays are a doc-grain FILTER of the
-    # session's shared full-corpus shingle table (r18): filter
-    # commutes with the row-wise tokenize+shingle map, so the rows
-    # are identical to shingle_array_table(corpus, ...) while the
-    # expensive text pass is shared with the batch pair screen
-    # instead of run a second time per session. (A lone incremental
-    # call in a fresh session now shingles all docs rather than 6/7
-    # of them — +1/7 of one map stage, against −1 full pass whenever
-    # any pairs-family face shares the session, which the bench,
-    # driver sweep and any realistic warehouse session do.)
-    sh = _doc_sh_cached(spark, sf_dir).filter(F.col("doc_id") % 7 != 3)
-    banded = dd.banded_from_shingle_arrays(
-        sh, "doc_id", num_hashes=64, bands=16, seed=42
-    ).persist()
-    _INCR_INDEX_MEMO.append((spark, sf_dir, (banded,)))
-    return banded, sh
+    def build() -> tuple[DataFrame, DataFrame]:
+        _, sh = _split_new_batch(_doc_sh_cached(spark, sf_dir))
+        banded = dd.banded_from_shingle_arrays(
+            sh, "doc_id", num_hashes=64, bands=16, seed=42
+        ).persist()
+        return banded, sh
+
+    return cached(spark, sf_dir, "incr_index", build, deps=("doc_sh",))
 
 
 @query("dedup_incremental_minhash", oracle=_INCR_ORACLE, tags=("dedup", "lsh"))
@@ -929,13 +866,11 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (the rest), via a band-bucket equi-join of the new batch's
     LSH membership against the corpus's — corpus×corpus pairs are never
     generated, so per-batch cost is linear in batch size. The corpus
-    side's signature/shingle frames come from the session's
-    precomputed-index memo (r18): only the new batch's signature stage
+    side's signature/shingle frames come from the session's cached
+    corpus index: only the new batch's signature stage
     runs per invocation, which is the marginal cost the face models.
     Oracle is the exact cross-side Jaccard pair list."""
-    docs = load_table(spark, sf_dir, "documents")
-    new_docs = docs.filter(F.col("doc_id") % 7 == 3)
-    corpus = docs.filter(F.col("doc_id") % 7 != 3)
+    new_docs, corpus = _split_new_batch(load_table(spark, sf_dir, "documents"))
     corpus_banded, corpus_sh = _incr_corpus_index(spark, sf_dir)
     return dd.minhash_lsh_pairs_incremental(
         corpus, new_docs, "doc_id", "text", threshold=0.5,

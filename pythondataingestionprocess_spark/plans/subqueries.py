@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pythondataingestionprocess_spark.catalog import load_table
+from pythondataingestionprocess_spark.catalog import cached, load_table
 from pythondataingestionprocess_spark.plans.registry import (
     dec_sum,
     query,
@@ -706,13 +706,15 @@ def percentile_cont_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     are rounded to 6 dp on both sides (same ulp-drift discipline as
     corr_moments_stats — prices carry 2 decimals, 6 dp is lossless).
 
-    Scale (r7 VERDICT #1, now ENFORCED rather than prescribed): the
-    group count is bounded (3 return flags) but each group's SIZE
-    scales with the fact table, and the exact aggregate materializes
-    a whole group's values in one merge buffer. The form is chosen by
+    Scale (ENFORCED, not prescribed): the group count is bounded (3
+    return flags) but each group's SIZE scales with the fact table,
+    and the exact aggregate materializes a whole group's values in one
+    merge buffer. The form is chosen by
     ``operators/quantiles.choose_quantile_form`` over the max
-    per-group value count — exact (oracle-bit-identical) below
-    EXACT_VALUE_LIMIT, approx_percentile's mergeable sketch above.
+    per-group value count, profiled once per session (the session
+    cache keeps the count, and the form is re-chosen from it on every
+    call) — exact (oracle-bit-identical) below EXACT_VALUE_LIMIT,
+    approx_percentile's mergeable sketch above.
     The registered scales resolve to exact; a 100 TB run never builds
     the single-buffer plan.
 
@@ -729,11 +731,15 @@ def percentile_cont_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pythondataingestionprocess_spark.operators.quantiles import (
         choose_quantile_form,
+        max_group_count,
         quantile_expr,
     )
 
     lineitem = load_table(spark, sf_dir, "lineitem")
-    form = choose_quantile_form(lineitem, "l_extendedprice", ("l_returnflag",))
+    form = choose_quantile_form(cached(
+        spark, sf_dir, "quantile_n:lineitem.l_extendedprice/l_returnflag",
+        lambda: max_group_count(lineitem, "l_extendedprice", ("l_returnflag",)),
+    ))
     return lineitem.groupBy("l_returnflag").agg(
         F.round(quantile_expr("l_extendedprice", 0.5, form), 6).alias("median_price"),
         F.round(quantile_expr("l_extendedprice", 0.95, form), 6).alias("p95_price"),

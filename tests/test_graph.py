@@ -96,22 +96,3 @@ def test_clustering_coefficient_known_graphs(spark):
     srows = {r["w"]: r["coefficient"] for r in clustering_coefficient(_edges(spark, star)).collect()}
     assert set(srows.values()) == {0.0}
 
-
-def test_edge_memo_is_bounded_and_unpersists(spark):
-    """r7 ADVICE: the per-(session, sf_dir) edge memo must hold at
-    most one entry, unpersisting what it evicts — not accrete cached
-    blocks and session references for process life."""
-    from pythondataingestionprocess_spark.plans import graph_queries as gq
-
-    sf = "/root/testdata/sf0.001"
-    e1 = gq._copurchase_edges(spark, sf)
-    assert len(gq._EDGE_MEMO) == 1
-    # same key → memo hit, same frame, no growth
-    assert gq._copurchase_edges(spark, sf) is e1
-    assert len(gq._EDGE_MEMO) == 1
-    # different key → evicted and replaced, old frame unpersisted
-    gq._copurchase_edges(spark, "/root/testdata/sf0.01")
-    assert len(gq._EDGE_MEMO) == 1
-    assert e1.storageLevel.useMemory is False
-    # restore the small-sf entry so later tests in the session reuse it
-    gq._copurchase_edges(spark, sf)

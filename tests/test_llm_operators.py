@@ -709,19 +709,6 @@ def test_hll_sketch_estimates_within_bounds(spark, sf_dir):
     assert got_types == {r.event_type: r.exact for r in per_type}
 
 
-def test_lsh_pair_memo_keys_on_session_and_dir(spark):
-    """The memoized LSH pair stage must return the SAME DataFrame for
-    repeated (session, sf_dir) calls and a different one for another
-    sf_dir — never a stale cross-directory hit."""
-    from pythondataingestionprocess_spark.plans.llm_heavy import _lsh_pairs_cached
-
-    a1 = _lsh_pairs_cached(spark, "/root/testdata/sf0.001")
-    a2 = _lsh_pairs_cached(spark, "/root/testdata/sf0.001")
-    b = _lsh_pairs_cached(spark, "/root/testdata/sf0.01")
-    assert a1 is a2
-    assert a1 is not b
-
-
 def test_int8_knn_recall_vs_float_brute(spark, sf_dir):
     """Quantized exact scan vs the float brute scan on the real
     corpus: int8 keeps ≥0.9 recall@5 (in practice near-1.0 — the

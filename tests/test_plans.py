@@ -621,10 +621,10 @@ def test_zorder_cells_mapside_single_exchange(spark):
 def test_triangle_count_materializes_reuse_no_python(spark):
     """Triangle counting references its edge frame seven times;
     DataFrame reuse is NOT CSE, so the reused frames must be
-    materialized. The registered query rides the session chain memo,
-    which since r18 caches edges/deg/closed with persist() —
-    RECOMPUTABLE lineage, per the r7 _EDGE_MEMO rationale — instead
-    of localCheckpoint: every reused-frame reference in the plan must
+    materialized. The registered query rides the session cache, which
+    holds edges/deg/closed with persist() — RECOMPUTABLE lineage, so a
+    lost block is rebuilt — instead of localCheckpoint: every
+    reused-frame reference in the plan must
     therefore be an InMemoryTableScan (the raw scan text may appear
     only INSIDE the cached relations' own descriptions), and the pure
     shape (materialize=False) stays all-equi-join with no Python and

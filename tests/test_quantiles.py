@@ -23,47 +23,35 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_chooses_exact_below_limit(spark):
     orders = load_table(spark, SF_DIR, "orders")
-    assert q.choose_quantile_form(orders, "o_totalprice") == "exact"
+    assert q.choose_quantile_form(q.max_group_count(orders, "o_totalprice")) == "exact"
     lineitem = load_table(spark, SF_DIR, "lineitem")
-    assert (
-        q.choose_quantile_form(lineitem, "l_extendedprice", ("l_returnflag",))
-        == "exact"
-    )
+    n = q.max_group_count(lineitem, "l_extendedprice", ("l_returnflag",))
+    assert q.choose_quantile_form(n) == "exact"
 
 
 def test_chooses_sketch_above_limit(spark):
     orders = load_table(spark, SF_DIR, "orders")
-    assert (
-        q.choose_quantile_form(orders, "o_totalprice", exact_limit=10)
-        == "sketch"
-    )
+    n_orders = q.max_group_count(orders, "o_totalprice")
+    assert q.choose_quantile_form(n_orders, exact_limit=10) == "sketch"
     # grouped: the LARGEST group decides, not the total
     lineitem = load_table(spark, SF_DIR, "lineitem")
     n_max = (
         lineitem.groupBy("l_returnflag").count().agg(F.max("count")).first()[0]
     )
-    assert (
-        q.choose_quantile_form(
-            lineitem, "l_extendedprice", ("l_returnflag",),
-            exact_limit=n_max - 1,
-        )
-        == "sketch"
-    )
-    assert (
-        q.choose_quantile_form(
-            lineitem, "l_extendedprice", ("l_returnflag",),
-            exact_limit=n_max,
-        )
-        == "exact"
-    )
+    n = q.max_group_count(lineitem, "l_extendedprice", ("l_returnflag",))
+    assert n == n_max
+    assert q.choose_quantile_form(n, exact_limit=n_max - 1) == "sketch"
+    assert q.choose_quantile_form(n, exact_limit=n_max) == "exact"
 
 
 def test_nulls_do_not_count_toward_the_limit(spark):
     df = spark.createDataFrame(
         [(1, 1.0), (2, None), (3, None), (4, 2.0)], "id long, v double"
     )
-    assert q.choose_quantile_form(df, "v", exact_limit=2) == "exact"
-    assert q.choose_quantile_form(df, "v", exact_limit=1) == "sketch"
+    n = q.max_group_count(df, "v")
+    assert n == 2
+    assert q.choose_quantile_form(n, exact_limit=2) == "exact"
+    assert q.choose_quantile_form(n, exact_limit=1) == "sketch"
 
 
 def test_sketch_form_is_numerically_close(spark):
