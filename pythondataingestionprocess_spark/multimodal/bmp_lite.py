@@ -1,17 +1,16 @@
 """Dependency-free BMP decoder (stdlib struct + numpy).
 
-Windows bitmaps are the third uncompressed web/scan image format
-after PNG and GIF; the container ships no PIL, but BMP needs none —
-pixel data is raw (or byte-RLE) BGR rows. Handled: BITMAPCOREHEADER
-(12-byte, OS/2) and BITMAPINFOHEADER-family (40/52/56/108/124-byte)
-DIBs; 1/4/8-bit palette, 16-bit (555 default or BITFIELDS masks),
-24-bit BGR, 32-bit BGRx/BITFIELDS; BI_RLE8 runs (absolute, encoded,
-EOL/EOB/delta); bottom-up and top-down rows. Rejected loudly
-(quarantine): BI_RLE4, JPEG/PNG-embedded payloads, and malformed
-geometry/palette indices.
+Windows bitmaps need no codec library: pixel data is raw (or byte-RLE)
+BGR rows. Handled: BITMAPCOREHEADER (12-byte, OS/2) and
+BITMAPINFOHEADER-family (40/52/56/108/124-byte) DIBs; 1/4/8-bit
+palette, 16-bit (555 default or BITFIELDS masks), 24-bit BGR, 32-bit
+BGRx/BITFIELDS; BI_RLE8 runs (absolute, encoded, EOL/EOB/delta);
+bottom-up and top-down rows. Rejected loudly (quarantine): BI_RLE4,
+JPEG/PNG-embedded payloads, and malformed geometry/palette indices.
 
-``decode`` returns the png_lite stats contract: width/height/channels
-and mean_intensity over the COLOR samples (alpha excluded), 0-1.
+``decode`` returns width/height/channels and mean_intensity: the
+mean over the COLOR samples (alpha excluded), scaled to 0-1 by the
+sample maximum.
 
 Spec: Microsoft "Bitmap Storage" / BITMAPFILEHEADER+BITMAPINFOHEADER
 documentation; RLE8 per the "Compression in Bitmaps" section.
@@ -79,7 +78,7 @@ def _rle8(data: bytes, width: int, height: int) -> np.ndarray:
 
 def decode(data: bytes) -> dict:
     """BMP bytes → {"width", "height", "channels", "mean_intensity"}
-    (png_lite contract: mean over color samples, alpha excluded).
+    (mean over color samples, alpha excluded, 0-1).
     Raises ValueError on junk or unsupported variants."""
     if len(data) < 26 or data[:2] != b"BM":
         raise ValueError("not a BMP (bad signature)")
@@ -119,7 +118,7 @@ def decode(data: bytes) -> dict:
         raise ValueError(f"unsupported BMP compression {compression}")
     # bfOffBits must land past the header (and the palette, when one
     # is required) — an offset pointing INTO them would silently
-    # decode header bytes as pixels (r13 review)
+    # decode header bytes as pixels
     min_off = pal_off
     if bpp <= 8:
         min_off += (n_colors or (1 << bpp)) * pal_entry

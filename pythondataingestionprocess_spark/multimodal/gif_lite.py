@@ -13,7 +13,8 @@ descriptors and palettes. What this module does:
 - LZW-decodes the FIRST frame (local palette wins over global if
   present, interlaced rows re-ordered by the 4-pass scheme) and
   reports mean/std intensity over ITU-R 601 luma of the palette
-  colors — the same stats contract as png_lite/jpeg_lite;
+  colors, scaled to 0-1 — the stats contract of the other image
+  decoders;
 - fails CLOSED (``ValueError``) on truncation, bad LZW codes, a
   missing palette, or out-of-range pixel indexes — callers quarantine
   instead of averaging garbage.

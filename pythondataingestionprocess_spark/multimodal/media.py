@@ -3,24 +3,31 @@ columns with typed metadata (engine-added per BASELINE.json north
 star).
 
 The Spark-side plumbing — schemas, Arrow-batched UDF signatures,
-partition sizing — is real and tested, and by r14 most DECODING is
-real too, from-scratch against the public specs (the container's
-only media library, the system libwebp, serves as an independent
-TEST oracle — never as a decode path): PNG/GIF/BMP/TIFF/PNM/TGA/
-ICO/QOI, baseline and progressive JPEG, and full WebP pixel decode —
-lossless (VP8L) AND lossy (VP8 intra keyframes: bool decoder,
-tokens, iDCT, prediction, loop filter — certified bit-exact against
-libwebp), including VP8X extended stills with alpha and first
-frames of animations; WAV (PCM, float, G.711, IMA/MS ADPCM), FLAC,
-AIFF, and AU audio sample decode; MJPEG, uncompressed, and
-VP8-sample-entry video first-frame decode; MP3/AAC, MP4, HEIF/AVIF,
-and Ogg Opus/Vorbis frame/box/page-walk metadata. What genuinely needs a codec the specs
-tabulate rather than define (MP3/AAC synthesis windows, H.264...)
-stays honestly NULL-stats / ``NotImplementedError``. ``fake_decode_stats`` remains the
-deterministic stand-in for pipeline tests that don't care about
-real formats: it derives "pixel stats" purely from the raw bytes, so
-the full pipeline (binary in → mapInPandas → typed stats out) runs
-end-to-end on arbitrary payloads.
+partition sizing — is format-agnostic. ``real_decode`` decodes from
+scratch against the public specs with stdlib + numpy only:
+
+- image: BMP (bmp_lite), baseline TIFF (tiff_lite) and GIF (gif_lite),
+  full pixel stats; HEIF/AVIF (heif_lite) box-walk metadata;
+- audio: WAV — canonical PCM through the stdlib ``wave`` module,
+  G.711 / IMA and MS ADPCM / IEEE float / 24-bit through wav_lite —
+  FLAC (flac_lite) and AIFF/AU (aiff_au_lite), full sample stats;
+  MP3/ADTS AAC (mpeg_audio_lite) and Ogg Opus/Vorbis (ogg_lite)
+  frame/page-walk metadata;
+- video: ISO-BMFF / QuickTime container metadata (mp4_lite), with
+  first-frame pixel stats for uncompressed 'raw ' and '2vuy' tracks.
+
+The oracle-checked decode face reaches the formats ``synth.py``
+builds: BMP, TIFF, WAV and 'raw ' video. Metadata-only formats and
+compressed video tracks (H.264, ...) carry a NULL mean next to real
+metadata. Every other format (PNG, JPEG, WebP, ...) raises, which
+``decode_media`` turns into a ``quarantine:`` row; decode those
+formats upstream with a native library.
+
+``fake_decode_stats`` is the deterministic stand-in for pipeline
+tests that don't care about real formats: it derives "pixel stats"
+purely from the raw bytes, so the full pipeline (binary in →
+mapInPandas → typed stats out) runs end-to-end on arbitrary
+payloads.
 
 Scale notes: media payloads dominate row size, so
 - keep payloads in their own column and prune it early
@@ -33,11 +40,28 @@ Scale notes: media payloads dominate row size, so
 
 from __future__ import annotations
 
+import io
+import wave
+from array import array
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pythondataingestionprocess_spark.multimodal import (
+    aiff_au_lite,
+    bmp_lite,
+    flac_lite,
+    gif_lite,
+    heif_lite,
+    mp4_lite,
+    mpeg_audio_lite,
+    ogg_lite,
+    tiff_lite,
+    wav_lite,
+)
 
 # Schema of the decoded-media stats emitted by decode_media /
 # fake_decode_stats (per blob).
@@ -46,6 +70,8 @@ MEDIA_STATS_SCHEMA = (
     "width int, height int, n_frames int, mean_intensity double, "
     "decode_status string"
 )
+
+_INT32_MAX = 2**31 - 1
 
 
 def binary_meta(df: DataFrame, bin_col: str) -> DataFrame:
@@ -58,412 +84,106 @@ def binary_meta(df: DataFrame, bin_col: str) -> DataFrame:
 
 
 def _major_type(media_type: str | None) -> str | None:
-    """'image/png; q=1' → 'image'; coarse labels pass through —
-    the ONE place MIME normalization lives (shared by decode_media
-    and real_decode)."""
+    """'image/bmp; q=1' → 'image'; coarse labels pass through —
+    the ONE place MIME normalization lives (shared by real_decode and
+    fake_decode_stats)."""
     if not media_type:
         return media_type
     return media_type.split("/", 1)[0].strip().lower()
 
 
 def real_decode(content: bytes, media_type: str) -> dict:
-    """Decode one media blob into stats. Images: PIL when importable,
-    else the stdlib PNG decoder (multimodal/png_lite.py — 8-bit
-    gray/RGB/RGBA, all scanline filters; full pixel stats) or the
-    stdlib+numpy JPEG decoder (multimodal/jpeg_lite.py — r10:
-    BASELINE sequential JPEGs pixel-decode for real; r12: PROGRESSIVE
-    too — multi-scan coefficient accumulation, T.81 §G; arithmetic/
-    12-bit keep header metadata with NULL stats). Video:
-    ISO-BMFF container metadata is REAL (multimodal/mp4_lite.py —
-    duration, tracks, dimensions, sample count), and MJPEG frame
-    decode is real too since r13 (raw video/mjpeg streams and
-    jpeg/mjpa/mjpb sample entries route the first frame through
-    jpeg_lite, and UNCOMPRESSED 'raw '/'2vuy' entries compute pixel
-    stats directly); other video codecs keep ``mean_intensity`` NULL
-    (no PyAV/ffmpeg and no stdlib codec exists). Audio: PCM WAV
-    real (full sample stats);
-    MP3 / ADTS AAC real at frame-header level since r12
-    (multimodal/mpeg_audio_lite.py — duration, rate, channels from
-    walking every frame; sample decode stays codec territory, mean
-    NULL); G.711 mu-law/A-law, IMA/MS ADPCM, IEEE-float and 24-bit
-    WAVs decode SAMPLES for real since r13 (multimodal/wav_lite.py —
-    the first LOSSY codecs with non-NULL amplitude stats), and the
-    AIFF/AIFF-C and Sun AU containers decode their PCM/G.711/float
-    payloads too (multimodal/aiff_au_lite.py).
+    """Decode one media blob into stats. ``media_type`` accepts the
+    coarse labels the fake decoder uses ("image"/"audio"/"video") and
+    full MIME types ("image/bmp", "audio/wav" — what real sources like
+    the WARC reader carry): the major type routes, then magic bytes
+    pick the decoder.
 
-    ``media_type`` accepts both the coarse labels the fake decoder
-    uses ("image"/"audio"/"video") and full MIME types ("image/png",
-    "audio/wav" — what real sources like the WARC reader carry): the
-    major type routes, the decoder sniffs the actual subformat from
-    magic bytes as before. The ONE format that needs the subtype is
-    TGA (it has no magic bytes): only an explicit image/x-tga (or
-    tga/targa) row routes there — sniffing would misread random
-    binaries."""
-    subtype = (
-        media_type.split("/", 1)[1].split(";")[0].strip().lower()
-        if media_type and "/" in media_type
-        else ""
-    )
-    media_type = _major_type(media_type)
-    if media_type == "image":
-        try:
-            from PIL import Image  # noqa: F401  # pragma: no cover
-            import io  # pragma: no cover
-
-            with Image.open(io.BytesIO(content)) as im:  # pragma: no cover
-                gray = im.convert("L")
-                hist = gray.histogram()
-                n = sum(hist)
-                mean = sum(i * c for i, c in enumerate(hist)) / n / 255.0
-                return {
-                    "byte_len": len(content),
-                    "width": im.width,
-                    "height": im.height,
-                    "n_frames": getattr(im, "n_frames", 1),
-                    "mean_intensity": mean,
-                }
-        except ImportError:
-            if content[:8] == b"\x89PNG\r\n\x1a\n":
-                from pythondataingestionprocess_spark.multimodal import png_lite
-
-                stats = png_lite.decode(content)
-                return {
-                    "byte_len": len(content),
-                    "width": stats["width"],
-                    "height": stats["height"],
-                    "n_frames": 1,
-                    "mean_intensity": stats["mean_intensity"],
-                }
-            if content[:2] == b"\xff\xd8":
-                from pythondataingestionprocess_spark.multimodal import jpeg_lite
-
-                hdr = jpeg_lite.parse_header(content)
-                mean = None
-                try:
-                    # r10: baseline sequential JPEGs pixel-decode for
-                    # real (jpeg_lite.decode — Huffman + dequant +
-                    # IDCT over the luma plane); r12: progressive too.
-                    # Arithmetic / 12-bit streams keep header-only
-                    # metadata with NULL stats.
-                    mean = jpeg_lite.decode(content)["mean_intensity"]
-                except ValueError:
-                    pass
-                return {
-                    "byte_len": len(content),
-                    "width": hdr["width"],
-                    "height": hdr["height"],
-                    "n_frames": 1,
-                    "mean_intensity": mean,
-                }
-            if content[:4] == b"qoif":
-                # r13: QOI — byte-aligned ops, no entropy coder
-                from pythondataingestionprocess_spark.multimodal import qoi_lite
-
-                stats = qoi_lite.decode(content)
-                return {
-                    "byte_len": len(content),
-                    "width": stats["width"],
-                    "height": stats["height"],
-                    "n_frames": 1,
-                    "mean_intensity": stats["mean_intensity"],
-                }
-            if content[:4] == b"RIFF" and content[8:12] == b"WEBP":
-                # r13: WebP — VP8L lossless pixel-decodes for real
-                # (prefix codes + LZ77 + color cache + all four
-                # transforms); r14: lossy VP8 keyframes pixel-decode
-                # for real too (vp8_lite); extended/animated files
-                # return real container metadata with NULL stats
-                from pythondataingestionprocess_spark.multimodal import (
-                    webp_lite,
+    Unsupported input raises, and decode_media quarantines the row: an
+    image without a BMP/TIFF/GIF/HEIF magic raises ValueError, audio
+    that is no other supported container fails inside wav_lite, and a
+    video that is not ISO-BMFF fails in ``mp4_lite.parse_meta``."""
+    major = _major_type(media_type)
+    if major == "image":
+        if content[:2] == b"BM":
+            stats = bmp_lite.decode(content)
+        elif content[:4] in (b"II*\x00", b"MM\x00*"):
+            stats = tiff_lite.decode(content)
+        elif content[:6] in (b"GIF87a", b"GIF89a"):
+            stats = gif_lite.decode(content)
+        elif content[4:8] == b"ftyp" and heif_lite.is_heif(content):
+            # box-walk metadata only: the payload is an AV1/HEVC intra
+            # frame, so the mean stays NULL
+            meta = heif_lite.parse_meta(content)
+            if meta["width"] > _INT32_MAX or meta["height"] > _INT32_MAX:
+                # ispe carries raw uint32s; an overflow escaping
+                # real_decode kills the Arrow batch's astype("Int32")
+                raise ValueError(
+                    "ispe dimensions exceed the int32 stats columns"
                 )
-
-                stats = webp_lite.decode(content)
-                return {
-                    "byte_len": len(content),
-                    "width": stats["width"],
-                    "height": stats["height"],
-                    "n_frames": stats["n_frames"],
-                    "mean_intensity": stats["mean_intensity"],
-                }
-            if content[:4] in (b"II*\x00", b"MM\x00*"):
-                # r13: baseline TIFF — strips of raw / PackBits / LZW
-                # bytes (tiff_lite; LZW is the MSB-first early-change
-                # cousin of the GIF decoder)
-                from pythondataingestionprocess_spark.multimodal import (
-                    tiff_lite,
-                )
-
-                stats = tiff_lite.decode(content)
-                return {
-                    "byte_len": len(content),
-                    "width": stats["width"],
-                    "height": stats["height"],
-                    "n_frames": 1,
-                    "mean_intensity": stats["mean_intensity"],
-                }
-            if content[:2] == b"BM":
-                # r13: BMP is raw BGR rows (or byte-RLE) — no codec
-                # needed at all (bmp_lite)
-                from pythondataingestionprocess_spark.multimodal import bmp_lite
-
-                stats = bmp_lite.decode(content)
-                return {
-                    "byte_len": len(content),
-                    "width": stats["width"],
-                    "height": stats["height"],
-                    "n_frames": 1,
-                    "mean_intensity": stats["mean_intensity"],
-                }
-            if len(content) >= 12 and content[4:8] == b"ftyp":
-                from pythondataingestionprocess_spark.multimodal import (
-                    heif_lite,
-                )
-
-                if heif_lite.is_heif(content):
-                    # r14: HEIF/AVIF — real box-walk metadata (primary
-                    # item dimensions via pitm→ipma→ispe); the payload
-                    # is an AV1/HEVC intra frame, honestly NULL stats
-                    # (same documented gap class as MP3/AAC samples)
-                    meta = heif_lite.parse_meta(content)
-                    if (
-                        meta["width"] > 2**31 - 1
-                        or meta["height"] > 2**31 - 1
-                    ):
-                        # ispe carries raw uint32s ('>II'); the int32
-                        # guard discipline of the audio branches — one
-                        # quarantine row, not a dead Arrow batch
-                        # (r14 ADVICE)
-                        raise ValueError(
-                            "ispe dimensions exceed the int32 stats "
-                            "columns"
-                        )
-                    return {
-                        "byte_len": len(content),
-                        "width": meta["width"],
-                        "height": meta["height"],
-                        "n_frames": 1,
-                        "mean_intensity": None,
-                    }
-            if content[:6] in (b"GIF87a", b"GIF89a"):
-                # r12: GIF is the third stdlib-decodable web image
-                # format — LZW is pure integer coding (gif_lite)
-                from pythondataingestionprocess_spark.multimodal import gif_lite
-
-                stats = gif_lite.decode(content)
-                return {
-                    "byte_len": len(content),
-                    "width": stats["width"],
-                    "height": stats["height"],
-                    "n_frames": stats["n_frames"],
-                    "mean_intensity": stats["mean_intensity"],
-                }
-            if (
-                content[:1] == b"P"
-                and content[1:2] in b"123456"
-                and (content[2:3].isspace() or content[2:3] == b"#")
-            ):
-                # r13: Netpbm — the zero-compression interchange format
-                from pythondataingestionprocess_spark.multimodal import pnm_lite
-
-                stats = pnm_lite.decode(content)
-                return {
-                    "byte_len": len(content),
-                    "width": stats["width"],
-                    "height": stats["height"],
-                    "n_frames": 1,
-                    "mean_intensity": stats["mean_intensity"],
-                }
-            if subtype in ("x-tga", "tga", "x-targa", "targa"):
-                # r13: TGA is magic-less — explicit MIME rows only,
-                # checked BEFORE the weak ICO sniff (a type-2 TGA's
-                # first four bytes collide with the CUR magic)
-                from pythondataingestionprocess_spark.multimodal import tga_lite
-
-                stats = tga_lite.decode(content)
-                return {
-                    "byte_len": len(content),
-                    "width": stats["width"],
-                    "height": stats["height"],
-                    "n_frames": 1,
-                    "mean_intensity": stats["mean_intensity"],
-                }
-            if (
-                content[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00")
-                and content[4:6] != b"\x00\x00"
-            ):
-                # r13: ICO/CUR favicon container (PNG or DIB entries);
-                # the weak magic additionally requires a nonzero entry
-                # count so magic-less formats can't alias into it
-                from pythondataingestionprocess_spark.multimodal import ico_lite
-
-                stats = ico_lite.decode(content)
-                return {
-                    "byte_len": len(content),
-                    "width": stats["width"],
-                    "height": stats["height"],
-                    "n_frames": stats["n_images"],
-                    "mean_intensity": stats["mean_intensity"],
-                }
-            raise ValueError("unrecognized image format (no PIL in env)")
-    if media_type == "audio":
-        if content[:4] == b"fLaC":
-            # r12: FLAC decodes for REAL — lossless means the samples
-            # are pure integer arithmetic (flac_lite), so compressed
-            # audio gets the same full-sample stats as PCM WAV
-            from pythondataingestionprocess_spark.multimodal import flac_lite
-
-            meta = flac_lite.decode(content)
-            if meta["n_samples"] > 2**31 - 1:
-                # same int32 n_frames guard as the MPEG branch below
-                # (r12 review: the FLAC path shipped without it)
-                raise ValueError("sample count exceeds the int32 stats column")
             return {
                 "byte_len": len(content),
-                "width": meta["sample_rate"],
-                "height": meta["channels"],
-                "n_frames": meta["n_samples"],
-                "mean_intensity": meta["mean_abs_amplitude"],
+                "width": meta["width"],
+                "height": meta["height"],
+                "n_frames": 1,
+                "mean_intensity": None,
             }
-        if content[:4] == b"FORM" and content[8:12] in (b"AIFF", b"AIFC"):
-            # r13: the classic Mac container — PCM/G.711/float decode
-            # for real, unknown compressors (ima4/MACE/GSM) quarantine
-            from pythondataingestionprocess_spark.multimodal import (
-                aiff_au_lite,
+        else:
+            raise ValueError(
+                "unrecognized image format (BMP, TIFF, GIF and HEIF only)"
             )
-
+        return {
+            "byte_len": len(content),
+            "width": stats["width"],
+            "height": stats["height"],
+            # only GIF counts frames; a still image is one frame
+            "n_frames": stats.get("n_frames", 1),
+            "mean_intensity": stats["mean_intensity"],
+        }
+    if major == "audio":
+        if content[:4] == b"fLaC":
+            return _audio_stats(len(content), flac_lite.decode(content))
+        if content[:4] == b"FORM" and content[8:12] in (b"AIFF", b"AIFC"):
             return _audio_stats(
                 len(content), aiff_au_lite.decode_aiff(content)
             )
         if content[:4] == b".snd":
-            # r13: Sun/NeXT AU (audio/basic) — same decode split
-            from pythondataingestionprocess_spark.multimodal import (
-                aiff_au_lite,
-            )
-
-            return _audio_stats(
-                len(content), aiff_au_lite.decode_au(content)
-            )
+            return _audio_stats(len(content), aiff_au_lite.decode_au(content))
         if content[:4] == b"OggS":
-            # r14: Ogg Opus/Vorbis — real page-walk metadata (codec,
-            # channels, rate, samples from the terminal granule);
-            # MDCT sample decode stays honestly NULL, the MP3/AAC
-            # split
-            from pythondataingestionprocess_spark.multimodal import ogg_lite
-
+            # page-walk metadata only: Opus/Vorbis sample decode needs
+            # an MDCT codec, so the mean stays NULL
             meta = ogg_lite.decode_meta(content)
-            # route through the shared int32 validation: Vorbis
-            # sample_rate is an attacker-controlled raw uint32 ('<I'
-            # at offset 12) and must quarantine per-row, not kill the
-            # batch astype("Int32") (r14 ADVICE)
             return _audio_stats(
                 len(content), {**meta, "mean_abs_amplitude": None}
             )
-        from pythondataingestionprocess_spark.multimodal import (
-            mpeg_audio_lite,
-        )
-
         kind = mpeg_audio_lite.sniff(content)
         if kind is not None:
-            # compressed audio (r12): frame-HEADER metadata is real —
-            # duration/rate/channels from walking every frame — while
-            # sample decode stays codec territory (mean NULL), the
-            # same split as video containers below. Stats mapping per
-            # _decode_wav's documented convention: width = sample
-            # rate, height = channels, n_frames = sample count.
+            # frame-header metadata from walking every frame; sample
+            # decode needs the MP3/AAC synthesis codec, so the mean
+            # stays NULL
             meta = (
                 mpeg_audio_lite.parse_mp3(content)
                 if kind == "mp3"
                 else mpeg_audio_lite.parse_adts(content)
             )
-            if meta["n_samples"] > 2**31 - 1:
-                # MEDIA_STATS_SCHEMA's n_frames is int32; a ~14 h
-                # 44.1 kHz stream overflows it, and an overflow that
-                # escapes real_decode kills the whole Arrow batch
-                # instead of quarantining one row (r12 review)
-                raise ValueError("sample count exceeds the int32 stats column")
-            return {
-                "byte_len": len(content),
-                "width": meta["sample_rate"],
-                "height": meta["channels"],
-                "n_frames": meta["n_samples"],
-                "mean_intensity": None,  # sample decode needs a codec
-            }
+            return _audio_stats(
+                len(content), {**meta, "mean_abs_amplitude": None}
+            )
         return _decode_wav(content)
-    if media_type == "video":
-        from pythondataingestionprocess_spark.multimodal import mp4_lite
-
-        if content[:2] == b"\xff\xd8":
-            # raw MJPEG stream (video/mjpeg, e.g. an IP-camera dump):
-            # a bare concatenation of JPEG images. The first frame is
-            # a complete JPEG that jpeg_lite decodes directly; frame
-            # count walks the top-level marker structure (APPn/COM
-            # payloads are skipped by their declared length, so EXIF
-            # thumbnails — embedded JPEGs with their own SOI — can't
-            # inflate the count; r13 review).
-            from pythondataingestionprocess_spark.multimodal import jpeg_lite
-
-            hdr = jpeg_lite.parse_header(content)
-            mean = None
-            try:
-                mean = jpeg_lite.decode(content)["mean_intensity"]
-            except ValueError:
-                pass  # arithmetic/12-bit first frame: metadata only
-            return {
-                "byte_len": len(content),
-                "width": hdr["width"],
-                "height": hdr["height"],
-                # no int32 guard needed: every frame is >= 4 bytes, so
-                # the count can't reach 2^31 for any Arrow-carriable blob
-                "n_frames": jpeg_lite.count_frames(content),
-                "mean_intensity": mean,
-            }
+    if major == "video":
         meta = mp4_lite.parse_meta(content)
-        if meta["n_samples"] is not None and meta["n_samples"] > 2**31 - 1:
-            # same int32 n_frames guard as the audio branches: stsz's
-            # sample_count is a raw uint32 a corrupt file can max out,
-            # and an overflow escaping real_decode kills the whole
-            # Arrow batch instead of quarantining one row (r13 review)
+        if meta["n_samples"] is not None and meta["n_samples"] > _INT32_MAX:
+            # stsz's sample_count is a raw uint32 a corrupt file can
+            # max out; n_frames is int32, and an overflow escaping
+            # real_decode kills the whole Arrow batch instead of
+            # quarantining one row
             raise ValueError("sample count exceeds the int32 stats column")
         mean = None
-        if meta["codec"] in mp4_lite.MJPEG_CODECS:
-            # MJPEG-in-MP4/MOV: every sample is a self-contained JPEG,
-            # so the existing JPEG decoder yields real first-frame
-            # pixel stats — video frame decode for a real format with
-            # zero new codec math (r12 VERDICT item 3). Other codecs
-            # (H.264/HEVC/AV1...) stay honestly metadata-only.
-            frame = mp4_lite.first_video_sample(content)
-            if frame is not None and frame[:2] == b"\xff\xd8":
-                from pythondataingestionprocess_spark.multimodal import (
-                    jpeg_lite,
-                )
-
-                try:
-                    mean = jpeg_lite.decode(frame)["mean_intensity"]
-                except ValueError:
-                    pass
-        elif meta["codec"] == "vp08":
-            # VP8-in-ISO-BMFF (r14): each sample is a raw VP8 frame
-            # and the first sample of a valid track is a keyframe, so
-            # the libwebp-certified intra decoder (vp8_lite) yields
-            # real first-frame stats; inter first-samples / oversize
-            # frames quarantine to metadata-only via the same
-            # ValueError split as MJPEG.
-            frame = mp4_lite.first_video_sample(content)
-            if frame is not None:
-                from pythondataingestionprocess_spark.multimodal import (
-                    vp8_lite,
-                )
-
-                try:
-                    mean = vp8_lite.decode_stats(frame)["mean_intensity"]
-                except ValueError:
-                    pass
-        elif meta["codec"] in mp4_lite.RAW_CODECS:
-            # uncompressed video (r13): samples ARE pixel data, so
-            # first-frame stats need zero codec math — same
-            # decode-what-you-can / metadata-only-otherwise split as
-            # MJPEG (a frame whose byte count contradicts the declared
-            # geometry stays metadata-only, never a misread).
+        if meta["codec"] in mp4_lite.RAW_CODECS:
+            # uncompressed samples ARE pixel data; a frame whose byte
+            # count contradicts the declared geometry stays
+            # metadata-only, never a misread. Other codecs keep a NULL
+            # mean next to real container metadata.
             frame = mp4_lite.first_video_sample(content)
             if frame is not None:
                 try:
@@ -481,8 +201,8 @@ def real_decode(content: bytes, media_type: str) -> dict:
             "mean_intensity": mean,
         }
     raise NotImplementedError(
-        f"{media_type} decoding requires libraries not present in this "
-        "environment; use fake_decode_stats for pipeline tests"
+        f"no decoder for media type {media_type!r}; use fake_decode_stats "
+        "for pipeline tests"
     )
 
 
@@ -490,14 +210,12 @@ def _raw_frame_mean(
     frame: bytes, width: int | None, height: int | None,
     codec: str, depth: int | None,
 ) -> float:
-    """Mean luma of one uncompressed video frame, normalized 0-1 to
-    match the JPEG/PNG convention. '2vuy' (packed 4:2:2: Cb Y'0 Cr
-    Y'1) carries video-range luma, mapped (Y-16)/219 per Rec. 601;
-    'raw ' RGB/ARGB is full-range, Rec. 601 luma / 255. Raises
-    ValueError when the frame size contradicts the declared geometry
-    (the caller stays metadata-only)."""
-    import numpy as np
-
+    """Mean luma of one uncompressed video frame, normalized 0-1 like
+    the image stats. '2vuy' (packed 4:2:2: Cb Y'0 Cr Y'1) carries
+    video-range luma, mapped (Y-16)/219 per Rec. 601; 'raw ' RGB/ARGB
+    is full-range, Rec. 601 luma / 255. Raises ValueError when the
+    frame size contradicts the declared geometry (the caller stays
+    metadata-only)."""
     if not width or not height:
         raise ValueError("raw frame without tkhd geometry")
     if codec == "2vuy":
@@ -532,17 +250,10 @@ def _decode_wav(content: bytes) -> dict:
     """WAV decode: the stdlib ``wave`` module handles canonical PCM
     (8/16/32-bit); everything it rejects — G.711 mu-law/A-law, IMA and
     MS ADPCM, IEEE float, 24-bit and EXTENSIBLE PCM — routes to
-    multimodal/wav_lite.py, which decodes SAMPLES for real (r13: the
-    lossy-audio gap closes for the telephony/wavetable codecs; MP3/AAC
-    stay honestly metadata-only per the table-B.3 blocker recorded in
-    BASELINE.md). Stats mapping into MEDIA_STATS_SCHEMA (documented,
-    since audio has no pixels): width = sample rate (Hz), height =
-    channel count, n_frames = frame count, mean_intensity = mean
-    |amplitude| normalized to 0-1."""
-    import io
-    import wave
-    from array import array
-
+    wav_lite, which decodes the samples too. Stats mapping into
+    MEDIA_STATS_SCHEMA (audio has no pixels): width = sample rate
+    (Hz), height = channel count, n_frames = frame count,
+    mean_intensity = mean |amplitude| normalized to 0-1."""
     try:
         with wave.open(io.BytesIO(content)) as w:
             rate, n_ch, n_frames = (
@@ -551,7 +262,7 @@ def _decode_wav(content: bytes) -> dict:
             width_bytes = w.getsampwidth()
             if width_bytes not in (1, 2, 4):
                 # 24-bit PCM: delegate BEFORE materializing the whole
-                # payload just to discard it (r13 review)
+                # payload just to discard it
                 return _decode_wav_lite(content)
             frames = w.readframes(n_frames)
     except wave.Error:
@@ -565,15 +276,13 @@ def _decode_wav(content: bytes) -> dict:
             sum(abs(s - 128) for s in samples) / len(samples) / 127.0
             if samples else 0.0
         )
-    elif width_bytes in (2, 4):
+    else:
         samples = array("h" if width_bytes == 2 else "i", frames)
         full = 32767.0 if width_bytes == 2 else 2147483647.0
         mean = (
             sum(abs(s) for s in samples) / len(samples) / full
             if samples else 0.0
         )
-    else:  # unreachable: widths outside (1, 2, 4) delegated above
-        raise ValueError(f"unsupported PCM sample width {width_bytes}")
     return {
         "byte_len": len(content),
         "width": rate,
@@ -583,20 +292,25 @@ def _decode_wav(content: bytes) -> dict:
     }
 
 
+def _decode_wav_lite(content: bytes) -> dict:
+    return _audio_stats(len(content), wav_lite.decode(content))
+
+
 def _audio_stats(byte_len: int, meta: dict) -> dict:
-    """wav_lite-shaped stats → MEDIA_STATS_SCHEMA mapping (the
-    documented audio convention: width = sample rate, height =
-    channels, n_frames = per-channel sample count)."""
+    """Audio decoder stats → MEDIA_STATS_SCHEMA: width = sample rate
+    (Hz), height = channel count, n_frames = per-channel sample
+    count, mean_intensity = mean |amplitude| normalized to 0-1 (NULL
+    for metadata-only formats)."""
     if (
-        meta["n_samples"] > 2**31 - 1
-        or meta["sample_rate"] > 2**31 - 1
-        or meta["channels"] > 2**31 - 1
+        meta["n_samples"] > _INT32_MAX
+        or meta["sample_rate"] > _INT32_MAX
+        or meta["channels"] > _INT32_MAX
     ):
-        # int32 guard on EVERY stats column this mapping feeds: the
-        # rate/channels fields are attacker-controlled uint32s (AU
-        # header) or unbounded floats (AIFF 80-bit COMM rate), and an
-        # overflow that escapes real_decode dies in the batch-level
-        # astype("Int32") instead of quarantining one row (r13 review)
+        # int32 guard on EVERY stats column this mapping feeds: sample
+        # rates and counts are raw header uint32s (WAV fmt, AU, Vorbis)
+        # or unbounded (AIFF's 80-bit float rate, a long MP3's frame
+        # walk), and an overflow that escapes real_decode dies in the
+        # batch-level astype("Int32") instead of quarantining one row
         raise ValueError("audio metadata exceeds the int32 stats columns")
     return {
         "byte_len": byte_len,
@@ -605,12 +319,6 @@ def _audio_stats(byte_len: int, meta: dict) -> dict:
         "n_frames": meta["n_samples"],
         "mean_intensity": meta["mean_abs_amplitude"],
     }
-
-
-def _decode_wav_lite(content: bytes) -> dict:
-    from pythondataingestionprocess_spark.multimodal import wav_lite
-
-    return _audio_stats(len(content), wav_lite.decode(content))
 
 
 def fake_decode_stats(content: bytes, media_type: str) -> dict:
@@ -642,15 +350,10 @@ def decode_media(
     use_fake: bool = True,
 ) -> DataFrame:
     """Arrow-batched decode via mapInPandas: (id, media_type, content)
-    → MEDIA_STATS_SCHEMA rows. ``use_fake=False`` routes to the real
-    (stubbed) decoder.
-
-    The FULL MIME string passes through to the decoder: both
-    real_decode and fake_decode_stats normalize the major type
-    themselves (so they agree on MIME-typed rows — the r10 concern),
-    and real_decode additionally needs the subtype for magic-less
-    formats (image/x-tga — r13 review: normalizing here made the TGA
-    route unreachable from the pipeline path).
+    → MEDIA_STATS_SCHEMA rows. ``use_fake=False`` routes to
+    ``real_decode``. The full MIME string passes through: both
+    decoders normalize the major type themselves, so they agree on
+    MIME-typed rows.
 
     Per-row fault isolation: an unsupported type (a real crawl's
     ``application/http`` response payloads) or an undecodable blob
@@ -659,37 +362,29 @@ def decode_media(
     crashing the whole Arrow batch task (the same per-record
     discipline, INCLUDING the reason string, as the WARC reader that
     feeds this). ImportError is deliberately NOT caught: a decoder
-    library missing on an executor is a broken deployment, and
-    silently NULL-stat-ing the whole corpus would be indistinguishable
-    from corrupt data (fifth review pass)."""
+    missing on an executor is a broken deployment, and silently
+    NULL-stat-ing the whole corpus would be indistinguishable from
+    corrupt data."""
     decoder = fake_decode_stats if use_fake else real_decode
 
     def _one(content, mt) -> dict:
         blob = bytes(content) if content is not None else b""
         try:
-            # pass the FULL MIME through: real_decode normalizes the
-            # major type itself but needs the subtype for magic-less
-            # formats (TGA), and fake_decode_stats normalizes too —
-            # stripping here made the TGA route unreachable from the
-            # pipeline path (r13 review)
             stats = decoder(blob, mt)
             return {**stats, "decode_status": "ok"}
         except (ImportError, MemoryError, RecursionError):
             # broken environment / resource exhaustion, not bad data —
             # fail loud. An executor OOM-ing on a large blob must kill
             # the task (so Spark retries / surfaces it), not quietly
-            # become a quarantine:MemoryError data row (r10 ADVICE).
+            # become a quarantine:MemoryError data row.
             raise
         except Exception as e:
             # broad BY DESIGN at this boundary: decoders parse
-            # untrusted crawl bytes and raise whatever the format
-            # library raises (zlib.error on a truncated PNG,
-            # wave.Error on an MP3 typed audio/*, struct/EOF/OSError
-            # from PIL and the lite parsers — fourth review pass
-            # confirmed several escape a narrow clause). Any parse
-            # failure means "this row can't decode"; the status
-            # column carries the reason so data problems stay
-            # distinguishable from code problems.
+            # untrusted crawl bytes, and a truncated header raises
+            # struct.error, wave.Error or IndexError as readily as
+            # ValueError. Any parse failure means "this row can't
+            # decode"; the status column carries the reason so data
+            # problems stay distinguishable from code problems.
             return {
                 "byte_len": len(blob),
                 "width": None,
@@ -706,7 +401,7 @@ def decode_media(
                 for content, mt in zip(pdf["content"], pdf["media_type"])
             ]
             out = pd.DataFrame(stats)
-            # header-only decodes (JPEG/MP4 without a codec) carry a
+            # metadata-only video decodes (any codec but raw) carry a
             # NULL mean_intensity — and an audio-only MP4 has no
             # width/height/n_frames; nullable pandas dtypes map to SQL
             # NULL through Arrow instead of NaN-poisoning the ints.

@@ -6,9 +6,11 @@ catalog stage needs lives in ``moov``: presentation duration
 (``mvhd``: timescale + duration), per-track media kind (``hdlr``:
 'vide'/'soun'/...), visual dimensions (``tkhd``: 16.16 fixed point),
 and the sample count (``stsz``/``stz2``). Parsing them is pure byte
-walking — the codec payload in ``mdat`` is never touched, so this is
-real in-container video *metadata* the way jpeg_lite is for JPEG;
-actual frame decode stays PyAV/ffmpeg territory (stubbed, documented).
+walking — the codec payload in ``mdat`` is never touched.
+``first_video_sample`` follows the sample tables to the first frame's
+bytes, which media.real_decode turns into pixel stats only for the
+uncompressed ``RAW_CODECS``; compressed frames are left to native
+decoders upstream.
 
 Scale: metadata boxes are KBs at the FRONT of a well-formed (faststart)
 file; a reader that range-fetches ``moov`` catalogs a petabyte of video
@@ -99,7 +101,7 @@ def parse_meta(content: bytes) -> dict:
         # stats describe the FIRST video track only — gated on a flag,
         # not `width is None`, so a first track without a tkhd can't
         # let a second track overwrite codec/n_samples and diverge
-        # from first_video_sample's first-track walk (r13 review)
+        # from first_video_sample's first-track walk
         if handler == "vide" and not saw_video:
             saw_video = True
             tkhd = _find(content, b, e, b"tkhd")
@@ -172,12 +174,7 @@ def _video_stbl(content: bytes, trak_b: int, trak_e: int):
     return _find(content, minf[0], minf[1], b"stbl")
 
 
-# MJPEG sample-entry fourccs: QuickTime photo-JPEG ('jpeg') and
-# motion-JPEG A/B ('mjpa'/'mjpb') — each sample is a self-contained
-# JPEG image, decodable by jpeg_lite with zero new codec math.
-MJPEG_CODECS = frozenset({"jpeg", "mjpa", "mjpb"})
-
-# UNCOMPRESSED sample-entry fourccs (r13): each sample is raw pixel
+# UNCOMPRESSED sample-entry fourccs: each sample is raw pixel
 # data, so first-frame stats need no codec at all — 'raw ' is packed
 # RGB (depth 24) / ARGB (depth 32) per the QuickTime File Format
 # spec's "uncompressed video" entries; '2vuy' is 8-bit 4:2:2 YCbCr
@@ -190,9 +187,10 @@ def first_video_sample(content: bytes) -> bytes | None:
     the sample tables: sample 1 starts at chunk 1's offset (``stco`` /
     ``co64``) and spans the first size from ``stsz`` (or its fixed
     sample_size) or compact ``stz2``. Returns None when any table is
-    absent or the span falls outside the buffer — callers treat that
-    as metadata-only, never an error (the container may be a
-    faststart head without its mdat)."""
+    absent or the span falls outside every top-level ``mdat`` — callers
+    treat that as metadata-only, never an error. A faststart head
+    without its mdat keeps chunk offsets that now point into moov or
+    past the end; reading those bytes as a frame would be a misread."""
     top = list(_iter_boxes(content, 0, len(content)))
     moov = next(((b, e) for t, b, e in top if t == b"moov"), None)
     if moov is None:
@@ -224,7 +222,7 @@ def first_video_sample(content: bytes) -> bytes | None:
             )[0]
         elif stz2 is not None:
             # compact sizes (parse_meta supports stz2, so this walk
-            # must too — r13 review): 24-bit reserved + uint8
+            # must too): 24-bit reserved + uint8
             # field_size (4/8/16 bits), uint32 count, packed sizes
             _, off_s = _fullbox(content, stz2[0])
             field_size = content[off_s + 3]
@@ -256,7 +254,10 @@ def first_video_sample(content: bytes) -> bytes | None:
         (offset,) = struct.unpack(
             fmt, content[off_c + 4:off_c + 4 + struct.calcsize(fmt)]
         )
-        if size == 0 or offset + size > len(content):
+        if size == 0 or not any(
+            box_t == b"mdat" and box_b <= offset and offset + size <= box_e
+            for box_t, box_b, box_e in top
+        ):
             return None
         return content[offset:offset + size]
     return None

@@ -2,17 +2,17 @@
 
 TIFF is the scanned-document / raw-photo workhorse; its baseline
 profile needs no codec library: strips of raw bytes, byte-oriented
-PackBits RLE (TIFF 6.0 §9), or LZW (§13 — the MSB-first, early-change
-cousin of the GIF LZW already shipped in gif_lite). Handled: both
-byte orders, 8-bit grayscale (BlackIsZero and the inverted
-WhiteIsZero), RGB(A) chunky, palette-color (16-bit ColorMap),
-compression none / PackBits / LZW, the horizontal-differencing
-predictor, and multi-strip layouts. Rejected loudly (quarantine):
+PackBits RLE (TIFF 6.0 §9), or LZW (§13 — the MSB-first,
+early-change variant of GIF's LZW). Handled: both byte orders, 8-bit
+grayscale (BlackIsZero and the inverted WhiteIsZero), RGB(A) chunky,
+palette-color (16-bit ColorMap), compression none / PackBits / LZW,
+the horizontal-differencing predictor, and multi-strip layouts. Rejected loudly (quarantine):
 tiled layouts, planar configuration 2, non-8-bit depths, and the
 codec compressions (G3/G4 fax, old- and new-style JPEG).
 
-``decode`` returns the png_lite stats contract: width/height/channels
-and mean_intensity over the COLOR samples (alpha excluded), 0-1.
+``decode`` returns width/height/channels and mean_intensity: the
+mean over the COLOR samples (alpha excluded), scaled to 0-1 by the
+sample maximum.
 
 Spec: Adobe TIFF 6.0 (1992) — IFD walk §2, PackBits §9, LZW §13,
 predictor §14. Reference anchor: binary media ingestion is the
@@ -147,8 +147,9 @@ def _lzw_decode(data: bytes, expected: int) -> bytes:
 
 def decode(data: bytes) -> dict:
     """TIFF bytes → {"width", "height", "channels", "mean_intensity"}
-    (png_lite contract). Raises ValueError on junk or unsupported
-    variants (the decode_media quarantine path)."""
+    (mean over color samples, alpha excluded, 0-1). Raises
+    ValueError on junk or unsupported variants (the decode_media
+    quarantine path)."""
     if len(data) < 8 or data[:2] not in (b"II", b"MM"):
         raise ValueError("not a TIFF (bad byte-order mark)")
     bo = "<" if data[:2] == b"II" else ">"

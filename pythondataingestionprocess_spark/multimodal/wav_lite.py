@@ -2,19 +2,17 @@
 G.711 mu-law / A-law, IMA ADPCM, MS ADPCM, IEEE float, and 24-bit /
 extensible PCM — real SAMPLE decode for lossy audio codecs.
 
-The r12 round closed lossless compressed audio (FLAC); the remaining
-"lossy audio sample decode" gap was documented as codec-bound because
-MP3/AAC need the ISO 11172-3 table B.3 synthesis window (tabulated,
-no in-container copy to certify against). The classic telephony and
-wavetable codecs have no such blocker: G.711 (ITU-T G.711, 1988) is a
-closed-form 8-bit companding law, and IMA/MS ADPCM (IMA "Recommended
-Practices for Enhancing Digital Audio Compatibility" rev 3.00, 1992;
-Microsoft WAV RIFF spec, ``WAVE_FORMAT_ADPCM``) are integer
-predictor+step-table schemes — all exactly implementable and, for
-G.711 and IMA, bit-exactly cross-checkable against the stdlib
-``audioop`` module's independent implementation (tests do exactly
-that; audioop itself is NOT imported here — it is deprecated and
-test-only).
+MP3/AAC sample decode is codec-bound (it needs the ISO 11172-3 table
+B.3 synthesis window), so those formats are left to native libraries
+upstream. The classic telephony and wavetable codecs are not: G.711
+(ITU-T G.711, 1988) is a closed-form 8-bit companding law, and IMA/MS
+ADPCM (IMA "Recommended Practices for Enhancing Digital Audio
+Compatibility" rev 3.00, 1992; Microsoft WAV RIFF spec,
+``WAVE_FORMAT_ADPCM``) are integer predictor+step-table schemes — all
+exactly implementable and, for G.711 and IMA, bit-exactly
+cross-checkable against the stdlib ``audioop`` module's independent
+implementation (tests do exactly that; audioop itself is NOT imported
+here — it is deprecated and test-only).
 
 Format tags handled (RIFF ``fmt `` wFormatTag):
   0x0001 PCM (8-bit unsigned, 16/24/32-bit signed — covers the 24-bit
@@ -25,8 +23,7 @@ Format tags handled (RIFF ``fmt `` wFormatTag):
 
 Scale notes: ADPCM blocks are independent (each ``block_align`` chunk
 carries its own predictor/step-index header), so a distributed decode
-parallelizes per block with zero carried state — the same
-block-parallel story as the FLAC frame walk. Per-blob decode runs
+parallelizes per block with zero carried state. Per-blob decode runs
 inside the Arrow-batched ``decode_media`` mapInPandas, never on the
 driver.
 
@@ -103,8 +100,8 @@ def _ima_decode_lanes(
     step feeds the next), but streams are independent, so the loop
     runs over code POSITIONS with numpy ops across the B lanes —
     turning the 500k-iteration Python loop a 4-minute ADPCM file used
-    to cost into ~2k vector steps (measured 40x wall improvement,
-    scripts/media_decode_probe.py). Returns (B, n) int16."""
+    to cost into ~2k vector steps (measured 40x wall improvement).
+    Returns (B, n) int16."""
     n_lanes, n_codes = nibbles.shape
     out = np.empty((n_lanes, n_codes), dtype=np.int16)
     pred = pred0.astype(np.int32).copy()
@@ -213,16 +210,16 @@ def _decode_ms(
     older), then 4-bit codes high-nibble-first, channel-interleaved
     nibble-wise.
 
-    Block-parallel path (r13 VERDICT item 8): blocks are independent,
-    so the decode loops over code POSITIONS with all blocks as int64
-    numpy lanes — the same lane trick as IMA, ~10x on multi-block
-    files. MS ADPCM's idelta is the documented clamp hazard (it
-    adapts by up to 768/256 = 3x per code with no spec ceiling, so a
-    crafted stream overflows any fixed width): the lanes carry a
-    2**46 guard and fall back to the exact-Python-int scalar path for
-    the whole stream when any lane trips it. Below the guard every
-    int64 op here (arithmetic >> on negatives, products bounded by
-    768 * 2**46 < 2**63) matches Python-int semantics exactly.
+    Block-parallel path: blocks are independent, so the decode loops
+    over code POSITIONS with all blocks as int64 numpy lanes — the
+    same lane trick as IMA, ~10x on multi-block files. MS ADPCM's
+    idelta is the documented clamp hazard (it adapts by up to 768/256
+    = 3x per code with no spec ceiling, so a crafted stream overflows
+    any fixed width): the lanes carry a 2**46 guard and fall back to
+    the exact-Python-int scalar path for the whole stream when any
+    lane trips it. Below the guard every int64 op here (arithmetic >>
+    on negatives, products bounded by 768 * 2**46 < 2**63) matches
+    Python-int semantics exactly.
     """
     header = 7 * channels
     if block_align <= header:
@@ -369,7 +366,8 @@ def _decode_ms_scalar(
 def int_pcm_stats(data: bytes, bits: int, byteorder: str,
                   unsigned8: bool = False) -> tuple[float, int]:
     """(mean |x| normalized 0-1, total sample count) for linear PCM.
-    8-bit is signed by default (AIFF/AU); WAV passes unsigned8=True."""
+    8-bit is signed unless ``unsigned8`` (WAV's 8-bit PCM is
+    unsigned)."""
     if bits == 8:
         if unsigned8:
             x = np.frombuffer(data, dtype=np.uint8).astype(np.int32) - 128
@@ -484,11 +482,11 @@ def _parse_riff(content: bytes) -> tuple[dict, bytes, int | None]:
 
 def decode(content: bytes) -> dict:
     """Decode a WAV blob the stdlib ``wave`` module can't (or any WAV)
-    into the same stats dict shape flac_lite uses: sample_rate,
-    channels, n_samples (per channel), mean_abs_amplitude (mean |x|
-    normalized to 0-1 over ALL channels' int16 samples; floats are
-    clipped to [-1, 1] first). Raises ValueError on junk, truncation,
-    or an unsupported format tag — the decode_media quarantine path."""
+    into a stats dict: sample_rate, channels, n_samples (per channel),
+    mean_abs_amplitude (mean |x| normalized to 0-1 over ALL channels'
+    int16 samples; floats are clipped to [-1, 1] first). Raises
+    ValueError on junk, truncation, or an unsupported format tag — the
+    decode_media quarantine path."""
     fmt, data, fact = _parse_riff(content)
     tag, ch = fmt["tag"], fmt["channels"]
     if tag == 0x0001:  # integer PCM, incl. the 24-bit stdlib gap

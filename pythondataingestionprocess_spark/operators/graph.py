@@ -143,12 +143,15 @@ def _closed_triangles(edges: DataFrame, materialize):
     if materialize is True:
         oriented = oriented.localCheckpoint()
     # wedges at the apex: two out-edges (src→x), (src→y), x < y keeps
-    # each unordered pair once. SHUFFLE_HASH hint (r18, guide §3.1):
-    # the planner's default sort-merge pays two full sorts of the
-    # oriented edge list; per-partition out-edge groups are
-    # √|E|-bounded by the orientation, so the hash build side always
-    # fits and the sorts are pure overhead (the wedge stream feeds an
-    # unordered semi-join + counts — nothing downstream wants order).
+    # each unordered pair once. SHUFFLE_HASH hint: the planner's
+    # default sort-merge pays two full sorts of the oriented edge
+    # list, and the wedge stream feeds an unordered semi-join + counts,
+    # so nothing downstream wants that order. The orientation bounds
+    # each KEY's out-degree by O(√|E|), not the build side: a
+    # ShuffledHashJoin builds one hash table over its whole partition
+    # (~|E|/numPartitions rows) and cannot spill, so the hint holds
+    # only while a partition of the oriented edges fits in executor
+    # memory.
     o1 = oriented.select(F.col("src"), F.col("dst").alias("x"))
     o2 = oriented.select(F.col("src"), F.col("dst").alias("y"))
     wedges = o1.join(o2.hint("shuffle_hash"), "src").filter(F.col("x") < F.col("y"))

@@ -131,10 +131,9 @@ def test_multimodal_decode_plumbing(spark):
 
 
 def test_real_decode_video_junk_fails_loudly():
-    # image (png_lite/jpeg_lite), audio (stdlib wave), and video
-    # CONTAINER metadata (mp4_lite, r9) are real now; junk video bytes
-    # must fail loudly (quarantine discipline), and frame decode stays
-    # codec territory — see tests/test_multimodal_headers.py.
+    # video decode starts with the ISO-BMFF container walk (mp4_lite):
+    # junk video bytes must fail loudly (quarantine discipline) — see
+    # tests/test_multimodal_headers.py.
     with pytest.raises(ValueError):
         media.real_decode(b"bytes", "video")
 
@@ -893,101 +892,6 @@ def test_decayed_feature_matches_python_recursion(spark):
                 # truncation drops terms older than m rows: bounded by
                 # a^m * max history prefix
                 assert abs(got[(u, i)] - s) <= (a ** m) * sum(series) + 1e-9
-
-
-def _encode_png(width, height, pixels, color_type=2, filters=None):
-    """Minimal PNG encoder for fixtures: 8-bit, rows filtered with the
-    given per-row filter types (default all 0) so the decoder's
-    Sub/Up/Average/Paeth reconstruction paths get exercised."""
-    import struct
-    import zlib as _zlib
-
-    ch = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
-    filters = filters or [0] * height
-
-    def chunk(ctype, body):
-        out = struct.pack(">I", len(body)) + ctype + body
-        return out + struct.pack(">I", _zlib.crc32(ctype + body) & 0xFFFFFFFF)
-
-    def _paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            return a
-        return b if pb <= pc else c
-
-    stride = width * ch
-    raw = bytearray()
-    prev = bytearray(stride)
-    for r in range(height):
-        line = bytearray(pixels[r * stride:(r + 1) * stride])
-        f = filters[r]
-        enc = bytearray(line)
-        if f == 1:
-            for i in range(stride - 1, ch - 1, -1):
-                enc[i] = (line[i] - line[i - ch]) & 0xFF
-        elif f == 2:
-            for i in range(stride):
-                enc[i] = (line[i] - prev[i]) & 0xFF
-        elif f == 3:
-            for i in range(stride):
-                left = line[i - ch] if i >= ch else 0
-                enc[i] = (line[i] - ((left + prev[i]) >> 1)) & 0xFF
-        elif f == 4:
-            for i in range(stride):
-                left = line[i - ch] if i >= ch else 0
-                ul = prev[i - ch] if i >= ch else 0
-                enc[i] = (line[i] - _paeth(left, prev[i], ul)) & 0xFF
-        raw += bytes([f]) + enc
-        prev = line
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", _zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_png_decode_real_images_all_filters(spark):
-    """REAL image decode without PIL: an 8-bit RGB image whose rows use
-    every PNG filter type must reconstruct exactly (mean over a known
-    gradient), through the same mapInPandas plumbing the fake decode
-    uses. Audio stays stubbed; junk image bytes fail loudly."""
-    import pytest as _pytest
-
-    w, h = 6, 5
-    pixels = bytes((r * 40 + c) % 256 for r in range(h) for c in range(w * 3))
-    png = _encode_png(w, h, pixels, color_type=2, filters=[0, 1, 2, 3, 4])
-    expected_mean = sum(pixels) / len(pixels) / 255.0
-
-    stats = media.real_decode(png, "image")
-    assert (stats["width"], stats["height"]) == (w, h)
-    assert stats["mean_intensity"] == _pytest.approx(expected_mean, abs=1e-12)
-
-    # grayscale and RGBA variants (alpha excluded from the mean)
-    gray = _encode_png(3, 2, bytes(range(6)), color_type=0)
-    assert media.real_decode(gray, "image")["mean_intensity"] == _pytest.approx(
-        (0 + 1 + 2 + 3 + 4 + 5) / 6 / 255.0
-    )
-    rgba_px = bytes([10, 20, 30, 255] * 4)  # 2x2, constant alpha
-    rgba = _encode_png(2, 2, rgba_px, color_type=6)
-    assert media.real_decode(rgba, "image")["mean_intensity"] == _pytest.approx(
-        (10 + 20 + 30) / 3 / 255.0
-    )
-
-    # end-to-end through the Arrow plumbing with use_fake=False
-    df = spark.createDataFrame(
-        [(1, "image", png)], "id long, media_type string, content binary"
-    )
-    row = media.decode_media(df, use_fake=False).collect()[0]
-    assert (row.width, row.height, row.n_frames) == (w, h, 1)
-
-    with _pytest.raises(ValueError):
-        media.real_decode(b"not a png", "image")
-    with _pytest.raises(ValueError):
-        media.real_decode(b"bytes", "video")
-
 
 
 def test_resample_interpolate_hourly_semantics(spark):

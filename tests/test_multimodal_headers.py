@@ -1,7 +1,8 @@
-"""Stdlib media HEADER parsers (r9): jpeg_lite (SOF frame header) and
-mp4_lite (ISO-BMFF container boxes) — real metadata without any codec
-library, failing loudly on junk (the quarantine discipline), wired
-through real_decode and the Arrow decode plumbing."""
+"""mp4_lite (ISO-BMFF container boxes): real metadata without any codec
+library, failing loudly on junk (the quarantine discipline), the
+sample-table walk to the first video frame, and first-frame stats for
+uncompressed video — wired through real_decode and the Arrow decode
+plumbing."""
 
 from __future__ import annotations
 
@@ -9,58 +10,7 @@ import struct
 
 import pytest
 
-from pythondataingestionprocess_spark.multimodal import jpeg_lite, media, mp4_lite
-
-
-# ---------------------------------------------------------------- JPEG
-
-def _jpeg(width=640, height=480, n_comp=3, sof=0xC0, with_exif=False):
-    out = bytearray(b"\xff\xd8")  # SOI
-    app0 = b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00"
-    out += b"\xff\xe0" + struct.pack(">H", 2 + len(app0)) + app0
-    if with_exif:
-        exif = b"Exif\x00\x00MM\x00\x2a\x00\x00\x00\x08"
-        out += b"\xff\xe1" + struct.pack(">H", 2 + len(exif)) + exif
-    dqt = bytes(65)  # fake quant table
-    out += b"\xff\xdb" + struct.pack(">H", 2 + len(dqt)) + dqt
-    sof_body = struct.pack(">BHHB", 8, height, width, n_comp) + bytes(3 * n_comp)
-    out += bytes([0xFF, sof]) + struct.pack(">H", 2 + len(sof_body)) + sof_body
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def test_jpeg_header_baseline():
-    hdr = jpeg_lite.parse_header(_jpeg(width=1920, height=1080))
-    assert (hdr["width"], hdr["height"]) == (1920, 1080)
-    assert hdr["n_components"] == 3 and hdr["bit_depth"] == 8
-    assert hdr["progressive"] is False and hdr["has_exif"] is False
-
-
-def test_jpeg_header_progressive_grayscale_exif():
-    hdr = jpeg_lite.parse_header(
-        _jpeg(width=32, height=16, n_comp=1, sof=0xC2, with_exif=True)
-    )
-    assert (hdr["width"], hdr["height"]) == (32, 16)
-    assert hdr["n_components"] == 1
-    assert hdr["progressive"] is True and hdr["has_exif"] is True
-
-
-def test_jpeg_header_rejects_junk():
-    with pytest.raises(ValueError, match="missing SOI"):
-        jpeg_lite.parse_header(b"\x89PNG not a jpeg")
-    # SOI but truncated before any SOF
-    with pytest.raises(ValueError, match="no SOF"):
-        jpeg_lite.parse_header(b"\xff\xd8\xff\xd9")
-    # segment length pointing past the buffer
-    bad = b"\xff\xd8\xff\xe0\xff\xff"
-    with pytest.raises(ValueError, match="truncated segment"):
-        jpeg_lite.parse_header(bad)
-
-
-def test_jpeg_via_real_decode_image_route():
-    stats = media.real_decode(_jpeg(width=800, height=600), "image")
-    assert (stats["width"], stats["height"], stats["n_frames"]) == (800, 600, 1)
-    assert stats["mean_intensity"] is None  # pixel stats need a codec
+from pythondataingestionprocess_spark.multimodal import media, mp4_lite, synth
 
 
 # ----------------------------------------------------------------- MP4
@@ -117,9 +67,9 @@ def test_mp4_meta_video_and_audio_tracks():
 
 
 def test_mp4_meta_stz2_compact_sample_sizes():
-    """ADVICE r9: stz2-compacted sample tables must yield the sample
-    count too (fullbox, 3 reserved bytes + field_size, then a 32-bit
-    count), not a silent NULL."""
+    """stz2-compacted sample tables must yield the sample count too
+    (fullbox, 3 reserved bytes + field_size, then a 32-bit count), not
+    a silent NULL."""
     meta = mp4_lite.parse_meta(_mp4(n_samples=48, compact_sizes=True))
     assert meta["n_samples"] == 48
 
@@ -144,31 +94,33 @@ def test_mp4_meta_rejects_junk():
 def test_mp4_via_real_decode_and_arrow_plumbing(spark):
     """Video metadata end-to-end: real_decode routes video to mp4_lite,
     and decode_media(use_fake=False) carries a NULL mean_intensity
-    (nullable Float64 → SQL NULL, not NaN) next to real dimensions."""
+    (nullable Float64 → SQL NULL, not NaN) next to real dimensions and
+    a fully decoded image row in the same batch."""
     blob = _mp4(width=320, height=240, n_samples=48)
     stats = media.real_decode(blob, "video")
     assert (stats["width"], stats["height"], stats["n_frames"]) == (320, 240, 48)
     assert stats["mean_intensity"] is None
 
     df = spark.createDataFrame(
-        [(1, "video", blob), (2, "image", _jpeg(width=64, height=32))],
+        [(1, "video", blob), (2, "image", synth.bmp_rle8(64, 32, 51))],
         "id long, media_type string, content binary",
     )
     rows = {r.id: r for r in media.decode_media(df, use_fake=False).collect()}
     assert (rows[1].width, rows[1].height, rows[1].n_frames) == (320, 240, 48)
     assert rows[1].mean_intensity is None
     assert (rows[2].width, rows[2].height) == (64, 32)
-    assert rows[2].mean_intensity is None
+    assert rows[2].mean_intensity == pytest.approx(51 / 255)
 
 
-# --------------------------------------------------------------- MJPEG
+# ------------------------------------------------------- sample tables
 
-def _mp4_mjpeg(payload: bytes, codec: bytes = b"jpeg", n_samples: int = 3,
-               w: int = 8, h: int = 8, depth: int = 0) -> bytes:
-    """MJPEG/raw-in-MOV fixture: mdat BEFORE moov so the stco chunk
-    offset is known up front; every sample is the same payload.
-    ``depth`` fills the VisualSampleEntry pixel-depth field (entry
-    offset 82) the raw codecs discriminate on."""
+def _mov(payload: bytes, codec: bytes = b"raw ", n_samples: int = 3,
+         w: int = 2, h: int = 2, depth: int = 24) -> bytes:
+    """Single-video-track MOV fixture: mdat BEFORE moov so the stco
+    chunk offset is known up front; every sample is the same payload,
+    opaque to the container. ``depth`` fills the VisualSampleEntry
+    pixel-depth field (entry offset 82) the raw codecs discriminate
+    on."""
     ftyp = _box(b"ftyp", b"qt  \x00\x00\x02\x00qt  ")
     mdat = _box(b"mdat", payload * n_samples)
     payload_off = len(ftyp) + 8  # first sample = start of mdat body
@@ -197,97 +149,44 @@ def _mp4_mjpeg(payload: bytes, codec: bytes = b"jpeg", n_samples: int = 3,
     return ftyp + mdat + moov
 
 
-def _uniform_jpeg() -> bytes:
-    """8x8 DC-only grayscale JPEG with analytic mean 148/255 (the
-    test_jpeg_decode fixture, rebuilt here to keep this module
-    standalone)."""
-    from tests.test_jpeg_decode import _gray_jpeg
-
-    return _gray_jpeg(8, 8, [(160, {})])
+# 2x2 RGB24 frame of constant gray 148: Rec. 601 luma / 255 = 148/255
+_GRAY = bytes([148]) * 12
 
 
-def test_mp4_mjpeg_first_frame_decodes_for_real():
-    """r12 VERDICT item 3: 'jpeg' sample entries are self-contained
-    JPEGs — the first frame routes through jpeg_lite and yields REAL
-    pixel stats, closing video frame decode for a real format."""
-    blob = _mp4_mjpeg(_uniform_jpeg())
-    meta = mp4_lite.parse_meta(blob)
-    assert meta["codec"] == "jpeg"
-    assert meta["n_samples"] == 3
-    frame = mp4_lite.first_video_sample(blob)
-    assert frame == _uniform_jpeg()
-    stats = media.real_decode(blob, "video")
-    assert (stats["width"], stats["height"], stats["n_frames"]) == (8, 8, 3)
-    assert stats["mean_intensity"] == pytest.approx(148 / 255, abs=1e-9)
+def test_mp4_compressed_codec_stays_metadata_only():
+    """Compressed tracks keep the honest decode split: container
+    metadata real, mean_intensity NULL — the first sample's bytes are
+    never handed to a pixel decoder. That holds for H.264 ('avc1') and
+    for photo-JPEG ('jpeg') sample entries alike."""
+    for codec in (b"avc1", b"jpeg"):
+        blob = _mov(b"\xff\xd8 opaque frame \xff\xd9", codec=codec)
+        meta = mp4_lite.parse_meta(blob)
+        assert meta["codec"] == codec.decode()
+        stats = media.real_decode(blob, "video")
+        assert stats["mean_intensity"] is None
+        assert (stats["width"], stats["height"], stats["n_frames"]) == (2, 2, 3)
 
 
-def test_mp4_non_mjpeg_codec_stays_metadata_only():
-    """An avc1 (H.264) track keeps the honest decode split: container
-    metadata real, mean_intensity NULL — never a misrouted JPEG parse
-    of H.264 bytes."""
-    blob = _mp4_mjpeg(_uniform_jpeg(), codec=b"avc1")
-    meta = mp4_lite.parse_meta(blob)
-    assert meta["codec"] == "avc1"
-    stats = media.real_decode(blob, "video")
-    assert stats["mean_intensity"] is None
-    assert (stats["width"], stats["height"], stats["n_frames"]) == (8, 8, 3)
-
-
-def test_mp4_mjpeg_head_without_mdat_is_metadata_only():
-    """A moov head without its mdat: the absolute stco offset either
-    lands out of range (first_video_sample → None) or on non-JPEG
-    bytes (the SOI-magic guard holds) — both stay metadata-only
-    instead of raising or mis-decoding."""
-    blob = _mp4_mjpeg(_uniform_jpeg())
+def test_mp4_head_without_mdat_is_metadata_only():
+    """A moov head without its mdat: the absolute stco offset now lands
+    inside moov (or past EOF), so first_video_sample returns None and
+    the raw-frame path stays metadata-only instead of reading box
+    bytes as pixels."""
+    blob = _mov(_GRAY)
     ftyp = _box(b"ftyp", b"qt  \x00\x00\x02\x00qt  ")
     moov_start = blob.index(b"moov") - 4
     head = ftyp + blob[moov_start:]  # mdat dropped, moov shifted
     meta = mp4_lite.parse_meta(head)
-    assert meta["codec"] == "jpeg"
-    frame = mp4_lite.first_video_sample(head)
-    assert frame is None or frame[:2] != b"\xff\xd8"
+    assert meta["codec"] == "raw "
+    assert mp4_lite.first_video_sample(head) is None
     stats = media.real_decode(head, "video")
     assert stats["mean_intensity"] is None
+    assert (stats["width"], stats["height"], stats["n_frames"]) == (2, 2, 3)
     # and a chunk offset genuinely past EOF → None, not a slice error
     stco_at = head.index(b"stco") + 4 + 4 + 4  # fourcc, fullbox, count
     broken = head[:stco_at] + struct.pack(">I", 2**31) + head[stco_at + 4:]
     assert mp4_lite.first_video_sample(broken) is None
     assert media.real_decode(broken, "video")["mean_intensity"] is None
-
-
-def test_raw_mjpeg_stream_decodes_first_frame_and_counts():
-    """video/mjpeg as a bare JPEG concatenation (IP-camera dumps):
-    first-frame pixel stats are real and n_frames counts SOI+marker
-    signatures (entropy data byte-stuffs 0xFF, so no aliasing)."""
-    from tests.test_jpeg_decode import _gray_jpeg
-
-    frames = [
-        _gray_jpeg(8, 8, [(160, {})]),
-        _gray_jpeg(8, 8, [(-160, {})]),
-        _gray_jpeg(8, 8, [(0, {})]),
-    ]
-    blob = b"".join(frames)
-    stats = media.real_decode(blob, "video")
-    assert (stats["width"], stats["height"], stats["n_frames"]) == (8, 8, 3)
-    assert stats["mean_intensity"] == pytest.approx(148 / 255, abs=1e-9)
-
-
-def test_raw_mjpeg_exif_thumbnail_not_counted_as_frame():
-    """r13 review: EXIF APP1 payloads embed full JPEG thumbnails (own
-    SOI) and marker segments are NOT byte-stuffed — a naive SOI count
-    doubles on camera streams. count_frames walks segment lengths, so
-    the thumbnail is skipped wholesale."""
-    from tests.test_jpeg_decode import _gray_jpeg
-
-    frame = bytearray(_gray_jpeg(8, 8, [(160, {})]))
-    thumb = _gray_jpeg(8, 8, [(0, {})])
-    app1 = b"\xff\xe1" + struct.pack(">H", 2 + 6 + len(thumb)) + b"Exif\x00\x00" + thumb
-    frame[2:2] = app1  # right after SOI
-    blob = bytes(frame) * 2
-    assert jpeg_lite.count_frames(blob) == 2
-    stats = media.real_decode(blob, "video")
-    assert stats["n_frames"] == 2
-    assert stats["mean_intensity"] == pytest.approx(148 / 255, abs=1e-9)
 
 
 # --------------------------------------------------- uncompressed video
@@ -302,7 +201,7 @@ def test_mov_2vuy_first_frame_real_pixel_stats():
     frame = bytearray()
     for i in range(w * h // 2):  # 2 pixels per 4-byte group
         frame += bytes([128, 126, 128, 127])  # Cb Y0 Cr Y1
-    blob = _mp4_mjpeg(bytes(frame), codec=b"2vuy", w=w, h=h, depth=24)
+    blob = _mov(bytes(frame), codec=b"2vuy", w=w, h=h, depth=24)
     meta = mp4_lite.parse_meta(blob)
     assert meta["codec"] == "2vuy" and meta["depth"] == 24
     stats = media.real_decode(blob, "video")
@@ -313,16 +212,16 @@ def test_mov_2vuy_first_frame_real_pixel_stats():
 
 def test_mov_raw_rgb24_and_argb32_first_frame_stats():
     """'raw ' entries: depth 24 = packed RGB, depth 32 = ARGB (alpha
-    ignored for luma). Rec. 601 luma / 255, the JPEG convention."""
+    ignored for luma). Rec. 601 luma / 255, the image-stats scale."""
     w, h = 2, 2
     rgb = bytes([255, 0, 0] * 4)  # pure red
-    blob = _mp4_mjpeg(rgb, codec=b"raw ", w=w, h=h, depth=24)
+    blob = _mov(rgb, codec=b"raw ", w=w, h=h, depth=24)
     stats = media.real_decode(blob, "video")
     assert stats["mean_intensity"] == pytest.approx(
         0.299 * 255 / 255.0, abs=1e-12
     )
     argb = bytes([17, 0, 255, 0] * 4)  # alpha 17, pure green
-    blob = _mp4_mjpeg(argb, codec=b"raw ", w=w, h=h, depth=32)
+    blob = _mov(argb, codec=b"raw ", w=w, h=h, depth=32)
     stats = media.real_decode(blob, "video")
     assert stats["mean_intensity"] == pytest.approx(0.587, abs=1e-12)
 
@@ -331,39 +230,25 @@ def test_mov_raw_geometry_mismatch_stays_metadata_only():
     """A frame whose byte count contradicts tkhd geometry (or an
     unsupported depth) keeps container metadata and NULL stats —
     never a misread of short/alien pixel data."""
-    blob = _mp4_mjpeg(bytes(5), codec=b"2vuy", w=4, h=2, depth=24)
+    blob = _mov(bytes(5), codec=b"2vuy", w=4, h=2, depth=24)
     stats = media.real_decode(blob, "video")
     assert stats["mean_intensity"] is None
     assert (stats["width"], stats["height"]) == (4, 2)
     # 'raw ' with a palettized depth the decoder doesn't support
-    blob = _mp4_mjpeg(bytes(8), codec=b"raw ", w=4, h=2, depth=8)
+    blob = _mov(bytes(8), codec=b"raw ", w=4, h=2, depth=8)
     stats = media.real_decode(blob, "video")
     assert stats["mean_intensity"] is None
 
 
-def test_raw_mjpeg_malformed_tail_fails_closed():
-    """Garbage between frames makes the count unknowable — raise
-    (→ per-row quarantine), never guess."""
-    from tests.test_jpeg_decode import _gray_jpeg
-
-    blob = _gray_jpeg(8, 8, [(160, {})]) + b"\x00\x12junk" + _gray_jpeg(
-        8, 8, [(0, {})]
-    )
-    with pytest.raises(ValueError):
-        jpeg_lite.count_frames(blob)
-
-
-def test_mp4_mjpeg_stz2_compact_sizes_first_frame_decodes():
-    """r13 review: parse_meta accepts stz2 sample tables, so
-    first_video_sample must too — an MJPEG MOV with compact sizes
-    would otherwise silently lose its pixel stats."""
-    payload = _uniform_jpeg()
-    blob = _mp4_mjpeg(payload)
-    # rewrite the stsz box in place as a 16-bit stz2 (same byte budget
-    # not needed — rebuild the fixture's stbl with sed-like splice)
+def test_mp4_stz2_compact_sizes_first_frame_decodes():
+    """parse_meta accepts stz2 sample tables, so first_video_sample
+    must too — a raw MOV with compact sizes would otherwise silently
+    lose its pixel stats."""
+    blob = _mov(_GRAY)
+    # splice the stsz box out for a 16-bit stz2 carrying the same sizes
     stsz_at = blob.index(b"stsz") - 4
     (stsz_len,) = struct.unpack(">I", blob[stsz_at:stsz_at + 4])
-    sizes16 = b"".join(struct.pack(">H", len(payload)) for _ in range(3))
+    sizes16 = b"".join(struct.pack(">H", len(_GRAY)) for _ in range(3))
     stz2_body = bytes([0, 0, 0, 0]) + bytes([0, 0, 0, 16]) + struct.pack(
         ">I", 3
     ) + sizes16
@@ -379,20 +264,19 @@ def test_mp4_mjpeg_stz2_compact_sizes_first_frame_decodes():
         out[at:at + 4] = struct.pack(">I", sz + delta)
     blob2 = bytes(out)
     meta = mp4_lite.parse_meta(blob2)
-    assert meta["n_samples"] == 3 and meta["codec"] == "jpeg"
-    assert mp4_lite.first_video_sample(blob2) == payload
+    assert meta["n_samples"] == 3 and meta["codec"] == "raw "
+    assert mp4_lite.first_video_sample(blob2) == _GRAY
     stats = media.real_decode(blob2, "video")
     assert stats["mean_intensity"] == pytest.approx(148 / 255, abs=1e-9)
 
 
 def test_mp4_first_video_track_without_tkhd_wins():
-    """r13 review: a first video track lacking tkhd must still OWN the
-    stats — a second video track must not overwrite codec/n_samples
-    and diverge from first_video_sample's first-track walk."""
-    payload = _uniform_jpeg()
-    full = _mp4_mjpeg(payload, codec=b"avc1")
+    """A first video track lacking tkhd must still OWN the stats — a
+    second video track must not overwrite codec/n_samples and diverge
+    from first_video_sample's first-track walk."""
+    full = _mov(_GRAY, codec=b"avc1")
     # extract trak 1 from the fixture, strip its tkhd, and append a
-    # second JPEG-coded trak
+    # second, decodable 'raw ' trak
     trak1_at = full.index(b"trak") - 4
     (trak1_len,) = struct.unpack(">I", full[trak1_at:trak1_at + 4])
     trak1 = bytearray(full[trak1_at:trak1_at + trak1_len])
@@ -400,10 +284,10 @@ def test_mp4_first_video_track_without_tkhd_wins():
     (tkhd_len,) = struct.unpack(">I", trak1[tkhd_at:tkhd_at + 4])
     del trak1[tkhd_at:tkhd_at + tkhd_len]
     trak1[0:4] = struct.pack(">I", trak1_len - tkhd_len)
-    jpeg_mov = _mp4_mjpeg(payload, codec=b"jpeg")
-    trak2_at = jpeg_mov.index(b"trak") - 4
-    (trak2_len,) = struct.unpack(">I", jpeg_mov[trak2_at:trak2_at + 4])
-    trak2 = jpeg_mov[trak2_at:trak2_at + trak2_len]
+    raw_mov = _mov(_GRAY, codec=b"raw ")
+    trak2_at = raw_mov.index(b"trak") - 4
+    (trak2_len,) = struct.unpack(">I", raw_mov[trak2_at:trak2_at + 4])
+    trak2 = raw_mov[trak2_at:trak2_at + trak2_len]
     moov_at = full.index(b"moov") - 4
     (moov_len,) = struct.unpack(">I", full[moov_at:moov_at + 4])
     moov_body = full[moov_at + 8:moov_at + moov_len]
@@ -413,81 +297,30 @@ def test_mp4_first_video_track_without_tkhd_wins():
     new_moov = struct.pack(">I", 8 + len(new_body)) + b"moov" + new_body
     blob = full[:moov_at] + new_moov
     meta = mp4_lite.parse_meta(blob)
-    # first video track (avc1, no tkhd) owns codec; no JPEG decode
+    # first video track (avc1, no tkhd) owns codec; no pixel decode
     assert meta["codec"] == "avc1"
     assert meta["width"] is None
+    # the sample walk stops at the same first track
+    assert mp4_lite.first_video_sample(blob) == _GRAY
     stats = media.real_decode(blob, "video")
     assert stats["mean_intensity"] is None
 
 
 def test_mp4_oversized_sample_count_quarantines_per_row(spark):
-    """r13 review: stsz's raw uint32 sample_count at 0xFFFFFFFF must
-    raise in real_decode (→ one quarantine row), not overflow the
-    int32 n_frames column and kill the whole Arrow batch."""
-    blob = bytearray(_mp4_mjpeg(_uniform_jpeg()))
+    """stsz's raw uint32 sample_count at 0xFFFFFFFF must raise in
+    real_decode (→ one quarantine row), not overflow the int32
+    n_frames column and kill the whole Arrow batch."""
+    blob = bytearray(_mov(_GRAY))
     stsz_at = bytes(blob).index(b"stsz") - 4
     # fullbox: 4 len + 4 tag + 4 ver/flags, then sample_size, count
     blob[stsz_at + 16:stsz_at + 20] = struct.pack(">I", 0xFFFFFFFF)
     with pytest.raises(ValueError, match="int32"):
         media.real_decode(bytes(blob), "video")
     df = spark.createDataFrame(
-        [(1, "video", bytes(blob)), (2, "video", _mp4_mjpeg(_uniform_jpeg()))],
+        [(1, "video", bytes(blob)), (2, "video", _mov(_GRAY))],
         "id long, media_type string, content binary",
     )
     rows = {r.id: r for r in media.decode_media(df, use_fake=False).collect()}
     assert rows[1].decode_status == "quarantine:ValueError"
     assert rows[2].decode_status == "ok"
     assert rows[2].mean_intensity == pytest.approx(148 / 255, abs=1e-6)
-
-
-def test_count_frames_fuzz_marker_structures():
-    """60 seeded random MJPEG streams — variable frame counts, APPn
-    segments with embedded-JPEG payloads, COM segments, restart
-    markers inside frames (via dri), fill bytes between markers — the
-    walked count must equal the number of top-level frames."""
-    import random
-
-    from tests.test_jpeg_decode import _gray_jpeg
-
-    for seed in range(60):
-        rng = random.Random(seed)
-        n = rng.randint(1, 6)
-        parts = []
-        for _ in range(n):
-            blocks = [(rng.randrange(-200, 201), {}) for _ in range(
-                rng.choice([1, 2, 4])
-            )]
-            frame = bytearray(
-                _gray_jpeg(8 * len(blocks), 8, blocks,
-                           dri=rng.choice([0, 1]))
-            )
-            insert_at = 2
-            if rng.random() < 0.5:  # EXIF-ish APP1 with embedded JPEG
-                thumb = _gray_jpeg(8, 8, [(rng.randrange(-100, 101), {})])
-                app1 = (b"\xff\xe1"
-                        + struct.pack(">H", 2 + 6 + len(thumb))
-                        + b"Exif\x00\x00" + thumb)
-                frame[insert_at:insert_at] = app1
-                insert_at += len(app1)
-            if rng.random() < 0.3:  # COM segment with marker-ish bytes
-                payload = bytes([0xFF, 0xD8, 0xFF, 0xE0] * 3)
-                com = b"\xff\xfe" + struct.pack(
-                    ">H", 2 + len(payload)
-                ) + payload
-                frame[insert_at:insert_at] = com
-            parts.append(bytes(frame))
-        blob = b"".join(parts)
-        assert jpeg_lite.count_frames(blob) == n, seed
-
-
-def test_count_frames_tolerates_zero_padding_between_frames():
-    """AVI MJPG chunks pad frames to even sizes with 0x00: zero runs
-    between EOI and the next SOI are skipped; 0xFF padding there stays
-    an error (ambiguous with a truncated marker)."""
-    from tests.test_jpeg_decode import _gray_jpeg
-
-    f1 = _gray_jpeg(8, 8, [(160, {})])
-    f2 = _gray_jpeg(8, 8, [(0, {})])
-    assert jpeg_lite.count_frames(f1 + b"\x00" * 7 + f2 + b"\x00") == 2
-    with pytest.raises(ValueError):
-        jpeg_lite.count_frames(f1 + b"\xff\xff" + f2)

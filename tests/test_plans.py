@@ -642,9 +642,12 @@ def test_triangle_count_materializes_reuse_no_python(spark):
         f"{n_numbered_scans} parquet scans — the edge/deg/closed "
         f"subtrees must come from the persisted chain"
     )
-    assert plan.index("InMemoryRelation") < _re.search(
-        r"\(\d+\) Scan parquet", plan
-    ).start(), "the remaining scan must sit under a cached relation"
+    # a fully cached chain shows no numbered scan at all
+    m = _re.search(r"\(\d+\) Scan parquet", plan)
+    if m:
+        assert plan.index("InMemoryRelation") < m.start(), (
+            "the remaining scan must sit under a cached relation"
+        )
     assert "EvalPython" not in plan
     assert "CartesianProduct" not in plan
 

@@ -7,6 +7,8 @@ wet_to_documents bridge into the engine's documents shape."""
 from __future__ import annotations
 
 import gzip
+import struct
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -482,40 +484,22 @@ def test_wet_corpus_build_composition(spark, tmp_path):
     assert len(got) >= 3 and all(s >= 0 for _, s in got)
 
 
-def _tiny_gray_png(width=4, height=4, value=100) -> bytes:
-    """Minimal solid-gray grayscale PNG (8-bit, filter 0 rows)."""
-    import struct
-    import zlib as _z
-
-    def chunk(ctype, body):
-        out = struct.pack(">I", len(body)) + ctype + body
-        return out + struct.pack(">I", _z.crc32(ctype + body) & 0xFFFFFFFF)
-
-    raw = b"".join(b"\x00" + bytes([value]) * width for _ in range(height))
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", _z.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
 def test_warc_binary_payload_flows_into_multimodal_decode(spark, tmp_path):
     """Cross-family composition: a WARC response record carrying a
-    real PNG routes its payload bytes into the multimodal REAL decode
+    real BMP routes its payload bytes into the multimodal REAL decode
     path — width/height/mean_intensity come out of the actual pixels,
     and the text record in the same segment stays on the text path."""
+    from pythondataingestionprocess_spark.multimodal import synth
     from pythondataingestionprocess_spark.multimodal.media import decode_media
 
-    png = _tiny_gray_png(value=100)
+    bmp = synth.bmp_rle8(4, 4, 100)
     d = tmp_path / "crawl2"
     d.mkdir()
     (d / "seg-00000.warc.gz").write_bytes(
         gzip.compress(_record(b"plain text doc", rid="<urn:uuid:t1>"))
         + gzip.compress(
-            _record(png, rec_type="response", ctype="image/png",
-                    rid="<urn:uuid:p1>", uri="https://img.example/x.png")
+            _record(bmp, rec_type="response", ctype="image/bmp",
+                    rid="<urn:uuid:p1>", uri="https://img.example/x.bmp")
         )
     )
     recs = wl.read_warc(spark, str(d))
@@ -529,49 +513,84 @@ def test_warc_binary_payload_flows_into_multimodal_decode(spark, tmp_path):
     r = got[0]
     assert (r["width"], r["height"]) == (4, 4)
     assert r["mean_intensity"] == pytest.approx(100.0 / 255.0)
-    assert r["byte_len"] == len(png)
+    assert r["byte_len"] == len(bmp)
     # the text record is untouched by the binary path
     assert recs.filter(F.col("text").isNotNull()).count() == 1
 
 
+def _removed_format_blobs() -> list[tuple[str, bytes]]:
+    """One small, well-formed file per media family real_decode does not
+    decode: each parses cleanly with a decoder for its format, so only
+    the missing decoder makes it a quarantine row."""
+    def png_chunk(ctype, body):
+        return (struct.pack(">I", len(body)) + ctype + body
+                + struct.pack(">I", zlib.crc32(ctype + body)))
+
+    jpeg = (  # SOI, 1x1 grayscale baseline SOF0, EOI
+        b"\xff\xd8\xff\xc0" + struct.pack(">HBHHB", 11, 8, 1, 1, 1)
+        + bytes(3) + b"\xff\xd9"
+    )
+    return [
+        ("image/png", b"\x89PNG\r\n\x1a\n"
+         + png_chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0))
+         + png_chunk(b"IDAT", zlib.compress(b"\x00\x80"))
+         + png_chunk(b"IEND", b"")),
+        ("image/jpeg", jpeg),
+        ("image/webp", b"RIFF\x1a\x00\x00\x00WEBPVP8L\x0d\x00\x00\x00"
+         b"\x2f\x00\x00\x00\x10\x07\x10\x11\x11\x88\x88\xfe\x07\x00"),
+        ("image/qoi", b"qoif" + struct.pack(">IIBB", 1, 1, 3, 0)
+         + b"\xfe\x80\x80\x80" + bytes(7) + b"\x01"),
+        ("video/mjpeg", jpeg * 2),
+    ]
+
+
 def test_decode_media_quarantines_unsupported_rows(spark, tmp_path):
-    """r10 review (third pass): real crawls carry application/http
-    response payloads and image types the stdlib can't decode — those
-    rows must come back NULL-stats (byte_len real), never crash the
-    Arrow batch task; and the fake decoder must agree with the real
-    one on MIME-typed rows (normalization is hoisted into
-    decode_media)."""
+    """Real crawls carry application/http response payloads and media
+    types the engine does not decode — those rows must come back
+    NULL-stats (byte_len real), never crash the Arrow batch task; and
+    the fake decoder must agree with the real one on MIME-typed rows
+    (both normalize the major type themselves)."""
+    from pythondataingestionprocess_spark.multimodal import synth
     from pythondataingestionprocess_spark.multimodal.media import decode_media
 
-    png = _tiny_gray_png(value=60)
+    bmp = synth.bmp_rle8(4, 4, 60)
     rows = [
-        (1, "image/png", bytearray(png)),
+        (1, "image/bmp", bytearray(bmp)),
         (2, "application/http; msgtype=response", bytearray(b"HTTP/1.1 200 OK\r\n\r\nhi")),
         (3, "image/gif", bytearray(b"GIF89a junk")),
-        # non-ValueError escapes (fourth review pass): a TRUNCATED png
-        # raises zlib.error from the lite decoder — must quarantine,
-        # not crash. Since r12 an ID3-sniffed blob routes to the MP3
-        # frame walker instead of the WAV decoder, so its failure is a
-        # ValueError; since r13 junk RIFF falls through wave.Error to
-        # wav_lite, which also raises ValueError.
-        (4, "image/png", bytearray(png[: len(png) // 2])),
+        # non-ValueError escapes must quarantine, not crash: a BMP cut
+        # inside its info header raises struct.error from bmp_lite.
+        # ID3-prefixed junk fails the MP3 frame walker, and junk RIFF
+        # fails the stdlib wave reader and then wav_lite; both raise
+        # ValueError.
+        (4, "image/bmp", bytearray(bmp[:40])),
         (5, "audio/mpeg", bytearray(b"ID3\x04\x00junk-not-a-wav")),
         (6, "audio/wav", bytearray(b"RIFFjunk-not-a-wav")),
+    ]
+    # formats real_decode does not decode: each is a quarantine row,
+    # however well-formed its payload
+    rows += [
+        (len(rows) + i, mt, bytearray(blob))
+        for i, (mt, blob) in enumerate(_removed_format_blobs(), start=1)
     ]
     df = spark.createDataFrame(rows, "id long, media_type string, content binary")
     real = {r["id"]: r for r in decode_media(df, use_fake=False).collect()}
     assert real[1]["mean_intensity"] == pytest.approx(60.0 / 255.0)
     assert real[1]["decode_status"] == "ok"
-    for bad in (2, 3, 4, 5, 6):
+    for bad in range(2, len(rows) + 1):
         assert real[bad]["byte_len"] == len(rows[bad - 1][2])
         assert real[bad]["width"] is None
         assert real[bad]["mean_intensity"] is None
-        assert real[bad]["decode_status"].startswith("quarantine:")
+        assert real[bad]["decode_status"].startswith("quarantine:"), bad
     # the reason string distinguishes data problems by exception type
-    assert real[4]["decode_status"] == "quarantine:error"  # zlib.error
+    assert real[4]["decode_status"] == "quarantine:error"  # struct.error
     assert real[5]["decode_status"] == "quarantine:ValueError"  # bad MP3
     assert real[6]["decode_status"] == "quarantine:ValueError"  # wav_lite
-    # fake decoder sees the same normalized major type: an image/png
+    # an unsupported format is refused by real_decode (image) or
+    # mp4_lite (video) with ValueError, not a parser crash
+    for removed in range(7, len(rows) + 1):
+        assert real[removed]["decode_status"] == "quarantine:ValueError", removed
+    # fake decoder sees the same normalized major type: an image/bmp
     # row is image-shaped (n_frames == 1), not video-shaped
     fake = {r["id"]: r for r in decode_media(df, use_fake=True).collect()}
     assert fake[1]["n_frames"] == 1
