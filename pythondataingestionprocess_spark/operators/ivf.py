@@ -70,10 +70,7 @@ def _probe_udf(centroids: np.ndarray, n_probe: int):
         idx = np.argsort(d, axis=1)[:, :n_probe].astype(np.int32)
         return pd.Series(list(idx))
 
-    # non-deterministic mark: callers explode the probe-list array, and
-    # InferFiltersFromGenerate would otherwise duplicate the UDF into a
-    # pre-Generate filter (guide §4.4; see similarity._buckets_udf)
-    return _probe.asNondeterministic()
+    return _probe
 
 
 def kmeans_fit(

@@ -1,20 +1,32 @@
 """Query plan catalog. Importing this package populates REGISTRY.
 
-Registration order IS the driver's CORRECTNESS execution order: the
-driver checks exactly the first 50 ``queries()`` entries per round
-(both CORRECTNESS_r01 and _r02 have exactly 50 rows, cut at registry
-position 49 — VERDICT r2 headline). Order is therefore an explicit
-per-round rotation, rebuilt after all modules register:
+Registry order IS the driver's CORRECTNESS order: each round the driver
+checks only the first ``WINDOW`` entries of ``queries()`` and commits
+their rows as ``CORRECTNESS_r<N>.json`` in the repo root. So after all
+modules register, the registry is reordered by :func:`driver_order`
+from those committed files, and the evidence itself decides what the
+next window checks:
 
-1. first: the queries with the STALEST driver evidence (computed
-   from the CORRECTNESS_r0N.json union each round);
-2. next: queries newly added this round (never checked by definition)
-   and queries whose oracle basis changed this round;
-3. tail: everything else, with fresher evidence.
+1. faces whose latest driver row failed, then faces with no green row
+   at all (new faces), both in registration order;
+2. the faces named in ``TOUCHED``;
+3. every other face, oldest green evidence first (ties by name).
 
-``tests/test_registry_rotation.py`` pins the first-50 set so a silent
-reorder can't re-darken a family.
+A row is green when its ``err`` is empty or ``"no_oracle"`` (the
+rows-only check) and neither ``hash_match`` nor ``rows_match`` is
+False. Rounds are ordered by the number in the file name.
+
+``TOUCHED = (N, names)`` is the one hand-kept input: the faces whose
+code changed after round N's driver rows. It applies only while N is
+the newest evidence round, so it expires by itself once the driver
+writes the next file; a name that is not registered fails the import.
+With ``WINDOW`` rows a round, ``MAX_FACES`` faces refresh within
+``MAX_EVIDENCE_AGE`` rounds.
 """
+
+import json
+import re
+from pathlib import Path
 
 from pythondataingestionprocess_spark.plans.registry import REGISTRY, QuerySpec, query
 
@@ -35,122 +47,100 @@ from pythondataingestionprocess_spark.plans import feature_queries  # noqa: E402
 from pythondataingestionprocess_spark.plans import graph_queries  # noqa: E402,F401
 from pythondataingestionprocess_spark.plans import corpus_ops  # noqa: E402,F401
 
-# --- round-18 rotation -----------------------------------------------
-# Driver-check union after r17 is all-green (CORRECTNESS_r17 50/50;
-# seventeen failure-free rounds). Evidence ages over the r01..r17
-# files for the 180 registered queries: 31 last-checked-r14, 49 r15,
-# 50 r16, 50 r17; nothing past the MAX_EVIDENCE_AGE=4 bound.
-# rotation_calc (exit 0, no warnings; stale budget 50 — no staged
-# block this round) derives: ALL 31 r14-aged queries + the
-# alphabetical first 19 of the 49 r15-aged.
-#
-# Committed amendment (r17 VERDICT items 1/4/5): the five faces whose
-# IMPLEMENTATION changed after their last driver row are front-loaded
-# in place of five untouched r15-aged names from the derived
-# alphabetical front —
-#   displaced (r15-aged, untouched this round or last; they
-#   front-load r19 with the other 29 same-age left-overs):
-#   `corpus_mix_resample`, `corpus_temperature_mix`,
-#   `corpus_weighted_sample`, `deterministic_sample_per_source`,
-#   `events_funnel_watermark`;
-#   promoted: `events_resample_interpolate` (r15-aged anyway — the
-#   r17 lead+explode rewrite plus the r18 lone-off-hour backfill fix
-#   both postdate its r15 row), `part_clustering_coefficient` and
-#   `copurchase_triangles` (r17 shared-chain + r18 one-job
-#   rollup/shuffle-hash wedge), `feature_winsorize_robust` and
-#   `percentile_cont_prices` (r17 stats-memo path; r16 rows predate
-#   it).
-# The r18-touched dedup family (`dedup_minhash_lsh`,
-# `dedup_incremental_minhash`, `dedup_keep_one`, `dedup_ngram_jaccard`
-# — the shared shingle-table/corpus-index memos) is r15-aged and
-# already inside the derived alphabetical front, as is
-# `embedding_ann_recall` (r18 UDF-dedup). The era-pinned test replays
-# the pure-age derivation from an explicit r01..r17 file list and
-# asserts exactly this five-for-five swap.
+WINDOW = 50  # rows the driver checks per round
+MAX_EVIDENCE_AGE = 4  # rounds a face's latest green row may trail the newest
+# ceil(180 / 50) = 4 = MAX_EVIDENCE_AGE, with 20 slots of slack for
+# failed rows that must ride a second window
+MAX_FACES = 180
 
-STALE_R15 = [
-    "anti_join_dedup",
-    "bm25_retrieval_topk",
-    "broadcast_dim_join",
-    "clean_safe_float",
-    "clean_signed_money",
-    "clean_stmt_date_roundtrip",
+TOUCHED = (18, (
     "copurchase_triangles",
-    "corpus_block_dedup",
-    "dedup_cosine_incremental",
+    "dedup_embedding_cosine",
     "dedup_groups_cc",
+    "dedup_incremental_components",
     "dedup_incremental_minhash",
     "dedup_keep_one",
     "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "embedding_ann_recall",
-    "events_asof_next_purchase",
-    "events_cohort_retention",
-    "events_cumulative_unique_users",
-    "events_interval_join",
-    "events_next_event_training",
-    "events_pattern_match",
-    "events_resample_interpolate",
+    "embedding_ann_ivf",
     "feature_winsorize_robust",
-    "filter_nonempty_text",
-    "filter_not_contains",
-    "flagship_revenue_by_nation",
-    "forward_fill_locf",
-    "full_outer_reconciliation",
-    "hierarchy_depth_rollup",
-    "json_variant_props_stats",
-    "left_join_enrich",
-    "left_join_reverse_agg",
-    "multi_agg_stats",
+    "multimodal_binary_meta",
+    "multimodal_decode_stats",
     "multimodal_frame_sample",
     "multimodal_real_decode_roundtrip",
-    "pagerank_nations",
     "part_clustering_coefficient",
     "percentile_cont_prices",
-    "positional_attach",
-    "pricing_summary",
-    "projection_narrow",
-    "q9_profit_by_nation_year",
-    "rollup_agg",
-    "semi_join_membership",
-    "stream_static_revenue_rollup",
-    "tiered_pricing",
-    "top_orders_by_price",
-    "union_all_slices",
-    "url_canonicalize",
-    "url_store_name",
-]
+))
 
-# No staged block this round (registry at the 180 cap, no new
-# registrations in an optimization round).
-NEW_R18: list[str] = []
+_EVIDENCE_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-def _apply_rotation() -> None:
-    priority = STALE_R15 + NEW_R18
-    missing = [n for n in priority if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"rotation names not in REGISTRY: {missing}")
-    seen = set(priority)
-    ordered = priority + [n for n in REGISTRY if n not in seen]
-    snapshot = {n: REGISTRY[n] for n in ordered}
-    REGISTRY.clear()
-    REGISTRY.update(snapshot)
+def load_evidence(root: Path) -> list[tuple[int, dict]]:
+    """(round, {name: row}) for every CORRECTNESS_r*.json under root."""
+    evidence = []
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = _EVIDENCE_NAME.fullmatch(path.name)
+        if not m:
+            raise ValueError(f"not a CORRECTNESS_r<N>.json file: {path}")
+        evidence.append((int(m.group(1)), json.loads(path.read_text())))
+    return sorted(evidence, key=lambda e: e[0])
 
 
-_apply_rotation()
+def _green(row: dict) -> bool:
+    err = row.get("err")
+    return (
+        (not err or err == "no_oracle")
+        and row.get("hash_match") is not False
+        and row.get("rows_match") is not False
+    )
 
-# Stable alias for tooling (scripts/rotation_calc.py): the applied
-# current-round NEW block, whatever its era-specific name is. Queries
-# here ride THIS round's driver window, so their lack of evidence
-# mid-round is expected, not a hole.
-NEW_CURRENT = NEW_R18
+
+def evidence_state(evidence) -> tuple[dict[str, int], set[str]]:
+    """({name: last green round}, {names whose latest row failed})."""
+    last_green: dict[str, int] = {}
+    failed: set[str] = set()
+    for rnd, rows in sorted(evidence, key=lambda e: e[0]):
+        for name, row in rows.items():
+            if _green(row):
+                last_green[name] = rnd
+                failed.discard(name)
+            else:
+                failed.add(name)
+    return last_green, failed
+
+
+def driver_order(names, evidence, touched) -> list[str]:
+    """``names`` reordered for the driver window (module docstring)."""
+    rnd, touched_names = touched
+    unknown = [n for n in touched_names if n not in names]
+    if unknown:
+        raise ValueError(f"TOUCHED names not registered: {unknown}")
+    last_green, failed = evidence_state(evidence)
+    newest = max((r for r, _ in evidence), default=None)
+    front = [n for n in names if n in failed]
+    front += [n for n in names if n not in last_green and n not in failed]
+    if rnd == newest:
+        front += [n for n in touched_names if n not in front]
+    seen = set(front)
+    rest = sorted((n for n in names if n not in seen), key=lambda n: (last_green[n], n))
+    return front + rest
+
+
+_order = driver_order(
+    list(REGISTRY), load_evidence(Path(__file__).resolve().parents[2]), TOUCHED
+)
+_faces = dict(REGISTRY)
+REGISTRY.clear()
+REGISTRY.update((n, _faces[n]) for n in _order)
 
 __all__ = [
     "REGISTRY",
     "QuerySpec",
     "query",
-    "STALE_R15",
-    "NEW_R18",
-    "NEW_CURRENT",
+    "WINDOW",
+    "MAX_EVIDENCE_AGE",
+    "MAX_FACES",
+    "TOUCHED",
+    "driver_order",
+    "evidence_state",
+    "load_evidence",
 ]

@@ -156,9 +156,9 @@ LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
 
 @query("text_repeated_span_dedup", oracle=_SPAN_DEDUP_ORACLE, tags=("dedup", "text"))
 def text_repeated_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lee-et-al repeated-span exact dedup (staged NEW_R11, r10) over
-    the raw documents corpus: every 10-token span occurring more than
-    once corpus-wide keeps only its first occurrence (total order:
+    """Lee-et-al repeated-span exact dedup over the raw documents
+    corpus: every 10-token span occurring more than once corpus-wide
+    keeps only its first occurrence (total order:
     doc_id, then position); covered tokens of later occurrences drop
     and the survivors reassemble in order. The stride-1 sliding hash
     catches UNALIGNED repeats ``corpus_block_dedup``'s fixed blocks
@@ -756,7 +756,7 @@ LEFT JOIN totals t ON c.doc_id = t.doc_id
 @query("text_strip_boilerplate", oracle=_BOILERPLATE_ORACLE, tags=("text", "curation"))
 def text_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style per-source line-frequency boilerplate removal
-    (staged NEW_R11, r10) over a corpus with planted chrome: a header
+    over a corpus with planted chrome: a header
     line on every doc, a promo line on ~33% (kept — under the 0.5
     document-frequency threshold), a footer on ~50% (the per-source
     frequency test decides). operators/boilerplate.strip_boilerplate
@@ -835,7 +835,7 @@ GROUP BY o.doc_id
 
 @query("corpus_dsir_importance", oracle=_DSIR_ORACLE, tags=("curation", "selection"))
 def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights (staged NEW_R11, late r10 — Xie et al.,
+    """DSIR importance weights (Xie et al.,
     NeurIPS 2023, arXiv:2302.03169): hashed unigram+bigram bucket
     features (m=256, md5 — engine-portable), add-one-smoothed
     multinomials for the TARGET slice (the min-source's documents, a

@@ -341,7 +341,7 @@ FROM (SELECT DISTINCT id_b FROM pairs) p
 
 @query("dedup_semantic_semdedup", oracle=_SEMDEDUP_ORACLE, tags=("dedup", "similarity"))
 def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup semantic dedup (staged NEW_R11, r10 — Abbas et al.,
+    """SemDeDup semantic dedup (Abbas et al.,
     arXiv:2303.09540): cluster-scoped cosine screen with the paper's
     low-centroid-similarity keep-rule, over a corpus with planted copy
     groups of 2 and 3. ``(vec_id, dup_of)`` per dropped member; the
@@ -565,7 +565,7 @@ SELECT q_id, vec_id, CAST(rnk AS INT) AS rank FROM (
 
 @query("embedding_ann_pq", oracle=_ANN_PQ_ORACLE, tags=("similarity", "pq"))
 def embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ/ADC approximate top-5 (staged NEW_R11, r10) for the same 10
+    """PQ/ADC approximate top-5 for the same 10
     query vectors as the brute/LSH/IVF paths: 8x8-dim subspaces, 16
     centroids each, corpus held as array<smallint> codes (~30x
     smaller at rest — BASELINE.md PQ probe), search by per-query ADC
@@ -690,9 +690,9 @@ GROUP BY b.query_id
     tags=("similarity", "lsh", "certificate"),
 )
 def embedding_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ANN family's oracle-checked recall certificate (staged
-    NEW_R15, r14 — r13 VERDICT item 5): per query id, how many of the
-    brute-force cosine top-5 the REGISTERED LSH configuration
+    """The ANN family's oracle-checked recall certificate: per query
+    id, how many of the brute-force cosine top-5 the REGISTERED LSH
+    configuration
     (``sim.ann_lsh`` defaults — the exact path ``embedding_ann_lsh``
     runs) recovers. Both sides are deterministic, so unlike the
     rows-only ANN faces this one hash-matches: the oracle replays the
@@ -941,9 +941,9 @@ def dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dedup_incremental_components", oracle=_CC_ORACLE, tags=("dedup", "graph"))
 def dedup_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-group LABEL MAINTENANCE under a batch pair feed (staged
-    NEW_R11, r10): the stored (id, group_id) labeling — built from
-    roughly two-thirds of the LSH pair list, standing in for the
+    """Dedup-group LABEL MAINTENANCE under a batch pair feed: the
+    stored (id, group_id) labeling — built from roughly two-thirds of
+    the LSH pair list, standing in for the
     corpus history — is folded with the remaining third as today's
     batch via operators/components.incremental_components: each batch
     endpoint CONTRACTS to its stored label (one lookup join per side),

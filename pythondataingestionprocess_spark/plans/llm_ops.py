@@ -199,7 +199,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whitespace-count aggregation now lives in tests/test_llm_operators.py
 # ::test_whitespace_token_count_per_lang_matches_duckdb (the migrated
 # oracle comparison). Last driver row r13 hash-green. Slot reused by
-# `embedding_ann_recall` (llm_heavy.py, staged NEW_R15) — the ANN
+# `embedding_ann_recall` (llm_heavy.py) — the ANN
 # family's oracle-checked recall certificate. Same documented-substance
 # discipline as the histogram_quantity (r13) / first_match_pick (r11) /
 # F18 (r10) retirements.

@@ -62,10 +62,12 @@ def test_keyed_rebalance_does_not_add_an_exchange(spark):
 
 
 def test_signature_stage_exchange_count_unchanged(spark):
-    """End-to-end pin on the LSH signature stage: rebalanced, its plan
-    still carries exactly two hash exchanges — one feeding the per-id
-    minhash aggregation (now BEFORE the explode), one for the band
-    bucket groupBy downstream (counted in the bucketing tests)."""
+    """End-to-end pin on the LSH signature stage: its plan carries
+    exactly one hash exchange. ``rebalance_scan`` shuffles the
+    pre-explode text rows on ``doc_id``, so no exchange sits between
+    the shingle explode and the per-id ``min`` aggregation, and a
+    map-side ``partial_min`` before a shuffle does not apply. The band
+    bucket groupBy downstream is counted in the bucketing tests."""
     docs = load_table(spark, SF_DIR, "documents")
     banded = dd._signatures_banded(
         docs, "doc_id", "text",

@@ -29,30 +29,21 @@ SANCTIONED_VECTORIZED = {
     "dedup_embedding_cosine",
     "embedding_ann_lsh",
     "embedding_ann_ivf",
-    # r9: the incremental twin of dedup_embedding_cosine — same
-    # sanctioned Arrow embedding-kernel shape (one ArrowEvalPython
-    # computing the batch's hyperplane signs/norms), registered with
-    # the r9 rotation after the r8 governance fix.
+    # the incremental twin of dedup_embedding_cosine: one
+    # ArrowEvalPython computing the batch's hyperplane signs/norms
     "dedup_cosine_incremental",
-    # r10 (staged NEW_R11): the PQ/ADC search face — ArrowEvalPython
-    # is the point here (numpy LUT kernel over Arrow batches of
-    # array<smallint> codes); everything around it is relational.
+    # PQ/ADC search: a numpy LUT kernel over Arrow batches of
+    # array<smallint> codes; everything around it is relational
     "embedding_ann_pq",
-    # r12 (staged NEW_R13): the rank-dict BPE tokenizer application —
-    # MapInPandas IS the point (the production path past
-    # MAX_EXPR_MERGES); the kernel is closure-shipped-dict greedy
-    # merging over Arrow batches, everything around it relational.
+    # the rank-dict BPE tokenizer past MAX_EXPR_MERGES: closure-shipped
+    # greedy merging in MapInPandas over Arrow batches
     "text_bpe_tokenize_vectorized",
-    # r13 (staged NEW_R14): the fully oracle-checked REAL media decode
-    # face — two MapInPandas stages ARE the point (blob synthesis from
-    # doc_id + the real decoders over Arrow batches of binary);
-    # everything around them is a plain grouped aggregate.
+    # real media decode: two MapInPandas stages (blob synthesis from
+    # doc_id, then the decoders over Arrow batches of binary) feeding a
+    # plain grouped aggregate
     "multimodal_real_decode_roundtrip",
-    # r14 (staged NEW_R15): the ANN recall certificate runs the
-    # registered LSH path, whose bucket assignment is the sanctioned
-    # GEMM pandas_udf (similarity._buckets_udf — same kernel the
-    # embedding_ann_lsh face carries); everything around it is
-    # relational.
+    # the ANN recall certificate runs the registered LSH path, whose
+    # bucket assignment is the GEMM pandas_udf similarity._buckets_udf
     "embedding_ann_recall",
 }
 

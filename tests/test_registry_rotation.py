@@ -1,501 +1,96 @@
-"""Pin the driver-facing registry rotation (VERDICT r2 item 2).
+"""The driver checks only the first WINDOW registry entries each round,
+so registry order decides which faces get fresh oracle evidence. The
+order is derived from the committed CORRECTNESS_r<N>.json files by
+``plans.driver_order``; these tests pin that rule and the live
+evidence health."""
 
-The driver records CORRECTNESS rows for exactly the first 50
-``queries()`` entries per round, so registry order IS driver coverage.
-The round-18 window = 50 stale + 0 new: ALL 31 last-checked-r14
-queries (the front-load left-overs pinned here last round) plus 14 of
-the 49 last-checked-r15 (alphabetical front) plus the FIVE
-implementation-changed faces front-loaded per the r17 VERDICT
-(items 1/4/5: `events_resample_interpolate`,
-`part_clustering_coefficient`, `copurchase_triangles`,
-`feature_winsorize_robust`, `percentile_cont_prices` — swapped in for
-five untouched r15-aged names from the derived alphabetical front,
-which front-load r19). No staged block this round (optimization
-round; registry at the 180 cap). These tests make the rotation
-explicit and fail loudly if a later registration or refactor silently
-reorders the window.
-
-Era-awareness (VERDICT r5 item 2): the calculator-reproduction test
-feeds scripts/rotation_calc.py an EXPLICIT CORRECTNESS_r01..r17 file
-list, so the pin stays green after the driver writes later rounds'
-files; a separate live run only asserts exit-status health (no failed
-rows, no evidence-lag tripwire), never the window composition.
-
-Capacity (r8 VERDICT item 3): rotation_calc hard-fails above
-WINDOW * MAX_EVIDENCE_AGE - CAP_BUFFER = 180, so registering without
-retiring is mechanically impossible, not just a written rule. The
-registry sits AT the cap (180): any r18 registration requires a
-retirement first. The calculator guard behaviors (capacity trip,
-evidence-lag tripwire, failed-row alert, parsed-round ordering,
-filename rejection, oversubscribed-window clamp) are pinned below
-with synthetic fixtures — restored per r11 ADVICE after the r11
-snapshot dropped them.
-"""
-
-import glob
 import json
-import re
-import subprocess
-import sys
+from pathlib import Path
+
+import pytest
 
 from pythondataingestionprocess_spark.plans import (
-    NEW_R18,
-    REGISTRY,
-    STALE_R15,
+    MAX_EVIDENCE_AGE, MAX_FACES, REGISTRY, TOUCHED, WINDOW,
+    driver_order, evidence_state, load_evidence,
 )
 
-DRIVER_WINDOW = 50
+ROOT = Path(__file__).resolve().parents[1]
+LIVE = load_evidence(ROOT)
+OK = {"rows_match": True, "hash_match": True, "err": None}
+BAD = {"rows_match": True, "hash_match": False, "err": None}
 
-# The file set the committed rotation was derived from (rounds 1..17).
-# Frozen: later rounds' files must NOT retroactively change what r18's
-# window was.
-R18_EVIDENCE_FILES = sorted(
-    (
-        f
-        for f in glob.glob("/root/repo/CORRECTNESS_r*.json")
-        if int(re.search(r"CORRECTNESS_r0*(\d+)\.json$", f).group(1)) <= 17
-    ),
-    key=lambda f: int(re.search(r"CORRECTNESS_r0*(\d+)\.json$", f).group(1)),
-)
-
-
-# The 31 last-checked-r14 queries (this round's guaranteed stale
-# front — the left-overs pinned for r18 last round).
-R14_AGE_31 = [
-    "events_asof_next_purchase",
-    "events_cohort_retention",
-    "events_cumulative_unique_users",
-    "events_interval_join",
-    "events_next_event_training",
-    "events_pattern_match",
-    "filter_nonempty_text",
-    "filter_not_contains",
-    "flagship_revenue_by_nation",
-    "forward_fill_locf",
-    "full_outer_reconciliation",
-    "hierarchy_depth_rollup",
-    "json_variant_props_stats",
-    "left_join_enrich",
-    "left_join_reverse_agg",
-    "multi_agg_stats",
-    "multimodal_frame_sample",
-    "multimodal_real_decode_roundtrip",
-    "pagerank_nations",
-    "positional_attach",
-    "pricing_summary",
-    "projection_narrow",
-    "q9_profit_by_nation_year",
-    "rollup_agg",
-    "semi_join_membership",
-    "stream_static_revenue_rollup",
-    "tiered_pricing",
-    "top_orders_by_price",
-    "union_all_slices",
-    "url_canonicalize",
-    "url_store_name",
-]
-
-# ALL 49 last-checked-r15 queries, alphabetical — the fill pool the
-# calculator cuts for the remaining stale slots. Recorded verbatim
-# from scripts/rotation_calc.py's round-18 derivation (19 in the
-# derived window + the 30 same-age left-overs it reports).
-R15_AGE_SORTED = [
-    "anti_join_dedup",
-    "bm25_retrieval_topk",
-    "broadcast_dim_join",
-    "clean_safe_float",
-    "clean_signed_money",
-    "clean_stmt_date_roundtrip",
-    "corpus_block_dedup",
-    "corpus_mix_resample",
-    "corpus_temperature_mix",
-    "corpus_weighted_sample",
-    "dedup_cosine_incremental",
-    "dedup_groups_cc",
-    "dedup_incremental_minhash",
-    "dedup_keep_one",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "deterministic_sample_per_source",
-    "embedding_ann_recall",
-    "events_funnel_watermark",
-    "events_resample_interpolate",
-    "events_session_window",
-    "events_sessionize_manual",
-    "events_sliding_window",
-    "events_time_weighted_value",
-    "events_tumbling_window",
-    "except_keys",
-    "fuzzy_name_distance",
-    "grouping_sets_agg",
-    "intersect_keys",
-    "islands_user_activity",
-    "json_map_functions",
-    "lateral_top_orders",
-    "not_in_null_semantics",
-    "percent_rank_ntile",
-    "pivot_status_revenue",
-    "q11_important_parts",
-    "q12_lateness_priority",
-    "q15_top_supplier",
-    "q16_supplier_count",
-    "q20_dominant_suppliers",
-    "q3_shipping_priority",
-    "q6_forecast_revenue",
-    "quantile_disc_prices",
-    "rolling_median_user_value",
-    "scd2_build_user_state",
-    "state_change_compression",
-    "text_bpe_pair_counts",
-    "text_repeated_span_dedup",
-    "text_strip_boilerplate",
-]
-
-# Committed r18 amendment (r17 VERDICT items 1/4/5): five untouched
-# r15-aged names from the derived alphabetical front displaced to
-# front-load the implementation-changed faces. The displaced five plus
-# the 29 r15-age names left outside the window front-load r19.
-DISPLACED_R18 = [
-    "corpus_mix_resample",
-    "corpus_temperature_mix",
-    "corpus_weighted_sample",
-    "deterministic_sample_per_source",
-    "events_funnel_watermark",
-]
-TOUCH_PROMOTED_R18 = [
-    "copurchase_triangles",
-    "events_resample_interpolate",
-    "feature_winsorize_robust",
-    "part_clustering_coefficient",
-    "percentile_cont_prices",
-]
-
-# The r15-aged queries that front-load round 19's window: the 29
-# same-age left-overs outside the window plus the five displaced by
-# the touched-faces amendment, minus the one promoted r15-aged face
-# (events_resample_interpolate rides THIS window).
-R19_FRONT_LOAD_LEFT_OVERS = sorted(
-    set(R15_AGE_SORTED) - set(STALE_R15)
-)
-
-# Retired across rounds: these names must never silently reappear in
-# the registry.
-RETIRED_R9 = [
-    "funnel_view_to_purchase",
-    "window_lag_lead",
-    "window_rank_dense",
-    "intersect_all_slices",
-    "except_all_slices",
-]
-RETIRED_R10 = [
-    "doc_packing_shard_histogram",
-    "clean_excel_serial_date",
-    "embedding_norms",
-]
-RETIRED_R11 = [
-    "margin_defaults",
-    "first_match_pick",
-    "json_extract_props",
-]
-RETIRED_R13 = [
-    "histogram_quantity",
-]
-RETIRED_R14 = [
-    "text_token_count",
-]
-RETIRED_R15 = [
-    "topk_per_group_agg",
-]
-RETIRED_R16 = [
-    "doc_packing_lookahead",
+# Names retired from the registry; they must not silently come back.
+RETIRED = (
+    "funnel_view_to_purchase", "window_lag_lead", "window_rank_dense",
+    "intersect_all_slices", "except_all_slices", "doc_packing_shard_histogram",
+    "clean_excel_serial_date", "embedding_norms", "margin_defaults",
+    "first_match_pick", "json_extract_props", "histogram_quantity",
+    "text_token_count", "topk_per_group_agg", "doc_packing_lookahead",
     "text_bpe_merge_learn",
-]
-
-OK_ROW = {"rows_match": True, "schema_match": True,
-          "hash_match": True, "err": None}
-BAD_ROW = {"rows_match": True, "schema_match": True,
-           "hash_match": False, "err": None}
-
-
-def _intended():
-    return STALE_R15 + NEW_R18
-
-
-def test_stalest_queries_front_loaded():
-    """The 50 stale slots (all 31 r14-checked + 14 r15-checked
-    alphabetical front + the 5 touch-promoted faces, the stalest
-    evidence eras after r17's window) sit first."""
-    assert list(REGISTRY)[: len(STALE_R15)] == STALE_R15
-    assert len(STALE_R15) == 50
+)
 
 
 def test_first_50_is_the_intended_rotation():
-    assert list(REGISTRY)[:DRIVER_WINDOW] == _intended()[:DRIVER_WINDOW]
+    assert list(REGISTRY) == driver_order(list(REGISTRY), LIVE, TOUCHED)
 
 
 def test_touched_faces_ride_this_window():
-    """Every face whose implementation changed after its last driver
-    row (r17 VERDICT items 1/4/5 + this round's dedup/UDF work) must
-    be inside the 50-row window."""
-    window = set(_intended())
-    for n in TOUCH_PROMOTED_R18 + [
-        "dedup_minhash_lsh",
-        "dedup_incremental_minhash",
-        "dedup_keep_one",
-        "dedup_ngram_jaccard",
-        "dedup_groups_cc",
-        "embedding_ann_recall",
-    ]:
-        assert n in window, n
+    window = list(REGISTRY)[:WINDOW]
+    assert TOUCHED[0] == LIVE[-1][0], "TOUCHED names a round that is not the newest"
+    assert all(n in window for n in TOUCHED[1])
 
 
-def test_window_is_full():
-    """Stale + new must fill all 50 driver slots (a slack window would
-    waste driver evidence)."""
-    assert len(_intended()) == DRIVER_WINDOW
-
-
-def test_rotation_names_unique_and_registered():
-    rotation = _intended()
-    assert len(rotation) == len(set(rotation))
-    missing = [n for n in rotation if n not in REGISTRY]
-    assert not missing
-
-
-def test_registry_intact_after_rotation():
-    """Rotation reorders — it must not drop or duplicate any query."""
+def test_stalest_queries_front_loaded():
+    last_green, failed = evidence_state(LIVE)
     names = list(REGISTRY)
-    assert len(names) == len(set(names))
-    assert len(names) >= 148
+    front = [n for n in names if n in failed or n not in last_green]
+    front += [n for n in TOUCHED[1] if n not in front]
+    assert names[: len(front)] == front
+    ages = [(last_green[n], n) for n in names[len(front):]]
+    assert ages == sorted(ages)
 
 
-def test_retired_queries_stay_retired():
-    for n in (RETIRED_R9 + RETIRED_R10 + RETIRED_R11 + RETIRED_R13
-              + RETIRED_R14 + RETIRED_R15 + RETIRED_R16):
-        assert n not in REGISTRY, f"{n} was retired"
+def test_green_r10_clears_failed_r2(tmp_path):
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"a": BAD, "b": OK}))
+    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps({"a": OK, "c": BAD}))
+    evidence = load_evidence(tmp_path)
+    assert [r for r, _ in evidence] == [2, 10]
+    order = driver_order(["a", "b", "c", "d"], evidence[::-1], (2, ("b",)))
+    assert order == ["c", "d", "b", "a"]
+
+
+def test_rejects_bad_evidence_filename(tmp_path):
+    (tmp_path / "CORRECTNESS_r3_rerun.json").write_text("{}")
+    with pytest.raises(ValueError, match="not a CORRECTNESS"):
+        load_evidence(tmp_path)
+
+
+def test_touched_list_expires_with_a_newer_round():
+    evidence = [(1, {"a": OK, "b": OK}), (2, {"b": OK})]
+    assert driver_order(["a", "b"], evidence, (2, ("b",))) == ["b", "a"]
+    assert driver_order(["a", "b"], evidence, (1, ("b",))) == ["a", "b"]
+    with pytest.raises(ValueError, match="not registered"):
+        driver_order(["a", "b"], evidence, (2, ("zz",)))
+
+
+def test_live_evidence_is_healthy():
+    last_green, failed = evidence_state(LIVE)
+    newest = LIVE[-1][0]
+    assert not [n for n in REGISTRY if n in failed]
+    assert not [n for n in REGISTRY if n not in last_green]
+    overdue = [n for n in REGISTRY if newest - last_green[n] > MAX_EVIDENCE_AGE]
+    assert not overdue, f"evidence older than {MAX_EVIDENCE_AGE} rounds: {overdue}"
 
 
 def test_registry_within_capacity_cap():
-    """ceil(N / 50) driver rounds to refresh everything must stay
-    comfortably under MAX_EVIDENCE_AGE=4; rotation_calc enforces
-    N <= 50*4 - 20 = 180 (exit 2 above it). Mirror the bound here so
-    a plain pytest run catches a breach without invoking the script."""
-    assert len(REGISTRY) <= 180, (
-        f"registry at {len(REGISTRY)} exceeds the capacity cap — "
-        "retire queries before registering more"
-    )
+    assert len(REGISTRY) <= MAX_FACES, "retire faces before registering more"
 
 
-def test_r19_front_load_promise_is_registered():
-    """Every r15-age left-over promised to front-load r19's window must
-    still be registered (a retirement there needs this pin updated
-    alongside the documented substance migration)."""
-    missing = [n for n in R19_FRONT_LOAD_LEFT_OVERS if n not in REGISTRY]
-    assert not missing, missing
-    assert len(R19_FRONT_LOAD_LEFT_OVERS) == 34
+def test_registry_intact_after_rotation():
+    names = list(REGISTRY)[::-1]
+    assert sorted(driver_order(names, LIVE, TOUCHED)) == sorted(names)
+    assert len(names) >= WINDOW
 
 
-def test_no_staged_blocks_inside_the_window():
-    """Any NEW_R*_STAGED block on the package must sit entirely outside
-    the current 50-row window and stay disjoint from it."""
-    import pythondataingestionprocess_spark.plans as plans
-
-    names = list(REGISTRY)
-    window = set(_intended())
-    for attr in dir(plans):
-        if not re.fullmatch(r"NEW_R(\d+)_STAGED", attr):
-            continue
-        for n in getattr(plans, attr):
-            assert n in REGISTRY
-            assert names.index(n) >= DRIVER_WINDOW, (
-                f"{n} is staged ({attr}) but sits inside the current "
-                f"driver window"
-            )
-            assert n not in window
-
-
-def test_rotation_calculator_reproduces_r18_window_from_frozen_files():
-    """scripts/rotation_calc.py must reconstruct THIS round's committed
-    window composition from the r01..r17 CORRECTNESS files alone.
-    Pinned to an explicit --files list so the driver writing
-    CORRECTNESS_r18+ later cannot flip this assertion (the r5 pin
-    broke exactly that way — VERDICT r5 item 2).
-
-    Era note: the committed window was derived with no staged block
-    (stale budget 50) and then amended per the r17 VERDICT: five
-    untouched names from the derived r15-age alphabetical front
-    (DISPLACED_R18) swapped out for the five implementation-changed
-    faces (TOUCH_PROMOTED_R18). The calculator is age-driven and
-    cannot see implementation changes, so the PURE derivation at
-    runtime stale budget b = 50 - len(NEW_R*_STAGED at runtime) is
-    exactly R14_AGE_31 + the (b - 31)-name alphabetical front of
-    R15_AGE_SORTED; the committed window is that derivation at b=50
-    minus DISPLACED_R18 plus TOUCH_PROMOTED_R18. Both facts are
-    asserted exactly, for any runtime staged-block size."""
-    assert len(R18_EVIDENCE_FILES) == 17, R18_EVIDENCE_FILES
-    proc = subprocess.run(
-        [sys.executable, "/root/repo/scripts/rotation_calc.py",
-         "--files", *R18_EVIDENCE_FILES],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert proc.returncode == 0, proc.stderr
-    assert "ALERT" not in proc.stderr
-    assert "WARNING" not in proc.stderr
-    stale = re.search(r"STALE = \[(.*?)\]", proc.stdout, re.S).group(1)
-    derived = set(re.findall(r'"([^"]+)"', stale))
-    new = re.search(r"NEW = \[(.*?)\]", proc.stdout, re.S).group(1)
-    staged_names = re.findall(r'"([^"]+)"', new)
-    # the staged block and the stale budget trade one-for-one
-    b = DRIVER_WINDOW - len(staged_names)
-    assert len(derived) == b
-    # the pure age derivation at budget b
-    assert derived == set(R14_AGE_31) | set(R15_AGE_SORTED[: b - 31]), (
-        derived ^ (set(R14_AGE_31) | set(R15_AGE_SORTED[: b - 31]))
-    )
-    # committed = derivation at the commit-time budget (50), amended
-    committed_expected = (
-        (set(R14_AGE_31) | set(R15_AGE_SORTED[:19]))
-        - set(DISPLACED_R18)
-    ) | set(TOUCH_PROMOTED_R18)
-    assert set(STALE_R15) == committed_expected, (
-        set(STALE_R15) ^ committed_expected
-    )
-
-
-def test_rotation_calculator_live_run_is_healthy():
-    """Era-agnostic health check over whatever CORRECTNESS files exist:
-    no failed latest rows (exit 1), no evidence-lag tripwire or
-    capacity breach (exit 2), no unstaged evidence holes (WARNING).
-    Deliberately does NOT pin the window composition — that's the
-    frozen-files test's job."""
-    proc = subprocess.run(
-        [sys.executable, "/root/repo/scripts/rotation_calc.py"],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert proc.returncode == 0, proc.stderr
-    assert "ALERT" not in proc.stderr
-    assert "WARNING" not in proc.stderr
-
-
-# --- calculator guard tripwires (synthetic fixtures; restored per ----
-# --- r11 ADVICE after the r11 snapshot dropped them) -----------------
-
-
-def test_rotation_calculator_capacity_cap_trips():
-    """r8 VERDICT item 3: shrinking the window shrinks the cap
-    (window * 4 - 20); at --window 40 the cap is 140 < the live
-    registry, so the calculator must exit 2 with the capacity ALERT."""
-    proc = subprocess.run(
-        [sys.executable, "/root/repo/scripts/rotation_calc.py",
-         "--window", "40"],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert proc.returncode == 2, (proc.returncode, proc.stderr)
-    assert "capacity cap" in proc.stderr
-    assert "retire queries" in proc.stderr
-
-
-def test_rotation_calculator_evidence_lag_tripwire(tmp_path):
-    """VERDICT r5 item 8: the calculator must exit non-zero on a
-    synthetic evidence hole — a query last checked more than
-    MAX_EVIDENCE_AGE rounds before the newest file."""
-    victim = STALE_R15[0]
-    # newest round = 9, victim last green in r1 → age 8 > 4
-    old = tmp_path / "CORRECTNESS_r01.json"
-    new = tmp_path / "CORRECTNESS_r09.json"
-    old.write_text(json.dumps({victim: OK_ROW}))
-    new.write_text(json.dumps({STALE_R15[1]: OK_ROW}))
-    proc = subprocess.run(
-        [sys.executable, "/root/repo/scripts/rotation_calc.py",
-         "--files", str(old), str(new)],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert proc.returncode == 2, (proc.returncode, proc.stderr)
-    assert "evidence older than" in proc.stderr
-    assert victim in proc.stderr
-
-
-def test_rotation_calculator_failed_row_alert(tmp_path):
-    """A FAILED latest driver row must alert and exit 1 — failed rows
-    are not evidence and must ride the next window again."""
-    victim = STALE_R15[0]
-    f = tmp_path / "CORRECTNESS_r09.json"
-    f.write_text(json.dumps({victim: BAD_ROW}))
-    proc = subprocess.run(
-        [sys.executable, "/root/repo/scripts/rotation_calc.py",
-         "--files", str(f)],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert proc.returncode == 1, (proc.returncode, proc.stderr)
-    assert "FAILED" in proc.stderr
-    assert victim in proc.stderr
-
-
-def test_rotation_calculator_round_ten_ordering(tmp_path):
-    """ADVICE r6: round >= 10 files must be globbed and processed in
-    PARSED-round order, not lexicographic (CORRECTNESS_r010 sorts
-    before r02 as a string). A green r10 row must clear an r2 failure
-    for the same query — and the unpadded r10 spelling must parse."""
-    victim = STALE_R15[0]
-    f2 = tmp_path / "CORRECTNESS_r02.json"
-    f10 = tmp_path / "CORRECTNESS_r10.json"
-    f2.write_text(json.dumps({victim: BAD_ROW}))
-    f10.write_text(json.dumps({victim: OK_ROW}))
-    # pass files in the WRONG (lexicographic-looking) order on purpose
-    proc = subprocess.run(
-        [sys.executable, "/root/repo/scripts/rotation_calc.py",
-         "--files", str(f10), str(f2)],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    # r10 green supersedes the r2 failure → no FAILED alert (exit 0
-    # would need fresh evidence for everything; only assert the
-    # failure-clearing and that exit is not 1)
-    assert "FAILED" not in proc.stderr, proc.stderr
-    assert proc.returncode != 1, (proc.returncode, proc.stderr)
-
-
-def test_rotation_calculator_rejects_bad_filename(tmp_path):
-    """ADVICE r6: a --files entry that is not a CORRECTNESS_r<N>.json
-    file must fail with a clear message, not an AttributeError."""
-    bogus = tmp_path / "notes.json"
-    bogus.write_text("{}")
-    proc = subprocess.run(
-        [sys.executable, "/root/repo/scripts/rotation_calc.py",
-         "--files", str(bogus)],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert proc.returncode != 0
-    assert "not a CORRECTNESS" in proc.stderr
-
-
-def test_rotation_calculator_oversubscribed_window(tmp_path):
-    """ADVICE r6: when staged + never exceed the window, the stale
-    budget must clamp to zero (an empty STALE list), not silently
-    select items from the end of the age list."""
-    f = tmp_path / "CORRECTNESS_r01.json"
-    f.write_text(json.dumps({n: OK_ROW for n in STALE_R15}))
-    proc = subprocess.run(
-        [sys.executable, "/root/repo/scripts/rotation_calc.py",
-         "--files", str(f), "--window", "5"],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    stale = re.search(r"STALE = \[(.*?)\]", proc.stdout, re.S).group(1)
-    names = re.findall(r'"([^"]+)"', stale)
-    assert names == [], names
-    assert "over-subscribed" in proc.stderr
+def test_retired_queries_stay_retired():
+    assert not [n for n in RETIRED if n in REGISTRY]
