@@ -3,25 +3,23 @@ columns with typed metadata (engine-added per BASELINE.json north
 star).
 
 The Spark-side plumbing — schemas, Arrow-batched UDF signatures,
-partition sizing — is format-agnostic. ``real_decode`` decodes from
+partition sizing — is format-agnostic. ``real_decode`` decodes the
+formats ``synth.py`` builds for the oracle-checked decode faces, from
 scratch against the public specs with stdlib + numpy only:
 
-- image: BMP (bmp_lite), baseline TIFF (tiff_lite) and GIF (gif_lite),
-  full pixel stats; HEIF/AVIF (heif_lite) box-walk metadata;
+- image: BMP (bmp_lite) and baseline TIFF (tiff_lite), full pixel
+  stats;
 - audio: WAV — canonical PCM through the stdlib ``wave`` module,
   G.711 / IMA and MS ADPCM / IEEE float / 24-bit through wav_lite —
-  FLAC (flac_lite) and AIFF/AU (aiff_au_lite), full sample stats;
-  MP3/ADTS AAC (mpeg_audio_lite) and Ogg Opus/Vorbis (ogg_lite)
-  frame/page-walk metadata;
+  full sample stats;
 - video: ISO-BMFF / QuickTime container metadata (mp4_lite), with
-  first-frame pixel stats for uncompressed 'raw ' and '2vuy' tracks.
+  first-frame pixel stats for uncompressed 'raw ' and '2vuy' tracks;
+  compressed tracks (H.264, ...) carry a NULL mean next to real
+  metadata.
 
-The oracle-checked decode face reaches the formats ``synth.py``
-builds: BMP, TIFF, WAV and 'raw ' video. Metadata-only formats and
-compressed video tracks (H.264, ...) carry a NULL mean next to real
-metadata. Every other format (PNG, JPEG, WebP, ...) raises, which
-``decode_media`` turns into a ``quarantine:`` row; decode those
-formats upstream with a native library.
+Every other format (PNG, JPEG, GIF, HEIF, FLAC, MP3, Ogg, ...) raises
+ValueError, which ``decode_media`` turns into a ``quarantine:`` row;
+decode those formats upstream with a native library.
 
 ``fake_decode_stats`` is the deterministic stand-in for pipeline
 tests that don't care about real formats: it derives "pixel stats"
@@ -51,14 +49,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.multimodal import (
-    aiff_au_lite,
     bmp_lite,
-    flac_lite,
-    gif_lite,
-    heif_lite,
     mp4_lite,
-    mpeg_audio_lite,
-    ogg_lite,
     tiff_lite,
     wav_lite,
 )
@@ -100,75 +92,25 @@ def real_decode(content: bytes, media_type: str) -> dict:
     pick the decoder.
 
     Unsupported input raises, and decode_media quarantines the row: an
-    image without a BMP/TIFF/GIF/HEIF magic raises ValueError, audio
-    that is no other supported container fails inside wav_lite, and a
-    video that is not ISO-BMFF fails in ``mp4_lite.parse_meta``."""
+    image without a BMP/TIFF magic raises ValueError here, audio that
+    is not WAV fails inside wav_lite, and a video that is not ISO-BMFF
+    fails in ``mp4_lite.parse_meta``."""
     major = _major_type(media_type)
     if major == "image":
         if content[:2] == b"BM":
             stats = bmp_lite.decode(content)
         elif content[:4] in (b"II*\x00", b"MM\x00*"):
             stats = tiff_lite.decode(content)
-        elif content[:6] in (b"GIF87a", b"GIF89a"):
-            stats = gif_lite.decode(content)
-        elif content[4:8] == b"ftyp" and heif_lite.is_heif(content):
-            # box-walk metadata only: the payload is an AV1/HEVC intra
-            # frame, so the mean stays NULL
-            meta = heif_lite.parse_meta(content)
-            if meta["width"] > _INT32_MAX or meta["height"] > _INT32_MAX:
-                # ispe carries raw uint32s; an overflow escaping
-                # real_decode kills the Arrow batch's astype("Int32")
-                raise ValueError(
-                    "ispe dimensions exceed the int32 stats columns"
-                )
-            return {
-                "byte_len": len(content),
-                "width": meta["width"],
-                "height": meta["height"],
-                "n_frames": 1,
-                "mean_intensity": None,
-            }
         else:
-            raise ValueError(
-                "unrecognized image format (BMP, TIFF, GIF and HEIF only)"
-            )
+            raise ValueError("unrecognized image format (BMP and TIFF only)")
         return {
             "byte_len": len(content),
             "width": stats["width"],
             "height": stats["height"],
-            # only GIF counts frames; a still image is one frame
-            "n_frames": stats.get("n_frames", 1),
+            "n_frames": 1,
             "mean_intensity": stats["mean_intensity"],
         }
     if major == "audio":
-        if content[:4] == b"fLaC":
-            return _audio_stats(len(content), flac_lite.decode(content))
-        if content[:4] == b"FORM" and content[8:12] in (b"AIFF", b"AIFC"):
-            return _audio_stats(
-                len(content), aiff_au_lite.decode_aiff(content)
-            )
-        if content[:4] == b".snd":
-            return _audio_stats(len(content), aiff_au_lite.decode_au(content))
-        if content[:4] == b"OggS":
-            # page-walk metadata only: Opus/Vorbis sample decode needs
-            # an MDCT codec, so the mean stays NULL
-            meta = ogg_lite.decode_meta(content)
-            return _audio_stats(
-                len(content), {**meta, "mean_abs_amplitude": None}
-            )
-        kind = mpeg_audio_lite.sniff(content)
-        if kind is not None:
-            # frame-header metadata from walking every frame; sample
-            # decode needs the MP3/AAC synthesis codec, so the mean
-            # stays NULL
-            meta = (
-                mpeg_audio_lite.parse_mp3(content)
-                if kind == "mp3"
-                else mpeg_audio_lite.parse_adts(content)
-            )
-            return _audio_stats(
-                len(content), {**meta, "mean_abs_amplitude": None}
-            )
         return _decode_wav(content)
     if major == "video":
         meta = mp4_lite.parse_meta(content)
@@ -250,10 +192,9 @@ def _decode_wav(content: bytes) -> dict:
     """WAV decode: the stdlib ``wave`` module handles canonical PCM
     (8/16/32-bit); everything it rejects — G.711 mu-law/A-law, IMA and
     MS ADPCM, IEEE float, 24-bit and EXTENSIBLE PCM — routes to
-    wav_lite, which decodes the samples too. Stats mapping into
-    MEDIA_STATS_SCHEMA (audio has no pixels): width = sample rate
-    (Hz), height = channel count, n_frames = frame count,
-    mean_intensity = mean |amplitude| normalized to 0-1."""
+    wav_lite, which decodes the samples too. Both paths map their
+    stats through ``_audio_stats``, so one int32 guard covers every
+    audio row."""
     try:
         with wave.open(io.BytesIO(content)) as w:
             rate, n_ch, n_frames = (
@@ -263,13 +204,13 @@ def _decode_wav(content: bytes) -> dict:
             if width_bytes not in (1, 2, 4):
                 # 24-bit PCM: delegate BEFORE materializing the whole
                 # payload just to discard it
-                return _decode_wav_lite(content)
+                return _audio_stats(len(content), wav_lite.decode(content))
             frames = w.readframes(n_frames)
     except wave.Error:
         # non-PCM or extensible: the stdlib reader refuses before
         # touching sample data; wav_lite re-parses from the top (and
         # raises ValueError on junk — the quarantine path)
-        return _decode_wav_lite(content)
+        return _audio_stats(len(content), wav_lite.decode(content))
     if width_bytes == 1:  # unsigned 8-bit
         samples = array("B", frames)
         mean = (
@@ -283,34 +224,28 @@ def _decode_wav(content: bytes) -> dict:
             sum(abs(s) for s in samples) / len(samples) / full
             if samples else 0.0
         )
-    return {
-        "byte_len": len(content),
-        "width": rate,
-        "height": n_ch,
-        "n_frames": n_frames,
-        "mean_intensity": mean,
-    }
-
-
-def _decode_wav_lite(content: bytes) -> dict:
-    return _audio_stats(len(content), wav_lite.decode(content))
+    return _audio_stats(len(content), {
+        "sample_rate": rate,
+        "channels": n_ch,
+        "n_samples": n_frames,
+        "mean_abs_amplitude": mean,
+    })
 
 
 def _audio_stats(byte_len: int, meta: dict) -> dict:
-    """Audio decoder stats → MEDIA_STATS_SCHEMA: width = sample rate
-    (Hz), height = channel count, n_frames = per-channel sample
-    count, mean_intensity = mean |amplitude| normalized to 0-1 (NULL
-    for metadata-only formats)."""
+    """Audio decoder stats → MEDIA_STATS_SCHEMA (audio has no pixels):
+    width = sample rate (Hz), height = channel count, n_frames =
+    per-channel sample count, mean_intensity = mean |amplitude|
+    normalized to 0-1."""
     if (
         meta["n_samples"] > _INT32_MAX
         or meta["sample_rate"] > _INT32_MAX
         or meta["channels"] > _INT32_MAX
     ):
-        # int32 guard on EVERY stats column this mapping feeds: sample
-        # rates and counts are raw header uint32s (WAV fmt, AU, Vorbis)
-        # or unbounded (AIFF's 80-bit float rate, a long MP3's frame
-        # walk), and an overflow that escapes real_decode dies in the
-        # batch-level astype("Int32") instead of quarantining one row
+        # int32 guard on EVERY stats column this mapping feeds: the WAV
+        # fmt rate and the data/fact counts are raw header uint32s, and
+        # an overflow that escapes real_decode dies in the batch-level
+        # astype("Int32") instead of quarantining one row
         raise ValueError("audio metadata exceeds the int32 stats columns")
     return {
         "byte_len": byte_len,

@@ -359,39 +359,33 @@ def _decode_ms_scalar(
     return _trim_ms_frames(frames, n_frames, channels, block_align, header)
 
 
-# ------------------------------------------------- shared stats kernels
-# (public: aiff_au_lite reuses these for the big-endian containers —
-# one copy of the sign-extension / clipping / companding math)
+# ---------------------------------------------------- stats kernels
+# Each returns (mean |x| normalized to 0-1, total sample count) over
+# little-endian WAV sample data; a trailing partial sample is ignored,
+# never misread.
 
-def int_pcm_stats(data: bytes, bits: int, byteorder: str,
-                  unsigned8: bool = False) -> tuple[float, int]:
-    """(mean |x| normalized 0-1, total sample count) for linear PCM.
-    8-bit is signed unless ``unsigned8`` (WAV's 8-bit PCM is
-    unsigned)."""
+def int_pcm_stats(data: bytes, bits: int) -> tuple[float, int]:
+    """Linear PCM; 8-bit WAV PCM is unsigned (offset 128)."""
     if bits == 8:
-        if unsigned8:
-            x = np.frombuffer(data, dtype=np.uint8).astype(np.int32) - 128
-        else:
-            x = np.frombuffer(data, dtype=np.int8).astype(np.int32)
+        x = np.frombuffer(data, dtype=np.uint8).astype(np.int32) - 128
         full = 127.0
     elif bits == 16:
         x = np.frombuffer(
-            data[: len(data) - len(data) % 2], dtype=f"{byteorder}i2"
+            data[: len(data) - len(data) % 2], dtype="<i2"
         ).astype(np.int32)
         full = 32767.0
     elif bits == 24:
         trim = len(data) - len(data) % 3
         raw = np.frombuffer(data[:trim], dtype=np.uint8).reshape(-1, 3)
-        lo, mid, hi = (2, 1, 0) if byteorder == ">" else (0, 1, 2)
         x = (
-            raw[:, lo].astype(np.int32)
-            | raw[:, mid].astype(np.int32) << 8
-            | raw[:, hi].astype(np.int8).astype(np.int32) << 16
+            raw[:, 0].astype(np.int32)
+            | raw[:, 1].astype(np.int32) << 8
+            | raw[:, 2].astype(np.int8).astype(np.int32) << 16
         )
         full = 8388607.0
     elif bits == 32:
         x = np.frombuffer(
-            data[: len(data) - len(data) % 4], dtype=f"{byteorder}i4"
+            data[: len(data) - len(data) % 4], dtype="<i4"
         ).astype(np.int64)
         full = 2147483647.0
     else:
@@ -400,15 +394,15 @@ def int_pcm_stats(data: bytes, bits: int, byteorder: str,
     return mean, x.size
 
 
-def float_stats(data: bytes, bits: int, byteorder: str) -> tuple[float, int]:
-    """(mean |x|, total sample count) for IEEE float PCM; out-of-range
-    values clip to [-1, 1] and non-finite values are dropped from the
-    mean (but still count toward the sample count)."""
+def float_stats(data: bytes, bits: int) -> tuple[float, int]:
+    """IEEE float PCM; out-of-range values clip to [-1, 1] and
+    non-finite values are dropped from the mean (but still count
+    toward the sample count)."""
     if bits not in (32, 64):
         raise ValueError(f"unsupported float bit depth {bits}")
     step = bits // 8
     x = np.frombuffer(
-        data[: len(data) - len(data) % step], dtype=f"{byteorder}f{step}"
+        data[: len(data) - len(data) % step], dtype=f"<f{step}"
     )
     n = x.size
     x = np.clip(x[np.isfinite(x)], -1.0, 1.0)
@@ -417,7 +411,7 @@ def float_stats(data: bytes, bits: int, byteorder: str) -> tuple[float, int]:
 
 
 def g711_stats(data: bytes, law: str) -> tuple[float, int]:
-    """(mean |x| normalized, sample count) for G.711 bytes."""
+    """G.711 A-law / mu-law bytes, one sample each."""
     table = _ALAW if law == "alaw" else _ULAW
     x = table[np.frombuffer(data, dtype=np.uint8)].astype(np.int32)
     mean = float(np.abs(x).mean() / 32767.0) if x.size else 0.0
@@ -490,10 +484,10 @@ def decode(content: bytes) -> dict:
     fmt, data, fact = _parse_riff(content)
     tag, ch = fmt["tag"], fmt["channels"]
     if tag == 0x0001:  # integer PCM, incl. the 24-bit stdlib gap
-        mean, total = int_pcm_stats(data, fmt["bits"], "<", unsigned8=True)
+        mean, total = int_pcm_stats(data, fmt["bits"])
         n = total // ch
     elif tag == 0x0003:  # IEEE float
-        mean, total = float_stats(data, fmt["bits"], "<")
+        mean, total = float_stats(data, fmt["bits"])
         n = total // ch
     elif tag in (0x0006, 0x0007):  # G.711 A-law / mu-law
         mean, total = g711_stats(data, "alaw" if tag == 0x0006 else "ulaw")

@@ -89,10 +89,9 @@ def _lit_vec(vec: list[float]) -> Column:
 
 
 def _assign_gemm_udf(centroids: list[tuple[int, list[float]]]):
-    """Arrow-batched GEMM assigner for the large-k regime (the
-    semdedup_scaling.py k-sweep puts the local expression/GEMM
-    crossover at k≈16–32; the paper's k≈50k is GEMM territory from
-    the start). Returns struct(c, cos) — same contract as the
+    """Arrow-batched GEMM assigner for the large-k regime (the k-sweep
+    in BASELINE.md puts the local expression/GEMM crossover at
+    k≈16–32; the paper's k≈50k is GEMM territory from the start). Returns struct(c, cos) — same contract as the
     expression assigner; same argmin-(d, cid) tie-break (np.argmin
     takes the first minimum and rows are ordered by cid)."""
     import numpy as np
@@ -116,12 +115,12 @@ def _assign_gemm_udf(centroids: list[tuple[int, list[float]]]):
         # across batch shapes (OpenBLAS picks different kernels/threading
         # by M: measured 7.1e-15 drift between M=64 and M=100), which
         # flipped (cos, id) rank order between a copy pair whose batches
-        # differed in size (r17 flake). Recompute the selected-centroid
+        # differed in size. Recompute the selected-centroid
         # dot per row with numpy's fixed-order row reduction instead —
         # bit-identical for a given row regardless of batch size or BLAS
         # threading (pinned by test_gemm_cos_is_batch_shape_invariant).
         # GEMM still feeds ONLY the argmin, where centroid distance gaps
-        # are orders of magnitude above ulp noise (the r16 margin
+        # are orders of magnitude above ulp noise (the margin
         # certificate's guarantee), so cluster choice is shape-stable.
         sel = c[best]
         dot_sel = np.einsum("ij,ij->i", mat, sel)
@@ -131,12 +130,12 @@ def _assign_gemm_udf(centroids: list[tuple[int, list[float]]]):
             cos = dot_sel / denom
         # zero-norm rows/centroids: the expr path's try_divide yields
         # NULL — mirror that (NaN would sort ABOVE every double in the
-        # keep-rank and silently diverge the dropped set; r10 review).
+        # keep-rank and silently diverge the dropped set).
         # Mask ONLY the zero-denominator rows: pd.array(..., "Float64")
         # would coerce EVERY NaN to NA, so a NaN embedding component
         # (expr path: try_divide(NaN, NaN) = NaN, divisor nonzero)
-        # would re-open the same divergence from the other side
-        # (second r10 review pass). FloatingArray with an explicit
+        # would re-open the same divergence from the other side.
+        # FloatingArray with an explicit
         # mask keeps unmasked NaN as NaN through Arrow.
         cos_out = pd.arrays.FloatingArray(cos, mask=(denom == 0.0))
         return pd.DataFrame({"c": cids[best], "cos": cos_out})
@@ -159,7 +158,7 @@ def assign_clusters(
     the lowest cluster id in both engines) — no UDF, codegen end to
     end, and a SQL oracle can replay it. ``assigner="gemm"`` is the
     Arrow-batched numpy kernel for large k (expression size grows ∝ k;
-    measured crossover k≈16–32, scripts/semdedup_scaling.py). Both add
+    measured crossover k≈16–32, BASELINE.md). Both add
     ``cluster_col`` and ``cos_col`` (cosine to the OWN centroid, the
     keep-rank key) with the same argmin-(d, cid) semantics; the dedup
     OUTPUT is assigner-invariant (see semdedup_dropped) even where

@@ -8,7 +8,7 @@ ParquetTableStore), one ``df.write.jdbc`` per table per batch.
 
 This store runs for real in this container against embedded Apache
 Derby (`derby*.jar` ships with Spark for the Hive metastore), proving
-the ``df.write.jdbc``/``read.jdbc`` path end-to-end — VERDICT r1 item 8.
+the ``df.write.jdbc``/``read.jdbc`` path end-to-end.
 Against a production Postgres the same class works unchanged with
 ``url="jdbc:postgresql://..."``; notes for that deployment:
 
@@ -67,11 +67,11 @@ class JdbcTableStore:
     # Dialect "relation does not exist" SQLStates: Derby 42X05,
     # Postgres 42P01, SQL Server S0002 (vendor error code 208,
     # "Invalid object name"). Matched against the java.sql.SQLException
-    # cause chain, NEVER free-text messages: r7 ADVICE — a
-    # case-sensitive substring like "does not exist" also matches
-    # unrelated failures (missing database/schema, Derby "connection
-    # does not exist"), silently routing a transient error into the
-    # first-load create path.
+    # cause chain, NEVER free-text messages: a case-sensitive
+    # substring like "does not exist" also matches unrelated failures
+    # (missing database/schema, Derby "connection does not exist"),
+    # silently routing a transient error into the first-load create
+    # path.
     _MISSING_STATES = frozenset({"42X05", "42P01", "S0002"})
     _MISSING_VENDOR_CODES = frozenset({208})
 
@@ -104,12 +104,12 @@ class JdbcTableStore:
     def _exists(self, name: str) -> bool:
         """True/False ONLY for a definitive answer. A probe failure
         that is not provably \"relation missing\" (network blip, auth,
-        timeout, missing database/schema) RE-RAISES: r7 code review —
-        swallowing it returned False, which routed an existing
-        populated table into the first-load DROP+CREATE path
-        (rds_import) and made upsert read an empty frame and overwrite
-        away every existing row. A transient error must fail the
-        batch, never masquerade as an empty table."""
+        timeout, missing database/schema) RE-RAISES: swallowing it
+        would return False, which routes an existing populated table
+        into the first-load DROP+CREATE path and makes upsert read an
+        empty frame and overwrite away every existing row. A transient
+        error must fail the batch, never masquerade as an empty
+        table."""
         if name in self._known:
             return True
         try:
@@ -117,8 +117,7 @@ class JdbcTableStore:
             # surfaces to Spark as a column literally named "1", and
             # the collect then issues SELECT "1" FROM ... — which the
             # database rejects, making exists() RAISE on a table that
-            # exists but was created outside this store instance
-            # (r9 finding, reproduced on live Derby).
+            # exists but was created outside this store instance.
             self.spark.read.jdbc(
                 self.url,
                 f"(SELECT 1 AS probe_one FROM {name} WHERE 1=0) probe",

@@ -550,9 +550,8 @@ LIMIT 20
 def bm25_topk(
     docs: DataFrame, terms: tuple[str, ...], k: int = 20
 ) -> DataFrame:
-    """DataFrame-level BM25 builder — the ONE plan body shared by the
-    registered query and scripts/index_scaling.py, so the scaling
-    curve always measures the shipped shape."""
+    """DataFrame-level BM25 builder: the plan body of the registered
+    ``bm25_retrieval_topk`` query, callable on any documents frame."""
     docs = _words(docs).select("doc_id", "ws").withColumn(
         "dl", F.size("ws").cast("double")
     )

@@ -33,7 +33,6 @@ def _update_running(
     # tuple, a batch of only LATE events would emit a last-event-ts
     # that moves BACKWARD while the counters move forward, breaking
     # the running-aggregate contract for latest-by-key consumers
-    # (r13 review)
     n, s, last_ts = state.get if state.exists else (0, 0.0, None)
     for pdf in pdfs:
         if not len(pdf):
@@ -63,72 +62,9 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-# ---- transformWithStateInPandas (Spark 4 arbitrary-state v2) --------
+# ---- streaming LOCF forward-fill (keyed state) ---------------------
 
 LOCF_SCHEMA = "user_id long, event_id long, ts timestamp, props string"
-
-
-def locf_processor():
-    """Streaming LOCF forward-fill, per key: NULL ``props`` inherits
-    the key's last non-null value — across micro-batches, via an
-    explicit ValueState slot. This is the reference's forward-fill
-    (import_files_to_postgre.py:148-153 / SURVEY §2.9 "W1's streaming
-    analog") on the modern transformWithState API, replacing the
-    applyInPandasWithState style above for new code."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class LocfProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_props", "v string")
-
-        def handleInputRows(self, key, rows, timerValues):
-            # concat-then-sort across chunks: see _locf_update.
-            last = self._last.get()[0] if self._last.exists() else None
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                    ["ts", "event_id"], kind="stable"
-                )
-                filled = []
-                for v in pdf["props"]:
-                    if v is None or (isinstance(v, float) and pd.isna(v)):
-                        filled.append(last)
-                    else:
-                        last = v
-                        filled.append(v)
-                out = pdf.copy()
-                out["props"] = filled
-                yield out[["user_id", "event_id", "ts", "props"]]
-            if last is not None:
-                self._last.update((last,))
-
-        def close(self) -> None:
-            pass
-
-    return LocfProcessor()
-
-
-def locf_fill_stream(events: DataFrame) -> DataFrame:
-    """Per-user LOCF over a stream of events with a nullable ``props``
-    column, on the arbitrary-state-v2 API. Import-gated: the state
-    server protocol needs protobuf, absent in this container — use
-    :func:`locf_fill_stream_legacy` there (identical output)."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - absent in container
-        raise ImportError(
-            "transformWithStateInPandas requires protobuf; use "
-            "locf_fill_stream_legacy (applyInPandasWithState) instead"
-        ) from exc
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=locf_processor(),
-        outputStructType=LOCF_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )
 
 
 def _locf_update(key, pdfs, state):
@@ -159,9 +95,12 @@ def _locf_update(key, pdfs, state):
     state.update((last,))
 
 
-def locf_fill_stream_legacy(events: DataFrame) -> DataFrame:
-    """LOCF on applyInPandasWithState — same semantics as
-    :func:`locf_fill_stream`, runs without protobuf."""
+def locf_fill_stream(events: DataFrame) -> DataFrame:
+    """Per-user LOCF over a stream of events with a nullable ``props``
+    column: NULL ``props`` inherits the key's last non-null value,
+    across micro-batches, via one keyed state slot. This is the
+    reference's forward-fill (import_files_to_postgre.py:148-153) as a
+    streaming operator."""
     return events.groupBy("user_id").applyInPandasWithState(
         _locf_update,
         outputStructType=LOCF_SCHEMA,
@@ -204,12 +143,12 @@ def _funnel_update(key, pdfs, state):
         pdf = pd.concat(chunks, ignore_index=True).sort_values(
             ["ts", "event_id"], kind="stable"
         )
-        # vectorized scan (r15 VERDICT item 6 — the per-row iterrows
-        # single-threaded a hot key at ~10⁶ events/micro-batch): the
-        # "most recent view at each row" is a forward-fill of view
-        # timestamps over the sorted frame, seeded with the carried
-        # state; the ts >= anchor guard stays because the carry-in
-        # from a previous batch may postdate this batch's early rows.
+        # vectorized scan (a per-row loop single-threads a hot key at
+        # ~10⁶ events/micro-batch): the "most recent view at each row"
+        # is a forward-fill of view timestamps over the sorted frame,
+        # seeded with the carried state; the ts >= anchor guard stays
+        # because the carry-in from a previous batch may postdate this
+        # batch's early rows.
         is_view = pdf["event_type"].eq("view")
         anchor = pdf["ts"].where(is_view).ffill()
         if last_view is not None:
@@ -238,12 +177,11 @@ def funnel_stream(events: DataFrame) -> DataFrame:
     """Streaming view→purchase funnel (30-min conversion window) with
     one timestamp of keyed state per user. The batch twins are the
     registered funnel_three_step and events_funnel_watermark queries
-    (the narrower funnel_view_to_purchase micro-shape they subsume was
-    retired in r9 — semi-join with time-range residual); this operator
-    is the incremental form for unbounded streams, including
-    conversions that straddle micro-batch boundaries. State never
-    expires — for unbounded key spaces use
-    :func:`funnel_stream_expiring`."""
+    (they subsume the narrower view→purchase semi-join with a
+    time-range residual); this operator is the incremental form for
+    unbounded streams, including conversions that straddle
+    micro-batch boundaries. State never expires — for unbounded key
+    spaces use :func:`funnel_stream_expiring`."""
     return events.groupBy("user_id").applyInPandasWithState(
         _funnel_update,
         outputStructType=FUNNEL_SCHEMA,

@@ -13,7 +13,7 @@ guards can't see.
 Caveat: queries whose operators localCheckpoint internally (the CC
 loop) report ~zero — the checkpoint truncates the returned frame's
 lineage, so its QueryExecution covers only the final stage. Measure
-those via their component pipelines (scripts/cc_scaling.py).
+those via their component pipelines.
 """
 from __future__ import annotations
 
@@ -35,7 +35,6 @@ DEFAULT_QUERIES = [
     "fuzzy_join_symdelete",
     "events_session_window",
     "revenue_share_top_customers",
-    # r5 additions
     "q21_waiting_suppliers",
     "q13_order_count_distribution",
     "q5_local_supplier_volume",
@@ -43,10 +42,8 @@ DEFAULT_QUERIES = [
     "q18_large_volume_customers",
     "dedup_containment",
     "events_funnel_watermark",
-    # late-r5 additions (staged for the r6 driver window)
     "stream_static_revenue_rollup",
     "q9_profit_by_nation_year",
-    # late-r5 additions (staged for r7)
     "q3_shipping_priority",
     "q6_forecast_revenue",
     "q12_lateness_priority",
@@ -57,9 +54,8 @@ DEFAULT_QUERIES = [
     "text_bpe_pair_counts",
     "events_next_event_training",
     "corpus_build_pipeline",
-    # r5 continuation additions (staged for r8); copurchase_triangles
-    # is measured by its own scaling probe instead — its operator
-    # localCheckpoints internally (see Caveat above)
+    # copurchase_triangles is left out: its operator localCheckpoints
+    # internally (see Caveat above)
     "incremental_agg_maintenance",
     "trend_slope_per_nation",
     "feature_winsorize_robust",
@@ -68,7 +64,6 @@ DEFAULT_QUERIES = [
     "unpivot_charge_components",
     "hierarchical_revenue_share",
     "window_edge_values",
-    # second-continuation additions (staged for r9)
     "corpus_block_dedup",
     "doc_chunking_overlap",
     "inverted_index_postings",

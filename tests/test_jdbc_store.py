@@ -1,4 +1,4 @@
-"""Live JDBC sink tests (VERDICT r1 item 8): the S9 path exercised for
+"""Live JDBC sink tests: the S9 path exercised for
 real against embedded Derby (ships with Spark), proving the MERGE-shaped
 semantics survive the swap from the parquet stand-in to df.write.jdbc.
 
@@ -170,97 +170,10 @@ def test_delete_keys_erasure_roundtrip(spark, tmp_path):
     assert store.delete_keys("purchase_like", victims, ["user_id"]) == 0
 
 
-def test_dialect_descriptors_urls_and_drivers(spark):
-    """S9 cluster face (VERDICT r6 item 4): the reference's RDS
-    targets — SQL Server (import_files_to_rds.py per README.md:77-79)
-    and Postgres (import_files_to_postgre.py) — resolve to the right
-    JDBC URL grammar and driver class through one dialect-
-    parameterized store constructor; Derby is the live-tested one."""
-    from pythondataingestionprocess_spark.pipeline import rds_import
-
-    ss = rds_import.store_for_dialect(
-        spark, "sqlserver", "rds.example.com", "meddb"
-    )
-    assert ss.url == (
-        "jdbc:sqlserver://rds.example.com:1433;databaseName=meddb;encrypt=true"
-    )
-    assert ss.properties["driver"] == (
-        "com.microsoft.sqlserver.jdbc.SQLServerDriver"
-    )
-
-    pg = rds_import.store_for_dialect(
-        spark, "postgresql", "pg.example.com", "meddb", port=5433
-    )
-    assert pg.url == "jdbc:postgresql://pg.example.com:5433/meddb"
-    assert pg.properties["driver"] == "org.postgresql.Driver"
-
-    db = rds_import.store_for_dialect(spark, "derby", "/tmp/somedb")
-    assert db.url == "jdbc:derby:/tmp/somedb;create=true"
-    assert db.properties["driver"] == "org.apache.derby.jdbc.EmbeddedDriver"
-
-
-def test_s3_scheme_path_normalization():
-    """The boto3/EMR ``s3://`` spelling maps to the Hadoop-connector
-    ``s3a://`` scheme; every other scheme (and plain paths) passes
-    through untouched."""
-    from pythondataingestionprocess_spark.pipeline.rds_import import (
-        normalize_object_path,
-    )
-
-    assert normalize_object_path("s3://bkt/prefix/a.csv") == (
-        "s3a://bkt/prefix/a.csv"
-    )
-    assert normalize_object_path("s3a://bkt/a.csv") == "s3a://bkt/a.csv"
-    assert normalize_object_path("file:///tmp/a.csv") == "file:///tmp/a.csv"
-    assert normalize_object_path("/tmp/a.csv") == "/tmp/a.csv"
-    assert normalize_object_path("hdfs://nn/a.csv") == "hdfs://nn/a.csv"
-
-
-def test_import_files_to_rds_end_to_end(spark, jdbc_store, tmp_path):
-    """The full import_files_to_rds shape against live Derby: a
-    multi-file CSV drop read through a file:// glob (same Hadoop
-    path machinery as s3a://) → one distributed read → keyed MERGE.
-    Re-running the same prefix is idempotent; a corrected file
-    upserts in place — the reference's per-row ON CONFLICT loop as
-    two set operations."""
-    from pythondataingestionprocess_spark.pipeline import rds_import
-
-    src = tmp_path / "drop"
-    src.mkdir()
-    (src / "part1.csv").write_text("id_store,store_name\n1,Store A\n2,Store B\n")
-    (src / "part2.csv").write_text("id_store,store_name\n3,Store C\n")
-    glob = "file://" + str(src / "*.csv")
-    schema = "id_store long, store_name string"
-
-    n = rds_import.import_files_to_rds(
-        spark, glob, jdbc_store, "rds_stores", keys=["id_store"],
-        fmt="csv", schema=schema, options={"header": "true"},
-    )
-    assert n == 3
-    rows = {r.id_store: r.store_name for r in jdbc_store.read("rds_stores").collect()}
-    assert rows == {1: "Store A", 2: "Store B", 3: "Store C"}
-
-    # idempotent re-run of the same prefix
-    rds_import.import_files_to_rds(
-        spark, glob, jdbc_store, "rds_stores", keys=["id_store"],
-        fmt="csv", schema=schema, options={"header": "true"},
-    )
-    assert jdbc_store.read("rds_stores").count() == 3
-
-    # corrected file → upsert in place
-    (src / "part2.csv").write_text("id_store,store_name\n3,Store C v2\n")
-    rds_import.import_files_to_rds(
-        spark, glob, jdbc_store, "rds_stores", keys=["id_store"],
-        fmt="csv", schema=schema, options={"header": "true"},
-    )
-    rows = {r.id_store: r.store_name for r in jdbc_store.read("rds_stores").collect()}
-    assert rows == {1: "Store A", 2: "Store B", 3: "Store C v2"}
-
-
 def test_exists_reraises_non_missing_probe_failures(spark):
-    """r7 code review: a probe failure that is NOT 'table missing'
-    (wrong driver, network, auth) must raise — returning False routed
-    existing tables into destructive first-load/overwrite paths."""
+    """A probe failure that is NOT 'table missing' (wrong driver,
+    network, auth) must raise — returning False would route existing
+    tables into destructive first-load/overwrite paths."""
     from pythondataingestionprocess_spark.pipeline.jdbc_store import (
         JdbcTableStore,
     )
@@ -283,7 +196,7 @@ def test_exists_false_only_for_missing_table(spark, jdbc_store):
 
 
 def test_relation_missing_matches_sqlstate_not_message(spark):
-    """r7 ADVICE: classification must come from the SQLException
+    """Classification must come from the SQLException
     cause chain's SQLState / vendor code, never message text. A
     Derby 'connection does not exist' (08003) whose message contains
     the old substring must NOT classify as relation-missing; 42X05 /
@@ -318,7 +231,7 @@ def test_relation_missing_matches_sqlstate_not_message(spark):
 
 
 def test_jdbc_exists_on_table_created_elsewhere(spark, tmp_path):
-    """r9 regression: exists() must return True for a table that
+    """exists() must return True for a table that
     exists but was created OUTSIDE this store instance (fresh process
     after a crash, a second consumer, raw-DDL tables). The unaliased
     probe `SELECT 1 FROM t` surfaced a column literally named "1" and

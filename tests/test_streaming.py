@@ -296,23 +296,12 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert {(r["error_id"], r["click_id"]) for r in rows} == {(9, 1)}
 
 
-def test_transform_with_state_locf(spark, tmp_path):
-    """Spark-4 transformWithStateInPandas: LOCF state survives ACROSS
-    micro-batches — batch 2's leading NULL inherits batch 1's last
-    value for the same user."""
-    import pytest as _pytest
-
-    from pythondataingestionprocess_spark.streaming import stateful
-
-    # modern API is protobuf-gated in this container; same semantics
-    # via the legacy API below
-    try:
-        import google.protobuf  # noqa: F401
-        locf = stateful.locf_fill_stream
-    except ImportError:
-        with _pytest.raises(ImportError):
-            stateful.locf_fill_stream(None)
-        locf = stateful.locf_fill_stream_legacy
+def test_locf_state_survives_across_microbatches(spark, tmp_path):
+    """LOCF state survives ACROSS micro-batches — batch 2's leading
+    NULL inherits batch 1's last value for the same user."""
+    from pythondataingestionprocess_spark.streaming.stateful import (
+        locf_fill_stream,
+    )
 
     inbox = str(tmp_path / "inbox")
     schema = "user_id long, event_id long, ts timestamp, props string"
@@ -329,7 +318,7 @@ def test_transform_with_state_locf(spark, tmp_path):
         spark, inbox, schema, max_files_per_trigger=1
     )
     q = (
-        locf(stream)
+        locf_fill_stream(stream)
         .writeStream.format("memory")
         .queryName("locf_test")
         .outputMode("append")
@@ -339,25 +328,6 @@ def test_transform_with_state_locf(spark, tmp_path):
     q.awaitTermination(120)
     got = {r["event_id"]: r["props"] for r in spark.sql("SELECT * FROM locf_test").collect()}
     assert got == {1: "A", 2: "A", 3: "A", 4: "B", 5: None}
-
-
-def test_kafka_parse_json_events_batch(spark):
-    """parse_json_events is source-agnostic — exercised on a batch
-    frame shaped like Kafka output (no broker in this container);
-    PERMISSIVE: bad payloads → NULL columns, stream survives."""
-    from pythondataingestionprocess_spark.streaming.kafka import parse_json_events
-
-    raw = spark.createDataFrame(
-        [
-            (bytearray(b'{"event_id": 1, "value": 2.5}'), "2024-01-01 00:00:00"),
-            (bytearray(b"not json at all"), "2024-01-01 00:00:01"),
-        ],
-        "value binary, timestamp string",
-    ).withColumn("timestamp", F.to_timestamp("timestamp"))
-    out = parse_json_events(raw, "event_id long, value double").collect()
-    by_ts = sorted(out, key=lambda r: r["kafka_ts"])
-    assert by_ts[0]["event_id"] == 1 and by_ts[0]["value"] == 2.5
-    assert by_ts[1]["event_id"] is None  # fault-isolated, not failed
 
 
 def test_streaming_funnel_cross_batch_conversion(spark, tmp_path):
@@ -700,7 +670,7 @@ def test_streaming_dedup_against_signature_store(spark, tmp_path):
 
 
 def test_dedup_ingest_retry_is_idempotent(spark, tmp_path):
-    """foreachBatch retry semantics (ADVICE r2, medium): replaying a
+    """foreachBatch retry semantics: replaying a
     batch whose append_to_store already committed must (a) not emit
     spurious self 'cross' pairs from finding its own signatures in the
     store, (b) not leave duplicate signature rows behind, and (c) not
@@ -781,7 +751,7 @@ def test_rate_source_tumbling_window(spark, tmp_path):
         # longer than the generation interval processAllAvailable can
         # chase the tail FOREVER and the deadline at the loop top is
         # never reached again (observed: 1,500+ micro-batches / 30+
-        # stuck minutes under heavy ambient load, r17).
+        # stuck minutes under heavy ambient load).
         deadline = time.time() + 60
         total, n_windows = 0, 0
         while time.time() < deadline:
@@ -837,7 +807,7 @@ class _StubState:
 
 
 def test_locf_update_deterministic_on_timestamp_ties():
-    """ADVICE r3: rows with identical ts must fill deterministically —
+    """Rows with identical ts must fill deterministically —
     (ts, event_id) stable sort, regardless of chunk boundaries or
     within-chunk order."""
     import pandas as pd
@@ -1362,7 +1332,7 @@ def test_streaming_block_dedup_matches_batch_operator(spark, tmp_path):
     }
     assert retry == want
 
-    # VERDICT r6 item 2: the PERSISTENT store key must be 128-bit
+    # the PERSISTENT store key must be 128-bit
     # (16-byte binary md5), not xxhash64 — a 64-bit key has an
     # expected birthday collision at C4-scale block counts and would
     # silently drop a never-ingested block.
@@ -1373,7 +1343,7 @@ def test_streaming_block_dedup_matches_batch_operator(spark, tmp_path):
 
 
 def test_legacy_block_store_is_refused_with_actionable_error(spark, tmp_path):
-    """r7 code review: a store written by the pre-r7 64-bit key scheme
+    """A store written by the older 64-bit key scheme
     must fail FAST with rebuild instructions — not an AnalysisException
     in the semi-join, and never a mixed-type append."""
     import pytest as _pytest
@@ -1397,7 +1367,7 @@ def test_legacy_block_store_is_refused_with_actionable_error(spark, tmp_path):
 
 
 def test_half_written_first_store_does_not_wedge_screen(spark, tmp_path):
-    """r10 review (third pass): a crash DURING the very first store
+    """A crash DURING the very first store
     write leaves only the committer's _temporary dir — bare-existence
     gating then wedges every retry on an unreadable parquet path. The
     committed-part probe must treat it as 'no store yet' (within-batch
@@ -1619,7 +1589,7 @@ def test_streaming_screen_capped_set_equals_incremental_operator(spark, tmp_path
 
 
 def test_embedding_store_dim_mismatch_fails_loudly(spark, tmp_path):
-    """Second r7 review: a store built at one dimension must REFUSE a
+    """A store built at one dimension must REFUSE a
     differently-dimensioned screen/append with a clear error — the
     silent alternative was meaningless buckets and null-padded
     cosines reporting zero duplicates forever."""
@@ -1651,7 +1621,7 @@ def test_embedding_store_dim_mismatch_fails_loudly(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="dimensions"):
         ei._check_dim(mixed, "embedding", 32)
-    # r7 ADVICE: min/max(size) skip NULLs — a null embedding row must
+    # min/max(size) skip NULLs — a null embedding row must
     # raise the same clear error, not the opaque in-UDF NPE
     with_null = spark.createDataFrame(
         [(5, [1.0] * 32), (6, None)],
@@ -1662,7 +1632,7 @@ def test_embedding_store_dim_mismatch_fails_loudly(spark, tmp_path):
 
 
 def test_compact_store_folds_leftover_siblings(spark, tmp_path):
-    """Second r7 review (the heal-defeat data-loss path): leftovers
+    """The heal-defeat data-loss path: leftovers
     are INPUTS — a mid-swap crash leaving history only in __old (or
     __next) while the stream recreates a thin live table must fold
     ALL copies together on the next compact_store run, never delete
@@ -1750,7 +1720,7 @@ def test_compact_store_recovers_orphaned_building_dir(spark, tmp_path):
 
 
 def test_compact_store_folds_multiple_staging_leftovers(spark, tmp_path):
-    """r7 ADVICE (medium): the consolidated copy must be durably
+    """The consolidated copy must be durably
     written BEFORE any staging leftover is deleted, so staging now
     goes to a fresh uuid-suffixed __building_<id> name and EVERY
     __building* leftover (legacy unsuffixed and suffixed alike) is a
@@ -1852,11 +1822,11 @@ def test_compact_store_skips_debris_only_staging_dir(spark, tmp_path):
     assert got == {(10, 1)}
 
 
-# ---- r13 streaming review regression pins ---------------------------
+# ---- streaming edge-case regression pins -----------------------------
 
 
 def test_scd2_enrich_open_ended_null_valid_to(spark):
-    """r13 review: an OPEN current version (valid_to IS NULL — the
+    """An OPEN current version (valid_to IS NULL — the
     standard SCD2 convention) must enrich every event at/after its
     valid_from; the bare `ts < valid_to` residual was NULL there and
     silently dropped the match."""
@@ -1888,7 +1858,7 @@ def test_scd2_enrich_open_ended_null_valid_to(spark):
 
 
 def test_compact_store_heals_under_glob_metachar_store_dir(spark, tmp_path):
-    """r13 review: __building leftovers are found by LISTING the
+    """__building leftovers are found by LISTING the
     parent dir — a Hadoop glob built from a store path containing
     metacharacters ('run[2026]') would throw or silently match
     nothing, orphaning the only complete history copy after the traced
@@ -1930,7 +1900,7 @@ def test_compact_store_heals_under_glob_metachar_store_dir(spark, tmp_path):
 
 
 def test_stateful_running_totals_late_batch_keeps_last_ts(spark, tmp_path):
-    """r13 review: last_ts is RUNNING state — a later micro-batch
+    """last_ts is RUNNING state — a later micro-batch
     carrying only EARLIER (late) events must not move the emitted
     last-event-ts backward while the counters move forward."""
     import time as _time
@@ -1967,7 +1937,7 @@ def test_stateful_running_totals_late_batch_keeps_last_ts(spark, tmp_path):
 
 
 def test_progress_logger_rejects_object_store_scheme(spark, tmp_path):
-    """r13 review: ProgressFileLogger writes through the LOCAL
+    """ProgressFileLogger writes through the LOCAL
     filesystem — an s3:// log_dir used to silently create a local
     directory named 's3:/...' and lose every event; now it refuses
     loudly. file:// is accepted (and stripped)."""
@@ -1983,7 +1953,7 @@ def test_progress_logger_rejects_object_store_scheme(spark, tmp_path):
 
 
 def test_funnel_update_vectorized_matches_loop_reference():
-    """r16 (r15 VERDICT item 6): the ffill/mask formulation that
+    """The ffill/mask formulation that
     replaced the per-row iterrows scan must emit the identical
     conversion rows AND leave identical state for random streams —
     including the carry-in case where the state's view postdates early
@@ -2047,7 +2017,7 @@ def test_funnel_update_vectorized_matches_loop_reference():
 
 
 def test_funnel_update_adversarial_fixed_fixtures():
-    """r16 VERDICT item 7: the two self-review edge families as FIXED
+    """The two edge families as FIXED
     fixtures (the randomized pin above may or may not draw them):
     (a) a carried view that POSTDATES early batch rows must not
     convert purchases that happened before it, while still anchoring

@@ -104,10 +104,9 @@ def test_corrupt_gzip_tail_quarantines():
 
 
 def test_corrupt_gzip_member_midfile_resyncs_to_later_members():
-    """r10 review finding 1: a corrupt MEMBER between two good ones
-    must quarantine and resync — never silently drop the rest of the
-    segment (one record per member means member corruption IS the
-    per-record case)."""
+    """A corrupt MEMBER between two good ones must quarantine and
+    resync — never silently drop the rest of the segment (one record
+    per member means member corruption IS the per-record case)."""
     good_a = gzip.compress(_record(b"before", rid="<urn:uuid:a>"))
     corrupt = bytearray(gzip.compress(_record(b"x" * 500, rid="<urn:uuid:bad>")))
     corrupt[20:40] = b"\x00" * 20  # rot the deflate stream, keep the magic
@@ -121,11 +120,11 @@ def test_corrupt_gzip_member_midfile_resyncs_to_later_members():
 
 
 def test_gzip_members_chunked_feed_is_linear():
-    """r10 review (second pass): total bytes fed to the decompressor
-    must be <= ~2x the file size regardless of member count — each
-    member's unused_data carries forward as the next member's first
-    feed instead of re-slicing the tail (the first fix still paid
-    ~2 x _GZ_CHUNK per member; the original paid O(members x file))."""
+    """Total bytes fed to the decompressor must be <= ~2x the file
+    size regardless of member count — each member's unused_data
+    carries forward as the next member's first feed instead of
+    re-slicing the tail (re-slicing pays ~2 x _GZ_CHUNK per member,
+    or O(members x file) without a carry)."""
     # pathological: ~170-byte members, way under the 1 KiB feed floor
     n = 200
     data = b"".join(
@@ -160,10 +159,10 @@ def test_gzip_members_chunked_feed_is_linear():
         f"fed {fed2} for {len(data2)} bytes — adaptive guess not tracking"
     )
 
-    # straddle case (third review pass, measured 1687x before the
-    # rewind fix): one LARGE member ramps the guess up, then a long
-    # run of tiny members — cost must be ~one stale-guess window plus
-    # the floor-dominated tiny-member term, never window^2/member
+    # straddle case (1687x without the guess rewind): one LARGE member
+    # ramps the guess up, then a long run of tiny members — cost must
+    # be ~one stale-guess window plus the floor-dominated tiny-member
+    # term, never window^2/member
     big = gzip.compress(
         _record(_os.urandom(700_000), rid="<urn:uuid:big>",
                 ctype="application/octet-stream")
@@ -184,9 +183,9 @@ def test_gzip_members_chunked_feed_is_linear():
         "stale-guess straddle is quadratic again"
     )
 
-    # small->LARGE transition (fourth review pass): the feed grows
-    # geometrically WITHIN a member, so a big member after tiny ones
-    # takes O(log(member/floor)) decompress calls, not member/floor
+    # small->LARGE transition: the feed grows geometrically WITHIN a
+    # member, so a big member after tiny ones takes O(log(member/floor))
+    # decompress calls, not member/floor
     data4 = tiny + big
     before = wl._GZ_FEED_STATS["calls"]
     recs4 = list(wl.parse_warc_bytes(data4))
@@ -199,8 +198,8 @@ def test_gzip_members_chunked_feed_is_linear():
 
 def test_folded_header_lines_parse():
     """ISO 28500 allows header values to fold onto SP/TAB continuation
-    lines (r10 review finding 6) — the folded URI must reassemble and
-    the record must NOT quarantine."""
+    lines — the folded URI must reassemble and the record must NOT
+    quarantine."""
     body = b"folded ok"
     head = (
         "WARC/1.0\r\n"
@@ -223,8 +222,8 @@ def test_folded_header_lines_parse():
 
 
 def test_empty_glob_reads_zero_rows(spark, tmp_path):
-    """r10 review finding 2: Spark plans one None partition for an
-    empty listing — the reader must yield 0 rows, not crash."""
+    """Spark plans one None partition for an empty listing — the
+    reader must yield 0 rows, not crash."""
     empty = tmp_path / "nothing"
     empty.mkdir()
     wl.register(spark)
@@ -237,8 +236,8 @@ def test_empty_glob_reads_zero_rows(spark, tmp_path):
 
 
 def test_replay_validates_start_edge(tmp_path):
-    """r10 review finding 5: a rename that keeps the END position
-    intact but shifts the replay slice must fail loud."""
+    """A rename that keeps the END position intact but shifts the
+    replay slice must fail loud."""
     import os
 
     d = str(tmp_path / "landing3")
@@ -435,11 +434,10 @@ def test_stream_exactly_once_across_restart(spark, tmp_path):
 
 
 def test_wet_corpus_build_composition(spark, tmp_path):
-    """The WARC front-end composes with the corpus-build stages
-    (NEXT.md r11 item 5's remaining half): WET segments →
-    wet_to_documents → exact dedup (cross-file duplicate collapses to
-    the lowest doc_id) → token-budget sharding, all on the documents
-    shape the registered pipeline uses."""
+    """The WARC front-end composes with the corpus-build stages: WET
+    segments → wet_to_documents → exact dedup (cross-file duplicate
+    collapses to the lowest doc_id) → token-budget sharding, all on the
+    documents shape the registered pipeline uses."""
     d = tmp_path / "wets"
     d.mkdir()
     dup = b"repeated article body with several tokens"
@@ -518,6 +516,20 @@ def test_warc_binary_payload_flows_into_multimodal_decode(spark, tmp_path):
     assert recs.filter(F.col("text").isNotNull()).count() == 1
 
 
+def _crc(data: bytes, poly: int, width: int) -> int:
+    """MSB-first CRC with zero init (FLAC's CRC-8 and CRC-16)."""
+    crc, top, mask = 0, 1 << (width - 1), (1 << width) - 1
+    for b in data:
+        crc ^= b << (width - 8)
+        for _ in range(8):
+            crc = ((crc << 1) ^ poly if crc & top else crc << 1) & mask
+    return crc
+
+
+def _box(btype: bytes, body: bytes) -> bytes:
+    return struct.pack(">I", 8 + len(body)) + btype + body
+
+
 def _removed_format_blobs() -> list[tuple[str, bytes]]:
     """One small, well-formed file per media family real_decode does not
     decode: each parses cleanly with a decoder for its format, so only
@@ -530,6 +542,39 @@ def _removed_format_blobs() -> list[tuple[str, bytes]]:
         b"\xff\xd8\xff\xc0" + struct.pack(">HBHHB", 11, 8, 1, 1, 1)
         + bytes(3) + b"\xff\xd9"
     )
+    pcm = struct.pack(">4h", 1000, -1000, 500, -500)  # big-endian PCM16
+    # FLAC: STREAMINFO (8 kHz, mono, 16-bit, 64 samples), then one
+    # frame holding a CONSTANT subframe, each header CRC-checked
+    flac = (b"fLaC\x80" + (34).to_bytes(3, "big")
+            + struct.pack(">HH6x", 16, 65535)
+            + ((8000 << 44) | (15 << 36) | 64).to_bytes(8, "big")
+            + bytes(16))
+    head = b"\xff\xf8\x60\x00\x00\x3f"  # block 64, rate/bps from STREAMINFO
+    frame = head + bytes([_crc(head, 0x07, 8)]) + b"\x00" + struct.pack(">h", -1000)
+    flac += frame + _crc(frame, 0x8005, 16).to_bytes(2, "big")
+    comm = struct.pack(">hIh", 1, 4, 16) + struct.pack(">HQ", 0x400B, 8000 << 51)
+    ssnd = struct.pack(">II", 0, 0) + pcm
+    aiff = b"AIFF" + b"".join(
+        ck + struct.pack(">I", len(body)) + body
+        for ck, body in ((b"COMM", comm), (b"SSND", ssnd)))
+    aiff = b"FORM" + struct.pack(">I", len(aiff)) + aiff
+
+    def ogg_page(payload, granule, header_type, seq):
+        return (b"OggS\x00" + bytes([header_type])
+                + struct.pack("<QIII", granule, 3, seq, 0)
+                + bytes([1, len(payload)]) + payload)
+
+    opus_head = b"OpusHead\x01\x02" + struct.pack("<HIhB", 312, 44100, 0, 0)
+    mp3_frame = b"\xff\xfb\x90\x00" + bytes(413)  # MPEG1 L3, 128 kbps, 44.1 kHz
+    adts_frame = b"\xff\xf1\x50\x80\x0d\x7f\xfc" + bytes(100)  # AAC LC, 44.1 kHz
+    full = bytes(4)  # version 0, flags 0
+    avif = _box(b"ftyp", b"avif" + bytes(4) + b"mif1avif") + _box(b"meta", full + (
+        _box(b"hdlr", full + bytes(4) + b"pict" + bytes(12))
+        + _box(b"pitm", full + struct.pack(">H", 1))
+        + _box(b"iinf", full + struct.pack(">H", 1) + _box(
+            b"infe", b"\x02\x00\x00\x00" + struct.pack(">HH", 1, 0) + b"av01\x00"))
+        + _box(b"iprp", _box(b"ipco", _box(b"ispe", full + struct.pack(">II", 320, 200)))
+               + _box(b"ipma", full + struct.pack(">IHBB", 1, 1, 1, 1)))))
     return [
         ("image/png", b"\x89PNG\r\n\x1a\n"
          + png_chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0))
@@ -541,6 +586,18 @@ def _removed_format_blobs() -> list[tuple[str, bytes]]:
         ("image/qoi", b"qoif" + struct.pack(">IIBB", 1, 1, 3, 0)
          + b"\xfe\x80\x80\x80" + bytes(7) + b"\x01"),
         ("video/mjpeg", jpeg * 2),
+        # the canonical 43-byte 1x1 transparent GIF89a
+        ("image/gif", bytes.fromhex(
+            "47494638396101000100800000000000ffffff21f9040100000000"
+            "2c00000000010001000002024401003b")),
+        ("audio/flac", flac),
+        ("audio/aiff", aiff),
+        ("audio/basic", b".snd" + struct.pack(">5I", 24, len(pcm), 3, 8000, 1) + pcm),
+        ("audio/ogg", ogg_page(opus_head, 0, 2, 0)
+         + ogg_page(bytes(10), 480312, 4, 1)),
+        ("audio/mpeg", mp3_frame * 3),
+        ("audio/aac", adts_frame * 2),
+        ("image/avif", avif),
     ]
 
 
@@ -557,12 +614,12 @@ def test_decode_media_quarantines_unsupported_rows(spark, tmp_path):
     rows = [
         (1, "image/bmp", bytearray(bmp)),
         (2, "application/http; msgtype=response", bytearray(b"HTTP/1.1 200 OK\r\n\r\nhi")),
+        # GIF junk is an unsupported image format (ValueError)
         (3, "image/gif", bytearray(b"GIF89a junk")),
         # non-ValueError escapes must quarantine, not crash: a BMP cut
         # inside its info header raises struct.error from bmp_lite.
-        # ID3-prefixed junk fails the MP3 frame walker, and junk RIFF
-        # fails the stdlib wave reader and then wav_lite; both raise
-        # ValueError.
+        # ID3-prefixed junk and junk RIFF both fail the stdlib wave
+        # reader and then wav_lite, which raises ValueError.
         (4, "image/bmp", bytearray(bmp[:40])),
         (5, "audio/mpeg", bytearray(b"ID3\x04\x00junk-not-a-wav")),
         (6, "audio/wav", bytearray(b"RIFFjunk-not-a-wav")),
@@ -584,10 +641,10 @@ def test_decode_media_quarantines_unsupported_rows(spark, tmp_path):
         assert real[bad]["decode_status"].startswith("quarantine:"), bad
     # the reason string distinguishes data problems by exception type
     assert real[4]["decode_status"] == "quarantine:error"  # struct.error
-    assert real[5]["decode_status"] == "quarantine:ValueError"  # bad MP3
+    assert real[5]["decode_status"] == "quarantine:ValueError"  # wav_lite
     assert real[6]["decode_status"] == "quarantine:ValueError"  # wav_lite
-    # an unsupported format is refused by real_decode (image) or
-    # mp4_lite (video) with ValueError, not a parser crash
+    # an unsupported format is refused by real_decode (image), wav_lite
+    # (audio) or mp4_lite (video) with ValueError, not a parser crash
     for removed in range(7, len(rows) + 1):
         assert real[removed]["decode_status"] == "quarantine:ValueError", removed
     # fake decoder sees the same normalized major type: an image/bmp

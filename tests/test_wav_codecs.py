@@ -1,4 +1,4 @@
-"""wav_lite (r13): WAV codecs the stdlib ``wave`` module rejects —
+"""wav_lite: WAV codecs the stdlib ``wave`` module rejects —
 G.711 mu-law/A-law, IMA ADPCM, MS ADPCM, IEEE float, 24-bit and
 EXTENSIBLE PCM — decode SAMPLES for real, closing the lossy-audio gap
 for the telephony/wavetable codecs (MP3/AAC stay metadata-only per
@@ -348,7 +348,7 @@ def test_ms_adpcm_random_blocks_match_replay():
 
 
 def test_ms_adpcm_idelta_overflow_falls_back_to_python_ints():
-    """r14 block-parallel path: MS ADPCM's idelta has no spec ceiling
+    """Block-parallel path: MS ADPCM's idelta has no spec ceiling
     (x3 per code at adapt=768), so a crafted stream overflows any
     fixed lane width. The int64 lanes carry a 2**46 guard and must
     fall back to the exact-Python-int scalar decode — same samples as
@@ -422,7 +422,7 @@ def test_pcm24_and_extensible():
 def test_real_decode_routes_compressed_wav():
     """audio/wav MIME with a mu-law payload: the stdlib wave module
     raises wave.Error, media falls through to wav_lite, and the stats
-    mapping matches the FLAC/PCM convention (width=rate,
+    mapping matches the PCM convention (width=rate,
     height=channels, n_frames=samples, REAL mean amplitude)."""
     sig = np.array(
         [int(9000 * np.sin(i / 6)) for i in range(200)], dtype="<i2"
@@ -471,3 +471,24 @@ def test_decode_media_quarantines_wav_junk():
     with pytest.raises(ValueError, match="truncated"):
         blob = make_wav(1, 1, 8000, 16, 2, b"\0\0" * 8)
         wav_lite.decode(blob[:-9])
+
+
+def test_audio_int32_overflow_quarantines_per_row(spark):
+    """The WAV fmt sample rate is a raw header uint32: past int32 it
+    must quarantine its row in real_decode, on the stdlib-PCM path and
+    on the wav_lite path alike, never kill the whole Arrow batch in
+    decode_media's Int32 cast."""
+    pcm = bytearray(
+        make_wav(1, 1, 8000, 16, 2, np.full(4, 1000, dtype="<i2").tobytes())
+    )
+    struct.pack_into("<I", pcm, pcm.index(b"fmt ") + 12, 3_000_000_000)
+    ulaw = make_wav(7, 1, 3_000_000_000, 8, 1, bytes(4))
+    for blob in (bytes(pcm), ulaw):
+        with pytest.raises(ValueError, match="int32"):
+            media.real_decode(blob, "audio/wav")
+    df = spark.createDataFrame(
+        [(1, "audio/wav", pcm)], "id long, media_type string, content binary"
+    )
+    (row,) = media.decode_media(df, use_fake=False).collect()
+    assert row["decode_status"] == "quarantine:ValueError"
+    assert row["byte_len"] == len(pcm) and row["width"] is None
