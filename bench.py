@@ -52,7 +52,6 @@ HEADLINE = [
     "events_tumbling_window",
     "events_session_window",
     "events_asof_last_click",
-    # r2 additions
     "dedup_groups_cc",
     "text_contamination_check",
     "doc_packing_shards",
@@ -65,7 +64,6 @@ HEADLINE = [
     "text_pii_redact",
     "events_concurrency_peak",
     "pagerank_nations",
-    # r4 additions
     "q11_important_parts",
     "q15_top_supplier",
     "q16_supplier_count",
@@ -74,7 +72,6 @@ HEADLINE = [
     "cdc_snapshot_latest",
     "islands_user_activity",
     "text_bigram_lm",
-    # r5 additions
     "q21_waiting_suppliers",
     "q13_order_count_distribution",
     "q5_local_supplier_volume",
@@ -82,10 +79,8 @@ HEADLINE = [
     "q18_large_volume_customers",
     "dedup_containment",
     "events_funnel_watermark",
-    # late-r5 additions (staged for the r6 driver window)
     "stream_static_revenue_rollup",
     "q9_profit_by_nation_year",
-    # late-r5 additions (staged for r7)
     "events_pattern_match",
     "events_decayed_feature",
     "events_resample_interpolate",
@@ -97,7 +92,6 @@ HEADLINE = [
     "events_next_event_training",
     "corpus_build_pipeline",
     "equidepth_price_bands",
-    # r5 continuation additions (staged for r8)
     "incremental_agg_maintenance",
     "trend_slope_per_nation",
     "feature_winsorize_robust",
@@ -110,7 +104,6 @@ HEADLINE = [
     "window_edge_values",
     "recursive_cte_subtree_rollup",
     "dq_order_reconciliation",
-    # second-continuation additions (staged for r9)
     "corpus_block_dedup",
     "doc_chunking_overlap",
     "inverted_index_postings",
@@ -119,14 +112,14 @@ HEADLINE = [
     "inverted_index_incremental",
     "bm25_retrieval_topk",
     "corpus_temperature_mix",
-    # r13 addition (staged for r14): the oracle-checked REAL media
+    # the oracle-checked REAL media
     # decode face — two Arrow mapInPandas stages (closed-form blob
     # synthesis + the real decoders) over the documents table
     "multimodal_real_decode_roundtrip",
-    # r14 addition (staged for r15): the ANN recall certificate —
+    # the ANN recall certificate —
     # registered-config LSH + brute-force top-5 + recall join
     "embedding_ann_recall",
-    # r15 addition (staged for r16): TPC-H Q2 — correlated min
+    # TPC-H Q2 — correlated min
     # supplycost decorrelated to one fact shuffle + a partitioned
     # window over the aggregated supply pairs
     "q2_min_cost_supplier",
@@ -162,9 +155,9 @@ def _histogram_quantity_plan(spark, sf_dir):
 
 RETIRED_BENCH_PLANS = {"histogram_quantity": _histogram_quantity_plan}
 
-# The 28-query subset shared by every round's bench since r1 — its
-# total is the round-over-round comparable number (VERDICT r2 item 8);
-# the full HEADLINE total moves whenever new queries land.
+# The 28-query subset shared by every bench run since the first — its
+# total is the run-over-run comparable number; the full HEADLINE total
+# moves whenever new queries land.
 R1_SUBSET = [
     "flagship_revenue_by_nation",
     "pricing_summary",
@@ -233,21 +226,19 @@ def host_noise_verdict(
     load_end: float | None,
     cores: int,
 ) -> str:
-    """Self-interpretation of the host-context fields (r9 VERDICT
-    item 6 — the reading rules used to live only in BASELINE.md
-    prose, so a polluted artifact did not flag itself):
+    """Self-interpretation of the host-context fields, so a polluted
+    artifact flags itself instead of relying on BASELINE.md prose:
 
     - end/start calib ratio outside ±20% (inclusive boundary: 0.80
       and 1.20 are clean BY RULE) → the host's speed CHANGED mid-run;
-      per-query timings are not mutually comparable. The band was
-      ±15% through r13; widened per r13 VERDICT item 7 because the
-      calibration probe's own variance exceeds raw-wall variance on
-      this host (r13 ledger: calibs moved 0.41→0.33 between two runs
-      whose raw walls matched within 0.6%).
+      per-query timings are not mutually comparable. The band is
+      ±20%, not tighter, because the calibration probe's own variance
+      exceeds raw-wall variance on this host (calibs moved 0.41→0.33
+      between two runs whose raw walls matched within 0.6%).
     - loadavg above the core count on either edge → the sweep
       competed for CPU; the total is an upper bound.
     - loadavg well above idle at START (before the sweep ran — e.g.
-      the r9 driver artifact's 4.4-5.3) → ambient background load;
+      4.4-5.3 on this 4-core host) → ambient background load;
       compare only within-run ratios / the s-per-calib ledger.
 
     Returns 'clean' or a compact 'WARN: ...' string that rides both
@@ -273,17 +264,16 @@ def host_noise_verdict(
     return ("WARN: " + "; ".join(notes)) if notes else "clean"
 
 
-# Pre-start quiet gate + one-shot retry (r13 VERDICT item 4): three
-# consecutive official BENCH artifacts were WARN'd by ambient load /
-# mid-run calib drift while same-session ledger reruns were clean —
-# the archived number was systematically the worst one. The ambient
-# threshold matches host_noise_verdict's "ambient loadavg > 4" rule.
+# Pre-start quiet gate + one-shot retry: without them, artifacts
+# WARN'd by ambient load / mid-run calib drift were archived while
+# same-session reruns were clean — the archived number was
+# systematically the worst one. The ambient threshold matches
+# host_noise_verdict's "ambient loadavg > 4" rule.
 QUIET_LOAD = 4.0
-# 120 s through r14; the r14 official artifact still archived a WARN
-# because the gate gave up after a short wait against ambient 6.5
-# (r14 VERDICT item "What's wrong 1") — a few minutes of bounded
-# patience is cheaper than a polluted committed number.
-QUIET_WAIT_MAX_SEC = int(os.environ.get("SPARK_GRAFT_BENCH_QUIET_WAIT", 300))
+# A 120 s wait still archived a WARN, giving up against ambient 6.5
+# — a few minutes of bounded patience is cheaper than a polluted
+# committed number.
+QUIET_WAIT_MAX_SEC = 300
 
 
 def _wait_for_quiet_host() -> float:
@@ -302,9 +292,9 @@ def _wait_for_quiet_host() -> float:
 def run_sweep(spark, sf_dir: str, names, plan_fn, sf) -> dict:
     """One full timed sweep: warmup, calib, per-query walls, end calib.
 
-    Host-context fields (r7 VERDICT #2 / item 4): the official r7
-    artifact recorded 127.7 s on a contended host while a same-day
-    equal-calib rerun measured 105.6 s — the start-of-run calib
+    Host-context fields: one artifact recorded 127.7 s on a
+    contended host while a same-day equal-calib rerun measured
+    105.6 s — the start-of-run calib
     scalar alone cannot certify a run. A SECOND calib at the end
     plus 1-min load averages make contention visible inside the
     artifact itself: calib_sec_end diverging from calib_sec, or
@@ -334,7 +324,7 @@ def run_sweep(spark, sf_dir: str, names, plan_fn, sf) -> dict:
     # SPARK_GRAFT_CPUS is the sweep's own parallelism; absent that,
     # the PHYSICAL core count is the contention baseline — a
     # hardcoded 32 would classify a fully-contended 8-core host as
-    # clean (code-review r10)
+    # clean
     cores = int(
         os.environ.get("SPARK_GRAFT_CPUS", 0) or os.cpu_count() or 32
     )
@@ -342,9 +332,9 @@ def run_sweep(spark, sf_dir: str, names, plan_fn, sf) -> dict:
     total = round(sum(timings.values()), 3)
     subset = round(sum(timings[n] for n in R1_SUBSET if n in timings), 3)
     # the cross-round comparable: r1-subset seconds normalized by the
-    # MEAN of the two calibrations (BASELINE.md s-per-calib ledger,
-    # r10 VERDICT item 6 — computed in the artifact itself so ledger
-    # entries are read, not derived by hand)
+    # MEAN of the two calibrations (BASELINE.md s-per-calib ledger —
+    # computed in the artifact itself so ledger entries are read, not
+    # derived by hand)
     per_calib = (
         round(subset / ((calib + calib_end) / 2), 1)
         if calib and calib_end
@@ -377,9 +367,9 @@ def _drift_badness(detail: dict) -> float:
 
 
 def _run_badness(detail: dict) -> tuple:
-    """Run-selection key: a clean run ALWAYS beats a WARN'd one (the
-    r14 artifact parsed a WARN'd run while a clean rerun existed —
-    r14 VERDICT item "What's wrong 1"); ties break on calib drift."""
+    """Run-selection key: a clean run ALWAYS beats a WARN'd one (a
+    WARN'd run must never be parsed while a clean rerun exists); ties
+    break on calib drift."""
     return (
         0 if detail.get("host_noise") == "clean" else 1,
         _drift_badness(detail),
@@ -387,14 +377,14 @@ def _run_badness(detail: dict) -> tuple:
 
 
 def select_run(runs: list) -> dict:
-    """Pick the run the compact line reports (r18, VERDICT r17 item 9).
+    """Pick the run the compact line reports.
 
-    Base rule (r14): a clean run beats a WARN'd one, ties break on
+    Base rule: a clean run beats a WARN'd one, ties break on
     calib drift. That rule has an asymmetry: a run whose host SPED UP
     mid-run is WARN'd and loses to a stable-but-slow run even though
-    its total is the better (upper-bound) estimate — the r17
-    end-of-round artifact archived 153.1 s while discarding a 103.3 s
-    run WARN'd only because calib improved 0.51x. New override: when
+    its total is the better (upper-bound) estimate — it once archived
+    153.1 s while discarding a 103.3 s run WARN'd only because calib
+    improved 0.51x. Override: when
     the two runs AGREE per-query — each run's total is within 10% of
     the elementwise-min composite, i.e. neither run is systematically
     distorted relative to the other — prefer the lower total. When
@@ -433,8 +423,8 @@ def main() -> None:
     runs = [run_sweep(spark, sf_dir, names, plan_fn, sf)]
     if runs[0].get("host_noise") != "clean":
         # One-shot retry on ANY noise verdict — ambient load as well
-        # as calib drift (r14 VERDICT item 5: the drift-only trigger
-        # let an ambient-load WARN become the parsed number). Fresh
+        # as calib drift (a drift-only trigger lets an ambient-load
+        # WARN become the parsed number). Fresh
         # session (evicts per-session memos so the rerun measures
         # plans, not cache hits), preceded by another bounded quiet
         # wait since the ambient load may still be draining. Both
@@ -461,14 +451,13 @@ def main() -> None:
     # FINAL line = compact summary. The driver parses the tail of
     # stdout; with 88 queries the detailed line above is ~2.8 KB and
     # its head (including "value") falls outside the tail buffer —
-    # BENCH_r05.json recorded parsed:null exactly because of that
-    # (VERDICT r5 item 1). This line must stay well under 2000 chars
-    # and must be printed LAST. r18 (VERDICT r17 item 2): per-query
-    # walls now ride this line too, as the compact "q" array —
-    # 2-decimal floats in benched-HEADLINE order (the insertion order
-    # of the detailed line's "queries" dict), ~600 chars for 91
-    # queries — so PERF can compute round-over-round per-query deltas
-    # (r17 had n_common: 0, i.e. no per-query comparison at all).
+    # BENCH_r05.json recorded parsed:null exactly because of that.
+    # This line must stay well under 2000 chars and must be printed
+    # LAST. Per-query walls ride this line too, as the compact "q"
+    # array — 2-decimal floats in benched-HEADLINE order (the
+    # insertion order of the detailed line's "queries" dict), ~600
+    # chars for 91 queries — so run-over-run per-query deltas can be
+    # computed from the compact line alone.
     compact = {
         "metric": "headline_queries_total_wall",
         "value": detail["value"],

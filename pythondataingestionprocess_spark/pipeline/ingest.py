@@ -136,7 +136,7 @@ def dedup_against_history(
             F.col("purchase_date").alias("_h_date"),
         )
     )
-    # NULL-SAFE matching on the AS-STORED values (r13 review): the
+    # NULL-SAFE matching on the AS-STORED values: the
     # history side holds coalesced quantity/price (0 / 0.0) and a
     # possibly-NULL purchase_date, while the staged side carries raw
     # NULLs — a plain equality anti-join never matches either form
@@ -173,14 +173,12 @@ def stage_batch(
     ``Picture_URL``. ``precios``: FIXTURES.md §2 + ``row_idx``.
 
     ``collect_metrics=False`` skips the two per-batch ``count()``
-    actions (VERDICT r1 item 7): they are cheap observability for file
-    batches but add two job launches per micro-batch under a
-    high-trigger-rate stream. The eager localCheckpoint stays — it is
-    correctness (lineage must not re-scan history tables after the
-    upserts swap the underlying parquet), not observability. (A dead
-    ``current_date`` parameter was dropped r13: SCD stamping happens
-    in ingest_batch, and the unused knob misled callers into thinking
-    staging was date-dependent.)
+    actions: they are cheap observability for file batches but add
+    two job launches per micro-batch under a high-trigger-rate stream.
+    The eager localCheckpoint stays — it is correctness (lineage must
+    not re-scan history tables after the upserts swap the underlying
+    parquet), not observability. Staging takes no ``current_date``:
+    SCD stamping happens in ingest_batch.
     """
     n_input = compras.count() if collect_metrics else -1
     # J1 enrichment (import_files_to_postgre.py:93-97): attach
@@ -191,8 +189,8 @@ def stage_batch(
     # first-match order must be total ACROSS workbooks: with a
     # multi-file batch, row_idx alone ties (each file restarts at 0)
     # and the window winner becomes partition-order nondeterministic —
-    # different Marca/price run-to-run on identical input (r13
-    # review). Single-file precios (no src_file column) keeps the
+    # different Marca/price run-to-run on identical input.
+    # Single-file precios (no src_file column) keeps the
     # plain row_idx order.
     precio_order = (
         ["src_file", "row_idx"]
@@ -222,7 +220,7 @@ def stage_batch(
     # snapshot makes this unnecessary.)
     rows = rows.withColumn(
         "id_purchase",
-        # CONTENT participates in the key (r13 review): a same-named
+        # CONTENT participates in the key: a same-named
         # file re-dropped with corrected contents passes the history
         # dedup (content differs) but (src_file, row_idx) alone would
         # reuse the OLD row's id_purchase — two conflicting fact rows
@@ -441,30 +439,20 @@ def ingest_batch_txn(
     The plain path is seven independent store commits; a crash in the
     middle exposes e.g. a purchase without its operations — exactly
     the partial-batch state the reference avoids by holding one DB
-    session (import_files_to_postgre.py:145-227). Here every dim
-    merge, both fact appends, and the price SCD stage into a single
-    group transaction: all seven tables move together or not at all,
-    and a concurrent committer is detected at the claim instead of
-    interleaving between table writes. The group should be built with
-    ``schemas=SCHEMAS`` so first-batch reads bootstrap typed-empty.
+    session (import_files_to_postgre.py:145-227). Here the same seven
+    writes run on a group transaction (its reads are the group's
+    committed reads, its writes stage): every dim merge, both fact
+    appends, and the price SCD land as a single commit — all seven
+    tables move together or not at all, and a concurrent committer is
+    detected at the claim instead of interleaving between table
+    writes. The group should be built with ``schemas=SCHEMAS`` so
+    first-batch reads bootstrap typed-empty.
     """
-    current_date = current_date or date.today()
-    result = stage_batch(
-        compras, precios, group, collect_metrics,
-        verify_urls=verify_urls, url_transport=url_transport,
-    )
     with group.transaction() as txn:
-        txn.insert_if_absent("payment_type", rows_payment(result),
-                             ["payment_type"])
-        txn.insert_if_absent("store", result.stores, ["store_name"])
-        txn.insert_if_absent("provider", result.providers,
-                             ["id_store", "provider_url"])
-        txn.insert_if_absent("product", result.products, ["product_name"])
-        txn.append("purchase", result.purchases)
-        txn.append("operation", result.operations)
-        txn.overwrite("price", apply_price_scd(
-            group.read("price"), result.prices, current_date))
-    return result
+        return ingest_batch(
+            compras, precios, txn, current_date, collect_metrics,
+            verify_urls=verify_urls, url_transport=url_transport,
+        )
 
 
 def rows_payment(result: IngestResult) -> DataFrame:

@@ -3,8 +3,8 @@
 The reference writes its star schema to Postgres with per-row
 ``INSERT ... ON CONFLICT`` statements (database_utils.py:70-79). The
 Spark-first shape is per-BATCH set operations: ``spark.read.jdbc`` for
-the existing side, join-based MERGE logic (shared with
-ParquetTableStore), one ``df.write.jdbc`` per table per batch.
+the existing side, join-based MERGE logic (``TableMerge``, shared
+with ParquetTableStore), one ``df.write.jdbc`` per table per batch.
 
 This store runs for real in this container against embedded Apache
 Derby (`derby*.jar` ships with Spark for the Hive metastore), proving
@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pythondataingestionprocess_spark.pipeline.store import SCHEMAS
+from pythondataingestionprocess_spark.pipeline.store import SCHEMAS, TableMerge
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -39,13 +39,14 @@ def derby_url(db_dir: str) -> str:
     return f"jdbc:derby:{db_dir};create=true"
 
 
-class JdbcTableStore:
+class JdbcTableStore(TableMerge):
     """Same interface as ParquetTableStore, JDBC-backed.
 
-    MERGE logic is identical (set-oriented joins); only the IO layer
-    differs. Frames are eagerly materialized (localCheckpoint) before
-    any overwrite of a table they were read from — the same
-    read-then-replace hazard the parquet store's staging-swap solves.
+    The MERGE shapes are :class:`TableMerge`'s, over this class's
+    ``read``/``overwrite``; only the IO layer differs. Frames are
+    eagerly materialized (localCheckpoint) before any overwrite of a
+    table they were read from — the same read-then-replace hazard the
+    parquet store's staging-swap solves.
     """
 
     def __init__(
@@ -147,27 +148,3 @@ class JdbcTableStore:
         # (a live DB partitions via its own DDL).
         df.write.jdbc(self.url, name, mode="append", properties=self.properties)
         self._known.add(name)
-
-    def upsert(self, name: str, incoming: DataFrame, keys: list[str]) -> None:
-        """MERGE: incoming wins on key match (ON CONFLICT DO UPDATE).
-
-        ``incoming`` is deduped on ``keys`` first (one arbitrary row per
-        key) so intra-batch key collisions cannot break the uniqueness
-        the reference's per-row ON CONFLICT loop guarantees — same
-        discipline as ParquetTableStore.upsert.
-        """
-        existing = self.read(name)
-        incoming = incoming.dropDuplicates(keys)
-        merged = existing.join(
-            incoming.select(*keys).distinct(), keys, "left_anti"
-        ).unionByName(incoming)
-        self.overwrite(name, merged)
-
-    def insert_if_absent(self, name: str, incoming: DataFrame, keys: list[str]) -> None:
-        """MERGE WHEN NOT MATCHED THEN INSERT (catalog-cache semantics,
-        database_utils.py:66-67). ``incoming`` deduped on ``keys``."""
-        existing = self.read(name)
-        incoming = incoming.dropDuplicates(keys)
-        fresh = incoming.join(existing.select(*keys).distinct(), keys, "left_anti")
-        merged = existing.unionByName(fresh)
-        self.overwrite(name, merged)

@@ -7,12 +7,25 @@ protocol is built from scratch on the two primitives every lakehouse
 format reduces to (public Delta PROTOCOL.md / Iceberg spec shapes):
 
 1. **Immutable data files** — every commit writes NEW parquet
-   directories under ``<table>/data/``; nothing is modified in place.
-2. **An ordered commit log** — ``<table>/_txlog/<version>.json``, one
-   JSON manifest per commit recording the action (overwrite/append),
-   the data directories it added, per-file row counts + min/max
-   skipping stats (the :func:`storage.file_skipping_stats` shape), the
-   schema, and the base snapshot the writer built on.
+   directories under ``<root>/<table>/data/``; nothing is modified in
+   place.
+2. **An ordered commit log** — ``<version>.json`` files in one
+   ``_txlog`` directory, one JSON manifest per commit::
+
+       {"snapshot_id", "tables": {name: {"action", "dirs", "files",
+        "schema"}}, "writer_id", "base_snapshot", "ts_utc"[, "txn"]}
+
+   recording, per table touched, the action (overwrite/append), the
+   data directories it added, per-file row counts + min/max skipping
+   stats (the :func:`storage.file_skipping_stats` shape) and the
+   schema, plus the base snapshot the writer built on.
+
+One engine, :class:`_SnapshotLog`, implements the protocol over one
+``_txlog`` directory. :class:`SnapshotTableStore` holds one log per
+table (``<table>/_txlog``, one entry per manifest);
+:class:`~pythondataingestionprocess_spark.pipeline.txn_group.TableGroup`
+holds one log for many tables (``<root>/_txlog``), which is what
+makes a multi-table transaction one claim.
 
 **Atomicity** is the filesystem's: the manifest is fully written to a
 temp name, then claimed with ``os.link`` — creating the final
@@ -32,13 +45,14 @@ the protocol is storage-agnostic.
   if ANY commit landed after the snapshot the writer read, the
   table it derived from is stale and the commit fails loud with
   :class:`ConcurrentWriteError` — the caller re-reads and re-merges.
-  Last-writer-wins is therefore DETECTED, never silent.
+  Last-writer-wins is therefore DETECTED, never silent. A commit
+  carrying any overwrite follows this rule for all its tables.
 
 **Time travel**: ``read(name, snapshot_id=k)`` replays the log up to
-``k``; ``history(name)`` is the queryable commit table. ``vacuum``
-deletes data files unreferenced by the retained snapshot window and
-records the horizon, so a time-travel read past it fails loud instead
-of returning partial data.
+``k``; ``history`` is the queryable commit table. ``vacuum`` deletes
+data files unreferenced by the retained snapshot window, records the
+horizon, so a time-travel read past it fails loud instead of
+returning partial data, and checkpoints the replay state there.
 
 :class:`SnapshotTableStore` subclasses :class:`ParquetTableStore`
 overriding only the physical read/overwrite/append — ``upsert``,
@@ -74,6 +88,7 @@ from pythondataingestionprocess_spark.pipeline.store import (
 _TXLOG = "_txlog"
 _DATA = "data"
 _VACUUM_MARK = "_vacuum.json"
+_CHECKPOINT = "_checkpoint.json"
 MAX_APPEND_REBASES = 5
 
 # Sentinel for a read base INVALIDATED by a failed overwrite commit:
@@ -81,8 +96,8 @@ MAX_APPEND_REBASES = 5
 # caller that catches ConcurrentWriteError and blindly retries the
 # SAME stale derivation must keep failing loud — clearing to None
 # would let the retry skip validation entirely and silently clobber
-# the concurrent writer (r16 review). Only an actual re-READ replaces
-# the sentinel with a fresh pin.
+# the concurrent writer. Only an actual re-READ replaces the sentinel
+# with a fresh pin.
 _STALE_BASE = object()
 # vacuum treats a data dir referenced by NO manifest as possibly an
 # in-flight commit (data lands before the claim) and only sweeps it
@@ -111,7 +126,7 @@ def _resolve_append_schema(live_schema_json: str, batch_schema: StructType,
     MUST be called inside the claim-retry loop, against the head of
     each attempt: a rebased append can land on a head whose schema a
     concurrent commit evolved, and recording a stale schema would
-    silently drop the evolved column from every read (ADVICE r15)."""
+    silently drop the evolved column from every read."""
     live = _name_types(live_schema_json)
     mine = [(f.name, f.dataType.simpleString()) for f in batch_schema.fields]
     if live == mine:
@@ -139,163 +154,187 @@ def _resolve_append_schema(live_schema_json: str, batch_schema: StructType,
     return union.json()
 
 
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Readers of ``path`` see the old or the new content, never a
+    half-written file."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed after the snapshot this write was
     derived from — re-read and retry the whole operation."""
 
 
-class SnapshotTableStore(ParquetTableStore):
-    """ParquetTableStore with a per-table snapshot log (module doc)."""
+class _SnapshotLog:
+    """The commit protocol (module doc) over ONE ``_txlog`` directory.
+    Table ``name``'s data lives under ``<root>/<name>/data``; a
+    manifest carries one entry per table its commit touched. Holds
+    this instance's read pin: one logical transaction at a time per
+    log, the Spark-driver shape. ``label`` names the log in errors;
+    ``stats_cols`` maps tables to the columns whose per-file min/max
+    the manifest records. Spark is needed only to write and read data
+    — listing, replay, history and vacuum are pure filesystem."""
 
-    def __init__(self, spark, root: str, writer_id: str | None = None,
-                 stats_cols: dict[str, list[str]] | None = None):
-        super().__init__(spark, root)
-        self.writer_id = writer_id or f"writer-{uuid.uuid4().hex[:8]}"
-        # per-table columns to record min/max skipping stats for
-        self.stats_cols = stats_cols or {}
-        # snapshot each table was last read at BY THIS INSTANCE —
-        # the base the next overwrite validates against (one logical
-        # transaction at a time per instance, the Spark-driver shape)
-        self._read_base: dict[str, int | None] = {}
+    def __init__(self, spark, root: str, txdir: str, writer_id: str,
+                 label: str, stats_cols: dict[str, list[str]]):
+        self.spark = spark
+        self.root = root
+        self.txdir = txdir
+        self.writer_id = writer_id
+        self.label = label
+        self.stats_cols = stats_cols
+        # snapshot this log was first read at since the last commit —
+        # the base the next overwrite-bearing commit validates against
+        self.read_base = None
 
-    # -- log primitives ------------------------------------------------
+    # -- log reading -----------------------------------------------------
 
-    def _txdir(self, name: str) -> str:
-        return os.path.join(self._path(name), _TXLOG)
-
-    def _datadir(self, name: str) -> str:
-        return os.path.join(self._path(name), _DATA)
-
-    def snapshot_ids(self, name: str) -> list[int]:
-        d = self._txdir(name)
-        if not os.path.isdir(d):
+    def ids(self) -> list[int]:
+        if not os.path.isdir(self.txdir):
             return []
         out = []
-        for f in os.listdir(d):
+        for f in os.listdir(self.txdir):
             stem, ext = os.path.splitext(f)
             if ext == ".json" and stem.isdigit():
                 out.append(int(stem))
         return sorted(out)
 
-    def current_snapshot(self, name: str) -> int | None:
-        ids = self.snapshot_ids(name)
+    def head(self) -> int | None:
+        ids = self.ids()
         return ids[-1] if ids else None
 
-    def _load_commit(self, name: str, sid: int) -> dict:
-        with open(os.path.join(self._txdir(name), f"{sid:020d}.json")) as f:
+    def load(self, sid: int) -> dict:
+        with open(os.path.join(self.txdir, f"{sid:020d}.json")) as f:
             return json.load(f)
 
-    def _vacuum_horizon(self, name: str) -> int:
-        mark = os.path.join(self._txdir(name), _VACUUM_MARK)
-        if not os.path.exists(mark):
-            return 0
-        with open(mark) as f:
-            return int(json.load(f)["min_readable_snapshot"])
-
-    def _checkpoint(self, name: str) -> dict | None:
-        """The log checkpoint written by vacuum (Delta's every-10th-
-        commit checkpoint idea): the materialized live-dir state at
-        the vacuum horizon, so replay cost resets there instead of
-        growing forever with commit count. Manifests are never
-        deleted — the checkpoint is a perf shortcut, the full log
-        stays as the audit trail."""
-        p = os.path.join(self._txdir(name), "_checkpoint.json")
+    def _read_json(self, fname: str) -> dict | None:
+        p = os.path.join(self.txdir, fname)
         if not os.path.exists(p):
             return None
         with open(p) as f:
             return json.load(f)
 
-    def _live_dirs(self, name: str, snapshot_id: int) -> list[str]:
-        """Replay the log up to ``snapshot_id``: overwrite resets the
-        file set, append extends it. Starts from the vacuum-written
-        checkpoint when one covers the requested snapshot."""
-        dirs: list[str] = []
+    def horizon(self) -> int:
+        mark = self._read_json(_VACUUM_MARK)
+        return 0 if mark is None else int(mark["min_readable_snapshot"])
+
+    def checkpoint(self) -> dict | None:
+        """The log checkpoint written by vacuum (Delta's every-10th-
+        commit checkpoint idea): the materialized per-table state at
+        the vacuum horizon, so replay cost resets there instead of
+        growing forever with commit count. Manifests are never
+        deleted — the checkpoint is a perf shortcut, the full log
+        stays as the audit trail."""
+        return self._read_json(_CHECKPOINT)
+
+    def state(self, sid: int) -> dict[str, dict]:
+        """Replay the log up to ``sid`` into ``{table: {"dirs",
+        "schema"}}``: overwrite resets a table's file set, append
+        extends it, the schema is the last one recorded. Starts from
+        the checkpoint when it covers ``sid``."""
+        tables: dict[str, dict] = {}
         start_after = 0
-        ck = self._checkpoint(name)
-        if ck is not None and snapshot_id >= ck["as_of"]:
-            dirs = list(ck["dirs"])
+        ck = self.checkpoint()
+        if ck is not None and sid >= ck["as_of"]:
+            tables = {n: {"dirs": list(t["dirs"]), "schema": t["schema"]}
+                      for n, t in ck["tables"].items()}
             start_after = ck["as_of"]
-        for sid in self.snapshot_ids(name):
-            if sid <= start_after:
+        for s in self.ids():
+            if s <= start_after:
                 continue
-            if sid > snapshot_id:
+            if s > sid:
                 break
-            c = self._load_commit(name, sid)
-            if c["action"] == "overwrite":
-                dirs = list(c["dirs"])
-            else:
-                dirs.extend(c["dirs"])
-        return dirs
+            for name, e in self.load(s)["tables"].items():
+                t = tables.setdefault(name, {"dirs": [], "schema": None})
+                t["schema"] = e["schema"]
+                if e["action"] == "overwrite":
+                    t["dirs"] = list(e["dirs"])
+                else:
+                    t["dirs"].extend(e["dirs"])
+        return tables
+
+    def entries(self, name: str, until: int):
+        """(sid, manifest entry) for each commit up to ``until`` that
+        touched ``name``."""
+        for sid in self.ids():
+            if sid > until:
+                break
+            e = self.load(sid)["tables"].get(name)
+            if e is not None:
+                yield sid, e
+
+    def history(self):
+        """(sid, table, entry, manifest) per table per commit."""
+        for sid in self.ids():
+            c = self.load(sid)
+            for name, e in sorted(c["tables"].items()):
+                yield sid, name, e, c
+
+    def committed_txns(self) -> set[tuple[str, int]]:
+        """Every (app_id, batch_id) pair recorded in the log."""
+        out = set()
+        for sid in self.ids():
+            txn = self.load(sid).get("txn")
+            if txn:
+                out.add((txn["app_id"], int(txn["batch_id"])))
+        return out
 
     # -- read side -------------------------------------------------------
 
-    def _schema_of(self, name: str, sid: int) -> StructType:
-        return StructType.fromJson(
-            json.loads(self._load_commit(name, sid)["schema"])
-        )
-
-    def read(self, name: str, snapshot_id: int | None = None) -> DataFrame:
-        current = self.current_snapshot(name)
+    def snapshot(self, snapshot_id: int | None) -> int | None:
+        """The snapshot a read serves (None: no commits yet), checked
+        against the head and the vacuum horizon. A read of the head
+        pins it as the base for the next read-modify-write — at the
+        FIRST read since the last commit/reset only: a later read must
+        NOT advance it, or a transaction whose reads straddle a
+        concurrent commit would validate its overwrite against the
+        last read's snapshot and silently clobber the concurrent
+        writer's changes (the lost update this protocol exists to
+        detect). A _STALE_BASE sentinel (failed commit) is replaced
+        here — re-reading IS the prescribed recovery."""
+        current = self.head()
         if current is None:
-            # never committed: the base class's typed-empty bootstrap
-            self._read_base[name] = None
-            return self.spark.createDataFrame([], SCHEMAS[name])
+            self.read_base = None
+            return None
         sid = current if snapshot_id is None else snapshot_id
         if sid > current:
             raise ValueError(
                 f"snapshot {sid} does not exist (current is {current})"
             )
-        if sid < self._vacuum_horizon(name):
+        horizon = self.horizon()
+        if sid < horizon:
             raise ValueError(
-                f"snapshot {sid} was vacuumed (horizon "
-                f"{self._vacuum_horizon(name)}) — its data files are "
-                "gone; a partial read would be silent corruption"
+                f"snapshot {sid} was vacuumed (horizon {horizon}) — its "
+                "data files are gone; a partial read would be silent "
+                "corruption"
             )
-        base = self._read_base.get(name)
-        if snapshot_id is None and (base is None or base is _STALE_BASE):
-            # pin the base for this instance's next read-modify-write
-            # at the FIRST read since the last commit/reset — a later
-            # read must NOT advance it, or a transaction whose reads
-            # straddle a concurrent commit would validate its
-            # overwrite against the last read's snapshot and silently
-            # clobber the concurrent writer's changes (ADVICE r15,
-            # the lost update this class exists to detect). A
-            # _STALE_BASE sentinel (failed commit) is replaced here —
-            # re-reading IS the prescribed recovery.
-            self._read_base[name] = sid
-        dirs = self._live_dirs(name, sid)
-        if not dirs:
-            return self.spark.createDataFrame([], self._schema_of(name, sid))
-        # the RECORDED schema (the union after any merge_schema
-        # evolution) is projected onto every file: parquet schema
-        # projection NULL-fills columns a file's vintage predates —
-        # one read for a table holding files of several vintages, and
-        # no footer-sampling inference either
-        return (
-            self.spark.read.schema(self._schema_of(name, sid))
-            .parquet(*dirs)
-        )
+        if snapshot_id is None and (
+            self.read_base is None or self.read_base is _STALE_BASE
+        ):
+            self.read_base = sid
+        return sid
 
-    def history(self, name: str) -> DataFrame:
-        """The commit log as a DataFrame (queryable audit trail)."""
-        rows = []
-        for sid in self.snapshot_ids(name):
-            c = self._load_commit(name, sid)
-            rows.append((
-                sid, c["action"], c["writer_id"], c["base_snapshot"],
-                c["ts_utc"], len(c["dirs"]),
-                sum(f["n_rows"] for f in c["files"]),
-            ))
-        return self.spark.createDataFrame(
-            rows,
-            "snapshot_id long, action string, writer_id string, "
-            "base_snapshot long, ts_utc string, n_dirs long, "
-            "n_rows_added long",
-        )
+    def frame(self, name: str, sid: int) -> DataFrame | None:
+        """``name`` at ``sid`` (None: not born yet). The RECORDED
+        schema (the union after any merge_schema evolution) is
+        projected onto every file: parquet schema projection
+        NULL-fills columns a file's vintage predates — one read for a
+        table holding files of several vintages, and no footer-
+        sampling inference either."""
+        t = self.state(sid).get(name)
+        if t is None:
+            return None
+        schema = StructType.fromJson(json.loads(t["schema"]))
+        if not t["dirs"]:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*t["dirs"])
 
-    # -- write side --------------------------------------------------------
+    # -- write side ------------------------------------------------------
 
-    def _write_data(
+    def write_data(
         self, name: str, df: DataFrame
     ) -> tuple[str | None, list[dict]]:
         """Write ``df`` to a fresh immutable directory; return (dir,
@@ -303,7 +342,7 @@ class SnapshotTableStore(ParquetTableStore):
         An empty write (e.g. delete_keys removing the last row) yields
         (None, []) — the commit records no dirs and readers get the
         typed-empty frame from the recorded schema."""
-        d = os.path.join(self._datadir(name), uuid.uuid4().hex)
+        d = os.path.join(self.root, name, _DATA, uuid.uuid4().hex)
         df.write.parquet(d)
         if not any(f.endswith(".parquet") for f in os.listdir(d)):
             shutil.rmtree(d)
@@ -327,14 +366,13 @@ class SnapshotTableStore(ParquetTableStore):
             files.append(entry)
         return d, files
 
-    def _claim(self, name: str, record: dict, next_id: int) -> bool:
+    def claim(self, record: dict, next_id: int) -> bool:
         """Atomically claim snapshot ``next_id``: write the manifest to
         a temp name, hard-link it into place. Exactly one writer wins;
         the committed name only ever appears fully written."""
-        txdir = self._txdir(name)
-        os.makedirs(txdir, exist_ok=True)
-        tmp = os.path.join(txdir, f".{uuid.uuid4().hex}.tmp")
-        final = os.path.join(txdir, f"{next_id:020d}.json")
+        os.makedirs(self.txdir, exist_ok=True)
+        tmp = os.path.join(self.txdir, f".{uuid.uuid4().hex}.tmp")
+        final = os.path.join(self.txdir, f"{next_id:020d}.json")
         with open(tmp, "w") as f:
             json.dump(record, f)
             f.flush()
@@ -347,101 +385,256 @@ class SnapshotTableStore(ParquetTableStore):
         finally:
             os.unlink(tmp)
 
-    def _commit(self, name: str, action: str, df: DataFrame,
-                base: int | None, merge_schema: bool = False) -> int:
-        new_dir, files = self._write_data(name, df)
-        if new_dir is not None:
-            # refresh the dir's mtime at the claim edge: the vacuum
-            # orphan retention is mtime-based and must cover the whole
-            # in-flight window, not just the parquet write
-            _now = time.time()
-            os.utime(new_dir, (_now, _now))
-        schema = df.schema.json()
+    def commit(self, actions: list[tuple[str, str, DataFrame, bool]],
+               txn: tuple[str, int] | None = None) -> int | None:
+        """Write the data of every ``(action, name, df, merge_schema)``,
+        then claim ONE manifest for all of them; return its snapshot
+        id. With ``txn = (app_id, batch_id)`` the commit is skipped
+        (None) when that pair is already in the log — re-checked on
+        every attempt, since a concurrent replay of the same batch may
+        win the race (our data dirs then become vacuumable orphans).
+
+        The staged dirs' mtimes are a LEASE against vacuum's
+        mtime-based orphan retention, and a lease must be renewed
+        more often than it expires: every staged dir is re-touched
+        after EACH table's write, bounding any dir's apparent age by
+        one table-staging step, and once more at the claim edge to
+        cover the schema-resolve / claim-race window. The remaining
+        contract is Delta's own: orphan_retention_s must exceed the
+        longest single-table stage + the claim, not the whole
+        transaction."""
+        if txn is not None and txn in self.committed_txns():
+            return None
+        staged: dict[str, tuple] = {}
+
+        def renew_lease():
+            now = time.time()
+            for _, dirs, *_ in staged.values():
+                for d in dirs:
+                    os.utime(d, (now, now))
+
+        for action, name, df, merge_schema in actions:
+            new_dir, files = self.write_data(name, df)
+            staged[name] = (action, [new_dir] if new_dir else [], files,
+                            df.schema, merge_schema)
+            renew_lease()
+        renew_lease()
+        has_overwrite = any(s[0] == "overwrite" for s in staged.values())
+        has_append = any(s[0] == "append" for s in staged.values())
+        base = self.read_base
         rebases = 0
         while True:
-            current = self.current_snapshot(name) or 0
-            if action == "overwrite" and base is _STALE_BASE:
+            if txn is not None and txn in self.committed_txns():
+                return None
+            current = self.head() or 0
+            if has_overwrite and base is _STALE_BASE:
                 raise ConcurrentWriteError(
-                    f"table {name!r}: this instance's read base was "
-                    "invalidated by a previous failed commit — "
-                    "re-READ the table and re-derive before retrying"
+                    f"{self.label}: this instance's read base was "
+                    "invalidated by a previous failed commit — re-READ "
+                    "and re-derive before retrying"
                 )
-            if action == "overwrite" and base is not None and current != base:
+            if has_overwrite and base is not None and current != base:
                 # the prescribed recovery is re-read + re-derive; mark
                 # the pin stale so a blind retry with the SAME
                 # derivation keeps failing loud, while the re-read
-                # re-pins fresh (first-pin read handles the sentinel)
-                self._read_base[name] = _STALE_BASE
+                # re-pins fresh
+                self.read_base = _STALE_BASE
                 raise ConcurrentWriteError(
-                    f"table {name!r}: snapshot advanced {base} -> "
+                    f"{self.label}: snapshot advanced {base} -> "
                     f"{current} since this write's base was read — "
                     "re-read and re-derive (read-modify-write is stale)"
                 )
-            if action == "append" and current:
-                # re-resolved on EVERY attempt: a rebase may land on a
-                # head a concurrent commit evolved
-                schema = _resolve_append_schema(
-                    self._load_commit(name, current)["schema"],
-                    df.schema, merge_schema, name,
-                )
+            # each append's RECORDED schema is resolved against the
+            # head of THIS attempt (a rebase may land on a head a
+            # concurrent commit evolved)
+            live = self.state(current) if current and has_append else {}
+            tables = {}
+            for name, (action, dirs, files, batch_schema,
+                       merge_schema) in staged.items():
+                schema = batch_schema.json()
+                if action == "append" and name in live:
+                    schema = _resolve_append_schema(
+                        live[name]["schema"], batch_schema, merge_schema,
+                        name)
+                tables[name] = {"action": action, "dirs": dirs,
+                                "files": files, "schema": schema}
             record = {
                 "snapshot_id": current + 1,
-                "action": action,
-                "dirs": [new_dir] if new_dir else [],
-                "files": files,
-                "schema": schema,
+                "tables": tables,
                 "writer_id": self.writer_id,
-                "base_snapshot": base if isinstance(base, int) else current,
-                # isinstance: a _STALE_BASE sentinel (failed overwrite
-                # commit) must not leak into the manifest — an
-                # append-only commit after a failure records the head
-
-                "ts_utc": time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                ),
+                # an overwrite built on its pinned read; an append (or
+                # a _STALE_BASE pin, which must not leak into the
+                # manifest) built on the head it claims over
+                "base_snapshot": (base if has_overwrite
+                                  and isinstance(base, int) else current),
+                "ts_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ",
+                                        time.gmtime()),
             }
-            if self._claim(name, record, current + 1):
-                if action == "append":
-                    # A successful blind append must neither CREATE a
-                    # pin (a pin certifies "this instance READ at that
-                    # snapshot" — an append-only instance keeps the
-                    # blind-overwrite contract) nor ADVANCE an existing
-                    # read pin: the append's head may cover OTHER
-                    # writers' commits the pinned read never saw
-                    # (read base 1 -> B appends 2 -> own append claims
-                    # 3: advancing the pin to 3 would let an overwrite
-                    # derived from the snapshot-1 read validate clean
-                    # and clobber B's rows). Stale a live read pin so
+            if txn is not None:
+                record["txn"] = {"app_id": txn[0], "batch_id": int(txn[1])}
+            if self.claim(record, current + 1):
+                if has_overwrite:
+                    self.read_base = None
+                elif isinstance(base, int):
+                    # A blind append must neither CREATE a pin (a pin
+                    # certifies "this instance READ at that snapshot" —
+                    # an append-only instance keeps the blind-overwrite
+                    # contract) nor ADVANCE or clear a live one: its
+                    # head may cover OTHER writers' commits the pinned
+                    # read never saw (read base 1 -> B appends 2 -> own
+                    # append claims 3: advancing the pin to 3 would let
+                    # an overwrite derived from the snapshot-1 read
+                    # validate clean and clobber B's rows). Stale it so
                     # the next overwrite without a fresh read fails
-                    # loud; a re-read re-pins (r16 ADVICE, medium).
-                    if isinstance(self._read_base.get(name), int):
-                        self._read_base[name] = _STALE_BASE
-                else:
-                    self._read_base[name] = current + 1
+                    # loud; a re-read re-pins.
+                    self.read_base = _STALE_BASE
                 return current + 1
             # lost the race
-            if action == "overwrite":
-                self._read_base[name] = _STALE_BASE
+            if has_overwrite:
+                self.read_base = _STALE_BASE
                 raise ConcurrentWriteError(
-                    f"table {name!r}: lost the commit race for "
-                    f"snapshot {current + 1} — re-read and re-derive"
+                    f"{self.label}: lost the commit race for snapshot "
+                    f"{current + 1} — re-read and re-derive"
                 )
             rebases += 1
             if rebases > MAX_APPEND_REBASES:
                 raise ConcurrentWriteError(
-                    f"table {name!r}: append lost {rebases} claim "
-                    "races — giving up"
+                    f"{self.label}: append lost {rebases} claim races "
+                    "— giving up"
                 )
+
+    # -- maintenance -----------------------------------------------------
+
+    def vacuum(self, keep_last: int, orphan_retention_s: float) -> list[str]:
+        """Delete data directories (of every table in the log)
+        unreferenced by the newest ``keep_last`` snapshots, orphans
+        from crashed commits included; advance the time-travel
+        horizon and checkpoint the replay state there. Returns the
+        removed paths.
+
+        A directory referenced by NO manifest at all is
+        indistinguishable from a commit IN FLIGHT (:meth:`commit`
+        writes data BEFORE the claim), so such orphans are only swept
+        once older than ``orphan_retention_s`` (mtime-based — the
+        Delta VACUUM retention idea); a racing vacuum would otherwise
+        delete the files a manifest is about to publish. Directories
+        referenced by a superseded manifest cannot be in flight and
+        are removed regardless of age. Pass 0 only when the caller
+        holds exclusive access."""
+        ids = self.ids()
+        if not ids:
+            return []
+        retained = ids[max(0, len(ids) - keep_last):]
+        live: set[str] = set()
+        for sid in retained:
+            for t in self.state(sid).values():
+                live.update(t["dirs"])
+        referenced: set[str] = set()
+        names: set[str] = set()
+        for sid in ids:
+            for name, e in self.load(sid)["tables"].items():
+                names.add(name)
+                referenced.update(e["dirs"])
+        now = time.time()
+        removed = []
+        for name in sorted(names):
+            datadir = os.path.join(self.root, name, _DATA)
+            if not os.path.isdir(datadir):
+                continue
+            for d in sorted(os.listdir(datadir)):
+                full = os.path.join(datadir, d)
+                if full in live:
+                    continue
+                if full not in referenced:
+                    try:
+                        age = now - os.path.getmtime(full)
+                    except OSError:
+                        continue  # concurrently claimed/removed
+                    if age < orphan_retention_s:
+                        continue  # possibly an in-flight commit
+                shutil.rmtree(full)
+                removed.append(full)
+        _write_json_atomic(
+            os.path.join(self.txdir, _VACUUM_MARK),
+            {"min_readable_snapshot": retained[0],
+             "vacuumed_by": self.writer_id})
+        # materialize the state at the new horizon so log replay
+        # restarts there (bounded by vacuum cadence) instead of walking
+        # every manifest since the log's birth
+        _write_json_atomic(
+            os.path.join(self.txdir, _CHECKPOINT),
+            {"as_of": retained[0], "tables": self.state(retained[0])})
+        return removed
+
+
+class SnapshotTableStore(ParquetTableStore):
+    """ParquetTableStore with a per-table snapshot log (module doc)."""
+
+    def __init__(self, spark, root: str, writer_id: str | None = None,
+                 stats_cols: dict[str, list[str]] | None = None):
+        super().__init__(spark, root)
+        self.writer_id = writer_id or f"writer-{uuid.uuid4().hex[:8]}"
+        # per-table columns to record min/max skipping stats for
+        self.stats_cols = stats_cols or {}
+        self._logs: dict[str, _SnapshotLog] = {}
+
+    def _log(self, name: str) -> _SnapshotLog:
+        if name not in self._logs:
+            self._logs[name] = _SnapshotLog(
+                self.spark, self.root,
+                os.path.join(self._path(name), _TXLOG), self.writer_id,
+                f"table {name!r}", self.stats_cols)
+        return self._logs[name]
+
+    def snapshot_ids(self, name: str) -> list[int]:
+        return self._log(name).ids()
+
+    def current_snapshot(self, name: str) -> int | None:
+        return self._log(name).head()
+
+    def _schema_of(self, name: str, sid: int) -> StructType:
+        return StructType.fromJson(
+            json.loads(self._log(name).state(sid)[name]["schema"]))
+
+    # -- read side -------------------------------------------------------
+
+    def read(self, name: str, snapshot_id: int | None = None) -> DataFrame:
+        log = self._log(name)
+        sid = log.snapshot(snapshot_id)
+        if sid is None:
+            # never committed: the base class's typed-empty bootstrap
+            return self.spark.createDataFrame([], SCHEMAS[name])
+        return log.frame(name, sid)
+
+    def history(self, name: str) -> DataFrame:
+        """The commit log as a DataFrame (queryable audit trail)."""
+        rows = [
+            (sid, e["action"], c["writer_id"], c["base_snapshot"],
+             c["ts_utc"], len(e["dirs"]), sum(f["n_rows"] for f in e["files"]))
+            for sid, _, e, c in self._log(name).history()
+        ]
+        return self.spark.createDataFrame(
+            rows,
+            "snapshot_id long, action string, writer_id string, "
+            "base_snapshot long, ts_utc string, n_dirs long, "
+            "n_rows_added long",
+        )
+
+    # -- write side --------------------------------------------------------
+
+    def _commit(self, name: str, action: str, df: DataFrame,
+                merge_schema: bool = False,
+                txn: tuple[str, int] | None = None) -> int | None:
+        return self._log(name).commit([(action, name, df, merge_schema)], txn)
 
     def overwrite(self, name: str, df: DataFrame) -> None:
         """Replace the table in one atomic commit. If this instance
         read the table first (every inherited MERGE/SCD path does),
-        the commit validates nothing landed since that snapshot."""
-        base = self._read_base.get(name)
-        # materialize BEFORE the claim: df may derive from the live
-        # table (upsert does), and data writes never touch old files
-        self._commit(name, "overwrite", df, base)
-        self._read_base[name] = None
+        the commit validates nothing landed since that snapshot. df
+        may derive from the live table (upsert does): it is
+        materialized BEFORE the claim, and data writes never touch old
+        files."""
+        self._commit(name, "overwrite", df)
 
     def append(self, name: str, df: DataFrame,
                partition_by: list[str] | None = None,
@@ -460,18 +653,13 @@ class SnapshotTableStore(ParquetTableStore):
                 "skipping stats in the commit manifest replace it "
                 "(pass stats_cols={table: [cols]})"
             )
-        self._commit(name, "append", df, None, merge_schema=merge_schema)
+        self._commit(name, "append", df, merge_schema)
 
     # -- exactly-once appends (streaming sink integration) ----------------
 
     def committed_txns(self, name: str) -> set[tuple[str, int]]:
         """Every (app_id, batch_id) pair recorded in the log."""
-        out = set()
-        for sid in self.snapshot_ids(name):
-            txn = self._load_commit(name, sid).get("txn")
-            if txn:
-                out.add((txn["app_id"], int(txn["batch_id"])))
-        return out
+        return self._log(name).committed_txns()
 
     def append_once(self, name: str, df: DataFrame, app_id: str,
                     batch_id: int, merge_schema: bool = False) -> bool:
@@ -484,53 +672,13 @@ class SnapshotTableStore(ParquetTableStore):
         commit are one atomic unit (a separate ledger table would
         reintroduce the two-writes race this store exists to close).
         Returns True if the batch committed, False if it was already
-        in the log. Claim races rebase like ``append`` and re-check
-        the txn set each attempt. Schema discipline is the same as
-        :meth:`append` — validated against the head INSIDE the claim
-        loop (ADVICE r15: a divergent batch must fail loud, never
-        record its own schema and NULL-out existing columns for every
-        reader), with ``merge_schema=True`` permitting additive
-        evolution."""
-        if (app_id, batch_id) in self.committed_txns(name):
-            return False
-        new_dir, files = self._write_data(name, df)
-        if new_dir is not None:
-            _now = time.time()
-            os.utime(new_dir, (_now, _now))  # claim-edge mtime refresh
-        rebases = 0
-        while True:
-            if (app_id, batch_id) in self.committed_txns(name):
-                # a concurrent replay of the SAME batch won the race;
-                # our data dir becomes a vacuumable orphan
-                return False
-            current = self.current_snapshot(name) or 0
-            schema = df.schema.json()
-            if current:
-                schema = _resolve_append_schema(
-                    self._load_commit(name, current)["schema"],
-                    df.schema, merge_schema, name,
-                )
-            record = {
-                "snapshot_id": current + 1,
-                "action": "append",
-                "dirs": [new_dir] if new_dir else [],
-                "files": files,
-                "schema": schema,
-                "writer_id": self.writer_id,
-                "base_snapshot": current,
-                "txn": {"app_id": app_id, "batch_id": int(batch_id)},
-                "ts_utc": time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                ),
-            }
-            if self._claim(name, record, current + 1):
-                return True
-            rebases += 1
-            if rebases > MAX_APPEND_REBASES:
-                raise ConcurrentWriteError(
-                    f"table {name!r}: append_once lost {rebases} "
-                    "claim races — giving up"
-                )
+        in the log. Claim races, schema discipline (a divergent batch
+        fails loud, never records its own schema and NULLs existing
+        columns for every reader; ``merge_schema=True`` permits
+        additive evolution) and the read-pin rule are
+        :meth:`append`'s."""
+        return self._commit(name, "append", df, merge_schema,
+                            (app_id, int(batch_id))) is not None
 
     # -- change data feed ----------------------------------------------------
 
@@ -542,44 +690,43 @@ class SnapshotTableStore(ParquetTableStore):
         loud if an overwrite commit sits in the range: a rewrite
         (MERGE/OPTIMIZE) has no append-grain delta in the log — use
         :meth:`diff_snapshots` for the row-level diff instead."""
-        current = self.current_snapshot(name)
+        log = self._log(name)
+        current = log.head()
         if current is None:
             raise ValueError(f"table {name!r} has no commits")
         until = current if until is None else until
+        # every part is projected onto the schema recorded at
+        # ``until`` — parquet projection NULL-fills columns an older
+        # vintage predates, so a range crossing an additive
+        # merge_schema boundary unions cleanly instead of raising
+        schema = self._schema_of(name, until)
         parts = []
-        for sid in self.snapshot_ids(name):
-            if sid <= after or sid > until:
+        for sid, e in log.entries(name, until):
+            if sid <= after:
                 continue
-            c = self._load_commit(name, sid)
-            if c["action"] != "append":
+            if e["action"] != "append":
                 raise ValueError(
-                    f"snapshot {sid} is an {c['action']} — no "
+                    f"snapshot {sid} is an {e['action']} — no "
                     "append-grain delta; use diff_snapshots"
                 )
-            if any(not os.path.isdir(d) for d in c["dirs"]):
+            if any(not os.path.isdir(d) for d in e["dirs"]):
                 raise ValueError(
                     f"snapshot {sid}'s data files were vacuumed — "
                     "the change feed cursor fell behind the retention "
                     "window"
                 )
-            if c["dirs"]:
-                # project every part onto the schema recorded at
-                # ``until`` — parquet projection NULL-fills columns an
-                # older vintage predates, so a range crossing an
-                # additive merge_schema boundary unions cleanly
-                # instead of raising (ADVICE r15)
+            if e["dirs"]:
                 parts.append(
-                    self.spark.read.schema(self._schema_of(name, until))
-                    .parquet(*c["dirs"])
-                    # cast: both this branch and the empty-range
-                    # branch (and the driver face's oracle) must agree
-                    # on bigint — a bare IntegerType lit made the
-                    # feed's schema range-dependent (r16 ADVICE)
+                    self.spark.read.schema(schema).parquet(*e["dirs"])
+                    # cast: this branch, the empty-range branch and the
+                    # driver face's oracle must agree on bigint — a bare
+                    # IntegerType lit would make the feed's schema
+                    # range-dependent
                     .withColumn("_snapshot_id", F.lit(sid).cast("long"))
                 )
         if not parts:
             return self.spark.createDataFrame(
-                [], self._schema_of(name, until).add("_snapshot_id", "long")
+                [], schema.add("_snapshot_id", "long")
             )
         out = parts[0]
         for p in parts[1:]:
@@ -612,12 +759,11 @@ class SnapshotTableStore(ParquetTableStore):
         rather than silently losing their rows. Returns the new
         snapshot id."""
         df = self.read(name)  # pins the base snapshot
-        n_dirs = len(self._live_dirs(name, self.current_snapshot(name)))
-        compacted = df.coalesce(max(1, min(max_files_per_commit, n_dirs)))
-        base = self._read_base.get(name)
-        sid = self._commit(name, "overwrite", compacted, base)
-        self._read_base[name] = None
-        return sid
+        log = self._log(name)
+        n_dirs = len(log.state(log.head())[name]["dirs"])
+        return self._commit(
+            name, "overwrite",
+            df.coalesce(max(1, min(max_files_per_commit, n_dirs))))
 
     # -- maintenance -------------------------------------------------------
 
@@ -625,62 +771,19 @@ class SnapshotTableStore(ParquetTableStore):
                orphan_retention_s: float = DEFAULT_ORPHAN_RETENTION_S
                ) -> list[str]:
         """Delete data directories unreferenced by the newest
-        ``keep_last`` snapshots (orphans from crashed commits
-        included), and advance the time-travel horizon so vacuumed
-        snapshots fail loud on read. Returns the removed paths.
+        ``keep_last`` snapshots and advance the time-travel horizon
+        so vacuumed snapshots fail loud on read (in-flight orphan
+        rules: :meth:`_SnapshotLog.vacuum`). Returns the removed
+        paths."""
+        return self._log(name).vacuum(keep_last, orphan_retention_s)
 
-        A directory referenced by NO manifest at all is
-        indistinguishable from a commit IN FLIGHT (``_commit`` writes
-        data BEFORE the claim), so such orphans are only swept once
-        older than ``orphan_retention_s`` (mtime-based — the Delta
-        VACUUM retention idea, ADVICE r15); a racing vacuum would
-        otherwise delete the files a manifest is about to publish.
-        Directories referenced by a superseded manifest cannot be
-        in flight and are removed regardless of age. Pass 0 only when
-        the caller holds exclusive access."""
-        ids = self.snapshot_ids(name)
-        if not ids:
-            return []
-        keep_from = ids[max(0, len(ids) - keep_last)]
-        live: set[str] = set()
-        for sid in ids[max(0, len(ids) - keep_last):]:
-            live.update(self._live_dirs(name, sid))
-        referenced: set[str] = set()
-        for sid in ids:
-            referenced.update(self._load_commit(name, sid)["dirs"])
-        now = time.time()
-        datadir = self._datadir(name)
-        removed = []
-        if os.path.isdir(datadir):
-            for d in sorted(os.listdir(datadir)):
-                full = os.path.join(datadir, d)
-                if full in live:
-                    continue
-                if full not in referenced:
-                    try:
-                        age = now - os.path.getmtime(full)
-                    except OSError:
-                        continue  # concurrently claimed/removed
-                    if age < orphan_retention_s:
-                        continue  # possibly an in-flight commit
-                shutil.rmtree(full)
-                removed.append(full)
-        mark = os.path.join(self._txdir(name), _VACUUM_MARK)
-        with open(mark, "w") as f:
-            json.dump({"min_readable_snapshot": keep_from,
-                       "vacuumed_by": self.writer_id}, f)
-        # materialize the live-dir state at the new horizon so log
-        # replay restarts there (bounded by vacuum cadence) instead
-        # of walking every manifest since table birth
-        ck = os.path.join(self._txdir(name), "_checkpoint.json")
-        # resolve BEFORE opening: _live_dirs consults the checkpoint
-        # file, which is empty mid-write
-        state = self._live_dirs(name, keep_from)
-        tmp = ck + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"as_of": keep_from, "dirs": state}, f)
-        os.replace(tmp, ck)
-        return removed
+    def _live_files(self, name: str, sid: int) -> list[dict]:
+        """The manifest file entries (path, n_rows, stats) live at
+        ``sid``."""
+        log = self._log(name)
+        live = set(log.state(sid)[name]["dirs"])
+        return [f for _, e in log.entries(name, sid)
+                if live.intersection(e["dirs"]) for f in e["files"]]
 
     def read_range(self, name: str, col: str, lo, hi) -> DataFrame:
         """Range read that PLANS FROM THE LOG: files whose recorded
@@ -700,18 +803,8 @@ class SnapshotTableStore(ParquetTableStore):
         skip = set(self.skippable_files(name, col, lo, hi))
         if not skip:
             return df.filter(pred)
-        live = set(self._live_dirs(name, current))
-        keep = []
-        for sid in self.snapshot_ids(name):
-            if sid > current:
-                break
-            c = self._load_commit(name, sid)
-            for d in c["dirs"]:
-                if d not in live:
-                    continue
-                keep.extend(
-                    e["path"] for e in c["files"] if e["path"] not in skip
-                )
+        keep = [f["path"] for f in self._live_files(name, current)
+                if f["path"] not in skip]
         if not keep:
             return self.spark.createDataFrame(
                 [], self._schema_of(name, current)
@@ -729,26 +822,18 @@ class SnapshotTableStore(ParquetTableStore):
         current = self.current_snapshot(name)
         if current is None:
             return []
-        live = set(self._live_dirs(name, current))
         out = []
-        for sid in self.snapshot_ids(name):
-            if sid > current:
-                break
-            c = self._load_commit(name, sid)
-            for d in c["dirs"]:
-                if d not in live:
-                    continue
-                for entry in c["files"]:
-                    st = entry.get("stats", {}).get(col)
-                    if not st or st[0] is None:
-                        continue
-                    mn, mx = st
-                    try:
-                        mn, mx = float(mn), float(mx)
-                        lo_c, hi_c = float(lo), float(hi)
-                    except (TypeError, ValueError):
-                        lo_c, hi_c = str(lo), str(hi)
-                        mn, mx = str(mn), str(mx)
-                    if mx < lo_c or mn > hi_c:
-                        out.append(entry["path"])
+        for entry in self._live_files(name, current):
+            st = entry.get("stats", {}).get(col)
+            if not st or st[0] is None:
+                continue
+            mn, mx = st
+            try:
+                mn, mx = float(mn), float(mx)
+                lo_c, hi_c = float(lo), float(hi)
+            except (TypeError, ValueError):
+                lo_c, hi_c = str(lo), str(hi)
+                mn, mx = str(mn), str(mx)
+            if mx < lo_c or mn > hi_c:
+                out.append(entry["path"])
         return out

@@ -69,6 +69,8 @@ TOUCHED = (18, (
     "multimodal_real_decode_roundtrip",
     "part_clustering_coefficient",
     "percentile_cont_prices",
+    "snapshot_change_feed",
+    "txn_group_atomic_ingest",
 ))
 
 _EVIDENCE_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")

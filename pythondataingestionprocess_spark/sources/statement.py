@@ -5,9 +5,9 @@ section regexes → per-line regex loops → two pandas frames → Excel
 with a data-derived name. Here the whole text→tables stage is pure
 column expressions (`regexp_extract_all` + `explode` + per-group
 `regexp_extract`), so at scale thousands of statements parse in
-parallel inside codegen; only the PDF byte decode is a UDF (PyMuPDF
-when importable, else the stdlib sources/pdf_lite.py codec, with a
-decode-confidence quarantine for CID fonts neither can map).
+parallel inside codegen; only the PDF byte decode is a UDF (the
+stdlib sources/pdf_lite.py codec, with a decode-confidence quarantine
+for CID fonts it cannot map).
 
 Grammar parity (pdf_to_xlsx.py:39-52):
 - msi line: date desc $m1 $m2 $m3 "n de m" "r%"
@@ -113,22 +113,20 @@ def extract_pdf_text(
     spark: SparkSession, path_glob: str, password: bytes = b""
 ) -> DataFrame:
     """S1 PDF text scan: ``binaryFile`` source + per-file decode UDF
-    → (path, text, decode_confidence, decode_status). Prefers PyMuPDF
-    (full fidelity: CID fonts, reading order — confidence 1.0 by
-    construction); without it, falls back to the stdlib extractor
-    (sources/pdf_lite.py — standard-encoded and ToUnicode-mapped
-    Type0 PDFs), so the scan runs end-to-end in this container too.
-    ``password`` (r13) opens password-protected statements batch-wide:
-    tried as user then owner per file, with the empty password as the
-    final fallback, so a mixed protected/open batch needs one call;
-    files the password cannot open quarantine per-row as before.
+    → (path, text, decode_confidence, decode_status), decoded by the
+    stdlib extractor (sources/pdf_lite.py — standard-encoded and
+    ToUnicode-mapped Type0 PDFs), so the scan needs no optional
+    dependency. ``password`` opens password-protected statements
+    batch-wide: tried as user then owner per file, with the empty
+    password as the final fallback, so a mixed protected/open batch
+    needs one call; files the password cannot open quarantine per-row.
 
-    The confidence columns are the CID-font quarantine (VERDICT r6
-    item 3): a Type0 statement with no ToUnicode CMap extracts glyph
-    ids, not text, and MUST NOT silently enter the corpus — filter
+    The confidence columns are the CID-font quarantine: a Type0
+    statement with no ToUnicode CMap extracts glyph ids, not text,
+    and MUST NOT silently enter the corpus — filter
     ``decode_status = 'ok'`` for parsing and route the rest to a
     dead-letter dir (``sources/files.py`` archive semantics). The
-    decode is the ONLY non-Spark-native stage either way."""
+    decode is the ONLY non-Spark-native stage."""
     from pyspark.sql.types import (
         DoubleType,
         StringType,
@@ -142,36 +140,11 @@ def extract_pdf_text(
         StructField("decode_status", StringType()),
     ])
 
-    try:
-        import fitz  # noqa: F401
+    @F.udf(result_t)
+    def _pdf_text(content):
+        from pythondataingestionprocess_spark.sources import pdf_lite
 
-        @F.udf(result_t)
-        def _pdf_text(content):  # pragma: no cover
-            import fitz
-
-            with fitz.open(stream=content, filetype="pdf") as doc:
-                if doc.needs_pass:
-                    # bytes → str without loss: UTF-8 when valid (the
-                    # V5 spec encoding), else Latin-1 (byte-preserving
-                    # for legacy R2-R4 passwords — a 'replace' decode
-                    # would garble them and quarantine files the
-                    # stdlib fallback opens; r13 review)
-                    try:
-                        pw_str = password.decode("utf-8")
-                    except UnicodeDecodeError:
-                        pw_str = password.decode("latin-1")
-                    if not doc.authenticate(pw_str):
-                        return ("", 0.0, "quarantine")
-                text = "\n".join(page.get_text() + "\n" for page in doc)
-            return (text, 1.0, "ok")
-
-    except ImportError:
-
-        @F.udf(result_t)
-        def _pdf_text(content):
-            from pythondataingestionprocess_spark.sources import pdf_lite
-
-            return pdf_lite.extract_with_confidence(content, password)
+        return pdf_lite.extract_with_confidence(content, password)
 
     blobs = spark.read.format("binaryFile").load(path_glob)
     return blobs.select(
@@ -182,8 +155,8 @@ def extract_pdf_text(
 # Driver-side materialization bound for the Excel sink. Statement
 # workbooks are ~200 rows at reference scale (pdf_to_xlsx.py:126-128);
 # the guard exists so pointing this sink at a FACT table fails loud
-# instead of OOMing the driver via toPandas()/collect() (r14 VERDICT
-# item "What's wrong 2"). Overridable for legitimately larger exports.
+# instead of OOMing the driver via collect(). Overridable for
+# legitimately larger exports.
 EXCEL_SINK_MAX_ROWS = 100_000
 
 
@@ -192,9 +165,8 @@ def write_two_sheet_excel(
     max_rows: int = EXCEL_SINK_MAX_ROWS,
 ) -> None:
     """S7 Excel two-sheet sink (pdf_to_xlsx.py:126-128). Driver-side —
-    statement outputs are small by construction. Uses openpyxl when
-    present; otherwise the dependency-free stdlib codec
-    (sources/xlsx_lite.py), so the sink is no longer import-gated."""
+    statement outputs are small by construction. Written by the
+    dependency-free stdlib codec (sources/xlsx_lite.py)."""
     for name, df in (("msi", msi), ("compras", charges)):
         # count under a LIMIT: one extra row decides, no full-table
         # scan just to validate the bound
@@ -206,23 +178,12 @@ def write_two_sheet_excel(
                 f"workbooks; write parquet/CSV distributed instead "
                 f"or raise max_rows explicitly"
             )
-    try:
-        import openpyxl  # noqa: F401
-    except ImportError:
-        from pythondataingestionprocess_spark.sources import xlsx_lite
+    from pythondataingestionprocess_spark.sources import xlsx_lite
 
-        def rows_of(df: DataFrame) -> list[list]:
-            header = list(df.columns)
-            return [header] + [
-                [row[c] for c in header] for row in df.collect()
-            ]
+    def rows_of(df: DataFrame) -> list[list]:
+        header = list(df.columns)
+        return [header] + [[row[c] for c in header] for row in df.collect()]
 
-        xlsx_lite.write_workbook(
-            path, [("msi", rows_of(msi)), ("compras", rows_of(charges))]
-        )
-        return
-    import pandas as pd  # pragma: no cover
-
-    with pd.ExcelWriter(path, engine="openpyxl") as writer:  # pragma: no cover
-        msi.toPandas().to_excel(writer, sheet_name="msi", index=False)
-        charges.toPandas().to_excel(writer, sheet_name="compras", index=False)
+    xlsx_lite.write_workbook(
+        path, [("msi", rows_of(msi)), ("compras", rows_of(charges))]
+    )

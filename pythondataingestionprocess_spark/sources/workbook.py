@@ -2,7 +2,8 @@
 §1.5 schema validation).
 
 The reference reads each workbook with pandas + openpyxl on one
-thread (import_files_to_postgre.py:245-261); parallelism at scale
+thread (import_files_to_postgre.py:245-261); here the stdlib codec
+:mod:`xlsx_lite` decodes it, no optional dependency. Parallelism at scale
 comes from MANY workbooks, so the idiomatic Spark shape is: decode
 each small workbook driver-side (or in a ``binaryFile`` UDF when
 volume demands), emit typed rows WITH file order (``row_idx``), and
@@ -105,80 +106,12 @@ def read_workbook(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame, list[str | None]]:
     """S2/S3: read sheets ``Compras``+``Precios`` and the Preview
-    hyperlink list from one workbook. Prefers openpyxl when present
-    (full fidelity); otherwise decodes with the dependency-free
-    stdlib codec (:mod:`xlsx_lite`) — real .xlsx files work either
-    way, so this path is no longer import-gated."""
-    try:
-        from openpyxl import load_workbook
-    except ImportError:
-        return _read_workbook_lite(spark, path)
-
-    # pragma: no cover start — exercised only where openpyxl exists
-    with open(path, "rb") as f:
-        wb = load_workbook(f, data_only=True)
-    links: list[str | None] = []
-    ws = wb["Precios"]
-    header = [c.value for c in next(ws.iter_rows(min_row=1, max_row=1))]
-    try:
-        col_idx = header.index("Preview")
-    except ValueError:
-        col_idx = None
-    if col_idx is not None:
-        for row in ws.iter_rows(min_row=2):
-            cell = row[col_idx]
-            links.append(cell.hyperlink.target if cell.hyperlink else None)
-
-    def cell_str(v) -> str | None:
-        """Stringify a TYPED openpyxl value into the same lexical form
-        the xlsx_lite path reads from the raw <v> elements, so the two
-        decoders keep one output contract (r13 review: str(datetime)
-        emitted '2024-03-18 00:00:00', which excel_serial_to_date
-        cannot parse — every date-formatted Fch Cmpr silently NULLed
-        only when openpyxl happened to be installed; booleans diverged
-        'True' vs '1')."""
-        from datetime import date as _date
-        from datetime import datetime as _dt
-
-        if v is None:
-            return None
-        if isinstance(v, bool):
-            return "1" if v else "0"
-        if isinstance(v, _dt):
-            delta = v - _dt(1899, 12, 30)  # Excel day-zero
-            if delta.seconds == 0 and delta.microseconds == 0:
-                return str(delta.days)
-            return repr(delta.days + delta.seconds / 86400.0)
-        if isinstance(v, _date):
-            return str((v - _date(1899, 12, 30)).days)
-        return str(v)
-
-    def sheet_df(name: str) -> DataFrame:
-        ws = wb[name]
-        rows = list(ws.iter_rows(values_only=True))
-        header, data = [str(h) for h in rows[0]], rows[1:]
-        typed = [
-            tuple(cell_str(v) for v in r) + (path, i)
-            for i, r in enumerate(data)
-        ]
-        schema = ", ".join(f"`{h}` string" for h in header)
-        return spark.createDataFrame(
-            typed, schema + ", src_file string, row_idx long"
-        )
-
-    return sheet_df("Compras"), sheet_df("Precios"), links
-    # pragma: no cover end
-
-
-def _read_workbook_lite(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame, list[str | None]]:
-    """openpyxl-free decode via the stdlib codec. Same output contract
-    as the openpyxl path: string-typed cells (schema-on-read), the
-    file's row order stamped into ``row_idx``, and the Preview
-    column's hyperlink TARGET per Precios data row (the S3
-    side-channel — the display text stays useless, as in the
-    reference)."""
+    hyperlink list from one workbook, decoded with the
+    dependency-free stdlib codec (:mod:`xlsx_lite`): string-typed
+    cells (schema-on-read), the file's row order stamped into
+    ``row_idx``, and the Preview column's hyperlink TARGET per
+    Precios data row (the S3 side-channel — the display text stays
+    useless, as in the reference)."""
     from pythondataingestionprocess_spark.sources import xlsx_lite
 
     book = xlsx_lite.read_sheets(path)

@@ -19,11 +19,7 @@ effect exactly-once with two standard pieces:
      cannot index the CLOB-mapped string column), never a table
      rewrite. Because rows carry the sink id, several append-mode
      sinks may feed the SAME table: a replay can only ever delete its
-     own half-written slice. Tables written by the pre-sink_id-stamp
-     version of this module (``batch_seq`` only) are migrated in
-     place on first contact: the missing column is ALTER-added and the
-     legacy rows are claimed for the touching sink in one UPDATE (the
-     old contract was one sink per table, so its successor owns them).
+     own half-written slice.
 
 Driver-side single-row statements (ledger insert/probe, replay
 DELETE) run over a plain ``java.sql`` connection — opened with the
@@ -93,8 +89,8 @@ class StreamingJdbcSink:
         self.sink_id = sink_id
         self.mode = mode
         self.keys = keys or []
-        # once-per-sink-lifetime append bootstrap (migration check +
-        # replay index) — re-run on restart by the fresh instance
+        # once-per-sink-lifetime append bootstrap (the replay index)
+        # — re-run on restart by the fresh instance
         self._append_bootstrapped = False
         self._ensure_ledger()
 
@@ -225,31 +221,7 @@ class StreamingJdbcSink:
                 .persist()
             )
             try:
-                existed = self.store.exists(self.table)
-                if existed:
-                    # pre-sink_id-stamp tables (batch_seq only) are
-                    # migrated in place: add the column and CLAIM the
-                    # legacy rows for this sink (the old contract was
-                    # one sink per table, so the first successor owns
-                    # them) — a one-time scan, after which the replay
-                    # DELETE's exact predicate applies uniformly.
-                    # Memoized per sink lifetime: re-probing the JDBC
-                    # schema every micro-batch paid a metadata round
-                    # trip for a condition that can only be true once
-                    # (r13 review)
-                    if not self._append_bootstrapped and (
-                        "batch_sink"
-                        not in self.store.read(self.table).columns
-                    ):
-                        self._execute(
-                            f'ALTER TABLE {self.table} '
-                            'ADD COLUMN "batch_sink" VARCHAR(128)'
-                        )
-                        self._execute(
-                            f'UPDATE {self.table} SET "batch_sink" = ? '
-                            'WHERE "batch_sink" IS NULL',
-                            (self.sink_id,),
-                        )
+                if self.store.exists(self.table):
                     # crash-window replay: remove any half-written rows
                     # of THIS (sink, batch) before re-appending — one
                     # indexed delete scoped to this sink's slice.
@@ -269,11 +241,11 @@ class StreamingJdbcSink:
                     # UNCONDITIONAL once per sink lifetime, not only on
                     # table creation: a crash between the first batch's
                     # append (which created the table) and this call
-                    # used to leave the replay-DELETE index permanently
-                    # missing — every later batch saw existed=True and
-                    # skipped it, degrading the per-batch DELETE to a
-                    # full scan forever (r13 review). _ensure_batch_index
-                    # already ignores already-exists SQLStates.
+                    # would otherwise leave the replay-DELETE index
+                    # permanently missing (every later batch finds the
+                    # table), degrading the per-batch DELETE to a full
+                    # scan forever. _ensure_batch_index already ignores
+                    # already-exists SQLStates.
                     self._ensure_batch_index()
                     self._append_bootstrapped = True
                 n = stamped.count()

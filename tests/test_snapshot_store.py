@@ -62,10 +62,11 @@ def test_crash_mid_commit_is_invisible(spark, tmp_path):
     st = SnapshotTableStore(spark, str(tmp_path))
     st.overwrite("store", _df(spark, [(1, "a", "u", True)]))
     # simulate the crash: data directory written, no commit claimed
-    orphan, files = st._write_data("store", _df(spark, [(99, "ghost", "u", True)]))
+    orphan, files = st._log("store").write_data(
+        "store", _df(spark, [(99, "ghost", "u", True)]))
     assert orphan is not None and files
     # and a torn manifest temp file
-    torn = os.path.join(st._txdir("store"), ".deadbeef.tmp")
+    torn = os.path.join(st._log("store").txdir, ".deadbeef.tmp")
     with open(torn, "w") as f:
         f.write('{"snapshot_id": 2, "action": "overw')  # truncated
     assert st.current_snapshot("store") == 1
@@ -111,16 +112,16 @@ def test_concurrent_append_rebases_automatically(spark, tmp_path, monkeypatch):
     b = SnapshotTableStore(spark, str(tmp_path), writer_id="B")
     a.overwrite("store", _df(spark, [(1, "base", "u", True)]))
 
-    real_claim = b._claim
+    real_claim = b._log("store").claim
     state = {"injected": False}
 
-    def racing_claim(name, record, next_id):
+    def racing_claim(record, next_id):
         if not state["injected"]:
             state["injected"] = True
-            a.append(name, _df(spark, [(2, "from-A", "u", True)]))
-        return real_claim(name, record, next_id)
+            a.append("store", _df(spark, [(2, "from-A", "u", True)]))
+        return real_claim(record, next_id)
 
-    monkeypatch.setattr(b, "_claim", racing_claim)
+    monkeypatch.setattr(b._log("store"), "claim", racing_claim)
     b.append("store", _df(spark, [(3, "from-B", "u", True)]))
     got = sorted(r["id_store"] for r in a.read("store").collect())
     assert got == [1, 2, 3]
@@ -213,10 +214,10 @@ def test_skippable_files_from_manifest_stats(spark, tmp_path):
     # the 100-109 commit's files are
     assert skip, "stats must prune something"
     sids = st.snapshot_ids("store")
-    c2 = st._load_commit("store", sids[1])
+    c2 = st._log("store").load(sids[1])["tables"]["store"]
     for entry in c2["files"]:
         assert entry["path"] not in skip
-    c3 = st._load_commit("store", sids[2])
+    c3 = st._log("store").load(sids[2])["tables"]["store"]
     for entry in c3["files"]:
         assert entry["path"] in skip
     # stats rode the manifest, with real bounds
@@ -228,12 +229,13 @@ def test_commit_manifest_is_json_and_claim_is_exclusive(spark, tmp_path):
     cat), and claiming an already-taken snapshot id loses cleanly."""
     st = SnapshotTableStore(spark, str(tmp_path), writer_id="w")
     st.overwrite("store", _df(spark, [(1, "a", "u", True)]))
-    path = os.path.join(st._txdir("store"), f"{1:020d}.json")
+    path = os.path.join(st._log("store").txdir, f"{1:020d}.json")
     with open(path) as f:
         rec = json.load(f)
-    assert rec["action"] == "overwrite" and rec["snapshot_id"] == 1
-    assert rec["files"][0]["n_rows"] == 1
-    assert not st._claim("store", {"snapshot_id": 1}, 1)  # loser
+    entry = rec["tables"]["store"]
+    assert entry["action"] == "overwrite" and rec["snapshot_id"] == 1
+    assert entry["files"][0]["n_rows"] == 1
+    assert not st._log("store").claim({"snapshot_id": 1}, 1)  # loser
 
 
 def test_append_once_is_exactly_once(spark, tmp_path):
@@ -293,11 +295,12 @@ def test_optimize_compacts_without_changing_rows(spark, tmp_path):
     for i in range(5):
         st.append("store", _df(spark, [(i, f"r{i}", "u", True)]))
     before = sorted(r["id_store"] for r in st.read("store").collect())
-    n_dirs_before = len(st._live_dirs("store", st.current_snapshot("store")))
+    n_dirs_before = len(
+        st._log("store").state(st.current_snapshot("store"))["store"]["dirs"])
     assert n_dirs_before == 5
     sid = st.optimize("store")
     assert sid == 6
-    assert len(st._live_dirs("store", sid)) == 1
+    assert len(st._log("store").state(sid)["store"]["dirs"]) == 1
     after = sorted(r["id_store"] for r in st.read("store").collect())
     assert after == before
     # pre-compaction snapshots still time-travel
@@ -383,7 +386,7 @@ def test_vacuum_checkpoint_bounds_log_replay(spark, tmp_path):
     st.overwrite("store", _df(spark, [(100, "base", "u", True)]))
     st.append("store", _df(spark, [(101, "post", "u", True)]))
     st.vacuum("store", keep_last=2)  # horizon at snapshot 7
-    ck = st._checkpoint("store")
+    ck = st._log("store").checkpoint()
     assert ck is not None and ck["as_of"] == 7
     assert sorted(r["id_store"] for r in st.read("store").collect()) == [100, 101]
     # commits after the checkpoint replay on top of it
@@ -394,7 +397,7 @@ def test_vacuum_checkpoint_bounds_log_replay(spark, tmp_path):
     assert [r["id_store"] for r in st.read("store", snapshot_id=7).collect()] == [100]
     # a second vacuum advances the checkpoint
     st.vacuum("store", keep_last=1)
-    assert st._checkpoint("store")["as_of"] == 9
+    assert st._log("store").checkpoint()["as_of"] == 9
     assert st.read("store").count() == 3
 
 
@@ -595,7 +598,7 @@ def test_full_lakehouse_lifecycle_composes(spark, tmp_path):
     # vacuum: checkpoint written, pre-horizon time travel fails loud,
     # post-horizon time travel still serves the pre-merge state
     st.vacuum("store", keep_last=2)
-    assert st._checkpoint("store") is not None
+    assert st._log("store").checkpoint() is not None
     with pytest.raises(ValueError, match="vacuumed"):
         st.read("store", snapshot_id=ingested_at)
     pre_merge = st.current_snapshot("store") - 1
@@ -663,7 +666,7 @@ def test_straddling_reads_pin_first_snapshot_single_table(spark, tmp_path):
     a = SnapshotTableStore(spark, str(tmp_path), writer_id="a")
     b = SnapshotTableStore(spark, str(tmp_path), writer_id="b")
     a.overwrite("store", _df(spark, [(1, "a", "u", True)]))
-    a._read_base["store"] = None  # fresh transaction boundary
+    a._log("store").read_base = None  # fresh transaction boundary
     first = a.read("store")  # pins base 1
     b.append("store", _df(spark, [(2, "b", "u", True)]))  # snapshot 2
     a.read("store")  # must NOT re-pin to 2
@@ -686,7 +689,7 @@ def test_blind_retry_after_failed_overwrite_keeps_failing(spark, tmp_path):
     a = SnapshotTableStore(spark, str(tmp_path), writer_id="a")
     b = SnapshotTableStore(spark, str(tmp_path), writer_id="b")
     a.overwrite("store", _df(spark, [(1, "x", "u", True)]))
-    a._read_base["store"] = None
+    a._log("store").read_base = None
     stale = a.read("store")  # pins base 1
     b.append("store", _df(spark, [(2, "y", "u", True)]))  # snapshot 2
     derived = _df(spark, [(9, "stale", "u", True)])

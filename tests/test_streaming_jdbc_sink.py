@@ -207,38 +207,6 @@ def test_file_stream_end_to_end_into_derby(spark, store, tmp_path):
     assert _rows(store, "sink_stream") == first
 
 
-def test_legacy_table_without_sink_stamp_is_migrated(spark, store):
-    """Code-review r10: a table written by the pre-sink_id-stamp sink
-    (batch_seq only) must keep working after upgrade — the column is
-    ALTER-added on first contact, legacy rows are claimed for the
-    touching sink, and the replay DELETE still replaces exactly the
-    crashed batch."""
-    from pyspark.sql import functions as F
-
-    # the old sink's layout: rows stamped with batch_seq only
-    legacy = spark.createDataFrame([(1, "a"), (2, "b")], ROWS_SCHEMA
-                                   ).withColumn("batch_seq", F.lit(0))
-    store.append("old_events", legacy)
-
-    sink = StreamingJdbcSink(store, "old_events", sink_id="s_new")
-    # replay of batch 0 (crash-window semantics: the legacy rows ARE
-    # batch 0's half-write under the one-sink-per-table old contract)
-    sink(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")],
-                               ROWS_SCHEMA), 0)
-    assert _rows(store, "old_events") == [(1, "a"), (2, "b"), (3, "c")]
-    # every surviving row now carries the claiming sink's stamp
-    stamps = {
-        r["batch_sink"]
-        for r in store.read("old_events").select("batch_sink").collect()
-    }
-    assert stamps == {"s_new"}
-    # and the next batch appends normally
-    sink(spark.createDataFrame([(4, "d")], ROWS_SCHEMA), 1)
-    assert _rows(store, "old_events") == [
-        (1, "a"), (2, "b"), (3, "c"), (4, "d")
-    ]
-
-
 def test_sink_id_over_128_bytes_rejected(spark, store):
     """Code-review r10: the ledger column is VARCHAR(128); a longer
     sink_id would crash the ledger insert and make the CAST-truncated

@@ -61,8 +61,8 @@ def test_crash_between_data_write_and_claim_is_invisible(spark, tmp_path):
     either table."""
     grp = TableGroup(spark, str(tmp_path))
     grp.overwrite("purchase", _p(spark, [(1, 5.0)]))
-    d1, _ = grp._write_data("purchase", _p(spark, [(2, 6.0)]))
-    d2, _ = grp._write_data("operation", _op(spark, [(2, 1, 1)]))
+    d1, _ = grp._log.write_data("purchase", _p(spark, [(2, 6.0)]))
+    d2, _ = grp._log.write_data("operation", _op(spark, [(2, 1, 1)]))
     assert os.path.isdir(d1) and os.path.isdir(d2)  # orphans exist
     assert grp.current_snapshot() == 1
     assert grp.read("purchase").count() == 1
@@ -173,8 +173,8 @@ def test_group_vacuum_sweeps_orphans_and_superseded(spark, tmp_path):
         t1.overwrite("purchase", _p(spark, [(1, 5.0)]))
         t1.overwrite("operation", _op(spark, [(1, 7, 1)]))
     # crashed txn leaves orphans in two tables
-    grp._write_data("purchase", _p(spark, [(2, 0.0)]))
-    grp._write_data("operation", _op(spark, [(2, 1, 1)]))
+    grp._log.write_data("purchase", _p(spark, [(2, 0.0)]))
+    grp._log.write_data("operation", _op(spark, [(2, 1, 1)]))
     with grp.transaction() as t2:
         t2.overwrite("purchase", _p(spark, [(9, 1.0)]))
     # default vacuum spares the fresh orphans (possible in-flight
@@ -187,6 +187,34 @@ def test_group_vacuum_sweeps_orphans_and_superseded(spark, tmp_path):
     assert len(removed) == 2
     assert [r["id_purchase"] for r in grp.read("purchase").collect()] == [9]
     assert grp.read("operation").count() == 1
+
+
+def test_group_vacuum_guards_time_travel_and_checkpoints_replay(
+    spark, tmp_path
+):
+    """After a group vacuum, time travel to a vacuumed snapshot fails
+    loud naming the horizon (its data dirs are gone: the alternative
+    is a missing-path Spark error or a partial read), and reads replay
+    from the checkpoint written at the horizon, loading no manifest
+    before it."""
+    grp = TableGroup(spark, str(tmp_path))
+    grp.overwrite("purchase", _p(spark, [(1, 5.0)]))
+    grp.overwrite("purchase", _p(spark, [(2, 6.0)]))
+    grp.append("operation", _op(spark, [(2, 7, 1)]))
+    grp.vacuum(keep_last=1)  # horizon at snapshot 3
+    with pytest.raises(ValueError,
+                       match=r"snapshot 1 was vacuumed \(horizon 3\)"):
+        grp.read("purchase", snapshot_id=1)
+    ck = grp._log.checkpoint()
+    assert ck is not None and ck["as_of"] == 3
+    grp.append("purchase", _p(spark, [(3, 7.0)]))
+    loaded = []
+    real_load = grp._log.load
+    grp._log.load = lambda sid: loaded.append(sid) or real_load(sid)
+    got = sorted(r["id_purchase"] for r in grp.read("purchase").collect())
+    assert got == [2, 3]
+    assert loaded and min(loaded) > ck["as_of"]
+    assert grp.read("operation", snapshot_id=3).count() == 1
 
 
 def test_group_append_schema_mismatch_fails_loud(spark, tmp_path):
@@ -263,7 +291,7 @@ def test_rebased_append_revalidates_schema_against_new_head(spark, tmp_path):
 
     evolved = spark.createDataFrame(
         [(7, 7.0, "web")], "id_purchase long, total double, channel string")
-    real_claim = grp._claim
+    real_claim = grp._log.claim
     fired = {"done": False}
 
     def racing_claim(record, next_id):
@@ -273,7 +301,7 @@ def test_rebased_append_revalidates_schema_against_new_head(spark, tmp_path):
             rival.append("purchase", evolved, merge_schema=True)
         return real_claim(record, next_id)
 
-    grp._claim = racing_claim
+    grp._log.claim = racing_claim
     # plain batch in the OLD schema: the rebase lands on the EVOLVED
     # head, so the re-validation must fail LOUD (the pre-fix behavior
     # recorded the stale schema and silently dropped `channel` from
@@ -296,7 +324,7 @@ def test_fresh_orphan_survives_default_group_vacuum(spark, tmp_path):
     vacuum must not sweep it."""
     grp = TableGroup(spark, str(tmp_path))
     grp.overwrite("purchase", _p(spark, [(1, 5.0)]))
-    d, _ = grp._write_data("purchase", _p(spark, [(2, 6.0)]))
+    d, _ = grp._log.write_data("purchase", _p(spark, [(2, 6.0)]))
     assert grp.vacuum(keep_last=1) == []
     assert os.path.isdir(d)
     assert grp.vacuum(keep_last=1, orphan_retention_s=0) == [d]
@@ -358,7 +386,7 @@ def test_vacuum_during_inflight_group_txn_real_process_contention(
     Main process stages a 3-table transaction whose staging is slowed
     so the FIRST table's data dir ages well past the vacuum's orphan
     retention before the claim — exactly the window the claim-edge
-    mtime refresh (_commit_txn) exists to cover. A child process
+    mtime lease renewal (the log's commit) exists to cover. A child process
     loops vacuum(orphan_retention_s=3) the whole time, and must sweep
     a pre-aged crashed-transaction orphan (proving the vacuums are
     live, not no-ops) while never touching the in-flight dirs."""
@@ -400,8 +428,8 @@ def test_vacuum_during_inflight_group_txn_real_process_contention(
         # dir is ~4.8 s old (> retention 3 s) when the claim edge
         # refreshes mtimes; a slowed claim keeps the in-flight window
         # open under the child's vacuum cadence afterwards too
-        real_write = grp._write_data
-        real_claim = grp._claim
+        real_write = grp._log.write_data
+        real_claim = grp._log.claim
 
         def slow_write(name, df):
             out = real_write(name, df)
@@ -412,8 +440,8 @@ def test_vacuum_during_inflight_group_txn_real_process_contention(
             _time.sleep(1.5)
             return real_claim(record, next_id)
 
-        grp._write_data = slow_write
-        grp._claim = slow_claim
+        grp._log.write_data = slow_write
+        grp._log.claim = slow_claim
         with grp.transaction() as txn:
             txn.append("purchase", _p(spark, [(2, 2.0)]))
             txn.overwrite("operation", _op(spark, [(2, 7, 1)]))
@@ -423,8 +451,8 @@ def test_vacuum_during_inflight_group_txn_real_process_contention(
                     [(7, 10.0)], "id_product long, price double"),
             )
     finally:
-        grp._write_data = real_write
-        grp._claim = real_claim
+        grp._log.write_data = real_write
+        grp._log.claim = real_claim
         with open(stop, "w"):
             pass
         proc.join(timeout=30)
@@ -445,7 +473,7 @@ def test_vacuum_during_inflight_group_txn_real_process_contention(
     live_dirs = {
         d
         for sid in grp.snapshot_ids()
-        for entry in grp._load_commit(sid)["tables"].values()
+        for entry in grp._log.load(sid)["tables"].values()
         for d in entry["dirs"]
     }
     assert not (set(swept) & live_dirs)
