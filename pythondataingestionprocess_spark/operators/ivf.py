@@ -31,15 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from pythondataingestionprocess_spark.functions.vectors import cosine
-
-
-def _hadoop_glob_escape(path: str) -> str:
-    """Escape glob metacharacters for DataFrameReader paths (Spark
-    globs every read path; write/FS paths are literal)."""
-    for c in "\\*?[]{}":
-        path = path.replace(c, "\\" + c)
-    return path
-
+from pythondataingestionprocess_spark.storage import glob_escape
 
 
 
@@ -148,9 +140,8 @@ def ivf_probe_lists(
 
 
 def _score_probed(indexed: DataFrame, probed: DataFrame, k: int) -> DataFrame:
-    """Shared scoring tail of ivf_search and search_index (r13 review:
-    it was copy-pasted in both and had to stay semantically identical
-    by hand): probe-list equi-join (probed side broadcast — it is
+    """Shared scoring tail of ivf_search and search_index (one copy, so
+    the two searches cannot drift apart): probe-list equi-join (probed side broadcast — it is
     queries x n_probe rows), self-pair filter, exact cosine, per-query
     top-k with the neighbor_id tiebreak making the ranking a total
     order."""
@@ -240,7 +231,7 @@ def save_index(
     )
     # format marker: one tiny file so the streaming append path never
     # has to partition-discover the whole vectors dir per micro-batch
-    # just to learn a boolean (r7 review)
+    # just to learn a boolean
     spark.createDataFrame(
         [(bool(quantized),)], "quantized boolean"
     ).coalesce(1).write.mode("overwrite").parquet(
@@ -252,7 +243,7 @@ def load_centroids(spark, index_dir: str) -> np.ndarray:
     import os
 
     rows = (
-        spark.read.parquet(_hadoop_glob_escape(os.path.join(index_dir, "centroids")))
+        spark.read.parquet(glob_escape(os.path.join(index_dir, "centroids")))
         .orderBy("list_id")
         .collect()
     )
@@ -291,7 +282,7 @@ def append_to_index(
             for r in assigned.select("ivf_list").distinct().collect()
         ]
         resident_ids = (
-            spark.read.parquet(_hadoop_glob_escape(os.path.join(index_dir, "vectors")))
+            spark.read.parquet(glob_escape(os.path.join(index_dir, "vectors")))
             .filter(F.col("ivf_list").isin(lists))
             .select(id_col)
         )
@@ -318,11 +309,11 @@ def _index_quantized(spark, index_dir: str) -> bool:
 
     try:
         return bool(
-            spark.read.parquet(_hadoop_glob_escape(os.path.join(index_dir, "meta"))).first()["quantized"]
+            spark.read.parquet(glob_escape(os.path.join(index_dir, "meta"))).first()["quantized"]
         )
     except Exception:
         return "qvec" in spark.read.parquet(
-            _hadoop_glob_escape(os.path.join(index_dir, "vectors"))
+            glob_escape(os.path.join(index_dir, "vectors"))
         ).columns
 
 
@@ -350,7 +341,7 @@ def search_index(
         F.explode(_probe_udf(centroids, n_probe)(F.col(vec_col))).alias("ivf_list"),
     ).localCheckpoint(eager=True)  # probed twice: list collect + join
     lists = [r["ivf_list"] for r in probed.select("ivf_list").distinct().collect()]
-    resident = spark.read.parquet(_hadoop_glob_escape(os.path.join(index_dir, "vectors")))
+    resident = spark.read.parquet(glob_escape(os.path.join(index_dir, "vectors")))
     stored_vec = "qvec" if "qvec" in resident.columns else vec_col
     indexed = (
         resident
@@ -370,15 +361,14 @@ def index_ingest_batch_fn(index_dir: str, id_col: str = "vec_id",
     (assign to existing lists → partitioned append). Composes with
     streaming.file_ingest like every other ingest face.
 
-    Retry semantics (r7 review — foreachBatch is AT-LEAST-once even
-    with a checkpointed source: a crash after the append but before
-    the epoch commit re-delivers the same batch): the append runs
-    with ``dedup_resident=True``, so a replayed batch's ids anti-join
+    Retry semantics (foreachBatch is AT-LEAST-once even with a
+    checkpointed source: a crash after the append but before the
+    epoch commit re-delivers the same batch): the append runs with
+    ``dedup_resident=True``, so a replayed batch's ids anti-join
     against the already-resident ids of its target lists
-    (partition-pruned) and the retry appends nothing. An index
-    partitioned by ivf_list cannot also partition by batch, so the
-    ingest_batch-subdir trick the signature stores use is not
-    available here."""
+    (partition-pruned) and the retry appends nothing. The signature
+    stores' exactly-once commit log is not used here: search prunes
+    by ``ivf_list=`` directories, which the log does not write."""
 
     def fn(batch_df, batch_id: int) -> None:
         # no outer checkpoint: dedup_resident already checkpoints the
@@ -399,7 +389,7 @@ def index_list_stats(spark, index_dir: str) -> DataFrame:
     footers plus a count aggregate — metadata-sized output (k rows)."""
     import os
 
-    vectors = spark.read.parquet(_hadoop_glob_escape(os.path.join(index_dir, "vectors")))
+    vectors = spark.read.parquet(glob_escape(os.path.join(index_dir, "vectors")))
     rows = vectors.groupBy("ivf_list").agg(F.count(F.lit(1)).alias("n_rows"))
     files = (
         vectors.select("ivf_list", F.input_file_name().alias("f"))
@@ -410,8 +400,8 @@ def index_list_stats(spark, index_dir: str) -> DataFrame:
 
 
 def needs_refit(spark, index_dir: str, skew_threshold: float = 8.0) -> bool:
-    """The refit trigger ``append_to_index``'s docstring defers
-    (r7 VERDICT item 5): True when the largest list holds more than
+    """The refit trigger ``append_to_index``'s docstring defers:
+    True when the largest list holds more than
     ``skew_threshold`` × the mean list size (over k, counting
     centroid-empty lists as zero). Sustained inserts drift away from
     the fitted centroids; a hot list degrades BOTH sides of the IVF
@@ -420,7 +410,7 @@ def needs_refit(spark, index_dir: str, skew_threshold: float = 8.0) -> bool:
     Driver payload is one k-row collect."""
     import os
 
-    k = spark.read.parquet(_hadoop_glob_escape(os.path.join(index_dir, "centroids"))).count()
+    k = spark.read.parquet(glob_escape(os.path.join(index_dir, "centroids"))).count()
     if k == 0:
         return False
     stats = index_list_stats(spark, index_dir).collect()
@@ -459,8 +449,11 @@ def compact_index(spark, index_dir: str) -> tuple[int, int]:
     partition, preserving the partition-pruned layout search_index
     depends on. Returns (files_before, files_after).
 
-    Same crash-safety discipline as streaming.dedup_ingest.
-    compact_store — LEFTOVERS ARE INPUTS, NEVER TRASH: the live
+    Unlike the streaming signature stores, the index does not commit
+    through the snapshot log (pipeline/snapshot_store.py): search
+    prunes by ``ivf_list=`` directories, which the log does not
+    write. So compaction swaps directories by rename, with one
+    crash-safety rule — LEFTOVERS ARE INPUTS, NEVER TRASH: the live
     ``vectors`` table, any ``__next``/``__old`` swap remnant, and any
     ``__building*`` staging leftover are all unioned (full-row
     DISTINCT — resident rows are value-identical across replays), the
@@ -480,11 +473,10 @@ def compact_index(spark, index_dir: str) -> tuple[int, int]:
     op = jvm.org.apache.hadoop.fs.Path(path + "__old")
     fs = p.getFileSystem(conf)
 
-    # LISTING, not globbing (r13 review, same rule as
-    # streaming.dedup_ingest.compact_store): a glob built from an
-    # index path containing metacharacters would throw or silently
-    # match nothing — orphaning the only complete copy after a
-    # mid-swap crash
+    # LISTING, not globbing: a glob built from an index path
+    # containing metacharacters would throw or silently match
+    # nothing — orphaning the only complete copy after a mid-swap
+    # crash
     parent = jvm.org.apache.hadoop.fs.Path(os.path.dirname(path) or ".")
     base = os.path.basename(path)
     building = [
@@ -510,13 +502,13 @@ def compact_index(spark, index_dir: str) -> tuple[int, int]:
         return (0, 0)
 
     before = sum(n_parquet_files(s) for s in sources)
-    parts = [spark.read.parquet(_hadoop_glob_escape(s)) for s in sources]
+    parts = [spark.read.parquet(glob_escape(s)) for s in sources]
     merged = parts[0]
     for df in parts[1:]:
         merged = merged.unionByName(df)
-    # ONE scan of the union (r13 review: the n_lists count used to
-    # re-read every source file end-to-end before the rewrite scanned
-    # them again): dedup once, materialize, then count lists cheaply
+    # ONE scan of the union (counting lists over the sources would
+    # re-read every source file before the rewrite scans them again):
+    # dedup once, materialize, then count lists cheaply
     # over the deduped rows
     merged = merged.distinct().localCheckpoint(eager=True)
     n_lists = merged.select("ivf_list").distinct().count()

@@ -8,6 +8,7 @@ before the driver runs the real check at sf0.01.
 from __future__ import annotations
 
 import datetime as _dt
+import hashlib
 import math
 from decimal import Decimal
 
@@ -25,6 +26,35 @@ def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
         )
     return con
+
+
+def frame_hash_check(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame
+                      ) -> tuple[bool, bool, bool]:
+    """The value-hash comparison of one query's Spark and oracle
+    results: ``(rows_match, schema_match, hash_match)``. Columns are compared
+    in name order and rows in value order, so neither order matters;
+    the value hash reads floats rounded to 9 decimals, and it matches
+    only when the row counts and column names do."""
+
+    def canon(df: pd.DataFrame) -> pd.DataFrame:
+        df = df.reindex(sorted(df.columns), axis=1)
+        return df.sort_values(list(df.columns), ignore_index=True)
+
+    def value_hash(df: pd.DataFrame) -> str:
+        parts = [
+            df[c].round(9).astype(str) if df[c].dtype.kind == "f"
+            else df[c].astype(str)
+            for c in df.columns
+        ]
+        blob = "\x1f".join("\x1e".join(p.tolist()) for p in parts)
+        return hashlib.md5(blob.encode()).hexdigest()
+
+    sc, oc = canon(spark_pdf), canon(oracle_pdf)
+    rows_match = len(sc) == len(oc)
+    schema_match = list(sc.columns) == list(oc.columns)
+    hash_match = (rows_match and schema_match
+                  and value_hash(sc) == value_hash(oc))
+    return rows_match, schema_match, hash_match
 
 
 def _canon(v) -> str:

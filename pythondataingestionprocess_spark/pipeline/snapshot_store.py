@@ -75,7 +75,9 @@ import os
 import shutil
 import time
 import uuid
+from urllib.parse import quote, unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -84,6 +86,7 @@ from pythondataingestionprocess_spark.pipeline.store import (
     SCHEMAS,
     ParquetTableStore,
 )
+from pythondataingestionprocess_spark.storage import glob_escape
 
 _TXLOG = "_txlog"
 _DATA = "data"
@@ -154,6 +157,17 @@ def _resolve_append_schema(live_schema_json: str, batch_schema: StructType,
     return union.json()
 
 
+def _file_uri(path: str) -> str:
+    """A data file's manifest ``path``: the ``file://`` URI that
+    Spark's ``input_file_name()`` reports for an ASCII local path."""
+    return "file://" + quote(path, safe="/!$&'()*+,;=:@~")
+
+
+def _uri_path(uri: str) -> str:
+    """The local path behind a manifest ``path`` (either URI form)."""
+    return unquote(uri.removeprefix("file://"))
+
+
 def _write_json_atomic(path: str, obj: dict) -> None:
     """Readers of ``path`` see the old or the new content, never a
     half-written file."""
@@ -189,6 +203,9 @@ class _SnapshotLog:
         # snapshot this log was first read at since the last commit —
         # the base the next overwrite-bearing commit validates against
         self.read_base = None
+        # parsed manifests by snapshot id; a claimed manifest is never
+        # rewritten, so each is parsed at most once per instance
+        self._manifests: dict[int, dict] = {}
 
     # -- log reading -----------------------------------------------------
 
@@ -207,8 +224,11 @@ class _SnapshotLog:
         return ids[-1] if ids else None
 
     def load(self, sid: int) -> dict:
-        with open(os.path.join(self.txdir, f"{sid:020d}.json")) as f:
-            return json.load(f)
+        manifest = self._manifests.get(sid)
+        if manifest is None:
+            with open(os.path.join(self.txdir, f"{sid:020d}.json")) as f:
+                manifest = self._manifests[sid] = json.load(f)
+        return manifest
 
     def _read_json(self, fname: str) -> dict | None:
         p = os.path.join(self.txdir, fname)
@@ -330,7 +350,8 @@ class _SnapshotLog:
         schema = StructType.fromJson(json.loads(t["schema"]))
         if not t["dirs"]:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*t["dirs"])
+        return self.spark.read.schema(schema).parquet(
+            *[glob_escape(d) for d in t["dirs"]])
 
     # -- write side ------------------------------------------------------
 
@@ -338,33 +359,42 @@ class _SnapshotLog:
         self, name: str, df: DataFrame
     ) -> tuple[str | None, list[dict]]:
         """Write ``df`` to a fresh immutable directory; return (dir,
-        per-file stats entries in the file_skipping_stats shape).
-        An empty write (e.g. delete_keys removing the last row) yields
-        (None, []) — the commit records no dirs and readers get the
-        typed-empty frame from the recorded schema."""
+        per-file entries in the file_skipping_stats shape) for the
+        files holding rows. The write is the only Spark job: row
+        counts come from the parquet footers, and only a table with
+        ``stats_cols`` pays a min/max read-back (given the written
+        schema, so nothing is inferred). An empty write (e.g.
+        delete_keys removing the last row) yields (None, []) — the
+        commit records no dirs and readers get the typed-empty frame
+        from the recorded schema."""
         d = os.path.join(self.root, name, _DATA, uuid.uuid4().hex)
         df.write.parquet(d)
-        if not any(f.endswith(".parquet") for f in os.listdir(d)):
+        parts = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+        if not parts:
             shutil.rmtree(d)
             return None, []
+        files = {}
+        for f in parts:
+            n_rows = pq.read_metadata(os.path.join(d, f)).num_rows
+            if n_rows:
+                files[f] = {"path": _file_uri(os.path.join(d, f)),
+                            "n_rows": n_rows}
         cols = [c for c in self.stats_cols.get(name, []) if c in df.columns]
-        part = self.spark.read.parquet(d)
-        aggs = [F.count(F.lit(1)).alias("n_rows")]
-        for c in cols:
-            aggs.append(F.min(c).cast("string").alias(f"{c}_min"))
-            aggs.append(F.max(c).cast("string").alias(f"{c}_max"))
-        per_file = (
-            part.groupBy(F.input_file_name().alias("file")).agg(*aggs)
-        ).collect()  # files-sized, never rows-sized
-        files = []
-        for r in per_file:
-            entry: dict = {"path": r["file"], "n_rows": r["n_rows"]}
-            if cols:
-                entry["stats"] = {
+        if cols:
+            aggs = []
+            for c in cols:
+                aggs.append(F.min(c).cast("string").alias(f"{c}_min"))
+                aggs.append(F.max(c).cast("string").alias(f"{c}_max"))
+            part = self.spark.read.schema(
+                StructType([df.schema[c] for c in cols])
+            ).parquet(glob_escape(d))
+            for r in part.groupBy(
+                F.input_file_name().alias("file")
+            ).agg(*aggs).collect():  # files-sized, never rows-sized
+                files[r["file"].rsplit("/", 1)[-1]]["stats"] = {
                     c: [r[f"{c}_min"], r[f"{c}_max"]] for c in cols
                 }
-            files.append(entry)
-        return d, files
+        return d, list(files.values())
 
     def claim(self, record: dict, next_id: int) -> bool:
         """Atomically claim snapshot ``next_id``: write the manifest to
@@ -717,7 +747,8 @@ class SnapshotTableStore(ParquetTableStore):
                 )
             if e["dirs"]:
                 parts.append(
-                    self.spark.read.schema(schema).parquet(*e["dirs"])
+                    self.spark.read.schema(schema)
+                    .parquet(*[glob_escape(d) for d in e["dirs"]])
                     # cast: this branch, the empty-range branch and the
                     # driver face's oracle must agree on bigint — a bare
                     # IntegerType lit would make the feed's schema
@@ -805,11 +836,12 @@ class SnapshotTableStore(ParquetTableStore):
             return df.filter(pred)
         keep = [f["path"] for f in self._live_files(name, current)
                 if f["path"] not in skip]
+        schema = self._schema_of(name, current)
         if not keep:
-            return self.spark.createDataFrame(
-                [], self._schema_of(name, current)
-            )
-        return self.spark.read.parquet(*sorted(set(keep))).filter(pred)
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *[glob_escape(_uri_path(p)) for p in sorted(set(keep))]
+        ).filter(pred)
 
     def skippable_files(self, name: str, col: str, lo, hi) -> list[str]:
         """Files a ``col BETWEEN lo AND hi`` reader can skip, decided

@@ -113,8 +113,14 @@ class TableGroup:
         :meth:`SnapshotTableStore.vacuum`."""
         return self._log.vacuum(keep_last, orphan_retention_s)
 
-    def transaction(self) -> "GroupTransaction":
-        return GroupTransaction(self)
+    def transaction(self, txn: tuple[str, int] | None = None
+                    ) -> "GroupTransaction":
+        """A staging transaction. With ``txn = (app_id, batch_id)`` it
+        commits exactly once: the pair rides the manifest, and a
+        transaction whose pair is already in the log commits nothing
+        (``snapshot_id`` stays None) — the replay of a ``foreachBatch``
+        batch that Structured Streaming delivers again after a crash."""
+        return GroupTransaction(self, txn)
 
     def overwrite(self, name: str, df: DataFrame) -> None:
         with self.transaction() as txn:
@@ -134,8 +140,9 @@ class GroupTransaction(TableMerge):
     one overwrite each and ``ingest_batch`` runs on a transaction as
     on any store."""
 
-    def __init__(self, group: TableGroup):
+    def __init__(self, group: TableGroup, txn: tuple[str, int] | None):
         self._group = group
+        self._txn = txn
         self._actions: list[tuple[str, str, DataFrame, bool]] = []
         self.snapshot_id: int | None = None
 
@@ -161,5 +168,6 @@ class GroupTransaction(TableMerge):
 
     def __exit__(self, exc_type, exc, tb) -> bool:
         if exc_type is None and self._actions:
-            self.snapshot_id = self._group._log.commit(self._actions)
+            self.snapshot_id = self._group._log.commit(self._actions,
+                                                       self._txn)
         return False

@@ -18,6 +18,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def glob_escape(path: str) -> str:
+    """Escape Hadoop glob metacharacters in a path handed to a Spark
+    reader. DataFrameReader globs every input path, so a store under
+    ``/data/run[2026]/`` would otherwise raise PATH_NOT_FOUND or
+    silently read nothing. Write paths and local filesystem calls are
+    literal and take the raw path."""
+    for c in "\\*?[]{}":
+        path = path.replace(c, "\\" + c)
+    return path
+
+
 def write_bucketed(
     df: DataFrame,
     table: str,

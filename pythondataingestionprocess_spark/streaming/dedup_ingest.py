@@ -12,95 +12,48 @@ Each micro-batch of incoming documents is:
 3. appended to the store (its band buckets + its distinct-shingle
    arrays), making it "corpus" for every later batch.
 
-The store is two parquet tables under one root:
+The store is one :class:`~pythondataingestionprocess_spark.pipeline.txn_group.TableGroup`
+rooted at ``store_dir`` — one commit log over two tables:
 
-- ``buckets/``  (id, band, band_hash) — the LSH membership rows the
+- ``buckets``  (id, band, band_hash) — the LSH membership rows the
   cross-batch candidate join probes;
-- ``shingles/`` (id, sh: array<string>) — the compact verify-side
+- ``shingles`` (id, sh: array<string>) — the compact verify-side
   representation (exact Jaccard without re-reading text).
 
 At 100 TB both tables live partitioned/bucketed by their join keys in
 a metastore (bucket the ``buckets`` table BY (band, band_hash) and the
-candidate join is co-located — zero corpus shuffle per batch); parquet
-append + checkpointed file tracking keeps the flow exactly-once here
-for the same reason file_ingest.py's pipeline is.
+candidate join is co-located — zero corpus shuffle per batch).
 
-Failure semantics: foreachBatch retries re-run the whole batch
-function, so both writes are idempotent by batch id: pair output AND
-store appends land in ``batch_id=N`` / ``ingest_batch=N`` subdirs with
-``overwrite`` mode — a retry replaces its own partial output instead
-of appending a second copy. Screening is additionally retry-proof on
-the read side: the store is deduped on its keys, the current batch's
-own ids are anti-joined out of the store side (a crash after the store
-write would otherwise make the batch "corpus" for its own retry), and
-``id_a != id_b`` guards self-pairs.
+Failure semantics: Structured Streaming delivers a ``foreachBatch``
+batch at least once, and a replay re-runs the whole batch function.
+A micro-batch's store write is ONE group commit keyed by
+``(app_id, batch_id)``: both tables land together or not at all, and
+the replay of a committed batch commits nothing. Pair output lands in
+a ``batch_id=N`` subdir written with ``overwrite``, so a replay
+replaces its own output. A screen reads both tables at one snapshot
+and anti-joins the current batch's own ids out of the store side (a
+replay after the commit would otherwise screen the batch against
+itself); ``id_a != id_b`` guards self-pairs.
 """
 
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.operators import dedup as dd
+from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
 
 _BANDS = 16
 _NUM_HASHES = 64
 _SHINGLE_N = 3
 _SEED = 42
-
-
-def _store_paths(store_dir: str) -> tuple[str, str]:
-    return os.path.join(store_dir, "buckets"), os.path.join(store_dir, "shingles")
-
-
-def _glob_escape(path: str) -> str:
-    """Escape Hadoop glob metacharacters for DataFrameReader paths.
-    Spark's readers GLOB every input path: a store under
-    '/data/run[2026]/' either throws or silently reads nothing (r13
-    review — the silent form orphaned crash-recovery history). Write
-    paths are literal and need no escaping."""
-    for c in "\\*?[]{}":
-        path = path.replace(c, "\\" + c)
-    return path
-
-
-def _store_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
-
-
-def _store_has_committed(spark: SparkSession, path: str) -> bool:
-    """True iff the store holds COMMITTED part files — at the root
-    (plain append layout) or one level down (``ingest_batch=N``
-    subdirs). Read-gating must use THIS, not bare existence: a crash
-    during the very first store write leaves only the committer's
-    ``_temporary`` dir, which exists but fails every parquet read —
-    gating on existence wedges the stream permanently (r10 review,
-    found on dsir_ingest, latent here). Listing, not globbing: a
-    Hadoop glob built from the path would silently match nothing when
-    the path itself contains glob metacharacters."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        return False
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue  # committer temp dirs, _SUCCESS, hidden files
-        if name.startswith("part-"):
-            return True
-        if st.isDirectory():
-            for st2 in fs.listStatus(st.getPath()):
-                if st2.getPath().getName().startswith("part-"):
-                    return True
-    return False
+# the app id of each store's exactly-once commits: one store belongs
+# to one stream checkpoint, whose batch ids it records
+_APP_ID = "dedup_batch_fn"
+_BLOCK_APP_ID = "block_dedup_batch_fn"
 
 
 def capped_store_candidates(
@@ -113,9 +66,9 @@ def capped_store_candidates(
 ) -> DataFrame:
     """(id_a=new, id_b=store) candidates from a batch's bucket
     membership against a PERSISTENT store's, with the same per-bucket
-    min-id cap as the batch operators — r7 review: the streaming
-    screens joined the store uncapped, reintroducing the mega-bucket
-    expansion ``bucket_cap`` exists to bound (VERDICT r1 item 2).
+    min-id cap as the batch operators — an uncapped store join would
+    reintroduce the mega-bucket expansion ``bucket_cap`` exists to
+    bound.
 
     Store-shuffle discipline preserved: the store side is first
     SEMI-pruned map-side to the batch's bucket keys (broadcast — at
@@ -139,9 +92,9 @@ def capped_store_candidates(
         )
     )
     capped = (
-        # legacy plain-append stores (and an id re-appended across
-        # batches) can hold duplicate (id, bucket) rows — dedup BEFORE
-        # ranking so copies never consume cap slots (r7 review)
+        # an id appended by more than one batch (or an ad-hoc append)
+        # leaves duplicate (id, bucket) rows — dedup BEFORE ranking so
+        # copies never consume cap slots
         matched.dropDuplicates([id_col, *bucket_keys])
         .withColumn(
             "_rn",
@@ -173,23 +126,21 @@ def screen_batch(
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs for one incoming batch: within-batch pairs plus
-    cross pairs against the signature store (empty or half-written
-    store → within-batch only: a crash between the two
-    append_to_store writes must not wedge every retry on the missing
-    second table). Returns (id_a, id_b, jaccard, kind) where ``kind``
-    is 'within' or 'cross'; for cross pairs id_a is the NEW doc. Does
-    NOT mutate the store — callers append via :func:`append_to_store`
-    after consuming the result (see module docstring for retry
-    semantics). Cross candidates are per-bucket capped exactly like
-    the batch operators (see :func:`capped_store_candidates`).
+    cross pairs against the signature store (a store with no commits
+    → within-batch only). Returns (id_a, id_b, jaccard, kind) where
+    ``kind`` is 'within' or 'cross'; for cross pairs id_a is the NEW
+    doc. Does NOT mutate the store — callers append via
+    :func:`append_to_store` after consuming the result (see module
+    docstring for retry semantics). Cross candidates are per-bucket
+    capped exactly like the batch operators (see
+    :func:`capped_store_candidates`).
 
     ``banded`` / ``shingles`` optionally supply the batch's
     `_signatures_banded` / `shingle_array_table` frames so the
     dominant tokenize+shingle+minhash CPU runs ONCE per micro-batch
     instead of once here, once for the cross probe, and once again in
-    append_to_store (r13 review; the block path's blocks_df threads
-    the same way)."""
-    buckets_path, shingles_path = _store_paths(store_dir)
+    append_to_store (the block path's blocks_df threads the same
+    way)."""
     if banded is None:
         banded = dd._signatures_banded(
             batch_df, id_col, text_col,
@@ -204,26 +155,26 @@ def screen_batch(
         batch_df, id_col, text_col,
         shingle_n=_SHINGLE_N, num_hashes=_NUM_HASHES, bands=_BANDS,
         threshold=threshold, seed=_SEED,
-        # the SAME cap as the cross-store probe: leaving the operator
-        # default here made the tuning knob apply to only half the
-        # screen (r13 review)
+        # the SAME cap as the cross-store probe, so the tuning knob
+        # applies to the whole screen
         bucket_cap=bucket_cap,
         banded=banded, doc_sh=shingles,
     ).withColumn("kind", F.lit("within"))
-    if not (_store_has_committed(spark, buckets_path)
-            and _store_has_committed(spark, shingles_path)):
-        return within  # first batch (or its crashed first write)
-    new_banded = banded
-    # Retry hygiene: a crash between append_to_store and checkpoint
-    # commit replays the batch with its own signatures already in the
-    # store; capped_store_candidates anti-joins the batch's own ids
-    # out of the store side and caps per-bucket expansion.
+    store = TableGroup(spark, store_dir)
+    sid = store.current_snapshot()
+    if sid is None:
+        return within  # first batch: nothing committed yet
+    # Retry hygiene: a crash between the store commit and the
+    # checkpoint commit replays the batch with its own signatures
+    # already in the store; capped_store_candidates anti-joins the
+    # batch's own ids out of the store side and caps per-bucket
+    # expansion.
     batch_ids = batch_df.select(F.col(id_col).alias("id_b")).distinct()
-    store_buckets = spark.read.parquet(_glob_escape(buckets_path)).select(
+    store_buckets = store.read("buckets", sid).select(
         id_col, "band", "band_hash"
     )
     candidates = capped_store_candidates(
-        store_buckets, new_banded, batch_ids,
+        store_buckets, banded, batch_ids,
         ["band", "band_hash"], id_col, bucket_cap,
     )
     # DataFrame reuse is NOT common-subexpression elimination: without
@@ -243,7 +194,7 @@ def screen_batch(
     # so payload movement stays bounded by the batch, not the corpus.
     cand_ids = candidates.select("id_b").distinct()
     sh_store = (
-        spark.read.parquet(_glob_escape(shingles_path))
+        store.read("shingles", sid)
         .select(F.col(id_col).alias("id_b"), "sh")
         .join(cand_ids, "id_b", "left_semi")
     )
@@ -263,16 +214,12 @@ def append_to_store(
     shingles: DataFrame | None = None,
 ) -> None:
     """Append this batch's band buckets and shingle arrays to the
-    store, making it corpus for all later batches.
+    store in one commit, making it corpus for all later batches.
 
-    With ``batch_id`` the write is idempotent: each batch owns an
-    ``ingest_batch=N`` subdir written with overwrite, so a foreachBatch
-    retry replaces its own partial signatures instead of appending a
-    second copy (partition discovery makes the root read see every
-    subdir). Without ``batch_id`` (ad-hoc/backfill use) it is a plain
-    append. ``banded`` / ``shingles`` reuse precomputed frames (see
-    screen_batch)."""
-    buckets_path, shingles_path = _store_paths(store_dir)
+    With ``batch_id`` the commit is exactly-once: the replay of a
+    committed batch commits nothing. Without ``batch_id``
+    (ad-hoc/backfill use) it is a plain append. ``banded`` /
+    ``shingles`` reuse precomputed frames (see screen_batch)."""
     buckets = banded if banded is not None else dd._signatures_banded(
         batch_df, id_col, text_col,
         shingle_n=_SHINGLE_N, num_hashes=_NUM_HASHES, bands=_BANDS, seed=_SEED,
@@ -281,13 +228,11 @@ def append_to_store(
         shingles = dd.shingle_array_table(
             batch_df, id_col, text_col, _SHINGLE_N
         )
-    if batch_id is None:
-        buckets.write.mode("append").parquet(buckets_path)
-        shingles.write.mode("append").parquet(shingles_path)
-    else:
-        sub = f"ingest_batch={batch_id}"
-        buckets.write.mode("overwrite").parquet(os.path.join(buckets_path, sub))
-        shingles.write.mode("overwrite").parquet(os.path.join(shingles_path, sub))
+    txn = None if batch_id is None else (_APP_ID, batch_id)
+    store = TableGroup(batch_df.sparkSession, store_dir)
+    with store.transaction(txn) as t:
+        t.append("buckets", buckets)
+        t.append("shingles", shingles)
 
 
 def dedup_batch_fn(
@@ -299,9 +244,9 @@ def dedup_batch_fn(
     bucket_cap: int = 1000,
 ):
     """foreachBatch function factory: screen → write pairs (idempotent
-    per-batch subdir) → append signatures. Wire it up with
-    file_ingest.file_stream + run_ingestion for the full drop-dir →
-    dedup-screen → store pipeline. ``bucket_cap`` tunes the per-bucket
+    per-batch subdir) → commit signatures once per batch id. Wire it
+    up with file_ingest.file_stream + run_ingestion for the full
+    drop-dir → dedup-screen → store pipeline. ``bucket_cap`` tunes the per-bucket
     cross-candidate bound (tighter for boilerplate-skewed corpora,
     looser when recall past the min-id anchors matters)."""
 
@@ -310,12 +255,12 @@ def dedup_batch_fn(
         batch_df = batch_df.localCheckpoint(eager=True)  # read the source once
         # the tokenize+shingle+minhash stage is the batch's dominant
         # CPU: compute its two products ONCE and thread them through
-        # the screen (within + cross probe) and the store append —
-        # they used to be recomputed three times per micro-batch (r13
-        # review; block_dedup_batch_fn's blocks_df set the pattern).
-        # Both are batch-proportional (16 bucket rows / one
-        # distinct-shingle array per doc), so eager materialization is
-        # bounded by the batch.
+        # the screen (within + cross probe) and the store append
+        # instead of three times per micro-batch (block_dedup_batch_fn's
+        # blocks_df follows the same pattern). Both are
+        # batch-proportional (16 bucket rows / one distinct-shingle
+        # array per doc), so eager materialization is bounded by the
+        # batch.
         banded = dd._signatures_banded(
             batch_df, id_col, text_col,
             shingle_n=_SHINGLE_N, num_hashes=_NUM_HASHES, bands=_BANDS,
@@ -343,24 +288,6 @@ def dedup_batch_fn(
 _BLOCK_WORDS = 10
 
 
-def _require_v2_block_store(store: DataFrame) -> None:
-    """Refuse a legacy 64-bit (bigint xxhash64) block store with an
-    actionable error instead of an AnalysisException deep in the
-    semi-join — or worse, a mixed-type append that poisons the store
-    files. No in-place migration exists: block texts are not
-    recoverable from their 64-bit hashes, so the store must be
-    rebuilt from the corpus (one batch run of
-    operators.dedup.block_dedup_retention's carve, appended fresh)."""
-    dtype = dict(store.dtypes).get("block_hash")
-    if dtype != "binary":
-        raise RuntimeError(
-            f"legacy block store (block_hash: {dtype}): the store key "
-            "is 16-byte binary md5 since r7 (64-bit keys collide at "
-            "C4 scale). Rebuild the store from the corpus; old hashes "
-            "cannot be migrated."
-        )
-
-
 def _batch_blocks(
     batch_df: DataFrame, id_col: str, text_col: str, block: int
 ) -> DataFrame:
@@ -371,7 +298,7 @@ def _batch_blocks(
     persistent and grows with corpus history, and at C4-scale block
     counts (billions) a 64-bit birthday collision is *expected* —
     P(collision) ≈ n²/2⁶⁵ ≈ 5% at n=10⁹ — which would silently drop a
-    never-ingested block (VERDICT r6 item 2). At 128 bits the same
+    never-ingested block. At 128 bits the same
     bound is ~10⁻²⁰; 16 bytes/key keeps shuffle and store width fixed.
     The carve itself is the SHARED ``dd.carve_blocks`` — the batch and
     streaming faces cannot silently diverge on tokenization."""
@@ -410,13 +337,12 @@ def block_screen_batch(
     factory below carves ONCE per batch for both screen and append.
 
     Retry-proof like ``screen_batch``: pass ``batch_id`` and the
-    store read EXCLUDES the ``ingest_batch=batch_id`` partition (the
-    subdir name is a partition column under discovery), so a
-    foreachBatch retry that crashed after the store append does not
-    screen the batch against its own blocks.
+    store read EXCLUDES the rows whose ``ingest_batch`` column is
+    ``batch_id``, so the replay of a batch whose store commit landed
+    does not screen the batch against its own blocks.
 
-    Scale: the store is NEVER shuffled (the r4 semi-prune lesson from
-    the minhash screen): a naive batch-anti-store equi-join would
+    Scale: the store is NEVER shuffled (the minhash screen's
+    semi-prune discipline): a naive batch-anti-store equi-join would
     hash-partition the whole store every batch — a per-batch cost that
     grows with history. Instead the store is semi-joined map-side
     against the BATCH's broadcast hash set (matched hashes are at most
@@ -426,7 +352,6 @@ def block_screen_batch(
     block_hash on a metastore the scan prunes too."""
     from pyspark.sql.window import Window as W
 
-    blocks_path = os.path.join(store_dir, "blocks")
     blocks = (
         blocks_df
         if blocks_df is not None
@@ -436,11 +361,12 @@ def block_screen_batch(
     )
     w = W.partitionBy("block_hash").orderBy(id_col, "block_idx")
     ranked = blocks.withColumn("rn", F.row_number().over(w))
-    if _store_has_committed(spark, blocks_path):
-        store = spark.read.parquet(_glob_escape(blocks_path))
-        _require_v2_block_store(store)
-        if batch_id is not None and "ingest_batch" in store.columns:
-            store = store.filter(F.col("ingest_batch") != batch_id)
+    group = TableGroup(spark, store_dir)
+    sid = group.current_snapshot()
+    if sid is not None:
+        store = group.read("blocks", sid)
+        if batch_id is not None:
+            store = store.filter(~F.col("ingest_batch").eqNullSafe(batch_id))
         batch_hashes = blocks.select("block_hash").distinct()
         matched = (
             store.join(F.broadcast(batch_hashes), "block_hash", "left_semi")
@@ -474,28 +400,21 @@ def append_blocks_to_store(
     batch_id: int | None = None,
     blocks_df: DataFrame | None = None,
 ) -> None:
-    """Append this batch's DISTINCT block hashes to the store. Same
-    idempotency contract as ``append_to_store``: with ``batch_id``
-    each batch owns an overwrite-mode ``ingest_batch=N`` subdir.
-    ``blocks_df``: reuse a pre-carved frame (see block_screen_batch)."""
-    blocks_path = os.path.join(store_dir, "blocks")
-    spark = batch_df.sparkSession
-    if _store_has_committed(spark, blocks_path):
-        # footer-only read: never append binary keys into a legacy
-        # bigint store (mixed part-file types fail on every later read)
-        _require_v2_block_store(spark.read.parquet(_glob_escape(blocks_path)))
+    """Append this batch's DISTINCT block hashes, tagged with
+    ``ingest_batch`` (NULL without ``batch_id``), to the store. Same
+    exactly-once contract as ``append_to_store``. ``blocks_df``: reuse
+    a pre-carved frame (see block_screen_batch)."""
     blocks = (
         blocks_df
         if blocks_df is not None
         else _batch_blocks(batch_df, id_col, text_col, block)
     )
-    hashes = blocks.select("block_hash").distinct()
-    if batch_id is None:
-        hashes.write.mode("append").parquet(blocks_path)
-    else:
-        hashes.write.mode("overwrite").parquet(
-            os.path.join(blocks_path, f"ingest_batch={batch_id}")
-        )
+    hashes = blocks.select("block_hash").distinct().withColumn(
+        "ingest_batch", F.lit(batch_id).cast("long"))
+    txn = None if batch_id is None else (_BLOCK_APP_ID, batch_id)
+    store = TableGroup(batch_df.sparkSession, store_dir)
+    with store.transaction(txn) as t:
+        t.append("blocks", hashes)
 
 
 def block_dedup_batch_fn(
@@ -506,7 +425,8 @@ def block_dedup_batch_fn(
     block: int = _BLOCK_WORDS,
 ):
     """foreachBatch factory: screen blocks → write per-doc retention
-    (idempotent per-batch subdir) → append the batch's block hashes."""
+    (idempotent per-batch subdir) → commit the batch's block hashes
+    once per batch id."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -533,137 +453,39 @@ def block_dedup_batch_fn(
 
 # Every signature-store table this engine writes (minhash:
 # buckets/shingles, block: blocks, embedding: vec_buckets/vectors).
-# Rows are value-identical across retries/backfills, so full-row
-# DISTINCT is the compaction dedup for all of them (a given id always
-# carries the same signature/payload; array/binary distinct is fine).
+# Rows are value-identical across replays and backfills (a given id
+# always carries the same signature/payload), so full-row DISTINCT is
+# the compaction dedup; a block hash seen by several batches keeps its
+# FIRST ``ingest_batch``, which is all a replay's exclusion needs.
 _STORE_TABLES = ("buckets", "shingles", "blocks", "vec_buckets", "vectors")
 
 
 def compact_store(spark: SparkSession, store_dir: str) -> dict[str, tuple[int, int]]:
-    """Fold a signature store's accreted ``ingest_batch=N`` subdirs
-    (one-plus parquet file per micro-batch per table — a year of daily
-    ingest is hundreds of list-and-open operations per screen) into a
-    single consolidated ``ingest_batch=-1`` layout per table, rows
-    deduplicated. Returns {table: (files_before, files_after)}.
+    """Fold a signature store's per-micro-batch files (one-plus
+    parquet file per batch per table — a year of daily ingest is
+    hundreds of file opens per screen) into one file set per table,
+    rows deduplicated, as ONE overwrite commit; then vacuum the
+    superseded files. Returns {table: (files_before, files_after)}.
 
-    Run QUIESCED (stream stopped, checkpoint committed): the
-    consolidated subdir deliberately uses batch id -1, which no real
-    foreachBatch id ever takes, so later appends compose normally —
-    but the BLOCK store's retry exclusion is partition-based, so a
-    batch that crashed BEFORE its checkpoint commit must be re-run
-    before compacting (the minhash/embedding screens are id-based and
-    unaffected).
-
-    Crash-safety design (two r7 review rounds — the naive
-    delete+rename had a table-missing window, and a heal-on-next-run
-    patch was itself defeated when a restarted stream recreated the
-    table between crash and heal, after which the "heal" deleted both
-    history copies): LEFTOVERS ARE INPUTS, NEVER TRASH. Every sibling
-    dir that may hold history (``__next`` staging, ``__old`` aside,
-    and the live table, plus any ``__building*`` staging leftover) is
-    UNIONED into the consolidation read, and NOTHING is deleted until
-    the new consolidated copy has been durably written — staging goes
-    to a fresh uuid-suffixed ``__building_<id>`` name that no crash
-    leftover can occupy, so there is no localCheckpoint-only window
-    where a source is gone but its replacement is memory-resident
-    (r7 ADVICE). Sequence per table: read union(live, __next, __old,
-    __building*) → write dedup to fresh __building_<id> → delete old
-    staging leftovers → promote staging to __next → aside-rename
-    live → rename __next in → delete aside. A crash at ANY point
-    leaves at least one complete durable copy of history among the
-    names, and the next run folds whatever remains back together. The only loss mode left is
-    operational, not data: screens between a mid-swap crash and the
-    next compact_store run may see a thin table (run compact_store at
-    stream start to heal before ingesting). A compacted table is
-    partition-laid-out, so later appends must use the ``batch_id``
-    form (the streaming path always does); a root-level plain append
-    would conflict with partition discovery."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    stats: dict[str, tuple[int, int]] = {}
-    for table in _STORE_TABLES:
-        path = os.path.join(store_dir, table)
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        nxt = jvm.org.apache.hadoop.fs.Path(path + "__next")
-        op = jvm.org.apache.hadoop.fs.Path(path + "__old")
-        fs = p.getFileSystem(conf)
-
-        # every __building* staging leftover included: a crash after
-        # the old-staging delete but before the __next promotion can
-        # leave the only complete copy under a staging name — each one
-        # is an input too, never orphaned. LISTING, not globbing (the
-        # _store_has_committed rule, r13 review): a glob built from a
-        # store path containing metacharacters ('run[2026]') either
-        # throws or silently matches nothing — and a silent miss here
-        # orphans the ONLY complete history copy after that crash.
-        parent = jvm.org.apache.hadoop.fs.Path(
-            os.path.dirname(path) or "."
-        )
-        building = [
-            str(st.getPath().toUri().getPath())
-            for st in (
-                fs.listStatus(parent) if fs.exists(parent) else []
-            )
-            if st.getPath().getName().startswith(table + "__building")
-        ]
-        sources = [
-            s for s in (path, path + "__next", path + "__old", *building)
-            if _store_exists(spark, s)
-        ]
-
-        def n_parquet_files(root) -> int:
-            it = fs.listFiles(root, True)
-            n = 0
-            while it.hasNext():
-                if it.next().getPath().getName().endswith(".parquet"):
-                    n += 1
-            return n
-
-        # a staging dir killed mid-write may hold zero complete parquet
-        # files (only _temporary debris) — no data to fold, and reading
-        # it would fail schema inference; drop it from the union
-        sources = [
-            s for s in sources
-            if n_parquet_files(jvm.org.apache.hadoop.fs.Path(s)) > 0
-        ]
-        if not sources:
-            continue
-
-        before = sum(
-            n_parquet_files(jvm.org.apache.hadoop.fs.Path(s)) for s in sources
-        )
-        parts = []
-        for s in sources:
-            df = spark.read.parquet(_glob_escape(s))
+    Crash-safe by the commit protocol: until the claim, readers and
+    the stream see the old snapshot, and a crash leaves only orphan
+    files for a later vacuum. A stream batch committing meanwhile
+    fails the compaction with ConcurrentWriteError (rows are never
+    lost), but the vacuum does drop the files of older snapshots, so
+    run it when no reader is pinned to one."""
+    store = TableGroup(spark, store_dir)
+    tables = sorted(set(_STORE_TABLES) & set(store.tables()))
+    before = {}
+    with store.transaction() as txn:
+        for table in tables:
+            df = txn.read(table)
+            before[table] = len(df.inputFiles())
             if "ingest_batch" in df.columns:
-                df = df.drop("ingest_batch")
-            parts.append(df)
-        merged = parts[0]
-        for df in parts[1:]:
-            merged = merged.unionByName(df)
-        # fresh staging under a name no source can occupy (uuid
-        # suffix): the consolidated copy is durably written BEFORE any
-        # source is deleted, so every crash point leaves at least one
-        # complete durable copy — leftovers-are-inputs holds with no
-        # in-memory-only (localCheckpoint) window (r7 ADVICE)
-        tmp = path + "__building_" + uuid.uuid4().hex[:8]
-        out = merged.distinct().coalesce(max(1, before // 64))
-        out.write.mode("overwrite").parquet(
-            os.path.join(tmp, "ingest_batch=-1")
-        )
-        # old staging leftovers' rows are durably in tmp now
-        for b in building:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(b), True)
-        # promote tmp over any stale __next (its rows are in tmp now)
-        fs.delete(nxt, True)
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), nxt):
-            raise IOError(f"compact_store: staging rename failed for {path}")
-        fs.delete(op, True)  # rows already folded into __next
-        if fs.exists(p) and not fs.rename(p, op):
-            raise IOError(f"compact_store: aside rename failed for {path}")
-        if not fs.rename(nxt, p):
-            # history still intact under __old (and re-foldable)
-            raise IOError(f"compact_store: swap rename failed for {path}")
-        fs.delete(op, True)
-        stats[table] = (before, n_parquet_files(p))
-    return stats
+                keys = [c for c in df.columns if c != "ingest_batch"]
+                df = df.groupBy(*keys).agg(
+                    F.min("ingest_batch").alias("ingest_batch"))
+            else:
+                df = df.distinct()
+            txn.overwrite(table, df.coalesce(max(1, before[table] // 64)))
+    store.vacuum(keep_last=1)
+    return {t: (before[t], len(store.read(t).inputFiles())) for t in tables}

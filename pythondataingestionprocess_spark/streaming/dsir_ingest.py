@@ -4,29 +4,32 @@ routing target-like documents onward (engine-added; the published
 batch method is operators/dsir.py, Xie et al. arXiv:2302.03169; this
 is its ingest-time face, same store discipline as dedup_ingest.py).
 
-State under one root:
+State is one :class:`~pythondataingestionprocess_spark.pipeline.txn_group.TableGroup`
+rooted at ``store_dir``, over two tables:
 
-- ``target/``  (bucket, c) — the target corpus bucket counts, written
+- ``target`` (bucket, c) — the target corpus bucket counts, written
   ONCE at bootstrap (``init_target_state``) from the curated slice;
   m rows, never touched again.
-- ``raw/ingest_batch=N/`` (bucket, c) — one mergeable count state per
+- ``raw`` (bucket, c, ingest_batch) — one mergeable count state per
   ingested batch (operators/dsir.bucket_counts — an integer monoid,
-  so the fold over subdirs is exact, no float-order caveat).
+  so the fold over batches is exact, no float-order caveat); born
+  empty at bootstrap.
 
 Per micro-batch (``dsir_batch_fn``):
 
 1. featurize the batch (map-side);
-2. read the raw states of all PRIOR batches (``ingest_batch != N`` —
-   a crashed retry's own partial write must not count itself twice),
-   fold them with this batch's counts → the raw distribution over
-   everything seen so far INCLUDING this batch (scores converge to
-   the full-corpus DSIR weights as the stream drains);
+2. read the raw states of all PRIOR batches at the same snapshot as
+   the target (``ingest_batch != N`` — the replay of a committed
+   batch must not count itself twice), fold them with this batch's
+   counts → the raw distribution over everything seen so far
+   INCLUDING this batch (scores converge to the full-corpus DSIR
+   weights as the stream drains);
 3. score the batch (the m log-ratios collapse to a literal array —
    zero-shuffle scoring, m-row driver state, the method's contract);
 4. write ``(id, n_feats, logw, selected)`` to
-   ``scores/batch_id=N`` with overwrite (idempotent on retry), and
-5. write this batch's count state to ``raw/ingest_batch=N`` with
-   overwrite (same idempotence).
+   ``scores/batch_id=N`` with overwrite (idempotent on replay), and
+5. commit this batch's count state to ``raw``, keyed by
+   ``(app_id, N)`` so a replay commits nothing.
 
 At 100 TB the raw state is m rows PER BATCH (kilobytes) — compaction
 is a trivial re-sum; the documents themselves never ride the state.
@@ -40,13 +43,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.operators import dsir
-from pythondataingestionprocess_spark.streaming.dedup_ingest import (
-    _glob_escape,
-)
+from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
+
+_APP_ID = "dsir_batch_fn"
 
 
-def _paths(store_dir: str) -> tuple[str, str]:
-    return os.path.join(store_dir, "target"), os.path.join(store_dir, "raw")
+def _raw_rows(counts: DataFrame, batch_id: int | None) -> DataFrame:
+    return counts.withColumn("ingest_batch", F.lit(batch_id).cast("long"))
 
 
 def init_target_state(
@@ -56,45 +59,12 @@ def init_target_state(
     text_col: str = "text",
     m: int = 1024,
 ) -> None:
-    """Fit the fixed target bucket counts once, at bootstrap."""
-    target_path, _ = _paths(store_dir)
-    dsir.bucket_counts(
-        dsir.featurize(target_docs, id_col, text_col, m=m)
-    ).write.mode("overwrite").parquet(target_path)
-
-
-def _raw_state_excluding(
-    spark: SparkSession, raw_path: str, batch_id: int
-) -> DataFrame | None:
-    """Fold of all prior batches' count states, excluding the current
-    batch's own subdir (retry-proofing: a crash AFTER the state write
-    but BEFORE the commit re-runs the batch — its earlier partial
-    write must not make the batch count itself twice).
-
-    First-batch detection probes for COMMITTED state (part files under
-    an ingest_batch subdir), not a broad except and not bare directory
-    existence: a broad except silently scores against the wrong
-    distribution on any FS error, while an existence-only probe
-    deadlocks the first batch forever — a crash mid-write leaves
-    ``raw/`` holding only the committer's ``_temporary`` dir, which
-    exists but cannot be read as parquet (r10 review, both passes).
-    A genuine corrupt/unreadable COMMITTED subdir still raises. The
-    probe is the shared ``dedup_ingest._store_has_committed`` (listing
-    not globbing — glob metacharacters in the store path must not
-    silently read as 'first batch'; third review pass)."""
-    from pythondataingestionprocess_spark.streaming.dedup_ingest import (
-        _store_has_committed,
-    )
-
-    if not _store_has_committed(spark, raw_path):
-        return None  # first batch: no committed raw state yet
-    # the READ path is glob-expanded by Spark (escape it); basePath is
-    # a literal prefix for partition discovery and must stay raw
-    prior = spark.read.option("basePath", raw_path).parquet(
-        _glob_escape(raw_path)
-    )
-    prior = prior.filter(F.col("ingest_batch") != batch_id).select("bucket", "c")
-    return prior.groupBy("bucket").agg(F.sum("c").alias("c"))
+    """Fit the fixed target bucket counts once, at bootstrap, and
+    start the raw state empty in the same commit."""
+    counts = dsir.bucket_counts(dsir.featurize(target_docs, id_col, text_col, m=m))
+    with TableGroup(target_docs.sparkSession, store_dir).transaction() as t:
+        t.overwrite("target", counts)
+        t.overwrite("raw", _raw_rows(counts.limit(0), None))
 
 
 def score_batch(
@@ -114,20 +84,20 @@ def score_batch(
     have no features and no score row — route them through a
     quarantine screen upstream (file_ingest.quarantine_malformed) if
     they must be accounted for."""
-    target_path, raw_path = _paths(store_dir)
+    store = TableGroup(spark, store_dir)
+    sid = store.current_snapshot()
     bucketed = dsir.featurize(batch_df, id_col, text_col, m=m).localCheckpoint(
         eager=True
     )
     batch_counts = dsir.bucket_counts(bucketed)
-    prior = _raw_state_excluding(spark, raw_path, batch_id)
-    raw_counts = (
-        batch_counts
-        if prior is None
-        else dsir.merge_bucket_counts(prior, batch_counts)
+    prior = (
+        store.read("raw", sid)
+        .filter(F.col("ingest_batch") != batch_id)
+        .select("bucket", "c")
     )
-    target_counts = spark.read.parquet(_glob_escape(target_path))
+    raw_counts = dsir.merge_bucket_counts(prior, batch_counts)
     ratio = dsir.log_ratio_vector(
-        dsir.log_dist_from_counts(target_counts, m=m),
+        dsir.log_dist_from_counts(store.read("target", sid), m=m),
         dsir.log_dist_from_counts(raw_counts, m=m),
         m=m,
     )
@@ -146,9 +116,10 @@ def dsir_batch_fn(
     threshold: float = 0.0,
 ):
     """foreachBatch factory: score → write scores (idempotent per-batch
-    subdir) → persist this batch's count state. Wire it with
-    file_ingest.file_stream + run_ingestion, after ``init_target_state``
-    has been run once against the curated target corpus."""
+    subdir) → commit this batch's count state once per batch id. Wire
+    it with file_ingest.file_stream + run_ingestion, after
+    ``init_target_state`` has been run once against the curated target
+    corpus."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -160,9 +131,8 @@ def dsir_batch_fn(
         scores.write.mode("overwrite").parquet(
             os.path.join(scores_out_dir, f"batch_id={batch_id}")
         )
-        _, raw_path = _paths(store_dir)
-        batch_counts.write.mode("overwrite").parquet(
-            os.path.join(raw_path, f"ingest_batch={batch_id}")
-        )
+        store = TableGroup(spark, store_dir)
+        with store.transaction((_APP_ID, batch_id)) as t:
+            t.append("raw", _raw_rows(batch_counts, batch_id))
 
     return fn

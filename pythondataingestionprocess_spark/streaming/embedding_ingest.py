@@ -15,21 +15,25 @@ Each micro-batch of incoming vectors is:
 3. appended to the store (its bucket membership + its raw vectors),
    making it "corpus" for every later batch.
 
-The store is two parquet tables under one root:
+The store is one :class:`~pythondataingestionprocess_spark.pipeline.txn_group.TableGroup`
+rooted at ``store_dir`` — one commit log over three tables:
 
-- ``vec_buckets/`` (id, table, bucket) — hyperplane-LSH membership
+- ``vec_buckets`` (id, table, bucket) — hyperplane-LSH membership
   rows the cross-batch candidate join probes;
-- ``vectors/``     (id, embedding) — the verify-side representation
-  (exact cosine without re-reading the source).
+- ``vectors``     (id, embedding) — the verify-side representation
+  (exact cosine without re-reading the source);
+- ``meta``        (dim) — the store's embedding dimension, committed
+  with the first batch.
 
 Scale/failure semantics are IDENTICAL to dedup_ingest (see its module
 docstring): bucket the ``vec_buckets`` table BY (table, bucket) on a
-metastore for a co-located candidate join; foreachBatch retries are
-idempotent via ``ingest_batch=N`` overwrite subdirs; the batch's own
-ids are anti-joined out of the store side so a crash after the store
-append cannot screen a batch against itself; the store's vector
-payloads are semi-pruned to candidate ids before the verify join so
-payload movement is bounded by the batch, not the corpus.
+metastore for a co-located candidate join; a micro-batch's store
+write is one commit keyed by ``(app_id, batch_id)``, so a replayed
+batch commits nothing; the batch's own ids are anti-joined out of the
+store side so a replay after the commit cannot screen a batch
+against itself; the store's vector payloads are semi-pruned to
+candidate ids before the verify join so payload movement is bounded
+by the batch, not the corpus.
 """
 
 from __future__ import annotations
@@ -43,9 +47,8 @@ from pythondataingestionprocess_spark.operators import dedup as dd
 from pythondataingestionprocess_spark.operators.similarity import (
     hyperplane_bucket_rows,
 )
+from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
 from pythondataingestionprocess_spark.streaming.dedup_ingest import (
-    _glob_escape,
-    _store_has_committed,
     capped_store_candidates,
 )
 
@@ -53,16 +56,13 @@ _DIM = 64
 _BITS = 12
 _TABLES = 8
 _SEED = 7
-
-
-def _store_paths(store_dir: str) -> tuple[str, str]:
-    return os.path.join(store_dir, "vec_buckets"), os.path.join(store_dir, "vectors")
+_APP_ID = "embedding_dedup_batch_fn"
 
 
 def _banded(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
     # the ONE shared bucket construction (operators/similarity.py) —
     # the store and every probe must hash identically to the batch
-    # operators or LSH recall silently diverges (r13 review)
+    # operators or LSH recall silently diverges
     return hyperplane_bucket_rows(
         df, id_col, vec_col,
         dim=dim, bits_per_table=_BITS, n_tables=_TABLES, seed=_SEED,
@@ -71,13 +71,13 @@ def _banded(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
 
 def _check_dim(batch_df: DataFrame, vec_col: str, dim: int) -> None:
     """Fail FAST with a clear message on a dimension mismatch instead
-    of an opaque numpy shape error inside the pandas UDF (r7 review).
-    One tiny aggregate over an already-checkpointed batch; min AND max
-    so a single corrupt row inside an otherwise-clean batch is caught
-    too (first-row sniffing was not enough — second r7 review). NULL
-    vectors are counted separately: min/max skip NULLs, so a null
-    embedding row would pass the size check and still blow up with
-    the opaque shape/NPE inside the pandas UDF (r7 ADVICE)."""
+    of an opaque numpy shape error inside the pandas UDF. One tiny
+    aggregate over an already-checkpointed batch; min AND max so a
+    single corrupt row inside an otherwise-clean batch is caught too
+    (first-row sniffing would miss it). NULL vectors are counted
+    separately: min/max skip NULLs, so a null embedding row would
+    pass the size check and still blow up with the opaque shape/NPE
+    inside the pandas UDF."""
     row = batch_df.select(
         F.min(F.size(F.col(vec_col))).alias("lo"),
         F.max(F.size(F.col(vec_col))).alias("hi"),
@@ -101,22 +101,19 @@ def _check_dim(batch_df: DataFrame, vec_col: str, dim: int) -> None:
         )
 
 
-def _store_dim(spark: SparkSession, store_dir: str) -> int | None:
-    """The store's persisted dimension marker (None when the store is
-    new). Without this, redeploying with a different model/dim would
-    hash meaningless buckets and null-pad every verify cosine —
-    silently reporting ZERO cross duplicates forever (second r7
-    review); with it, the mismatch is one clear error."""
-    meta = os.path.join(store_dir, "meta")
-    if not _store_has_committed(spark, meta):
-        return None
-    return int(spark.read.parquet(_glob_escape(meta)).first()["dim"])
-
-
-def _write_store_dim(spark: SparkSession, store_dir: str, dim: int) -> None:
-    spark.createDataFrame([(int(dim),)], "dim int").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(store_dir, "meta"))
+def _require_store_dim(store: TableGroup, sid: int, dim: int,
+                       store_dir: str) -> None:
+    """The store's committed dimension must equal ``dim``. Without
+    this check, redeploying with a different model/dim would hash
+    meaningless buckets and null-pad every verify cosine — silently
+    reporting ZERO cross duplicates forever; with it, the mismatch is
+    one clear error."""
+    stored = store.read("meta", sid).first()["dim"]
+    if stored != dim:
+        raise ValueError(
+            f"store at {store_dir} was built with dim={stored}; "
+            f"got dim={dim} — buckets would be meaningless"
+        )
 
 
 def screen_batch(
@@ -131,10 +128,8 @@ def screen_batch(
     banded: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs for one incoming vector batch: within-batch
-    pairs plus cross pairs against the store (empty or half-written
-    store → within-batch only — a crash between the two
-    append_to_store writes must not wedge retries on the missing
-    vectors table). Returns (id_a, id_b, cos, kind) with ``kind``
+    pairs plus cross pairs against the store (a store with no commits
+    → within-batch only). Returns (id_a, id_b, cos, kind) with ``kind``
     'within' or 'cross'; for cross pairs id_a is the NEW vector. Does
     NOT mutate the store — append via :func:`append_to_store` after
     consuming the result. Cross candidates are per-bucket capped
@@ -144,43 +139,37 @@ def screen_batch(
     the kept set equals ``cosine_near_dup_pairs_incremental``'s)."""
     from pythondataingestionprocess_spark.functions.vectors import cosine
 
-    buckets_path, vectors_path = _store_paths(store_dir)
-    stored = _store_dim(spark, store_dir)
-    if stored is not None and stored != dim:
-        raise ValueError(
-            f"store at {store_dir} was built with dim={stored}; "
-            f"got dim={dim} — buckets would be meaningless"
-        )
+    store = TableGroup(spark, store_dir)
+    sid = store.current_snapshot()
+    if sid is not None:
+        _require_store_dim(store, sid, dim, store_dir)
     if banded is None:
         banded = _banded(batch_df, id_col, vec_col, dim)
     within = dd.cosine_near_dup_pairs(
         batch_df, id_col, vec_col,
         threshold=threshold, dim=dim, bits_per_table=_BITS,
         n_tables=_TABLES, seed=_SEED,
-        # the SAME cap as the cross-store probe: leaving the operator
-        # default here made the tuning knob apply to only half the
-        # screen (r13 review)
+        # the SAME cap as the cross-store probe, so the tuning knob
+        # applies to the whole screen
         bucket_cap=bucket_cap,
         # one hyperplane matmul per batch, shared with the cross probe
-        # and the store append (r13 review)
+        # and the store append
         banded=banded,
     ).withColumn("kind", F.lit("within"))
-    if not (_store_has_committed(spark, buckets_path)
-            and _store_has_committed(spark, vectors_path)):
-        return within  # first batch (or its crashed first write)
-    new_banded = banded
+    if sid is None:
+        return within  # first batch: nothing committed yet
     batch_ids = batch_df.select(F.col(id_col).alias("id_b")).distinct()
-    store_buckets = spark.read.parquet(_glob_escape(buckets_path)).select(
+    store_buckets = store.read("vec_buckets", sid).select(
         id_col, "table", "bucket"
     )
     candidates = capped_store_candidates(
-        store_buckets, new_banded, batch_ids,
+        store_buckets, banded, batch_ids,
         ["table", "bucket"], id_col, bucket_cap,
     ).localCheckpoint(eager=True)  # probed twice below (reuse != CSE)
     va = batch_df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     cand_ids = candidates.select("id_b").distinct()
     vb = (
-        spark.read.parquet(_glob_escape(vectors_path))
+        store.read("vectors", sid)
         .select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
         .join(cand_ids, "id_b", "left_semi")
     )
@@ -205,32 +194,25 @@ def append_to_store(
     dim: int = _DIM,
     banded: DataFrame | None = None,
 ) -> None:
-    """Append this batch's bucket membership and vectors to the store.
-    Same idempotency contract as dedup_ingest.append_to_store: with
-    ``batch_id`` each batch owns an ``ingest_batch=N`` overwrite
-    subdir. ``banded`` reuses a precomputed bucket frame (see
-    screen_batch)."""
-    buckets_path, vectors_path = _store_paths(store_dir)
+    """Append this batch's bucket membership and vectors to the store
+    in one commit — the first commit also records the store's
+    dimension. Same exactly-once contract as
+    dedup_ingest.append_to_store. ``banded`` reuses a precomputed
+    bucket frame (see screen_batch)."""
     spark = batch_df.sparkSession
-    stored = _store_dim(spark, store_dir)
-    if stored is None:
-        _write_store_dim(spark, store_dir, dim)
-    elif stored != dim:
-        raise ValueError(
-            f"store at {store_dir} was built with dim={stored}; "
-            f"got dim={dim} — buckets would be meaningless"
-        )
+    store = TableGroup(spark, store_dir)
+    sid = store.current_snapshot()
+    if sid is not None:
+        _require_store_dim(store, sid, dim, store_dir)
     buckets = banded if banded is not None else _banded(
         batch_df, id_col, vec_col, dim
     )
-    vectors = batch_df.select(id_col, vec_col)
-    if batch_id is None:
-        buckets.write.mode("append").parquet(buckets_path)
-        vectors.write.mode("append").parquet(vectors_path)
-    else:
-        sub = f"ingest_batch={batch_id}"
-        buckets.write.mode("overwrite").parquet(os.path.join(buckets_path, sub))
-        vectors.write.mode("overwrite").parquet(os.path.join(vectors_path, sub))
+    txn = None if batch_id is None else (_APP_ID, batch_id)
+    with store.transaction(txn) as t:
+        if sid is None:
+            t.append("meta", spark.createDataFrame([(int(dim),)], "dim int"))
+        t.append("vec_buckets", buckets)
+        t.append("vectors", batch_df.select(id_col, vec_col))
 
 
 def embedding_dedup_batch_fn(
@@ -243,10 +225,10 @@ def embedding_dedup_batch_fn(
     bucket_cap: int = 1000,
 ):
     """foreachBatch factory: screen → write pairs (idempotent
-    per-batch subdir) → append bucket membership + vectors. Note the
-    screen here does NOT need the batch-id store exclusion: the
+    per-batch subdir) → commit bucket membership + vectors once per
+    batch id. The screen needs no batch-id store exclusion: the
     batch's own ids are anti-joined out of the store side inside
-    screen_batch, which covers the crashed-append retry case.
+    screen_batch, which covers the replay of a committed batch.
     ``dim`` must match the embedding model; every batch is checked
     up-front (min AND max vector size) with a clear error, and the
     store persists its dimension so a redeploy with a different model
@@ -258,9 +240,9 @@ def embedding_dedup_batch_fn(
         _check_dim(batch_df, vec_col, dim)
         # ONE hyperplane matmul per batch (the vector path's dominant
         # cost), threaded through within-screen, cross probe, and the
-        # store append — it used to run three times per micro-batch
-        # (r13 review); bucket rows are batch-proportional (n_tables
-        # rows per vector), so eager materialization is bounded
+        # store append instead of three times per micro-batch; bucket
+        # rows are batch-proportional (n_tables rows per vector), so
+        # eager materialization is bounded
         banded = _banded(batch_df, id_col, vec_col, dim).localCheckpoint(
             eager=True
         )

@@ -11,45 +11,20 @@ import os
 import sys
 import time
 
-import duckdb
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pythondataingestionprocess_spark.session import get_spark  # noqa: E402
+from pythondataingestionprocess_spark.oracle import (  # noqa: E402
+    frame_hash_check,
+    duckdb_connect,
+)
 from pythondataingestionprocess_spark.plans import REGISTRY  # noqa: E402
-from pythondataingestionprocess_spark.catalog import TABLES  # noqa: E402
+from pythondataingestionprocess_spark.session import get_spark  # noqa: E402
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 only = set(sys.argv[2:])
 
 spark = get_spark()
-con = duckdb.connect()
-for t in TABLES:
-    con.execute(
-        f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-    )
-
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    return df.sort_values(list(df.columns), ignore_index=True)
-
-
-def value_hash(df: pd.DataFrame) -> str:
-    import hashlib
-
-    parts = []
-    for col in df.columns:
-        s = df[col]
-        if s.dtype == object:
-            parts.append(s.astype(str))
-        elif s.dtype.kind == "f":
-            parts.append(s.round(9).astype(str))
-        else:
-            parts.append(s.astype(str))
-    blob = "\x1f".join("\x1e".join(p.tolist()) for p in parts)
-    return hashlib.md5(blob.encode()).hexdigest()
+con = duckdb_connect(sf_dir)
 
 
 total = 0.0
@@ -66,12 +41,7 @@ for name, spec in REGISTRY.items():
             t1 = time.monotonic()
             odf = con.execute(spec.oracle).fetchdf()
             t_oracle = time.monotonic() - t1
-            sc, oc = canon(sdf), canon(odf)
-            rows_match = len(sc) == len(oc)
-            schema_match = list(sc.columns) == list(oc.columns)
-            hash_match = (
-                rows_match and schema_match and value_hash(sc) == value_hash(oc)
-            )
+            rows_match, schema_match, hash_match = frame_hash_check(sdf, odf)
         else:
             t_oracle = 0.0
             rows_match = len(sdf) >= 0

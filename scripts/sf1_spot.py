@@ -1,13 +1,13 @@
-"""sf1 spot check: the standing 10x-scale gate (r15 BASELINE entry).
+"""sf1 spot check: the standing 10x-scale gate.
 
 Generates the sf1 corpus if absent (scripts/gen_sf.py, seed-42
 deterministic, ~13 s), then runs a fixed cross-family sample of
 headline queries BOTH ways — Spark plan and DuckDB oracle on the same
-files — comparing row counts, schemas, and value hashes exactly like
-scripts/driver_sim.py. This is the cheap per-round tripwire for
-magnitude-dependent cliffs (the r15 example: DuckDB's two-rounding
-decimal→double cast diverging at 17 significant digits — invisible at
-sf0.1, fatal at sf1).
+files — comparing row counts, schemas, and value hashes with
+``oracle.frame_hash_check``, like scripts/driver_sim.py. This is the
+cheap tripwire for magnitude-dependent cliffs (for example, DuckDB's
+two-rounding decimal→double cast diverging at 17 significant digits —
+invisible at sf0.1, fatal at sf1).
 
 Prints ONE JSON line: {"sf1_spot": {"n": .., "n_bad": ..,
 "total_sec": ..}, "queries": {name: sec}}. Run on a quiet host; the
@@ -30,7 +30,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Cross-family fixed sample: star join, Q1/Q2 shapes, asof, session,
 # dedup (minhash + containment), ANN + recall, text, packing, graph,
-# window, and the dec_sum-heavy aggregates that found the r15 cliff.
+# window, and the dec_sum-heavy aggregates that expose decimal-cast
+# cliffs.
 DEFAULT_NAMES = [
     "flagship_revenue_by_nation",
     "pricing_summary",
@@ -45,7 +46,7 @@ DEFAULT_NAMES = [
     "doc_packing_shards",
     "trend_slope_per_nation",
     "forward_fill_locf",
-    # r16 oracle-basis additions: the capped symmetric-delete replay
+    # oracle-basis faces: the capped symmetric-delete replay
     # (the cap BINDS at sf1 — this is the only standing gate that
     # exercises the bound branch at scale), the snapshot-store change
     # feed (real commit protocol + exactly-once replay at 1.5M-row
@@ -70,41 +71,15 @@ if not os.path.exists(os.path.join(args.dir, "lineitem.parquet")):
         check=True,
     )
 
-import duckdb  # noqa: E402
-import pandas as pd  # noqa: E402
-
-from pythondataingestionprocess_spark.catalog import TABLES  # noqa: E402
+from pythondataingestionprocess_spark.oracle import (  # noqa: E402
+    frame_hash_check,
+    duckdb_connect,
+)
 from pythondataingestionprocess_spark.plans import REGISTRY  # noqa: E402
 from pythondataingestionprocess_spark.session import get_spark  # noqa: E402
 
 spark = get_spark(app_name="pdip-spark-sf1spot")
-con = duckdb.connect()
-for t in TABLES:
-    con.execute(
-        f"CREATE VIEW {t} AS SELECT * FROM "
-        f"read_parquet('{args.dir}/{t}.parquet')"
-    )
-
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    return df.sort_values(list(df.columns), ignore_index=True)
-
-
-def value_hash(df: pd.DataFrame) -> str:
-    import hashlib
-
-    parts = []
-    for col in df.columns:
-        s = df[col]
-        if s.dtype == object:
-            parts.append(s.astype(str))
-        elif s.dtype.kind == "f":
-            parts.append(s.round(9).astype(str))
-        else:
-            parts.append(s.astype(str))
-    blob = "\x1f".join("\x1e".join(p.tolist()) for p in parts)
-    return hashlib.md5(blob.encode()).hexdigest()
+con = duckdb_connect(args.dir)
 
 
 names = args.names or DEFAULT_NAMES
@@ -122,12 +97,7 @@ for name in names:
         ok = True
         if spec.oracle is not None:
             odf = con.execute(spec.oracle).fetchdf()
-            sc, oc = canon(sdf), canon(odf)
-            ok = (
-                len(sc) == len(oc)
-                and list(sc.columns) == list(oc.columns)
-                and value_hash(sc) == value_hash(oc)
-            )
+            ok = all(frame_hash_check(sdf, odf))
         status = "OK" if ok else "FAIL"
     except Exception as e:  # noqa: BLE001 — per-query verdict, keep going
         ok, status = False, f"ERR {type(e).__name__}: {e}"[:160]

@@ -13,6 +13,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.operators import dsir
+from pythondataingestionprocess_spark.pipeline.snapshot_store import _SnapshotLog
+from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
 from pythondataingestionprocess_spark.streaming import dsir_ingest as di
 
 M = 64
@@ -43,7 +45,7 @@ def test_state_converges_and_scores_match_full_recompute(spark, store, tmp_path)
     fn(b2, 1)
 
     # raw state fold == one-pass counts over the union, exactly
-    raw = spark.read.parquet(os.path.join(store, "raw"))
+    raw = TableGroup(spark, store).read("raw")
     folded = {
         (r["bucket"], r["c"])
         for r in raw.groupBy("bucket").agg(F.sum("c").alias("c")).collect()
@@ -58,7 +60,7 @@ def test_state_converges_and_scores_match_full_recompute(spark, store, tmp_path)
 
     # batch-2 scores == recompute against target vs everything seen
     tdist = dsir.log_dist_from_counts(
-        spark.read.parquet(os.path.join(store, "target")), m=M
+        TableGroup(spark, store).read("target"), m=M
     )
     rdist = dsir.bucket_log_dist(dsir.featurize(b1.unionAll(b2), m=M), m=M)
     ratio = dsir.log_ratio_vector(tdist, rdist, m=M)
@@ -83,7 +85,7 @@ def test_retry_never_counts_a_batch_twice(spark, store, tmp_path):
         for r in spark.read.parquet(os.path.join(out, "batch_id=0")).collect()
     }
     fn(b1, 0)  # foreachBatch retry after a crash-window
-    raw = spark.read.parquet(os.path.join(store, "raw"))
+    raw = TableGroup(spark, store).read("raw")
     total = raw.agg(F.sum("c").alias("t")).collect()[0]["t"]
     n_feats = 7 * 2  # 2 docs x (4 unigrams + 3 bigrams)
     assert total == n_feats  # not doubled
@@ -94,27 +96,29 @@ def test_retry_never_counts_a_batch_twice(spark, store, tmp_path):
     assert again == first
 
 
-def test_first_batch_crash_leaves_recoverable_state(spark, store, tmp_path):
-    """r10 review (second pass): a crash DURING the very first state
-    write leaves raw/ holding only the committer's _temporary dir —
-    the committed-state probe must treat that as 'first batch' and
-    recover, not deadlock every retry on an unreadable parquet dir."""
-    raw = os.path.join(store, "raw")
-    os.makedirs(os.path.join(raw, "ingest_batch=0", "_temporary", "0"))
-    with open(
-        os.path.join(raw, "ingest_batch=0", "_temporary", "0", "junk"), "wb"
-    ) as f:
-        f.write(b"partial")
+def test_first_batch_crash_leaves_recoverable_state(
+        spark, store, tmp_path, monkeypatch):
+    """A crash during the first batch's state commit, after the data
+    files land but before the claim, leaves no visible raw state: the
+    retry scores as the first batch and counts its rows once."""
+    def crash(self, record, next_id):
+        raise RuntimeError("crash before the claim")
+
     b1 = _docs(spark, [(1, A_DOC), (2, B_DOC)])
     out = str(tmp_path / "scores")
     fn = di.dsir_batch_fn(store, out, m=M)
+    with monkeypatch.context() as m:
+        m.setattr(_SnapshotLog, "claim", crash)
+        with pytest.raises(RuntimeError, match="before the claim"):
+            fn(b1, 0)
+    assert TableGroup(spark, store).read("raw").count() == 0
     fn(b1, 0)  # the retry after the crash — must succeed
     got = {
         r["doc_id"]: r["selected"]
         for r in spark.read.parquet(os.path.join(out, "batch_id=0")).collect()
     }
     assert got == {1: True, 2: False}
-    raw_df = spark.read.parquet(raw)
+    raw_df = TableGroup(spark, store).read("raw")
     assert raw_df.agg(F.sum("c")).collect()[0][0] == 14  # counted once
 
 
@@ -149,5 +153,5 @@ def test_end_to_end_file_stream(spark, store, tmp_path):
         for r in spark.read.parquet(out).collect()
     }
     assert got == {1: True, 2: False}
-    raw = spark.read.parquet(os.path.join(store, "raw"))
+    raw = TableGroup(spark, store).read("raw")
     assert raw.agg(F.sum("c")).collect()[0][0] == 14

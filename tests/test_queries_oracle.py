@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from pythondataingestionprocess_spark.oracle import check_query
+from pythondataingestionprocess_spark.oracle import check_query, frame_hash_check
 from pythondataingestionprocess_spark.plans import REGISTRY
 
 
@@ -33,6 +33,26 @@ def test_entry_contract(spark):
     q, o = e.queries(), e.oracle_sql()
     assert set(o) <= set(q)
     assert "flagship_revenue_by_nation" in q
+
+
+def test_frame_hash_check_orders_and_tolerance():
+    """The value-hash comparison ignores row and column order, rounds
+    floats to 9 decimals (1e-12 apart matches, 1e-6 apart does not)
+    and fails on a row-count difference."""
+    import pandas as pd
+
+    base = pd.DataFrame({"k": [1, 2, 3], "v": [0.5, 1.25, 2.0],
+                         "s": ["a", "b", "c"]})
+    assert frame_hash_check(base, base) == (True, True, True)
+    shuffled = base.iloc[[2, 0, 1]][["s", "v", "k"]]
+    assert frame_hash_check(base, shuffled) == (True, True, True)
+    assert frame_hash_check(base, base.assign(v=base["v"] + 1e-12)) == (
+        True, True, True)
+    assert frame_hash_check(base, base.assign(v=base["v"] + 1e-6)) == (
+        True, True, False)
+    assert frame_hash_check(base, base.iloc[:2]) == (False, True, False)
+    assert frame_hash_check(base, base.rename(columns={"s": "t"})) == (
+        True, False, False)
 
 
 def test_pagerank_ranks_sum_near_one(spark, sf_dir):

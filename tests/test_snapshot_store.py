@@ -1,5 +1,5 @@
 """SnapshotTableStore: the from-scratch snapshot-log commit protocol
-(r14 VERDICT item 3 — the reference's transactional upsert surface,
+(the reference's transactional upsert surface,
 database_utils.py:70-79,266-280, without Delta jars).
 
 Pinned here: atomic commit claims (exactly one winner), crash-mid-
@@ -17,10 +17,12 @@ import os
 
 import pytest
 
+from pythondataingestionprocess_spark.pipeline import snapshot_store
 from pythondataingestionprocess_spark.pipeline.snapshot_store import (
     ConcurrentWriteError,
     SnapshotTableStore,
 )
+from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
 
 
 def _df(spark, rows):
@@ -75,8 +77,8 @@ def test_crash_mid_commit_is_invisible(spark, tmp_path):
     st.append("store", _df(spark, [(2, "b", "u", True)]))
     assert st.read("store").count() == 2
     # a default vacuum SPARES the fresh orphan — it is
-    # indistinguishable from a commit in flight (ADVICE r15 race:
-    # data lands before the claim)
+    # indistinguishable from a commit in flight (data lands before
+    # the claim)
     assert orphan not in st.vacuum("store", keep_last=2)
     assert os.path.isdir(orphan)
     # with exclusive access declared (retention 0) it is swept
@@ -256,6 +258,70 @@ def test_append_once_is_exactly_once(spark, tmp_path):
     assert st.read("store").count() == 3
     assert st.committed_txns("store") == {
         ("job-7", 0), ("job-7", 1), ("job-8", 1)}
+
+
+def test_one_table_commit_runs_one_spark_job(spark, tmp_path):
+    """A commit's only Spark job is the data write: row counts come
+    from the parquet footers, and without stats_cols nothing is read
+    back. The manifest still records each file's rows."""
+    sc = spark.sparkContext
+    st = SnapshotTableStore(spark, str(tmp_path))
+    df = _df(spark, [(1, "a", "u", True), (2, "b", "u", True)])
+    group = "one-table-commit"
+    sc.setJobGroup(group, "append")
+    try:
+        st.append("store", df)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    [h] = st.history("store").collect()
+    assert h["n_rows_added"] == 2
+
+
+def test_engine_under_glob_metachar_root(spark, tmp_path):
+    """Every path the log engine hands to a Spark reader is escaped:
+    a store and a group rooted under 'run[2026]' append, read,
+    time-travel, serve the change feed and plan ranged reads."""
+    root = tmp_path / "run[2026]"
+    st = SnapshotTableStore(spark, str(root / "store"),
+                            stats_cols={"store": ["id_store"]})
+    st.append("store", _df(spark, [(1, "a", "u", True)]))
+    st.append("store", _df(spark, [(200, "b", "u", True)]))
+    assert st.read("store").count() == 2
+    assert st.read("store", snapshot_id=1).count() == 1
+    assert st.changes("store", after=1).count() == 1
+    assert [r["id_store"] for r in
+            st.read_range("store", "id_store", 0, 5).collect()] == [1]
+
+    grp = TableGroup(spark, str(root / "group"))
+    grp.append("t", _df(spark, [(1, "a", "u", True)]))
+    grp.append("t", _df(spark, [(2, "b", "u", True)]))
+    assert grp.read("t").count() == 2
+    assert grp.read("t", snapshot_id=1).count() == 1
+
+
+def test_append_once_parses_each_manifest_once(spark, tmp_path,
+                                               monkeypatch):
+    """The exactly-once check reads every manifest's txn, but a
+    claimed manifest is never rewritten: one log instance parses each
+    at most once, so N append_once calls cost O(N) parses, not O(N²)."""
+    parses = []
+    real_load = json.load
+
+    def counting_load(f, *a, **kw):
+        parses.append(getattr(f, "name", None))
+        return real_load(f, *a, **kw)
+
+    monkeypatch.setattr(snapshot_store.json, "load", counting_load)
+    st = SnapshotTableStore(spark, str(tmp_path))
+    df = _df(spark, [(1, "a", "u", True)])
+    for batch_id in range(20):
+        assert st.append_once("store", df, "app", batch_id)
+    assert not st.append_once("store", df, "app", 3)  # replay: no-op
+    assert len(parses) <= 20
+    assert st.read("store").count() == 20
 
 
 def test_changes_feed_and_overwrite_guard(spark, tmp_path):
@@ -610,11 +676,11 @@ def test_full_lakehouse_lifecycle_composes(spark, tmp_path):
     assert actions == ["append"] * 3 + ["overwrite", "overwrite"]
 
 
-# --- ADVICE r15 regressions ------------------------------------------------
+# --- schema discipline and read-pin regressions ---------------------------
 
 
 def test_append_once_validates_schema_against_head(spark, tmp_path):
-    """ADVICE r15: a divergent batch through append_once must fail
+    """A divergent batch through append_once must fail
     loud, not record its own schema as the table's read schema (which
     NULL-ed existing columns for every reader)."""
     st = SnapshotTableStore(spark, str(tmp_path))
@@ -642,7 +708,7 @@ def test_append_once_validates_schema_against_head(spark, tmp_path):
 
 
 def test_change_feed_crosses_schema_evolution_boundary(spark, tmp_path):
-    """ADVICE r15: changes() over a range straddling an additive
+    """changes() over a range straddling an additive
     merge_schema append must NULL-fill the older vintage, not raise."""
     st = SnapshotTableStore(spark, str(tmp_path))
     st.append("store", _df(spark, [(1, "a", "u", True)]))
@@ -659,8 +725,7 @@ def test_change_feed_crosses_schema_evolution_boundary(spark, tmp_path):
 
 
 def test_straddling_reads_pin_first_snapshot_single_table(spark, tmp_path):
-    """ADVICE r15 (high, group variant — same discipline here): a
-    second read of the table must not advance the pinned base past a
+    """The group's pin discipline, single-table: a second read of the table must not advance the pinned base past a
     concurrent commit; the overwrite derived from the FIRST read must
     fail loud."""
     a = SnapshotTableStore(spark, str(tmp_path), writer_id="a")
@@ -681,7 +746,7 @@ def test_straddling_reads_pin_first_snapshot_single_table(spark, tmp_path):
 
 
 def test_blind_retry_after_failed_overwrite_keeps_failing(spark, tmp_path):
-    """r16 review: a caller that catches ConcurrentWriteError and
+    """A caller that catches ConcurrentWriteError and
     retries the SAME stale derivation WITHOUT re-reading must keep
     failing loud — the failed commit invalidates the pin (sentinel),
     it does not clear it, so only an actual re-read re-arms
@@ -707,7 +772,7 @@ def test_blind_retry_after_failed_overwrite_keeps_failing(spark, tmp_path):
 
 
 def test_own_blind_append_does_not_advance_read_pin(spark, tmp_path):
-    """r16 ADVICE (medium): read pins base 1 -> writer B appends
+    """Read pins base 1 -> writer B appends
     (snapshot 2) -> own blind append claims snapshot 3. Advancing the
     pin to 3 would let an overwrite DERIVED FROM THE SNAPSHOT-1 READ
     validate clean against head 3 and silently clobber B's rows. The
@@ -743,11 +808,11 @@ def test_append_without_read_pin_keeps_blind_overwrite_contract(spark, tmp_path)
 
 
 def test_face_reinvocation_keeps_prior_lazy_frame_valid(spark):
-    """r16 ADVICE: the transaction-layer faces build scratch stores
-    under /tmp; a second same-process invocation used to rmtree the
-    FIRST invocation's store at start, silently rebinding (or
-    breaking) the first call's still-lazy DataFrame. Roots are now
-    keyed by an invocation counter: collect the first frame AFTER the
+    """The transaction-layer faces build scratch stores under /tmp; a
+    second same-process invocation must not rmtree the FIRST
+    invocation's store, which would silently rebind (or break) the
+    first call's still-lazy DataFrame. Roots are keyed by an
+    invocation counter: collect the first frame AFTER the
     second invocation ran and both must agree."""
     from pythondataingestionprocess_spark.plans.warehouse import (
         snapshot_change_feed,

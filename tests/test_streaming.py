@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
 from pythondataingestionprocess_spark.streaming import file_ingest, windows as sw
 
 EVENTS_SCHEMA = (
@@ -665,7 +666,7 @@ def test_streaming_dedup_against_signature_store(spark, tmp_path):
         (11, 2, "cross"),
     }
     # the store now holds signatures for all four docs
-    n_sig = spark.read.parquet(store + "/shingles").count()
+    n_sig = TableGroup(spark, store).read("shingles").count()
     assert n_sig == 4
 
 
@@ -700,10 +701,10 @@ def test_dedup_ingest_retry_is_idempotent(spark, tmp_path):
     replayed = spark.read.parquet(pairs_out + "/batch_id=0").collect()
     assert {(r.id_a, r.id_b, r.kind) for r in replayed} == {(1, 2, "within")}
     assert all(r.id_a != r.id_b for r in replayed)
-    # idempotent subdir overwrite: one signature row set, not two
-    shingles = spark.read.parquet(store + "/shingles")
+    # exactly-once commit: one signature row set, not two
+    shingles = TableGroup(spark, store).read("shingles")
     assert shingles.count() == 2
-    buckets = spark.read.parquet(store + "/buckets")
+    buckets = TableGroup(spark, store).read("buckets")
     assert buckets.groupBy("doc_id", "band").count().filter("count > 1").count() == 0
 
     # a later batch still sees exactly its true cross pairs, once each
@@ -1273,9 +1274,9 @@ def test_streaming_block_dedup_matches_batch_operator(spark, tmp_path):
     retention unioned across micro-batches must match
     block_dedup_retention on all docs at once. A same-batch duplicate
     block, a cross-batch duplicate, and a fresh doc are all exercised;
-    a manual RETRY of the last batch (after its store append landed)
-    must reproduce identical retention — the ingest_batch partition
-    exclusion at work."""
+    a manual RETRY of the last batch (after its store commit landed)
+    must reproduce identical retention — the ingest_batch exclusion
+    at work."""
     from pythondataingestionprocess_spark.operators.dedup import (
         block_dedup_retention,
     )
@@ -1322,8 +1323,8 @@ def test_streaming_block_dedup_matches_batch_operator(spark, tmp_path):
     assert got[2] == (2, 1, len(b3))  # within-batch dup dropped b1
     assert got[3] == (2, 0, 0)        # fully screened by the store
 
-    # retry the last batch: its own ingest_batch=1 hashes are in the
-    # store, but the exclusion makes the re-run reproduce batch output
+    # retry the last batch: its own batch-1 hashes are in the store,
+    # but the exclusion makes the re-run reproduce batch output
     batch1 = full.filter(F.col("doc_id").isin(3, 4)).localCheckpoint()
     fn(batch1, 1)
     retry = {
@@ -1336,63 +1337,44 @@ def test_streaming_block_dedup_matches_batch_operator(spark, tmp_path):
     # (16-byte binary md5), not xxhash64 — a 64-bit key has an
     # expected birthday collision at C4-scale block counts and would
     # silently drop a never-ingested block.
-    store_df = spark.read.parquet(str(tmp_path / "store" / "blocks"))
+    store_df = TableGroup(spark, store).read("blocks")
     assert dict(store_df.dtypes)["block_hash"] == "binary"
     key_lens = {r[0] for r in store_df.select(F.length("block_hash")).collect()}
     assert key_lens == {16}, key_lens
 
 
-def test_legacy_block_store_is_refused_with_actionable_error(spark, tmp_path):
-    """A store written by the older 64-bit key scheme
-    must fail FAST with rebuild instructions — not an AnalysisException
-    in the semi-join, and never a mixed-type append."""
-    import pytest as _pytest
-
-    from pythondataingestionprocess_spark.streaming.dedup_ingest import (
-        append_blocks_to_store,
-        block_screen_batch,
+def test_half_written_first_store_does_not_wedge_screen(
+        spark, tmp_path, monkeypatch):
+    """A crash during the very first store commit, after both tables'
+    data files land but before the claim, leaves no visible state:
+    the screen treats the store as empty (within-batch screening
+    only), and the retry commits normally so later batches see it."""
+    from pythondataingestionprocess_spark.pipeline.snapshot_store import (
+        _SnapshotLog,
     )
-
-    store = tmp_path / "store"
-    legacy = spark.createDataFrame([(123456789,)], "block_hash long")
-    legacy.write.parquet(str(store / "blocks"))
-
-    batch = spark.createDataFrame(
-        [(1, " ".join(f"w{i}" for i in range(10)))], "doc_id long, text string"
-    )
-    with _pytest.raises(RuntimeError, match="legacy block store"):
-        block_screen_batch(spark, batch, str(store))
-    with _pytest.raises(RuntimeError, match="legacy block store"):
-        append_blocks_to_store(batch, str(store))
-
-
-def test_half_written_first_store_does_not_wedge_screen(spark, tmp_path):
-    """A crash DURING the very first store
-    write leaves only the committer's _temporary dir — bare-existence
-    gating then wedges every retry on an unreadable parquet path. The
-    committed-part probe must treat it as 'no store yet' (within-batch
-    screening only) and the subsequent retry must complete normally."""
-    import os as _os
-
     from pythondataingestionprocess_spark.streaming import dedup_ingest as di2
 
+    def crash(self, record, next_id):
+        raise RuntimeError("crash before the claim")
+
     store = str(tmp_path / "store")
-    for sub in ("buckets", "shingles"):
-        _os.makedirs(_os.path.join(store, sub, "ingest_batch=0", "_temporary", "0"))
-        with open(
-            _os.path.join(store, sub, "ingest_batch=0", "_temporary", "0", "x"),
-            "wb",
-        ) as f:
-            f.write(b"partial")
     text = " ".join(f"tok{i}" for i in range(12))
     batch = spark.createDataFrame(
         [(1, text), (2, text)], "doc_id long, text string"
     )
+    with monkeypatch.context() as m:
+        m.setattr(_SnapshotLog, "claim", crash)
+        with pytest.raises(RuntimeError, match="before the claim"):
+            di2.append_to_store(batch, store, batch_id=0)
+    for table in ("buckets", "shingles"):  # orphan data, no manifest
+        assert os.listdir(os.path.join(store, table, "data"))
+    assert TableGroup(spark, store).current_snapshot() is None
     pairs = di2.screen_batch(spark, batch, store).collect()  # must not raise
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
     # the retry then lands committed state and later batches see it
     di2.append_to_store(batch, store, batch_id=0)
-    assert di2._store_has_committed(spark, _os.path.join(store, "buckets"))
+    assert TableGroup(spark, store).current_snapshot() == 1
+    assert TableGroup(spark, store).read("shingles").count() == 2
     cross = di2.screen_batch(
         spark,
         spark.createDataFrame([(3, text)], "doc_id long, text string"),
@@ -1478,9 +1460,9 @@ def test_streaming_embedding_dedup_matches_incremental_operator(spark, tmp_path)
 
 @pytest.mark.slow
 def test_compact_store_preserves_screen_results(spark, tmp_path):
-    """Store maintenance: after folding the per-batch ingest subdirs
-    into one consolidated layout, a later batch screens IDENTICALLY
-    (same cross pairs) and the file count shrinks."""
+    """Store maintenance: after folding the per-batch files into one
+    file set per table, a later batch screens IDENTICALLY (same cross
+    pairs) and the file count shrinks."""
     from pythondataingestionprocess_spark.streaming import dedup_ingest as di
 
     store = str(tmp_path / "store")
@@ -1631,197 +1613,6 @@ def test_embedding_store_dim_mismatch_fails_loudly(spark, tmp_path):
         ei._check_dim(with_null, "embedding", 32)
 
 
-def test_compact_store_folds_leftover_siblings(spark, tmp_path):
-    """The heal-defeat data-loss path: leftovers
-    are INPUTS — a mid-swap crash leaving history only in __old (or
-    __next) while the stream recreates a thin live table must fold
-    ALL copies together on the next compact_store run, never delete
-    them."""
-    from pythondataingestionprocess_spark.streaming import dedup_ingest as di
-
-    store = str(tmp_path / "store")
-    old_docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string",
-    )
-    di.append_to_store(old_docs, store, batch_id=0)
-
-    # simulate the crash: live buckets/shingles renamed aside to
-    # __old, live table then recreated by a post-crash batch
-    import os
-    import shutil
-
-    for table in ("buckets", "shingles"):
-        shutil.move(os.path.join(store, table), os.path.join(store, table + "__old"))
-    new_docs = spark.createDataFrame(
-        [(2, "one two three four five six seven eight")],
-        "doc_id long, text string",
-    )
-    di.append_to_store(new_docs, store, batch_id=1)
-
-    di.compact_store(spark, store)
-
-    # BOTH histories must screen: dups of doc 1 (pre-crash) and doc 2
-    probe = spark.createDataFrame(
-        [(10, "alpha beta gamma delta epsilon zeta eta theta"),
-         (11, "one two three four five six seven eight")],
-        "doc_id long, text string",
-    )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in di.screen_batch(spark, probe, store)
-        .filter("kind = 'cross'").collect()
-    }
-    assert got == {(10, 1), (11, 2)}
-
-
-def test_compact_store_recovers_orphaned_building_dir(spark, tmp_path):
-    """The __building staging dir is a compaction INPUT too: when a
-    crash left the only complete copy there (stale __next deleted,
-    promotion not reached) and the live table was recreated thin, the
-    next run must fold it back."""
-    import os
-    import shutil
-
-    from pythondataingestionprocess_spark.streaming import dedup_ingest as di
-
-    store = str(tmp_path / "store")
-    old_docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string",
-    )
-    di.append_to_store(old_docs, store, batch_id=0)
-    # simulate: history moved into __building (as the crash leaves it),
-    # live table recreated by a later batch
-    for table in ("buckets", "shingles"):
-        shutil.move(
-            os.path.join(store, table), os.path.join(store, table + "__building")
-        )
-    di.append_to_store(
-        spark.createDataFrame(
-            [(2, "one two three four five six seven eight")],
-            "doc_id long, text string",
-        ),
-        store,
-        batch_id=1,
-    )
-    di.compact_store(spark, store)
-    probe = spark.createDataFrame(
-        [(10, "alpha beta gamma delta epsilon zeta eta theta"),
-         (11, "one two three four five six seven eight")],
-        "doc_id long, text string",
-    )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in di.screen_batch(spark, probe, store)
-        .filter("kind = 'cross'").collect()
-    }
-    assert got == {(10, 1), (11, 2)}
-
-
-def test_compact_store_folds_multiple_staging_leftovers(spark, tmp_path):
-    """The consolidated copy must be durably
-    written BEFORE any staging leftover is deleted, so staging now
-    goes to a fresh uuid-suffixed __building_<id> name and EVERY
-    __building* leftover (legacy unsuffixed and suffixed alike) is a
-    compaction input. Two leftovers holding disjoint history halves
-    must both fold back, and no __building* dir may survive the run."""
-    import glob
-    import os
-    import shutil
-
-    from pythondataingestionprocess_spark.streaming import dedup_ingest as di
-
-    store = str(tmp_path / "store")
-    di.append_to_store(
-        spark.createDataFrame(
-            [(1, "alpha beta gamma delta epsilon zeta eta theta")],
-            "doc_id long, text string",
-        ),
-        store,
-        batch_id=0,
-    )
-    # first crash leftover: legacy unsuffixed __building name
-    for table in ("buckets", "shingles"):
-        shutil.move(
-            os.path.join(store, table), os.path.join(store, table + "__building")
-        )
-    di.append_to_store(
-        spark.createDataFrame(
-            [(2, "one two three four five six seven eight")],
-            "doc_id long, text string",
-        ),
-        store,
-        batch_id=1,
-    )
-    # second crash leftover: uuid-suffixed staging name
-    for table in ("buckets", "shingles"):
-        shutil.move(
-            os.path.join(store, table),
-            os.path.join(store, table + "__building_deadbeef"),
-        )
-    di.append_to_store(
-        spark.createDataFrame(
-            [(3, "nine ten eleven twelve thirteen fourteen fifteen sixteen")],
-            "doc_id long, text string",
-        ),
-        store,
-        batch_id=2,
-    )
-
-    di.compact_store(spark, store)
-
-    assert not glob.glob(os.path.join(store, "*__building*"))
-    probe = spark.createDataFrame(
-        [(10, "alpha beta gamma delta epsilon zeta eta theta"),
-         (11, "one two three four five six seven eight"),
-         (12, "nine ten eleven twelve thirteen fourteen fifteen sixteen")],
-        "doc_id long, text string",
-    )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in di.screen_batch(spark, probe, store)
-        .filter("kind = 'cross'").collect()
-    }
-    assert got == {(10, 1), (11, 2), (12, 3)}
-
-
-def test_compact_store_skips_debris_only_staging_dir(spark, tmp_path):
-    """A staging dir killed mid-write may hold only _temporary debris
-    (zero complete parquet files): compaction must skip it — not fail
-    schema inference — while still folding the real sources."""
-    import os
-
-    from pythondataingestionprocess_spark.streaming import dedup_ingest as di
-
-    store = str(tmp_path / "store")
-    di.append_to_store(
-        spark.createDataFrame(
-            [(1, "alpha beta gamma delta epsilon zeta eta theta")],
-            "doc_id long, text string",
-        ),
-        store,
-        batch_id=0,
-    )
-    debris = os.path.join(store, "buckets__building_0badc0de", "_temporary")
-    os.makedirs(debris)
-    with open(os.path.join(debris, "part-0000.parquet.crc"), "w") as f:
-        f.write("junk")
-
-    di.compact_store(spark, store)
-
-    probe = spark.createDataFrame(
-        [(10, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string",
-    )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in di.screen_batch(spark, probe, store)
-        .filter("kind = 'cross'").collect()
-    }
-    assert got == {(10, 1)}
-
-
 # ---- streaming edge-case regression pins -----------------------------
 
 
@@ -1858,13 +1649,10 @@ def test_scd2_enrich_open_ended_null_valid_to(spark):
 
 
 def test_compact_store_heals_under_glob_metachar_store_dir(spark, tmp_path):
-    """__building leftovers are found by LISTING the
-    parent dir — a Hadoop glob built from a store path containing
-    metacharacters ('run[2026]') would throw or silently match
-    nothing, orphaning the only complete history copy after the traced
-    crash sequence."""
-    import shutil
-
+    """A signature store under a path with glob metacharacters
+    ('run[2026]') commits, screens and compacts: every path the log
+    engine hands to a Spark reader is escaped, so no read raises
+    PATH_NOT_FOUND or silently reads nothing."""
     from pythondataingestionprocess_spark.streaming import dedup_ingest as di
 
     store = str(tmp_path / "run[2026]" / "store")
@@ -1873,30 +1661,28 @@ def test_compact_store_heals_under_glob_metachar_store_dir(spark, tmp_path):
         "doc_id long, text string",
     )
     di.append_to_store(old_docs, store, batch_id=0)
-    for table in ("buckets", "shingles"):
-        shutil.move(
-            os.path.join(store, table),
-            os.path.join(store, table + "__building_deadbeef"),
-        )
     new_docs = spark.createDataFrame(
         [(2, "one two three four five six seven eight")],
         "doc_id long, text string",
     )
     di.append_to_store(new_docs, store, batch_id=1)
-
-    di.compact_store(spark, store)
-
     probe = spark.createDataFrame(
         [(10, "alpha beta gamma delta epsilon zeta eta theta"),
          (11, "one two three four five six seven eight")],
         "doc_id long, text string",
     )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in di.screen_batch(spark, probe, store)
-        .filter("kind = 'cross'").collect()
-    }
-    assert got == {(10, 1), (11, 2)}
+
+    def cross_pairs():
+        return {
+            (r["id_a"], r["id_b"])
+            for r in di.screen_batch(spark, probe, store)
+            .filter("kind = 'cross'").collect()
+        }
+
+    assert cross_pairs() == {(10, 1), (11, 2)}
+    stats = di.compact_store(spark, store)
+    assert set(stats) == {"buckets", "shingles"}
+    assert cross_pairs() == {(10, 1), (11, 2)}
 
 
 def test_stateful_running_totals_late_batch_keeps_last_ts(spark, tmp_path):

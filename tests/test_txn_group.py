@@ -70,6 +70,24 @@ def test_crash_between_data_write_and_claim_is_invisible(spark, tmp_path):
         grp.read("operation")
 
 
+def test_txn_keyed_transaction_commits_once(spark, tmp_path):
+    """A transaction keyed by (app_id, batch_id) is the exactly-once
+    foreachBatch unit for a group: the replay of a committed batch
+    stages nothing, and another app's same batch id is its own."""
+    grp = TableGroup(spark, str(tmp_path))
+    for _ in range(2):  # the second pass is the replay
+        with grp.transaction(("app", 0)) as t:
+            t.append("purchase", _p(spark, [(1, 5.0)]))
+            t.append("operation", _op(spark, [(1, 7, 1)]))
+    assert t.snapshot_id is None
+    assert grp.current_snapshot() == 1
+    with grp.transaction(("other", 0)) as t:
+        t.append("purchase", _p(spark, [(2, 6.0)]))
+    assert t.snapshot_id == 2
+    assert grp.read("purchase").count() == 2
+    assert grp.read("operation").count() == 1
+
+
 def test_group_time_travel_and_per_table_replay(spark, tmp_path):
     grp = TableGroup(spark, str(tmp_path))
     with grp.transaction() as t1:
@@ -178,7 +196,7 @@ def test_group_vacuum_sweeps_orphans_and_superseded(spark, tmp_path):
     with grp.transaction() as t2:
         t2.overwrite("purchase", _p(spark, [(9, 1.0)]))
     # default vacuum spares the fresh orphans (possible in-flight
-    # transactions — ADVICE r15) but sweeps the manifest-referenced
+    # transactions) but sweeps the manifest-referenced
     # superseded dir immediately
     assert len(grp.vacuum(keep_last=1)) == 1
     removed = grp.vacuum(keep_last=1, orphan_retention_s=0)
@@ -249,11 +267,11 @@ def test_group_schema_evolution_additive(spark, tmp_path):
         grp.append("purchase", bad, merge_schema=True)
 
 
-# --- ADVICE r15 regressions ------------------------------------------------
+# --- read-pin, rebase and vacuum regressions --------------------------------
 
 
 def test_straddling_reads_pin_first_snapshot_not_last(spark, tmp_path):
-    """The lost update (ADVICE r15, high): A reads table X, writer B
+    """The lost update: A reads table X, writer B
     commits, A reads table Y (base must NOT advance to B's snapshot),
     A's overwrite-bearing transaction must fail loud — validating
     against the LAST read would let A silently clobber B's changes."""
@@ -281,7 +299,7 @@ def test_straddling_reads_pin_first_snapshot_not_last(spark, tmp_path):
 
 
 def test_rebased_append_revalidates_schema_against_new_head(spark, tmp_path):
-    """ADVICE r15: an append-only transaction that loses the claim race
+    """An append-only transaction that loses the claim race
     to a schema-EVOLVING commit must re-validate on rebase — recording
     the stale pre-evolution schema would silently drop the evolved
     column from every read."""
@@ -319,7 +337,7 @@ def test_rebased_append_revalidates_schema_against_new_head(spark, tmp_path):
 
 
 def test_fresh_orphan_survives_default_group_vacuum(spark, tmp_path):
-    """ADVICE r15: a data dir no manifest references may be an
+    """A data dir no manifest references may be an
     in-flight transaction (data lands before the claim) — default
     vacuum must not sweep it."""
     grp = TableGroup(spark, str(tmp_path))
@@ -331,7 +349,7 @@ def test_fresh_orphan_survives_default_group_vacuum(spark, tmp_path):
 
 
 def test_blind_retry_after_failed_group_txn_keeps_failing(spark, tmp_path):
-    """r16 review twin of the single-table sentinel test: a failed
+    """Group twin of the single-table sentinel test: a failed
     overwrite-bearing group transaction invalidates the group base —
     retrying the same stale staging without a re-read fails loud."""
     a = TableGroup(spark, str(tmp_path), writer_id="a")
@@ -354,10 +372,10 @@ def test_blind_retry_after_failed_group_txn_keeps_failing(spark, tmp_path):
 
 
 def test_append_only_txn_stales_group_read_pin(spark, tmp_path):
-    """r16 ADVICE (medium), group twin: an append-only transaction
-    used to reset the group read pin to None, so a following
-    overwrite staged from an EARLIER read skipped base validation
-    entirely and clobbered concurrent commits. The append-only commit
+    """Group twin of the pin-staling rule: an append-only transaction
+    that reset the group read pin to None would let a following
+    overwrite staged from an EARLIER read skip base validation
+    entirely and clobber concurrent commits. The append-only commit
     must stale a live pin instead; only a fresh read re-arms."""
     a = TableGroup(spark, str(tmp_path), writer_id="a")
     b = TableGroup(spark, str(tmp_path), writer_id="b")
@@ -379,7 +397,7 @@ def test_append_only_txn_stales_group_read_pin(spark, tmp_path):
 def test_vacuum_during_inflight_group_txn_real_process_contention(
     spark, tmp_path
 ):
-    """r16 VERDICT item 5: vacuum racing an IN-FLIGHT multi-table
+    """Vacuum racing an IN-FLIGHT multi-table
     transaction across REAL OS processes (the monkeypatched races pin
     protocol logic; this pins the filesystem story end-to-end).
 
