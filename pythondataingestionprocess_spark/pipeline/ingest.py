@@ -71,8 +71,6 @@ class IngestResult:
     purchases: DataFrame
     operations: DataFrame
     prices: DataFrame
-    # -1 when the batch ran with collect_metrics=False (streaming use:
-    # each count is a driver-side job launch per micro-batch).
     n_input_rows: int
     n_staged_rows: int
 
@@ -161,7 +159,6 @@ def stage_batch(
     compras: DataFrame,
     precios: DataFrame,
     store: ParquetTableStore,
-    collect_metrics: bool = True,
     verify_urls: bool = False,
     url_transport=None,
 ) -> IngestResult:
@@ -172,15 +169,13 @@ def stage_batch(
     ``Fch Entrga`` string) plus ``src_file``, ``row_idx``,
     ``Picture_URL``. ``precios``: FIXTURES.md §2 + ``row_idx``.
 
-    ``collect_metrics=False`` skips the two per-batch ``count()``
-    actions: they are cheap observability for file batches but add
-    two job launches per micro-batch under a high-trigger-rate stream.
-    The eager localCheckpoint stays — it is correctness (lineage must
-    not re-scan history tables after the upserts swap the underlying
-    parquet), not observability. Staging takes no ``current_date``:
-    SCD stamping happens in ingest_batch.
+    The two row counts (input, staged) are one ``count()`` each; the
+    staged count reads the eager localCheckpoint, which is correctness
+    (lineage must not re-scan history tables after the upserts swap
+    the underlying parquet). Staging takes no ``current_date``: SCD
+    stamping happens in ingest_batch.
     """
-    n_input = compras.count() if collect_metrics else -1
+    n_input = compras.count()
     # J1 enrichment (import_files_to_postgre.py:93-97): attach
     # Marca/Categoria from the price sheet. The reference's pandas
     # merge would duplicate rows on duplicate price-list names, but
@@ -232,7 +227,7 @@ def stage_batch(
             _q("Cant"), _q("C. Unit"), _q("purchase_date"),
         ),
     ).localCheckpoint(eager=True)
-    n_staged = rows.count() if collect_metrics else -1
+    n_staged = rows.count()
 
     # ---- dims -------------------------------------------------------
     # store: first occurrence wins (catalog-cache semantics,
@@ -395,7 +390,6 @@ def ingest_batch(
     precios: DataFrame,
     store: ParquetTableStore,
     current_date: date | None = None,
-    collect_metrics: bool = True,
     verify_urls: bool = False,
     url_transport=None,
 ) -> IngestResult:
@@ -403,14 +397,13 @@ def ingest_batch(
 
     Dims use insert-if-absent (catalog-cache semantics); facts append
     (post-dedup); price applies the SCD stamping. Each upsert is one
-    MERGE-shaped write — per-batch, not per-row. Pass
-    ``collect_metrics=False`` from high-rate streaming callers (see
-    stage_batch). ``verify_urls``/``url_transport`` opt into the
-    reference's live provider-link verification (see stage_batch).
+    MERGE-shaped write — per-batch, not per-row.
+    ``verify_urls``/``url_transport`` opt into the reference's live
+    provider-link verification (see stage_batch).
     """
     current_date = current_date or date.today()
     result = stage_batch(
-        compras, precios, store, collect_metrics,
+        compras, precios, store,
         verify_urls=verify_urls, url_transport=url_transport,
     )
     store.insert_if_absent("payment_type", rows_payment(result), ["payment_type"])
@@ -429,7 +422,6 @@ def ingest_batch_txn(
     precios: DataFrame,
     group,
     current_date: date | None = None,
-    collect_metrics: bool = True,
     verify_urls: bool = False,
     url_transport=None,
 ) -> IngestResult:
@@ -450,7 +442,7 @@ def ingest_batch_txn(
     """
     with group.transaction() as txn:
         return ingest_batch(
-            compras, precios, txn, current_date, collect_metrics,
+            compras, precios, txn, current_date,
             verify_urls=verify_urls, url_transport=url_transport,
         )
 

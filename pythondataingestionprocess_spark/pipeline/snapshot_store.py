@@ -350,8 +350,19 @@ class _SnapshotLog:
         schema = StructType.fromJson(json.loads(t["schema"]))
         if not t["dirs"]:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(
-            *[glob_escape(d) for d in t["dirs"]])
+        # Spark lists more than parallelPartitionDiscovery.threshold
+        # (default 32) paths with a parallel Spark job. The engine is
+        # local-FS only (its claim is an os.link), so that job buys
+        # nothing: raise the threshold around the read so the driver
+        # lists every live dir, then restore the session's value.
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        threshold = self.spark.conf.get(key)
+        self.spark.conf.set(key, str(max(len(t["dirs"]), int(threshold))))
+        try:
+            return self.spark.read.schema(schema).parquet(
+                *[glob_escape(d) for d in t["dirs"]])
+        finally:
+            self.spark.conf.set(key, threshold)
 
     # -- write side ------------------------------------------------------
 

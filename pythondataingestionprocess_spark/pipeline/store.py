@@ -72,10 +72,19 @@ class TableMerge:
         wins, which is the reference's last-write-wins whenever the
         caller stamps arrival order into a column.
         """
+        self.upsert_unique(
+            name, self._one_per_key(incoming, keys, order_col), keys
+        )
+
+    def upsert_unique(
+        self, name: str, incoming: DataFrame, keys: list[str]
+    ) -> None:
+        """:meth:`upsert` of rows already one per key — for a caller
+        that dedups once and uses the deduped rows for more than the
+        merge (the streaming JDBC sink persists and counts them)."""
         existing = self.read(name)
-        incoming = self._one_per_key(incoming, keys, order_col)
         merged = existing.join(
-            incoming.select(*keys).distinct(), keys, "left_anti"
+            incoming.select(*keys), keys, "left_anti"
         ).unionByName(incoming)
         self.overwrite(name, merged)
 

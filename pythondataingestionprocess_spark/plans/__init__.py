@@ -55,6 +55,7 @@ MAX_FACES = 180
 
 TOUCHED = (18, (
     "copurchase_triangles",
+    "dedup_cosine_incremental",
     "dedup_embedding_cosine",
     "dedup_groups_cc",
     "dedup_incremental_components",

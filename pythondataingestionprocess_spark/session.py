@@ -34,54 +34,61 @@ def default_parallelism() -> int:
         return os.cpu_count() or 8
 
 
-def get_spark(
-    app_name: str = "pythondataingestionprocess-spark",
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or fetch) the session.
-
-    ``shuffle_partitions`` defaults to the local core count — at real
-    cluster scale you would size this to ~2-3x total executor cores
-    and let AQE coalesce small post-shuffle partitions.
-    """
-    cpus = default_parallelism()
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+def sql_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The runtime-settable SQL confs of an engine session, defined
+    once: :func:`get_spark` builds with them, and the driver contract
+    (``__spark_entry__._tune``) sets them on a session it does not
+    own. ``shuffle_partitions`` defaults to the local core count — at
+    real cluster scale size it to ~2-3x total executor cores and let
+    AQE coalesce small post-shuffle partitions."""
+    return {
+        "spark.sql.shuffle.partitions": str(
+            shuffle_partitions or default_parallelism()
+        ),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # spill-awareness: 128 MiB scan splits keep a task's working set
         # well under executor memory even after decode amplification
         # (parquet → row ~2-4×); at the 100 TB target this is the knob
         # that bounds per-task memory together with AQE's
         # advisoryPartitionSizeInBytes for post-shuffle partitions
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(64 * 1024 * 1024))
-        # driver testdata stores events.ts as parquet TIMESTAMP(NANOS),
-        # which vanilla Spark rejects; read as long and convert in the
-        # catalog loader (see catalog.load_table).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(64 * 1024 * 1024),
+        # events.ts may be parquet TIMESTAMP(NANOS), which vanilla
+        # Spark rejects; read as long and convert in the catalog
+        # loader (see catalog.load_table).
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # A handful of day-rollup windows use a constant partition key
         # to declare a tiny single-partition window INTENTIONAL (one
         # row per day) instead of tripping WindowExec's
-        # no-partition-defined warning on every bench run. This rule
-        # would fold the constant away and resurrect the warning; its
-        # only effect is removing foldable window partitions, so
-        # excluding it costs nothing (VERDICT r2 item 7).
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions",
-        )
+        # no-partition-defined warning on every run. This rule would
+        # fold the constant away and resurrect the warning; its only
+        # effect is removing foldable window partitions, so excluding
+        # it costs nothing.
+        "spark.sql.optimizer.excludedRules": (
+            "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions"
+        ),
+    }
+
+
+def get_spark(
+    app_name: str = "pythondataingestionprocess-spark",
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or fetch) the session: :func:`sql_conf` plus the confs
+    only a new SparkContext can take, then ``extra_conf``."""
+    builder = (
+        SparkSession.builder.master(f"local[{default_parallelism()}]")
+        .appName(app_name)
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**sql_conf(shuffle_partitions), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

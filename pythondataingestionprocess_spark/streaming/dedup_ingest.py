@@ -6,9 +6,12 @@ database_utils.py:128-145).
 Each micro-batch of incoming documents is:
 
 1. screened WITHIN the batch (`minhash_lsh_pairs` on the batch alone);
-2. screened AGAINST EVERYTHING PREVIOUSLY INGESTED via a band-bucket
-   equi-join with the store — corpus×corpus work is never repeated, so
-   the marginal cost of a batch stays proportional to the batch;
+2. screened AGAINST EVERYTHING PREVIOUSLY INGESTED by the batch
+   incremental operator, `minhash_lsh_pairs_incremental`, with the
+   store's committed tables as its corpus side — the streaming query
+   is the incremental form of the batch query, not a copy of it.
+   Corpus×corpus work is never repeated, so the marginal cost of a
+   batch stays proportional to the batch;
 3. appended to the store (its band buckets + its distinct-shingle
    arrays), making it "corpus" for every later batch.
 
@@ -30,10 +33,10 @@ A micro-batch's store write is ONE group commit keyed by
 ``(app_id, batch_id)``: both tables land together or not at all, and
 the replay of a committed batch commits nothing. Pair output lands in
 a ``batch_id=N`` subdir written with ``overwrite``, so a replay
-replaces its own output. A screen reads both tables at one snapshot
-and anti-joins the current batch's own ids out of the store side (a
-replay after the commit would otherwise screen the batch against
-itself); ``id_a != id_b`` guards self-pairs.
+replaces its own output. A screen reads both tables at one snapshot;
+the incremental operator never makes a corpus row whose id is in the
+batch a candidate, so a replay after the commit does not screen the
+batch against itself.
 """
 
 from __future__ import annotations
@@ -46,72 +49,31 @@ from pyspark.sql import functions as F
 from pythondataingestionprocess_spark.operators import dedup as dd
 from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
 
-_BANDS = 16
-_NUM_HASHES = 64
-_SHINGLE_N = 3
-_SEED = 42
+# the one signature scheme of the store, its probes and its appends
+_LSH = dict(shingle_n=3, num_hashes=64, bands=16, seed=42)
 # the app id of each store's exactly-once commits: one store belongs
 # to one stream checkpoint, whose batch ids it records
 _APP_ID = "dedup_batch_fn"
 _BLOCK_APP_ID = "block_dedup_batch_fn"
 
 
-def capped_store_candidates(
-    store_banded: DataFrame,
-    new_banded: DataFrame,
-    batch_ids: DataFrame,
-    bucket_keys: list[str],
+def _batch_frames(
+    batch_df: DataFrame,
     id_col: str,
-    cap: int,
-) -> DataFrame:
-    """(id_a=new, id_b=store) candidates from a batch's bucket
-    membership against a PERSISTENT store's, with the same per-bucket
-    min-id cap as the batch operators — an uncapped store join would
-    reintroduce the mega-bucket expansion ``bucket_cap`` exists to
-    bound.
-
-    Store-shuffle discipline preserved: the store side is first
-    SEMI-pruned map-side to the batch's bucket keys (broadcast — at
-    most batch×tables keys) and anti-joined against the batch's own
-    ids (retry hygiene), so only the matched subset — bounded by the
-    store rows in the batch's buckets, not the store — reaches the
-    capping window. Within a probed bucket that subset IS the full
-    bucket membership, so the min-id ranking (and therefore the kept
-    candidate set) is identical to the batch incremental operators'
-    ``_incremental_bucket_candidates``."""
-    from pyspark.sql import Window as W
-
-    batch_buckets = new_banded.select(*bucket_keys).distinct()
-    matched = (
-        store_banded
-        .join(F.broadcast(batch_buckets), bucket_keys, "left_semi")
-        .join(
-            F.broadcast(batch_ids.select(F.col("id_b").alias(id_col))),
-            id_col,
-            "left_anti",
+    text_col: str,
+    banded: DataFrame | None = None,
+    shingles: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The batch's (band buckets, shingle arrays) — the store's two
+    tables and the inputs of both screen halves — each built unless
+    supplied."""
+    if banded is None:
+        banded = dd._signatures_banded(batch_df, id_col, text_col, **_LSH)
+    if shingles is None:
+        shingles = dd.shingle_array_table(
+            batch_df, id_col, text_col, _LSH["shingle_n"]
         )
-    )
-    capped = (
-        # an id appended by more than one batch (or an ad-hoc append)
-        # leaves duplicate (id, bucket) rows — dedup BEFORE ranking so
-        # copies never consume cap slots
-        matched.dropDuplicates([id_col, *bucket_keys])
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                W.partitionBy(*bucket_keys).orderBy(F.col(id_col))
-            ),
-        )
-        .filter(F.col("_rn") <= cap)
-        .select(F.col(id_col).alias("id_b"), *bucket_keys)
-    )
-    return (
-        new_banded.select(F.col(id_col).alias("id_a"), *bucket_keys)
-        .join(capped, bucket_keys)
-        .select("id_a", "id_b")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .distinct()
-    )
+    return banded, shingles
 
 
 def screen_batch(
@@ -125,83 +87,53 @@ def screen_batch(
     banded: DataFrame | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-dup pairs for one incoming batch: within-batch pairs plus
-    cross pairs against the signature store (a store with no commits
-    → within-batch only). Returns (id_a, id_b, jaccard, kind) where
-    ``kind`` is 'within' or 'cross'; for cross pairs id_a is the NEW
-    doc. Does NOT mutate the store — callers append via
-    :func:`append_to_store` after consuming the result (see module
-    docstring for retry semantics). Cross candidates are per-bucket
-    capped exactly like the batch operators (see
-    :func:`capped_store_candidates`).
+    """Near-dup pairs for one incoming batch: within-batch pairs
+    (`minhash_lsh_pairs`) plus cross pairs against the signature store
+    (a store with no commits → within-batch only). Returns (id_a,
+    id_b, jaccard, kind) where ``kind`` is 'within' or 'cross'; for
+    cross pairs id_a is the NEW doc. Does NOT mutate the store —
+    callers append via :func:`append_to_store` after consuming the
+    result (see module docstring for retry semantics).
+
+    The cross pairs ARE `minhash_lsh_pairs_incremental` with the
+    store's ``buckets`` / ``shingles`` tables, read at one snapshot,
+    as its corpus frames: the same per-bucket ``bucket_cap`` rule,
+    the same candidate prune and the same verify as the batch face.
+    ``bucket_cap`` also caps the within-batch screen, so the tuning
+    knob applies to the whole screen.
 
     ``banded`` / ``shingles`` optionally supply the batch's
     `_signatures_banded` / `shingle_array_table` frames so the
     dominant tokenize+shingle+minhash CPU runs ONCE per micro-batch
-    instead of once here, once for the cross probe, and once again in
-    append_to_store (the block path's blocks_df threads the same
-    way)."""
-    if banded is None:
-        banded = dd._signatures_banded(
-            batch_df, id_col, text_col,
-            shingle_n=_SHINGLE_N, num_hashes=_NUM_HASHES, bands=_BANDS,
-            seed=_SEED,
-        )
-    if shingles is None:
-        shingles = dd.shingle_array_table(
-            batch_df, id_col, text_col, _SHINGLE_N
-        )
+    instead of once per screen half and once again in append_to_store
+    (the block path's blocks_df threads the same way)."""
+    banded, shingles = _batch_frames(
+        batch_df, id_col, text_col, banded, shingles
+    )
+    kw = dict(_LSH, threshold=threshold, bucket_cap=bucket_cap)
     within = dd.minhash_lsh_pairs(
-        batch_df, id_col, text_col,
-        shingle_n=_SHINGLE_N, num_hashes=_NUM_HASHES, bands=_BANDS,
-        threshold=threshold, seed=_SEED,
-        # the SAME cap as the cross-store probe, so the tuning knob
-        # applies to the whole screen
-        bucket_cap=bucket_cap,
-        banded=banded, doc_sh=shingles,
+        batch_df, id_col, text_col, banded=banded, doc_sh=shingles, **kw
     ).withColumn("kind", F.lit("within"))
     store = TableGroup(spark, store_dir)
     sid = store.current_snapshot()
     if sid is None:
         return within  # first batch: nothing committed yet
-    # Retry hygiene: a crash between the store commit and the
-    # checkpoint commit replays the batch with its own signatures
-    # already in the store; capped_store_candidates anti-joins the
-    # batch's own ids out of the store side and caps per-bucket
-    # expansion.
-    batch_ids = batch_df.select(F.col(id_col).alias("id_b")).distinct()
-    store_buckets = store.read("buckets", sid).select(
-        id_col, "band", "band_hash"
+    cross = dd.minhash_lsh_pairs_incremental(
+        None, batch_df, id_col, text_col,
+        corpus_banded=store.read("buckets", sid),
+        corpus_sh=store.read("shingles", sid),
+        new_banded=banded, new_sh=shingles, **kw,
     )
-    candidates = capped_store_candidates(
-        store_buckets, banded, batch_ids,
-        ["band", "band_hash"], id_col, bucket_cap,
+    return within.unionByName(
+        cross.select(
+            F.col("new_id").alias("id_a"), F.col("corpus_id").alias("id_b"),
+            "jaccard",
+        )
+        # an id the store holds twice (two ad-hoc appends) verifies
+        # against both of its shingle rows
+        .dropDuplicates(["id_a", "id_b"])
+        .withColumn("kind", F.lit("cross"))
     )
-    # DataFrame reuse is NOT common-subexpression elimination: without
-    # this, cand_ids below re-evaluates the whole band-probe join over
-    # the store buckets a second time inside the semi-join. The
-    # candidate set is batch-proportional (ids only), so an eager
-    # localCheckpoint materializes it once cheaply — same pattern as
-    # dedup_batch_fn's read-once batch_df.
-    candidates = candidates.localCheckpoint(eager=True)
-    sh_new = shingles.withColumnRenamed(id_col, "id_a")
-    # Semi-prune the store's shingle table to candidate ids BEFORE the
-    # verify join: the store side carries wide shingle arrays, and an
-    # unpruned equi-join shuffles every stored payload once the
-    # candidate side outgrows the broadcast threshold. The semi-join
-    # moves only ids; the verify join then shuffles matched payloads
-    # alone — at a 100 TB store the match set is batch-proportional,
-    # so payload movement stays bounded by the batch, not the corpus.
-    cand_ids = candidates.select("id_b").distinct()
-    sh_store = (
-        store.read("shingles", sid)
-        .select(F.col(id_col).alias("id_b"), "sh")
-        .join(cand_ids, "id_b", "left_semi")
-    )
-    cross = dd.verify_jaccard_pairs(
-        candidates, sh_new, sh_store, "id_a", "id_b", threshold
-    ).dropDuplicates(["id_a", "id_b"]).withColumn("kind", F.lit("cross"))
-    return within.unionByName(cross)
 
 
 def append_to_store(
@@ -220,18 +152,13 @@ def append_to_store(
     committed batch commits nothing. Without ``batch_id``
     (ad-hoc/backfill use) it is a plain append. ``banded`` /
     ``shingles`` reuse precomputed frames (see screen_batch)."""
-    buckets = banded if banded is not None else dd._signatures_banded(
-        batch_df, id_col, text_col,
-        shingle_n=_SHINGLE_N, num_hashes=_NUM_HASHES, bands=_BANDS, seed=_SEED,
+    banded, shingles = _batch_frames(
+        batch_df, id_col, text_col, banded, shingles
     )
-    if shingles is None:
-        shingles = dd.shingle_array_table(
-            batch_df, id_col, text_col, _SHINGLE_N
-        )
     txn = None if batch_id is None else (_APP_ID, batch_id)
     store = TableGroup(batch_df.sparkSession, store_dir)
     with store.transaction(txn) as t:
-        t.append("buckets", buckets)
+        t.append("buckets", banded)
         t.append("shingles", shingles)
 
 
@@ -261,14 +188,10 @@ def dedup_batch_fn(
         # batch-proportional (16 bucket rows / one distinct-shingle
         # array per doc), so eager materialization is bounded by the
         # batch.
-        banded = dd._signatures_banded(
-            batch_df, id_col, text_col,
-            shingle_n=_SHINGLE_N, num_hashes=_NUM_HASHES, bands=_BANDS,
-            seed=_SEED,
-        ).localCheckpoint(eager=True)
-        shingles = dd.shingle_array_table(
-            batch_df, id_col, text_col, _SHINGLE_N
-        ).localCheckpoint(eager=True)
+        banded, shingles = (
+            f.localCheckpoint(eager=True)
+            for f in _batch_frames(batch_df, id_col, text_col)
+        )
         pairs = screen_batch(
             spark, batch_df, store_dir, id_col, text_col, threshold,
             bucket_cap=bucket_cap, banded=banded, shingles=shingles,

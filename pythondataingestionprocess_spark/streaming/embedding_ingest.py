@@ -8,10 +8,11 @@ Each micro-batch of incoming vectors is:
 
 1. screened WITHIN the batch (``cosine_near_dup_pairs`` on the batch
    alone);
-2. screened AGAINST EVERYTHING PREVIOUSLY INGESTED via a
-   (table, bucket) equi-join with the store — corpus×corpus work is
-   never repeated, so the marginal cost of a batch stays proportional
-   to the batch;
+2. screened AGAINST EVERYTHING PREVIOUSLY INGESTED by the batch
+   incremental operator, ``cosine_near_dup_pairs_incremental``, with
+   the store's committed tables as its corpus side — corpus×corpus
+   work is never repeated, so the marginal cost of a batch stays
+   proportional to the batch;
 3. appended to the store (its bucket membership + its raw vectors),
    making it "corpus" for every later batch.
 
@@ -29,11 +30,11 @@ Scale/failure semantics are IDENTICAL to dedup_ingest (see its module
 docstring): bucket the ``vec_buckets`` table BY (table, bucket) on a
 metastore for a co-located candidate join; a micro-batch's store
 write is one commit keyed by ``(app_id, batch_id)``, so a replayed
-batch commits nothing; the batch's own ids are anti-joined out of the
-store side so a replay after the commit cannot screen a batch
-against itself; the store's vector payloads are semi-pruned to
-candidate ids before the verify join so payload movement is bounded
-by the batch, not the corpus.
+batch commits nothing; the incremental operator never makes a store
+row whose id is in the batch a candidate, so a replay after the
+commit cannot screen a batch against itself, and it prunes the
+store's vectors to candidate ids before the verify join, so payload
+movement is bounded by the batch, not the corpus.
 """
 
 from __future__ import annotations
@@ -48,9 +49,6 @@ from pythondataingestionprocess_spark.operators.similarity import (
     hyperplane_bucket_rows,
 )
 from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
-from pythondataingestionprocess_spark.streaming.dedup_ingest import (
-    capped_store_candidates,
-)
 
 _DIM = 64
 _BITS = 12
@@ -132,57 +130,45 @@ def screen_batch(
     → within-batch only). Returns (id_a, id_b, cos, kind) with ``kind``
     'within' or 'cross'; for cross pairs id_a is the NEW vector. Does
     NOT mutate the store — append via :func:`append_to_store` after
-    consuming the result. Cross candidates are per-bucket capped
-    exactly like the batch operators (shared
-    :func:`dedup_ingest.capped_store_candidates` — within a probed
-    bucket the matched store subset IS the full bucket membership, so
-    the kept set equals ``cosine_near_dup_pairs_incremental``'s)."""
-    from pythondataingestionprocess_spark.functions.vectors import cosine
+    consuming the result.
 
+    The cross pairs ARE ``cosine_near_dup_pairs_incremental`` with the
+    store's ``vec_buckets`` / ``vectors`` tables, read at one
+    snapshot, as its corpus side: the same per-bucket ``bucket_cap``
+    rule, candidate prune and verify as the batch face. ``bucket_cap``
+    also caps the within-batch screen. ``banded`` optionally supplies
+    the batch's bucket rows (one hyperplane matmul per batch, shared
+    by both screen halves and the store append)."""
     store = TableGroup(spark, store_dir)
     sid = store.current_snapshot()
     if sid is not None:
         _require_store_dim(store, sid, dim, store_dir)
     if banded is None:
         banded = _banded(batch_df, id_col, vec_col, dim)
-    within = dd.cosine_near_dup_pairs(
-        batch_df, id_col, vec_col,
+    kw = dict(
         threshold=threshold, dim=dim, bits_per_table=_BITS,
-        n_tables=_TABLES, seed=_SEED,
-        # the SAME cap as the cross-store probe, so the tuning knob
-        # applies to the whole screen
-        bucket_cap=bucket_cap,
-        # one hyperplane matmul per batch, shared with the cross probe
-        # and the store append
-        banded=banded,
+        n_tables=_TABLES, seed=_SEED, bucket_cap=bucket_cap,
+    )
+    within = dd.cosine_near_dup_pairs(
+        batch_df, id_col, vec_col, banded=banded, **kw
     ).withColumn("kind", F.lit("within"))
     if sid is None:
         return within  # first batch: nothing committed yet
-    batch_ids = batch_df.select(F.col(id_col).alias("id_b")).distinct()
-    store_buckets = store.read("vec_buckets", sid).select(
-        id_col, "table", "bucket"
+    cross = dd.cosine_near_dup_pairs_incremental(
+        store.read("vectors", sid), batch_df, id_col, vec_col,
+        corpus_banded=store.read("vec_buckets", sid), new_banded=banded,
+        **kw,
     )
-    candidates = capped_store_candidates(
-        store_buckets, banded, batch_ids,
-        ["table", "bucket"], id_col, bucket_cap,
-    ).localCheckpoint(eager=True)  # probed twice below (reuse != CSE)
-    va = batch_df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    cand_ids = candidates.select("id_b").distinct()
-    vb = (
-        store.read("vectors", sid)
-        .select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-        .join(cand_ids, "id_b", "left_semi")
-    )
-    cross = (
-        candidates.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cos", cosine("va", "vb"))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
+    return within.unionByName(
+        cross.select(
+            F.col("new_id").alias("id_a"), F.col("corpus_id").alias("id_b"),
+            "cos",
+        )
+        # an id the store holds twice (two ad-hoc appends) verifies
+        # against both of its vector rows
         .dropDuplicates(["id_a", "id_b"])
         .withColumn("kind", F.lit("cross"))
     )
-    return within.unionByName(cross)
 
 
 def append_to_store(
@@ -227,8 +213,8 @@ def embedding_dedup_batch_fn(
     """foreachBatch factory: screen → write pairs (idempotent
     per-batch subdir) → commit bucket membership + vectors once per
     batch id. The screen needs no batch-id store exclusion: the
-    batch's own ids are anti-joined out of the store side inside
-    screen_batch, which covers the replay of a committed batch.
+    incremental operator never pairs a batch id with its own store
+    copy, which covers the replay of a committed batch.
     ``dim`` must match the embedding model; every batch is checked
     up-front (min AND max vector size) with a clear error, and the
     store persists its dimension so a redeploy with a different model

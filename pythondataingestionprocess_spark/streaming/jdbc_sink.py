@@ -200,10 +200,12 @@ class StreamingJdbcSink:
         if self._committed(batch_id):
             return  # durably done — checkpoint-recovery replay
         if self.mode == "upsert":
+            # the batch's one dedup: both writes and the ledger count
+            # read these persisted rows
             incoming = batch_df.dropDuplicates(self.keys).persist()
             try:
                 if self.store.exists(self.table):
-                    self.store.upsert(self.table, incoming, self.keys)
+                    self.store.upsert_unique(self.table, incoming, self.keys)
                 else:
                     # first batch bootstraps the table (store.read's
                     # typed empty-frame fallback only knows the

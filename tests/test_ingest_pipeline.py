@@ -311,21 +311,6 @@ def test_store_upsert_order_col_deterministic_winner(spark, store):
     assert store.read("store").count() == 2
 
 
-def test_stage_batch_metrics_optional(spark, tmp_path):
-    """collect_metrics=False must skip the per-batch count() actions
-    (sentinel -1) while staging identical frames (VERDICT r1 item 7)."""
-    store = ParquetTableStore(spark, str(tmp_path / "warehouse"))
-    compras = make_compras(spark, [compras_row(desc="A", liga=AMZ)])
-    precios = make_precios(spark, [])
-    with_m = stage_batch(compras, precios, store)
-    without_m = stage_batch(compras, precios, store,
-                            collect_metrics=False)
-    assert with_m.n_input_rows >= 0 and with_m.n_staged_rows >= 0
-    assert without_m.n_input_rows == -1 and without_m.n_staged_rows == -1
-    assert sorted(without_m.purchases.columns) == sorted(with_m.purchases.columns)
-    assert without_m.purchases.count() == with_m.purchases.count()
-
-
 def test_verify_url_statuses_probes_only_the_miss_set(spark, tmp_path):
     """r7 VERDICT item 7: the live verify_url face. Known urls pass
     through with their stored status (never re-probed — proven by a

@@ -238,6 +238,37 @@ def test_cosine_near_dup_incremental_bucket_cap_keeps_anchor(spark):
     assert got == {(9000, i) for i in range(4)}
 
 
+def test_incremental_operators_emit_no_self_pair(spark):
+    """A corpus and a batch that share an id: the corpus copy of that
+    id is no candidate at all — neither a self pair for the shared id
+    nor a pair for any other new id — on both incremental operators."""
+    import numpy as np
+
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = "doc_id long, text string"
+    corpus = spark.createDataFrame([(1, text), (2, text)], docs)
+    new = spark.createDataFrame([(2, text), (3, text)], docs)
+    got = sorted(
+        (r.new_id, r.corpus_id)
+        for r in dd.minhash_lsh_pairs_incremental(
+            corpus, new, "doc_id", "text"
+        ).collect()
+    )
+    assert got == [(2, 1), (3, 1)]
+
+    v = [float(x) for x in np.random.default_rng(3).standard_normal(64)]
+    vecs = "vec_id long, embedding array<float>"
+    corpus = spark.createDataFrame([(1, v), (2, v)], vecs)
+    new = spark.createDataFrame([(2, v), (3, v)], vecs)
+    got = sorted(
+        (r.new_id, r.corpus_id)
+        for r in dd.cosine_near_dup_pairs_incremental(
+            corpus, new, "vec_id", "embedding"
+        ).collect()
+    )
+    assert got == [(2, 1), (3, 1)]
+
+
 def test_bpe_token_count_known_strings(spark):
     from pythondataingestionprocess_spark.functions.text import bpe_token_count
 

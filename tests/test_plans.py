@@ -210,15 +210,19 @@ def test_packing_greedy_single_python_node_narrow_input(spark):
 
 def test_entry_wrapper_applies_session_tuning(spark):
     # __spark_entry__ wraps every query callable with runtime session
-    # tuning (the r1 driver owns a vanilla session; this defense is why
-    # the correctness pass fits its budget — do not regress it)
+    # tuning (the driver owns a vanilla session; this defense is why
+    # the correctness pass fits its budget — do not regress it): every
+    # key of the one session definition, sql_conf, is applied
     import __spark_entry__ as e
+    from pythondataingestionprocess_spark.session import sql_conf
 
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 20))
     e._TUNED.discard(spark.sparkContext.applicationId)
     e.queries()["projection_narrow"](spark, SF_DIR).count()
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    for k, v in sql_conf().items():
+        assert spark.conf.get(k) == v, k
 
 
 # ---------------------------------------------------------------- r4 guards

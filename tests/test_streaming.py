@@ -1532,6 +1532,32 @@ def test_streaming_screen_caps_megabucket_expansion(spark, tmp_path):
     assert got == {(9000, i) for i in range(4)}
 
 
+def test_store_id_appended_twice_takes_one_cap_place(spark, tmp_path):
+    """Two ad-hoc appends (no batch_id) of one doc leave its bucket
+    rows in the store twice; in each bucket's min-id ranking the doc
+    still takes only one of the ``bucket_cap`` places, and its cross
+    pair is emitted once."""
+    from pythondataingestionprocess_spark.streaming import dedup_ingest as di
+
+    clone = "exact same boilerplate page body repeated verbatim again"
+    schema = "doc_id long, text string"
+    store = str(tmp_path / "store")
+    twice = spark.createDataFrame([(0, clone)], schema)
+    di.append_to_store(twice, store)
+    di.append_to_store(twice, store)
+    di.append_to_store(
+        spark.createDataFrame([(i, clone) for i in range(1, 10)], schema),
+        store,
+    )
+    probe = spark.createDataFrame([(9000, clone)], schema)
+    got = sorted(
+        (r["id_a"], r["id_b"])
+        for r in di.screen_batch(spark, probe, store, bucket_cap=3)
+        .filter("kind = 'cross'").collect()
+    )
+    assert got == [(9000, 0), (9000, 1), (9000, 2)]
+
+
 def test_streaming_screen_capped_set_equals_incremental_operator(spark, tmp_path):
     """The docstring claim pinned: under an ACTIVE cap, the streaming
     screen's cross pairs equal minhash_lsh_pairs_incremental's with

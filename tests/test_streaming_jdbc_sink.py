@@ -90,6 +90,38 @@ def test_upsert_mode_merges_and_replays(spark, store):
     assert _rows(store, "sink_state") == [(1, "a"), (2, "B"), (3, "c")]
 
 
+def test_upsert_batch_is_deduped_once(spark, store, monkeypatch):
+    """An upsert micro-batch is deduped once, before it is persisted:
+    the merge that replaces the table runs no second dedup aggregate
+    over the persisted batch, and the ledger still records the
+    post-dedup row count."""
+    sink = StreamingJdbcSink(
+        store, "sink_state", sink_id="s3", mode="upsert", keys=["id"]
+    )
+    sink(spark.createDataFrame([(1, "a")], ROWS_SCHEMA), 0)  # bootstrap
+    merged = []
+    overwrite = store.overwrite
+
+    def spy(name, df):
+        merged.append(df)
+        overwrite(name, df)
+
+    monkeypatch.setattr(store, "overwrite", spy)
+    sink(spark.createDataFrame([(2, "b"), (2, "b"), (3, "c")], ROWS_SCHEMA), 1)
+
+    def aggregates(plan):
+        kids = plan.children()
+        return (plan.getClass().getSimpleName() == "Aggregate") + sum(
+            aggregates(kids.apply(i)) for i in range(kids.size())
+        )
+
+    [df] = merged
+    assert aggregates(df._jdf.queryExecution().optimizedPlan()) == 0
+    assert _rows(store, "sink_state") == [(1, "a"), (2, "b"), (3, "c")]
+    ledger = store.read(LEDGER_TABLE).filter("sink_id = 's3'").collect()
+    assert {(r["batch_id"], r["n_rows"]) for r in ledger} == {(0, 1), (1, 2)}
+
+
 def test_two_sinks_share_the_ledger_without_collisions(spark, store):
     a = StreamingJdbcSink(store, "sink_a", sink_id="qa")
     b = StreamingJdbcSink(store, "sink_b", sink_id="qb")

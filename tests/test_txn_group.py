@@ -40,6 +40,29 @@ def test_three_table_txn_is_one_commit(spark, tmp_path):
     assert len(h) == 3 and {r["snapshot_id"] for r in h} == {1}
 
 
+def test_read_of_many_commits_runs_no_listing_job(spark, tmp_path):
+    """A table with more live dirs than Spark's parallel-listing
+    threshold (32) is read without a Spark job — the paths are listed
+    on the driver — and the session's threshold is left as found."""
+    sc = spark.sparkContext
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    threshold = spark.conf.get(key)
+    grp = TableGroup(spark, str(tmp_path))
+    for i in range(40):
+        grp.append("purchase", _p(spark, [(i, float(i))]))
+    group = "many-dirs-read"
+    sc.setJobGroup(group, "read")
+    try:
+        df = grp.read("purchase")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert spark.conf.get(key) == threshold
+    assert df.count() == 40
+
+
 def test_exception_inside_txn_commits_nothing(spark, tmp_path):
     grp = TableGroup(spark, str(tmp_path))
     grp.overwrite("purchase", _p(spark, [(1, 5.0)]))
