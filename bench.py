@@ -19,7 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pythondataingestionprocess_spark.plans import REGISTRY  # noqa: E402
-from pythondataingestionprocess_spark.session import get_spark  # noqa: E402
+from pythondataingestionprocess_spark.session import default_parallelism, get_spark  # noqa: E402
 
 # Representative headline set — scan/filter/join/agg/window/dedup/
 # similarity coverage. Extend as operators land.
@@ -322,12 +322,10 @@ def run_sweep(spark, sf_dir: str, names, plan_fn, sf) -> dict:
     load_end = _loadavg_1m()
 
     # SPARK_GRAFT_CPUS is the sweep's own parallelism; absent that,
-    # the PHYSICAL core count is the contention baseline — a
+    # the CPUs this process may run on are the contention baseline — a
     # hardcoded 32 would classify a fully-contended 8-core host as
     # clean
-    cores = int(
-        os.environ.get("SPARK_GRAFT_CPUS", 0) or os.cpu_count() or 32
-    )
+    cores = default_parallelism()
     noise = host_noise_verdict(calib, calib_end, load_start, load_end, cores)
     total = round(sum(timings.values()), 3)
     subset = round(sum(timings[n] for n in R1_SUBSET if n in timings), 3)

@@ -561,44 +561,46 @@ def _cross_bucket_candidates(
     one per-bucket cap rule of every new-against-corpus probe (both
     incremental operators, and through them both streaming screens).
 
-    1. The corpus rows are semi-joined against the new side's distinct
-       bucket keys, broadcast (at most batch × tables keys), so only
-       the matched buckets reach the ranking window. Within a probed
-       bucket the matched rows are its whole membership, so pruning
-       first changes no kept id.
+    1. The new side is read once: grouped to one row per bucket with
+       its member ids, broadcast (at most batch × tables rows), and
+       inner-joined to the corpus rows. The join both prunes the
+       corpus to the probed buckets, so only those reach the ranking
+       window, and carries each bucket's new ids to the pairs. Within
+       a probed bucket the matched rows are its whole membership, so
+       pruning first changes no kept id. Each ranked row carries its
+       bucket's new-id array; for caps up to
+       ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000) Spark
+       plans a partial ``WindowGroupLimit`` that keeps at most ``cap``
+       rows per bucket and map task before the window's shuffle.
     2. The new side's own ids (``new_ids``, one ``id_col`` column —
        read from the new rows, not their buckets, so the signature
        stage is not run again for them) are anti-joined out of the
        corpus side, broadcast: a corpus copy of a new id (a replayed
        stream batch whose store commit landed) is never a candidate
        and takes no cap place.
-    3. Duplicate (id, bucket) rows (an id appended twice) are dropped
-       before ranking, so a copy never takes a second place.
-    4. The first ``cap`` ids per bucket, ranked by id, are kept: a
-       degenerate mega-bucket contributes at most ``cap`` candidates
-       per new doc, and its kept min-id members preserve dup
-       connectivity (the anchor rule of bucket_candidate_pairs)."""
+    3. The first ``cap`` distinct ids per bucket, ranked by id, are
+       kept (``dense_rank``, so an id appended twice shares one
+       place): a degenerate mega-bucket contributes at most ``cap``
+       candidates per new doc, and its kept min-id members preserve
+       dup connectivity (the anchor rule of bucket_candidate_pairs)."""
     from pyspark.sql import Window as W
 
     keys = list(bucket_keys)
-    new = new_banded.select(F.col(id_col).alias("new_id"), *keys)
-    matched = (
-        corpus_banded.select(id_col, *keys)
-        .join(F.broadcast(new.select(*keys).distinct()), keys, "left_semi")
-        .join(F.broadcast(new_ids.select(id_col)), id_col, "left_anti")
-        .dropDuplicates([id_col, *keys])
-    )
+    new = new_banded.groupBy(*keys).agg(F.collect_set(id_col).alias("_new_ids"))
     capped = (
-        matched.withColumn(
+        corpus_banded.select(id_col, *keys)
+        .join(F.broadcast(new_ids.select(id_col)), id_col, "left_anti")
+        .join(F.broadcast(new), keys)
+        .withColumn(
             "_rn",
-            F.row_number().over(W.partitionBy(*keys).orderBy(F.col(id_col))),
+            F.dense_rank().over(W.partitionBy(*keys).orderBy(F.col(id_col))),
         )
         .filter(F.col("_rn") <= cap)
-        .select(F.col(id_col).alias("corpus_id"), *keys)
     )
     return (
-        new.join(capped, keys)
-        .select("new_id", "corpus_id")
+        capped.select(
+            F.explode("_new_ids").alias("new_id"), F.col(id_col).alias("corpus_id")
+        )
         .filter(F.col("new_id") != F.col("corpus_id"))
         .distinct()
     )

@@ -18,20 +18,70 @@ provider (in-heap, fastest at test-sized state). At cluster scale set
 local disk (block-cache reads) instead of heap, so dedup/session/
 funnel state scales with SSD, not memory. Engine compatibility is
 proven by tests/test_streaming.py::test_streaming_agg_on_rocksdb_state_store.
+
+Driver class-data sharing. Most of a fresh session's start is the
+driver JVM loading and verifying ~10k Spark/Netty/Janino classes. When
+:func:`get_spark` launches the process's driver JVM, it maps a dynamic
+AppCDS archive (JEP 350) of those classes instead:
+
+- *Location and key.* ``${XDG_CACHE_HOME:-~/.cache}/spark-graft/<key>.jsa``,
+  where the key hashes the JDK (``java.home`` and its ``release``
+  file, which names the version), every jar under
+  ``$SPARK_HOME/jars`` (name, size, mtime), the other classpath
+  sources the launcher reads, and the driver heap setting (it fixes
+  the compressed-pointer mode an archive is tied to).
+- *Classpath.* JDK 17 dumps no archive while a non-empty directory is
+  on the classpath, and the launcher puts the Spark conf dir there.
+  So the JVM is launched with ``SPARK_CONF_DIR`` pointing at the
+  empty ``spark-graft/conf/``, but only when the effective conf dir
+  holds nothing Spark reads (every file a ``*.template``, as in a
+  stock install); the variable is restored once the session is up.
+  A conf dir with real files keeps the unchanged launch, unshared.
+- *Flag.* ``-XX:SharedArchiveFile`` goes through
+  ``spark.driver.defaultJavaOptions``, which the JVM takes together
+  with any caller ``spark.driver.extraJavaOptions``.
+- *Life cycle.* On a key miss one bounded child process trains the
+  archive: it starts a session with ``-XX:ArchiveClassesAtExit``,
+  runs a small parquet round-trip / shuffle aggregate / broadcast
+  join, stops, waits for its JVM to exit (the dump runs in the JVM's
+  exit hook) and validates the dump (checksums, and the classpath it
+  was launched with). Only then is the file moved into place, with
+  its byte size in ``<key>.size``. The trainer's output goes to
+  ``<key>.log`` beside the archive. A failed training leaves
+  ``<key>.failed`` and is not retried; a session that finds another
+  process training (``<key>.lock`` held) starts unshared.
+- *Fallback.* A stale or mismatched archive costs only the speedup:
+  the JVM prints one ``[cds]`` warning and starts without sharing. A
+  truncated one would crash JDK 17 (SIGBUS), so an archive whose size
+  differs from its record is not passed at all. An unusable cache dir
+  or JDK starts unshared, unredirected. Nothing is pruned: a new key
+  (a JDK or Spark update) trains a new archive beside the old.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import hashlib
 import os
+import shutil
+import signal
+import subprocess
+import sys
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# the trainer takes ~12-30 s; past this it is killed and marked failed
+TRAIN_TIMEOUT_S = 300
 
 
 def default_parallelism() -> int:
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 8)
+        return int(os.environ.get("SPARK_GRAFT_CPUS", "") or len(os.sched_getaffinity(0)))
     except ValueError:
-        return os.cpu_count() or 8
+        return len(os.sched_getaffinity(0))
 
 
 def sql_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
@@ -75,21 +125,217 @@ def sql_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
     }
 
 
+def _builder(app_name: str, conf: dict[str, str]) -> SparkSession.Builder:
+    builder = SparkSession.builder.master(f"local[{default_parallelism()}]").appName(app_name)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
+    return builder
+
+
 def get_spark(
     app_name: str = "pythondataingestionprocess-spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session: :func:`sql_conf` plus the confs
-    only a new SparkContext can take, then ``extra_conf``."""
-    builder = (
-        SparkSession.builder.master(f"local[{default_parallelism()}]")
-        .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in {**sql_conf(shuffle_partitions), **(extra_conf or {})}.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    only a new SparkContext can take, then ``extra_conf``. A launch of
+    the driver JVM maps the class-data archive (module docstring)."""
+    conf = {
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.ui.enabled": "false",
+        **sql_conf(shuffle_partitions),
+        **(extra_conf or {}),
+    }
+    # a process launches its driver JVM once; later contexts reuse it
+    shared = _driver_archive(conf) if SparkContext._gateway is None else None
+    if shared is None:
+        spark = _builder(app_name, conf).getOrCreate()
+    else:
+        empty_conf_dir, archive = shared
+        conf["spark.driver.defaultJavaOptions"] = " ".join(
+            filter(None, [f"-XX:SharedArchiveFile={archive}",
+                          conf.get("spark.driver.defaultJavaOptions")])
+        )
+        saved = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = empty_conf_dir
+        try:
+            spark = _builder(app_name, conf).getOrCreate()
+        finally:
+            if saved is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = saved
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# ---- driver class-data sharing ------------------------------------------------
+
+def _cache_dir() -> str:
+    root = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(root, "spark-graft")
+
+
+def _holds_only_templates(conf_dir: str) -> bool:
+    try:
+        return all(name.endswith(".template") for name in os.listdir(conf_dir))
+    except FileNotFoundError:
+        return True
+    except OSError:
+        return False
+
+
+def _archive_key(spark_home: str, conf: dict[str, str]) -> str | None:
+    """The hash that names the archive of this launch, or None when
+    the JDK cannot be found. Inputs as spark-class resolves them."""
+    java_home = os.environ.get("JAVA_HOME")
+    if not java_home:
+        java = shutil.which("java")
+        if java is None:
+            return None
+        java_home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    h = hashlib.sha256()
+    try:
+        with open(os.path.join(java_home, "release"), "rb") as f:
+            h.update(f.read())
+        jars = sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name)
+        for jar in jars:
+            st = jar.stat()
+            h.update(f"{jar.name}:{st.st_size}:{st.st_mtime_ns}\n".encode())
+    except OSError:
+        return None
+    for part in (
+        java_home,
+        conf["spark.driver.memory"],
+        conf.get("spark.driver.extraClassPath", ""),
+        *(os.environ.get(v, "") for v in ("SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR")),
+    ):
+        h.update(f"{part}\n".encode())
+    return h.hexdigest()[:24]
+
+
+def _driver_archive(conf: dict[str, str]) -> tuple[str, str] | None:
+    """(empty conf dir, archive path) for a driver JVM launched with
+    ``conf``, training the archive on a key miss; None when this
+    launch cannot share (real conf files, no JDK, unusable cache dir,
+    failed or concurrent training, an archive no longer its recorded
+    size)."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    if not _holds_only_templates(
+        os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    ):
+        return None
+    key = _archive_key(spark_home, conf)
+    if key is None:
+        return None
+    root = _cache_dir()
+    empty_conf_dir = os.path.join(root, "conf")
+    base = os.path.join(root, key)
+    try:
+        os.makedirs(empty_conf_dir, exist_ok=True)
+        if not os.path.exists(f"{base}.jsa"):
+            _train_archive(base, empty_conf_dir, conf["spark.driver.memory"])
+        # JDK 17 dies with SIGBUS on a truncated archive instead of
+        # falling back, so a launch maps only the size it was validated at
+        with open(f"{base}.size") as f:
+            intact = int(f.read()) == os.path.getsize(f"{base}.jsa")
+    except (OSError, ValueError):
+        return None
+    return (empty_conf_dir, f"{base}.jsa") if intact else None
+
+
+def _train_archive(base: str, empty_conf_dir: str, heap: str) -> None:
+    """Build and validate ``<base>.jsa`` (its size in ``<base>.size``)
+    in one bounded child process, or leave ``<base>.failed``. Returns
+    at once if either exists or another process holds ``<base>.lock``."""
+    archive, failed = f"{base}.jsa", f"{base}.failed"
+    with open(f"{base}.lock", "w") as lock:
+        try:
+            fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            return
+        if os.path.exists(archive) or os.path.exists(failed):
+            return
+        tmp = f"{base}.{os.getpid()}.tmp"
+        pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = {
+            **os.environ,
+            "SPARK_CONF_DIR": empty_conf_dir,
+            "PYTHONPATH": os.pathsep.join(filter(None, [pkg_parent, os.environ.get("PYTHONPATH")])),
+        }
+        code = f"from {__package__}.session import _train; _train()"
+        with open(f"{base}.log", "w") as log:
+            # its own process group: whatever it leaves running (its JVM
+            # after a failure or timeout) is killed with it
+            proc = subprocess.Popen(
+                [sys.executable, "-c", code, tmp, heap], env=env, stdin=subprocess.DEVNULL,
+                stdout=log, stderr=subprocess.STDOUT, start_new_session=True,
+            )
+            try:
+                ok = proc.wait(timeout=TRAIN_TIMEOUT_S) == 0
+            except subprocess.TimeoutExpired:
+                ok = False
+            finally:
+                with contextlib.suppress(ProcessLookupError):
+                    os.killpg(proc.pid, signal.SIGKILL)
+                proc.wait()
+        if ok:
+            with open(f"{base}.size", "w") as f:
+                f.write(str(os.path.getsize(tmp)))
+            os.replace(tmp, archive)
+        else:
+            open(failed, "w").close()
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+
+
+def _train() -> None:
+    """Trainer child (``argv``: dump path, driver heap): exercise the
+    classes a typical session loads, let the JVM dump them, and exit 0
+    only if the dump validates (checksums and classpath) against the
+    launch it was made for."""
+    from pyspark.sql import functions as F
+
+    dump, heap = sys.argv[1:3]
+    conf = {
+        "spark.driver.memory": heap,
+        "spark.ui.enabled": "false",
+        **sql_conf(),
+        "spark.driver.defaultJavaOptions": (
+            f"-XX:ArchiveClassesAtExit={dump} -XX:+VerifySharedSpaces"
+        ),
+    }
+    spark = _builder("spark-graft-class-data", conf).getOrCreate()
+    jvm = spark.sparkContext._gateway.proc
+    props = spark._jvm.System
+    java, class_path = (
+        os.path.join(props.getProperty("java.home"), "bin", "java"),
+        props.getProperty("java.class.path"),
+    )
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "t")
+        spark.range(20_000).selectExpr(
+            "id", "id % 97 AS k", "CAST(id AS STRING) AS s", "id * 0.5 AS x"
+        ).write.parquet(path)
+        facts = spark.read.parquet(path)
+        dim = spark.range(97).selectExpr("id AS k", "concat('n', CAST(id AS STRING)) AS name")
+        (
+            facts.groupBy("k").agg(F.sum("x").alias("x"), F.countDistinct("s").alias("n"))
+            .join(F.broadcast(dim), "k")
+            .orderBy("k")
+            .toPandas()
+        )
+    spark.stop()
+    # the JVM exits on stdin EOF and dumps the archive in its exit hook
+    jvm.stdin.close()
+    if jvm.wait(timeout=TRAIN_TIMEOUT_S) != 0:
+        sys.exit(1)
+    check = subprocess.run(
+        [java, f"-Xmx{heap}", f"-XX:SharedArchiveFile={dump}", "-XX:+VerifySharedSpaces",
+         "-XX:+PrintSharedArchiveAndExit", "-cp", class_path],
+        capture_output=True, text=True, timeout=TRAIN_TIMEOUT_S,
+    )
+    print(check.stdout[-500:], check.stderr[-2000:])
+    sys.exit(0 if check.returncode == 0 and "archive is valid" in check.stdout else 1)

@@ -86,6 +86,18 @@ def test_incremental_dedup_is_bucket_equi_join(spark):
     assert re.search(r"hashpartitioning\(band", plan) or "BroadcastHashJoin" in plan
 
 
+def test_incremental_cosine_reads_new_side_once(spark):
+    # the candidate rule takes the new batch's bucket rows once (one
+    # grouped broadcast both prunes the corpus and carries the new ids),
+    # so the executed plan runs one hyperplane stage per side: 2
+    # ArrowEvalPython nodes, where a second read of the new side made 3
+    df = REGISTRY["dedup_cosine_incremental"].fn(spark, SF_DIR)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert len(re.findall(r"\bArrowEvalPython\b", final)) == 2
+
+
 def test_cleaning_exprs_stay_jvm_side(spark):
     # expression-library queries: pure JVM expressions (codegen-able;
     # AQE's pre-execution explain hides WholeStageCodegen spans, so

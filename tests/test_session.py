@@ -1,0 +1,181 @@
+"""``session``: the local parallelism, and driver class-data sharing
+in ``get_spark``. A cache miss trains an archive that validates against
+the launch classpath; a later launch maps it next to the caller's own
+java options; a stale or truncated archive, a conf dir with real
+config, or an unusable cache dir each start an unchanged, unshared
+session. Every JVM check starts a fresh driver in a subprocess against
+a cache dir of its own."""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+import subprocess
+import sys
+
+import pytest
+
+from pythondataingestionprocess_spark import session
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# one fresh session: the answer to a small query, what the JVM was
+# launched with, and the process env after get_spark returned
+_PROBE = r"""
+import json, os, sys
+from pythondataingestionprocess_spark.session import get_spark
+spark = get_spark(extra_conf=json.loads(sys.argv[1]))
+jvm = spark._jvm
+rows = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().collect()
+print("RESULT " + json.dumps({
+    "answer": sorted([r["k"], r["count"]] for r in rows),
+    "jvm_args": list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
+    "class_path": jvm.System.getProperty("java.class.path"),
+    "java_home": jvm.System.getProperty("java.home"),
+    "probe_prop": jvm.System.getProperty("graft.probe"),
+    "probe_conf": spark.conf.get("spark.graft.probe", None),
+    "conf_dir_after": os.environ.get("SPARK_CONF_DIR"),
+}))
+spark.stop()
+"""
+
+ANSWER = sorted([k, sum(1 for i in range(1000) if i % 7 == k)] for k in range(7))
+
+
+def _session(cache: str, extra_conf: dict | None = None, conf_dir: str | None = None) -> dict:
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_CONF_DIR"}
+    env["XDG_CACHE_HOME"] = cache
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, env.get("PYTHONPATH")]))
+    if conf_dir is not None:
+        env["SPARK_CONF_DIR"] = conf_dir
+    conf = {"spark.ui.showConsoleProgress": "false", **(extra_conf or {})}
+    proc = subprocess.run(
+        [sys.executable, "-c", _PROBE, json.dumps(conf)], env=env, cwd=cache,
+        capture_output=True, text=True, timeout=2 * session.TRAIN_TIMEOUT_S,
+    )
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+    return {**json.loads(lines[-1][len("RESULT "):]), "stderr": proc.stderr}
+
+
+def _files(cache: str) -> dict[str, int]:
+    root = os.path.join(cache, "spark-graft")
+    return {n: os.path.getsize(os.path.join(root, n)) for n in os.listdir(root)} if os.path.isdir(root) else {}
+
+
+def _archive(cache: str) -> str:
+    (name,) = [n for n in _files(cache) if n.endswith(".jsa")]
+    return os.path.join(cache, "spark-graft", name)
+
+
+def _shared_classes(log_path: str) -> int:
+    with open(log_path) as f:
+        return sum("shared objects file (top)" in line for line in f)
+
+
+@pytest.fixture(scope="module")
+def trained(tmp_path_factory):
+    """A cache dir after one session that found it empty."""
+    cache = str(tmp_path_factory.mktemp("cds"))
+    return cache, _session(cache)
+
+
+def test_cache_miss_trains_an_archive_that_validates_against_the_launch_classpath(trained):
+    cache, first = trained
+    assert first["answer"] == ANSWER
+    names = _files(cache)
+    assert not [n for n in names if n.endswith((".failed", ".tmp"))], names
+    archive = _archive(cache)
+    assert names[os.path.basename(archive)] > 0
+    with open(archive[:-4] + ".size") as f:
+        assert int(f.read()) == os.path.getsize(archive)
+    # the trainer's output went to its log, not to the caller
+    assert names[os.path.basename(archive)[:-4] + ".log"] > 0
+    assert "Signed JAR" not in first["stderr"]
+    # the launch ran with the empty conf dir, and the caller's env is back
+    empty = os.path.join(cache, "spark-graft", "conf")
+    assert first["class_path"].split(os.pathsep)[0].rstrip("/") == empty
+    assert os.listdir(empty) == []
+    assert first["conf_dir_after"] is None
+    heap = [a for a in first["jvm_args"] if a.startswith("-Xmx")]
+    check = subprocess.run(
+        [os.path.join(first["java_home"], "bin", "java"), *heap,
+         f"-XX:SharedArchiveFile={archive}", "-XX:+PrintSharedArchiveAndExit",
+         "-cp", first["class_path"]],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert check.returncode == 0 and "archive is valid" in check.stdout, check.stdout[-2000:]
+
+
+def test_later_session_maps_the_archive_beside_caller_java_options(trained, tmp_path):
+    cache, _ = trained
+    before = _files(cache)
+    log = tmp_path / "class-load.log"
+    out = _session(cache, {
+        "spark.driver.extraJavaOptions": f"-Dgraft.probe=1 -Xlog:class+load=info:file={log}",
+    })
+    assert out["answer"] == ANSWER
+    assert out["probe_prop"] == "1"
+    assert f"-XX:SharedArchiveFile={_archive(cache)}" in out["jvm_args"]
+    assert _shared_classes(str(log)) > 1000
+    assert _files(cache) == before  # no second training
+
+
+@pytest.mark.parametrize("damage", ["truncated", "stale"])
+def test_damaged_archive_starts_an_unshared_session_that_answers(trained, tmp_path, damage):
+    cache, _ = trained
+    copy = str(tmp_path / "cache")
+    shutil.copytree(cache, copy)
+    archive = _archive(copy)
+    if damage == "truncated":
+        os.chmod(archive, 0o644)
+        with open(archive, "r+b") as f:
+            f.truncate(os.path.getsize(archive) // 2)
+    # "stale": the copy's empty conf dir has a new path, so the classpath
+    # the archive recorded no longer matches the launch
+    before = _files(copy)
+    log = tmp_path / "class-load.log"
+    out = _session(copy, {"spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={log}"})
+    assert out["answer"] == ANSWER
+    assert _shared_classes(str(log)) == 0
+    assert _files(copy) == before  # a bad archive is not retrained
+
+
+def test_conf_dir_with_real_config_gets_no_redirect(tmp_path):
+    cache, conf_dir = str(tmp_path / "cache"), tmp_path / "conf"
+    os.makedirs(cache)
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf").write_text("spark.graft.probe  42\n")
+    (conf_dir / "spark-env.sh.template").write_text("")
+    out = _session(cache, conf_dir=str(conf_dir))
+    assert out["answer"] == ANSWER
+    assert out["probe_conf"] == "42"
+    assert out["class_path"].split(os.pathsep)[0].rstrip("/") == str(conf_dir)
+    assert not [a for a in out["jvm_args"] if "SharedArchive" in a or "ArchiveClasses" in a]
+    assert out["conf_dir_after"] == str(conf_dir)
+    assert _files(cache) == {}  # nothing trained, nothing cached
+
+
+def test_unusable_cache_dir_shares_nothing(tmp_path, monkeypatch):
+    blocker = tmp_path / "not-a-dir"
+    blocker.write_text("")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(blocker))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    assert session._driver_archive({"spark.driver.memory": "1g"}) is None
+
+
+def test_only_template_conf_dirs_are_redirected(tmp_path):
+    (tmp_path / "spark-defaults.conf.template").write_text("")
+    assert session._holds_only_templates(str(tmp_path))
+    (tmp_path / "log4j2.properties").write_text("")
+    assert not session._holds_only_templates(str(tmp_path))
+    assert session._holds_only_templates(str(tmp_path / "missing"))
+    assert not session._holds_only_templates(str(tmp_path / "log4j2.properties"))
+
+
+def test_default_parallelism_counts_the_cpus_this_process_may_run_on(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_parallelism() == 3
