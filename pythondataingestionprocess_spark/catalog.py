@@ -106,28 +106,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     return cached(
-        spark, sf_dir, f"table:{name}", lambda: _read_table(spark, sf_dir, name)
+        spark, sf_dir, f"table:{name}",
+        lambda: spark.read.parquet(table_path(sf_dir, name)),
     )
-
-
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # ensure the nanos-timestamp workaround is active even under a
-        # driver-owned session that didn't use our factory
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # events.ts is parquet TIMESTAMP(NANOS); with
-        # spark.sql.legacy.parquet.nanosAsLong it arrives as epoch-nanos.
-        # Truncate to micros (integer div — double math would lose
-        # precision at 1e18) to match DuckDB's microsecond TIMESTAMP.
-        from pyspark.sql import functions as F
-
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    return df
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

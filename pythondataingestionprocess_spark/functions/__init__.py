@@ -4,7 +4,6 @@ semantics re-expressed as pure Spark column expressions (SURVEY.md
 """
 
 from pythondataingestionprocess_spark.functions.cleaning import (  # noqa: F401
-    coalesce_default,
     money_clean,
     normalize_null_markers,
     safe_float,
@@ -19,10 +18,7 @@ from pythondataingestionprocess_spark.functions.pricing import (  # noqa: F401
     DESCUENTO_OFERTA,
     MARGEN_GANANCIA,
     calc_price,
-    landed_unit_cost,
     offer_price,
-    offer_price_default,
-    price_default,
     sale_price,
     tier_multiplier,
 )

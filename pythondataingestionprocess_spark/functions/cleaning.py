@@ -73,13 +73,6 @@ def signed_money(col: Column | str) -> Column:
     return sign * magnitude
 
 
-def coalesce_default(col: Column | str, default) -> Column:
-    """F15 default-value coalescing (``row.get(col, default)`` /
-    ``ensure_default`` falsy→0, utils_tools.py:66-71,
-    import_files_to_postgre.py:186-197)."""
-    return F.coalesce(_c(col), F.lit(default))
-
-
 def truncate_str(col: Column | str, max_len: int = 500) -> Column:
     """F14 string truncation — the reference's ``str(url)[:500]``
     before the varchar(500) insert (database_utils.py:223)."""

@@ -14,8 +14,10 @@ data_test/030-Lovely_Toy_Invntry_SV25_p1.xlsx (SURVEY §1.4):
 - ``P.Oferta = (P.Venta + Calc) / 2``
 
 Python-side fallbacks (import_files_to_postgre.py:29-30,217-220):
-``price = P.Venta ∨ final_cost × 1.30``,
-``offer = P.Oferta ∨ price × 0.85``.
+``price = P.Venta or final_cost × 1.30``,
+``offer = P.Oferta or price × 0.85`` — Python truthiness, so a 0 price
+falls back too; ``pipeline/ingest.py`` applies them with these
+constants.
 """
 
 from __future__ import annotations
@@ -33,12 +35,12 @@ def _c(col: Column | str) -> Column:
 
 def tier_multiplier(p_tienda: Column | str, c_unit: Column | str) -> Column:
     """Markup tier from the |store price − unit cost| band. A NULL
-    input propagates NULL (r13 review: the when-chain's otherwise
-    used to swallow a NULL gap into the densest 1.75 tier, silently
-    fabricating a confident price for a row whose store price is
-    unknown; note Excel, where the formula lives, computes blank as 0
-    — a third behavior — so NULL-in/NULL-out is the honest choice for
-    cleaned columns where blank already became NULL)."""
+    input propagates NULL: the when-chain's otherwise must not swallow
+    a NULL gap into the densest 1.75 tier, which would fabricate a
+    confident price for a row whose store price is unknown. Excel,
+    where the formula lives, computes blank as 0 — a third behavior —
+    so NULL-in/NULL-out is the honest choice for cleaned columns where
+    blank already became NULL."""
     gap = F.abs(_c(p_tienda) - _c(c_unit))
     return (
         F.when(gap.isNull(), F.lit(None).cast("double"))
@@ -60,9 +62,8 @@ def calc_price(
 def sale_price(calc: Column | str, c_unit: Column | str) -> Column:
     """``P.Venta`` tiered markup over Calc (dead d>170 branch kept —
     it documents the Excel formula as found). NULL c_unit propagates
-    NULL (r13 review: the otherwise-chain used to resolve a NULL
-    margin to multiplier 1.0 and pass calc through as a confident
-    sale price)."""
+    NULL: the otherwise-chain must not resolve a NULL margin to
+    multiplier 1.0 and pass calc through as a confident sale price."""
     d = _c(calc) - _c(c_unit)
     low = (
         F.when(d > 80, F.lit(1.25)).when(d > 50, F.lit(1.5)).otherwise(F.lit(1.75))
@@ -79,25 +80,3 @@ def sale_price(calc: Column | str, c_unit: Column | str) -> Column:
 def offer_price(p_venta: Column | str, calc: Column | str) -> Column:
     """``P.Oferta = (P.Venta + Calc) / 2``."""
     return (_c(p_venta) + _c(calc)) / F.lit(2.0)
-
-
-def price_default(p_venta: Column | str, final_cost: Column | str) -> Column:
-    """F16: sheet sale price, else landed cost × 1.30 margin."""
-    return F.coalesce(_c(p_venta), _c(final_cost) * F.lit(MARGEN_GANANCIA))
-
-
-def offer_price_default(p_oferta: Column | str, price: Column | str) -> Column:
-    """F16: sheet offer price, else price × 0.85."""
-    return F.coalesce(_c(p_oferta), _c(price) * F.lit(DESCUENTO_OFERTA))
-
-
-def landed_unit_cost(
-    c_unit: Column | str, envio: Column | str, desct: Column | str, cant: Column | str
-) -> Column:
-    """``Costo Final = C.Unit + Envio/Cant − Desct/Cant`` (Compras!Q2)
-    — shipping and discount landed per unit."""
-    return (
-        _c(c_unit)
-        + F.try_divide(F.coalesce(_c(envio), F.lit(0.0)), _c(cant))
-        - F.try_divide(F.coalesce(_c(desct), F.lit(0.0)), _c(cant))
-    )

@@ -75,13 +75,6 @@ def shingles_of_tokens(tokens_col: Column | str, n: int = 3) -> Column:
     )
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles straight from a text column. Fine for
-    one-off small frames; hot paths should pre-project ``tokens`` and
-    use :func:`shingles_of_tokens` (see its docstring)."""
-    return shingles_of_tokens(tokens(col), n)
-
-
 def lang_scores(col: Column | str) -> dict[str, Column]:
     """Stopword-hit count per language."""
     t = tokens(col)

@@ -59,19 +59,6 @@ def line_frequency_state(
     return line_rows.unionByName(doc_rows)
 
 
-def merge_line_frequency_states(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Fold two batch states (DISJOINT doc sets — the ingest contract;
-    overlapping batches would double-count) into one: counts add at
-    (source, line_key) grain. Commutative and associative, so daily
-    states fold in any order — the ``incremental_agg_maintenance``
-    pattern applied to the curation screen."""
-    return (
-        a.unionByName(b)
-        .groupBy("source", "line_key")
-        .agg(F.sum("line_df").alias("line_df"))
-    )
-
-
 def boilerplate_lines_from_state(
     state: DataFrame,
     frac_threshold: float = 0.5,

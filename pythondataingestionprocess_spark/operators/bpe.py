@@ -18,7 +18,7 @@ raw corpus — and that is exactly what makes it distributable:
    count pass via a snapshot-certified parity batch (see
    `_select_parity_batch`) — same merge sequence, O(passes) jobs
    instead of O(n_merges), which is what makes a real 30k-merge
-   vocabulary trainable (r10 VERDICT item 4).
+   vocabulary trainable.
 3. driver state is the merge list itself — ``n_merges`` pairs, the
    artifact the method exists to produce (same bounded-driver-payload
    contract as k-means centroids / PQ codebooks / DSIR m-vectors).
@@ -46,12 +46,12 @@ END = "</w>"  # end-of-word marker, per the paper
 
 # expression-form application nests one fold per merge; past this the
 # Catalyst tree is deep enough to risk codegen/analysis limits, so
-# apply_merges fails loud instead of opaquely (r10 ADVICE)
+# apply_merges fails loud instead of opaquely
 MAX_EXPR_MERGES = 200
 
 # the analyzer's Resolution batch caps at 100 iterations and each
 # nested higher-order fold costs roughly one, so ~99 folds in a SINGLE
-# select fail with "Max iterations (100) reached" (probed r12). Folds
+# select fail with "Max iterations (100) reached" (probed). Folds
 # are therefore applied in chunks of this many per select — analysis
 # is incremental across chained selects (resolved subtrees are not
 # re-resolved), so total depth is unbounded while each analysis step
@@ -78,7 +78,7 @@ def word_counts(
     the driver face's oracle engine-portable). ``ascii_ws`` switches
     the split to ASCII ``\\s+`` — REQUIRED for any oracle-paired path,
     because DuckDB's RE2 ``\\s`` is ASCII-only (the same hard
-    constraint operators/dsir.py documents; r12 review)."""
+    constraint operators/dsir.py documents)."""
     ws = r"\s+" if ascii_ws else r"(?U)\s+"
     words = (
         docs.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
@@ -296,7 +296,7 @@ def _select_parity_batch(
       no-increase premise above dies — stop the batch there. This
       covers batch-LOCAL collisions too (two same-batch merges with
       equal concatenations, e.g. ('x','</w>') + ('x<','/w>') in
-      HTML-ish text — r11 ADVICE): the accepted merge whose concat
+      HTML-ish text): the accepted merge whose concat
       collides with any prior concat of the SAME batch is the last
       one in. Single chars can't collide (len(a+b) >= 2), so
       ``created`` only needs END plus past concatenations.
@@ -363,8 +363,8 @@ def learn_bpe_merges_batched(
     next recount. Identical output to the sequential loop by
     construction; the difference is jobs — a real 30k-merge vocabulary
     is O(passes) Spark jobs with batch-sized passes instead of 30k
-    sequential argmax+checkpoint rounds (r10 VERDICT item 4: top pairs
-    of a fresh count table are overwhelmingly symbol-disjoint, so
+    sequential argmax+checkpoint rounds (top pairs of a fresh count
+    table are overwhelmingly symbol-disjoint, so
     early passes accept large batches; Sennrich's own
     frequency-threshold batching is the same observation applied
     lossily, while the certificate here keeps it lossless).
@@ -460,7 +460,7 @@ def apply_merges(
         )
     # chunked folds: >~99 folds in ONE select trip the analyzer's
     # 100-iteration Resolution cap well before the MAX_EXPR_MERGES
-    # guard fires (probed r12)
+    # guard fires (probed)
     return _fold_chunked(
         df.withColumn(out_col, _init_symbols(word_col)), merges, out_col
     )
@@ -493,7 +493,7 @@ def apply_merges_vectorized(
     # build a FRESH StructType: StructType.add mutates in place, and
     # classic PySpark caches `df.schema` on the DataFrame, so mutating
     # it corrupts the input frame's Python-side schema and every
-    # subsequent select fails with UNRESOLVED_COLUMN (r11 VERDICT 1)
+    # subsequent select fails with UNRESOLVED_COLUMN
     schema = StructType(
         list(df.schema.fields)
         + [StructField(out_col, ArrayType(StringType()))]

@@ -254,12 +254,3 @@ def incremental_components(
         solved, new_ids.id == F.col("_sid"), "left"
     ).select("id", F.coalesce("_sgrp", "id").alias("group_id"))
     return updated_old.unionByName(new_rows)
-
-
-def dedup_group_summary(components: DataFrame) -> DataFrame:
-    """Per-group stats from a components labeling: size and the id kept
-    by keep-min-per-group dedup (== group_id by construction)."""
-    return components.groupBy("group_id").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.max("id").alias("max_member"),
-    )

@@ -1,7 +1,7 @@
 """Deduplication operators for document corpora (BASELINE.json north
 star; engine-added beyond the reference, whose only dedup is the
-exact-tuple anti-join at database_utils.py:128-145 — reproduced here
-as ``exact_dedup`` + the ingest pipeline's anti-join).
+exact-tuple anti-join at database_utils.py:128-145 — reproduced by
+the ingest pipeline's anti-join).
 
 Scale design:
 
@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.functions.text import (
@@ -47,12 +47,6 @@ _MERSENNE_31 = (1 << 31) - 1
 _RANGE_31 = 1 << 31
 
 
-def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
-    """Keep the lowest-id row per exact key (deterministic winner) —
-    the scalable form of the reference's existence-probe dedup."""
-    return df.groupBy(*key_cols).agg(F.min(id_col).alias(id_col))
-
-
 def minhash_params(num_hashes: int = 64, seed: int = 42) -> list[tuple[int, int]]:
     """Fixed affine-hash family (a, b) pairs — deterministic across
     runs and engines."""
@@ -61,41 +55,6 @@ def minhash_params(num_hashes: int = 64, seed: int = 42) -> list[tuple[int, int]
         (rng.randrange(1, _MERSENNE_31), rng.randrange(0, _MERSENNE_31))
         for _ in range(num_hashes)
     ]
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64, seed: int = 42) -> Column:
-    """MinHash signature (array<long>) over a shingle array.
-
-    Base hash xxhash64 → folded into [0, 2^31) so the affine transform
-    a*x+b stays below 2^63 (ANSI mode would raise on long overflow).
-    """
-    base = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_RANGE_31)))
-    sigs = [
-        F.array_min(
-            F.transform(base, lambda x: F.pmod(x * a + b, F.lit(_MERSENNE_31)))
-        )
-        for a, b in minhash_params(num_hashes, seed)
-    ]
-    return F.array(*sigs)
-
-
-def _band_hashes(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """array<long> of one hash per signature band."""
-    return F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    "_",
-                    F.lit(j),
-                    *[
-                        F.element_at(sig, j * rows_per_band + i + 1).cast("string")
-                        for i in range(rows_per_band)
-                    ],
-                )
-            )
-            for j in range(bands)
-        ]
-    )
 
 
 # In-bucket all-pairs expansion over a sorted `ids` array (id_a < id_b).
@@ -229,114 +188,6 @@ def containment_pairs(sh: DataFrame, id_col: str, threshold: float) -> DataFrame
     )
 
 
-def containment_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """EXACT containment pairs via prefix filtering — the 100 TB path.
-
-    :func:`containment_pairs` self-joins every shared shingle; this
-    version blocks on each doc's ``floor((1-τ)·|A|)+1`` globally
-    RAREST shingles (the "prefix" in the canonical rarest-first
-    order). Pigeonhole guarantee: if containment(A→B) ≥ τ with A the
-    smaller side, at most ``(1-τ)·|A|`` of A's shingles are missing
-    from B, so at least one prefix shingle IS shared — candidate
-    generation is exact-complete, not probabilistic. (MinHash banding
-    is the WRONG candidate generator here: a short doc inside a long
-    one has high containment but low Jaccard, so its signatures don't
-    collide — the asymmetric screen needs asymmetric blocking.)
-
-    Scale shape: prefix shingles are by construction the LOW-document-
-    frequency ones, so the blocking join's buckets are small where the
-    raw shared-shingle join's are largest; the large side cannot be
-    prefixed (its bound ``|B|-τ|A|+1`` is pair-dependent), so the join
-    is prefix(small) × full-shingle-table — shuffle bounded by
-    Σ df(prefix shingle), not Σ df(shingle)². Candidates are verified
-    with an in-expression array intersection. Degenerate corpora where
-    some doc's whole shingle set is hyper-common still expand; cap
-    with an upstream stop-shingle drop as with jaccard_pairs."""
-    doc_sh = shingle_array_table(df, id_col, text_col, n)
-    cand = _containment_prefix_candidates(doc_sh, id_col, threshold)
-    verified = (
-        cand.join(doc_sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(doc_sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .withColumn(
-            "containment",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.least(F.size("sh_a"), F.size("sh_b")).cast("double"),
-        )
-        .filter(F.col("containment") >= threshold)
-    )
-    # normalize to the containment_pairs output contract (id_a < id_b)
-    return verified.select(
-        F.least("id_a", "id_b").alias("id_a"),
-        F.greatest("id_a", "id_b").alias("id_b"),
-        "containment",
-    )
-
-
-def _containment_prefix_candidates(
-    doc_sh: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """The prefix-filter CANDIDATE stage — factored out so its volume
-    (the documented scale object: Σ df(prefix shingle) vs the plain
-    join's Σ df²) is directly countable by the heavy-tail regression
-    test, not just asserted in prose."""
-    from pyspark.sql.window import Window
-
-    # One tokenization pass: the distinct-shingle ARRAY is built once
-    # and the exploded blocking form is derived from it.
-    sh = doc_sh.select(F.col(id_col), F.explode("sh").alias("shingle"))
-    sizes = doc_sh.select(F.col(id_col), F.size("sh").alias("sz"))
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    # Completeness bound in INTEGERS, derived from the verify
-    # predicate itself: i_min = smallest intersection count i with
-    # i/sz >= τ under the SAME double division verify uses. A float
-    # rendering like floor((1-τ)·sz)+1 under-counts by one whenever
-    # (1-τ)·sz is an exact integer (1.0-0.8 = 0.19999…96), silently
-    # dropping threshold-boundary pairs; float ceil(τ·sz) can be off
-    # by one in either direction, so it is corrected by checking the
-    # predicate at i0-1 and i0. Prefix length = sz - i_min + 1.
-    i0 = F.ceil(F.lit(threshold) * F.col("sz"))
-    i_min = (
-        F.when((i0 - 1).cast("double") / F.col("sz") >= threshold, i0 - 1)
-        .when(i0.cast("double") / F.col("sz") >= threshold, i0)
-        .otherwise(i0 + 1)
-    )
-    ranked = (
-        sh.join(dfreq, "shingle")
-        .join(sizes, id_col)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy("df", "shingle")
-            ),
-        )
-    )
-    prefix = ranked.filter(F.col("rn") <= F.col("sz") - i_min + 1)
-    a = prefix.select(
-        F.col(id_col).alias("id_a"), "shingle", F.col("sz").alias("size_a")
-    )
-    b = sh.join(sizes, id_col).select(
-        F.col(id_col).alias("id_b"), "shingle", F.col("sz").alias("size_b")
-    )
-    return (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") != F.col("id_b"))
-        # one direction per pair: the prefix side must be the smaller
-        # doc (ties broken by id), or the pigeonhole bound doesn't hold
-        .filter(
-            (F.col("size_a") < F.col("size_b"))
-            | ((F.col("size_a") == F.col("size_b")) & (F.col("id_a") < F.col("id_b")))
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -370,11 +221,10 @@ def minhash_lsh_pairs(
     cost and must run once per batch, not once per use.
     """
     # Signature via explode → 64 min-aggregates: one shuffle on id with
-    # map-side partial mins, fully codegen'd. (The array-expression form
-    # `minhash_signature` builds a 64-way nested transform that blows
-    # past the codegen expression budget and re-hashes every shingle
-    # per hash function — fine for small arrays, wrong for the corpus
-    # path.) No distinct() needed: min over the shingle multiset equals
+    # map-side partial mins, fully codegen'd. (An array-expression form
+    # builds a 64-way nested transform that blows past the codegen
+    # expression budget and re-hashes every shingle per hash function.)
+    # No distinct() needed: min over the shingle multiset equals
     # min over the set — saves a full-corpus dedup shuffle.
     if banded is None:
         banded = _signatures_banded(
@@ -685,49 +535,6 @@ def minhash_lsh_pairs_incremental(
     )
 
 
-def simhash64(col: Column | str, text_col_is_tokens: bool = False) -> Column:
-    """64-bit SimHash over whitespace tokens: per-bit ±1 votes weighted
-    by token hash bits; bit set where the vote is positive. Array-fold
-    form for small per-row token arrays; the corpus path is
-    :func:`simhash_table` (same md5 bit basis, aggregate-shaped).
-
-    Bit ops (shiftleft/xor) are wrap-around — unaffected by ANSI mode.
-    """
-    from pythondataingestionprocess_spark.functions.text import tokens as _tokens
-
-    c = F.col(col) if isinstance(col, str) else col
-    toks = c if text_col_is_tokens else _tokens(c)
-
-    def _bits(t: Column) -> Column:
-        hi = F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-        lo = F.conv(F.substring(F.md5(t), 9, 8), 16, 10).cast("long")
-        return F.array(
-            *[
-                F.when(
-                    F.shiftright(lo if i < 32 else hi, i % 32).bitwiseAND(F.lit(1))
-                    == 1,
-                    F.lit(1).cast("long"),
-                ).otherwise(F.lit(-1).cast("long"))
-                for i in range(64)
-            ]
-        )
-
-    votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, t: F.zip_with(acc, _bits(t), lambda a, b: a + b),
-    )
-    out = F.lit(0).cast("long")
-    for i in range(64):
-        out = out.bitwiseXOR(
-            F.when(
-                F.element_at(votes, i + 1) > 0,
-                F.shiftleft(F.lit(1).cast("long"), i),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return out
-
-
 def simhash_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, hi, lo) 64-bit SimHash per document as TWO 32-bit halves,
     via explode → 64 conditional-sum votes → bit assembly (one shuffle
@@ -1011,56 +818,6 @@ def fingerprint_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .groupBy("fp")
         .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
     )
-
-
-def choose_containment_form(
-    sh: DataFrame, hot_df_threshold: int = 20_000
-) -> str:
-    """Data-profile-driven algorithm choice for the containment
-    screen. The plain shared-shingle self-join's cost is Σ df² over
-    shingles — one hyper-common shingle turns it quadratic — while
-    the prefix-filter form pays a constant overhead (df ranking + an
-    array verify) that only amortizes on exactly such heavy-tailed
-    corpora (measured: prefix is 10× SLOWER on the uniform test
-    corpus, BASELINE.md negative result). Neither form is right
-    unconditionally; the profile decides.
-
-    The statistic is one cheap aggregation over the shingle table:
-    the maximum per-shingle document frequency. Returns "plain" or
-    "prefix". The default threshold is conservative — a 20k-df
-    shingle contributes 4·10⁸ candidate pairs on its own, well past
-    where the prefix machinery pays for itself.
-    """
-    row = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(F.max("df").alias("max_df"))
-        .collect()[0]
-    )
-    max_df = row["max_df"] or 0
-    return "prefix" if max_df > hot_df_threshold else "plain"
-
-
-def containment_pairs_auto(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    hot_df_threshold: int = 20_000,
-) -> DataFrame:
-    """Adaptive containment screen: profile the corpus (one agg —
-    metadata-sized driver scalar, same discipline as pagerank's node
-    count), then run whichever exact-complete form the shingle
-    frequency profile favors. Both forms return identical pairs
-    (test_containment_prefix_matches_exact), so the choice is purely
-    a physical-plan decision — the engine's own tiny cost-based
-    optimizer step for a cost Catalyst cannot see (Σ df² lives in the
-    DATA, not in table stats)."""
-    sh = shingle_sets(df, id_col, text_col, n)
-    if choose_containment_form(sh, hot_df_threshold) == "prefix":
-        return containment_pairs_prefix(df, id_col, text_col, n, threshold)
-    return containment_pairs(sh, id_col, threshold)
 
 
 def carve_blocks(

@@ -8,8 +8,9 @@ m buckets; (2) fit bag-of-ngrams multinomials p (target) and q (raw)
 over the buckets, add-one smoothed; (3) per raw document, the
 importance log-weight is sum over its n-gram occurrences of
 ``log p[bucket] - log q[bucket]``; (4) resample k documents with
-Gumbel-top-k on the log-weights (sampling without replacement
-proportional to w — Vieira 2014's Gumbel trick, which DSIR uses).
+Gumbel-top-k on the log-weights. This module implements (1)-(3); the
+callers select on the weights themselves (a top-k boundary is a
+cross-engine knife-edge, so the registered face emits weights only).
 
 Distributed shape:
 
@@ -21,12 +22,7 @@ Distributed shape:
   method (DSIR itself ships these as two m-vectors).
 - **weigh** — zero-shuffle scoring: the m log-ratios fold into a
   LITERAL array and each doc reduces its own bucket list through
-  ``element_at`` + sum (whole-stage codegen). Past ~4k buckets swap
-  to the broadcast-join form (``dsir_logweights_join``) — same
-  contract, one doc-grain partial aggregate instead of the literal.
-- **resample** — Gumbel keys are md5-derived (deterministic, seeded),
-  so selection is reproducible run-to-run and engine-to-engine;
-  global top-k is a TakeOrdered, not a full sort.
+  ``element_at`` + sum (whole-stage codegen).
 
 Reference parity note: the reference system has no corpus-selection
 surface — this module is part of the driver-mandated LLM-training-
@@ -39,10 +35,6 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# 16^12 + 1 — uniform-variate denominator for the Gumbel keys
-_HEX12_P1 = 281474976710657
-
 
 def _bucket(expr: Column, m: int) -> Column:
     return F.conv(F.substring(F.md5(expr), 1, 8), 16, 10).cast("long") % m
@@ -169,8 +161,7 @@ def dsir_logweights(
 ) -> DataFrame:
     """``(id_col, n_feats, logw)`` — zero-shuffle scoring: the doc's
     bucket list folds through a literal log-ratio array. Small-m form
-    (the literal rides the plan); use ``dsir_logweights_join`` past
-    ~4k buckets."""
+    (the literal rides the plan)."""
     arr = F.array(*[F.lit(float(x)) for x in log_ratio])
     return bucketed.select(
         F.col(id_col),
@@ -180,49 +171,6 @@ def dsir_logweights(
             F.lit(0.0),
             lambda acc, x: acc + x,
         ).alias("logw"),
-    )
-
-
-def dsir_logweights_join(
-    bucketed: DataFrame, ratio_df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Large-m twin of ``dsir_logweights``: explode to occurrence
-    grain, broadcast-join the (bucket, r) table, one doc-grain partial
-    aggregate back. ``ratio_df`` columns: bucket, r. Docs keep their
-    n_feats even when every r is the smoothing floor."""
-    occ = bucketed.select(
-        F.col(id_col), F.size("buckets").cast("long").alias("n_feats"),
-        F.explode("buckets").alias("bucket"),
-    )
-    return (
-        occ.join(F.broadcast(ratio_df), "bucket", "left")
-        .groupBy(id_col, "n_feats")
-        .agg(F.sum(F.coalesce("r", F.lit(0.0))).alias("logw"))
-        .select(id_col, "n_feats", "logw")
-    )
-
-
-def gumbel_topk(
-    weights: DataFrame, k: int, id_col: str = "doc_id", seed: int = 7
-) -> DataFrame:
-    """Gumbel-top-k resample without replacement, proportional to the
-    importance weights: key = logw + Gumbel(md5(seed || id)). The
-    md5-derived uniform makes selection deterministic and seed-stable;
-    global top-k compiles to TakeOrdered (no full-sort shuffle)."""
-    u = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws("|", F.lit(str(seed)), F.col(id_col).cast("string"))), 1, 12),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(1.0)
-    ) / F.lit(float(_HEX12_P1))
-    g = -F.log(-F.log(u))
-    return (
-        weights.withColumn("_key", F.col("logw") + g)
-        .orderBy(F.col("_key").desc(), F.col(id_col))
-        .limit(k)
-        .drop("_key")
     )
 
 

@@ -24,47 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def normalize_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
-    """Undirected edge list from raw pairs: order endpoints, drop
-    self-loops and duplicates. Output columns (u, v) with u < v."""
-    return (
-        pairs.select(
-            F.least(F.col(a), F.col(b)).alias("u"),
-            F.greatest(F.col(a), F.col(b)).alias("v"),
-        )
-        .filter(F.col("u") < F.col("v"))
-        .distinct()
-    )
-
-
-def triangle_count(edges: DataFrame, materialize: bool = True) -> DataFrame:
-    """Count triangles in an undirected graph given as normalized
-    (u, v) edges (u < v, distinct).
-
-    Degree-oriented: each edge points from its lower-(degree, id)
-    endpoint to the higher one; wedges (s→x, s→y) are generated at
-    the unique low-order apex and closed against the oriented edge
-    (x, y). Returns a 1-row frame (n_vertices, n_edges, n_triangles).
-
-    Scale: two |E|-keyed joins to attach degrees, one wedge self-join
-    whose output is Σ outdeg² ≤ |E|·√|E| worst-case (vs Σ deg² —
-    unbounded under skew — for the unoriented form), and one closure
-    join at wedge grain. No vertex ever fans out more than its
-    oriented out-degree.
-
-    ``materialize`` (default on) localCheckpoints the three reused
-    frames (edges, degrees, oriented). DataFrame reuse is NOT common-
-    subexpression elimination (the repo's q20/dedup_ingest lesson):
-    without the barrier, every one of this plan's seven references to
-    ``edges`` re-executes the caller's whole edge-building subtree —
-    28 source scans observed for the co-purchase graph. Graph
-    algorithms are exactly where Spark's cache/checkpoint idiom is
-    mandatory (GraphX materializes its edge RDDs for the same
-    reason). Pass False only for plan inspection of the pure shape.
-    """
-    return triangle_count_from_chain(*_closed_triangles(edges, materialize))
-
-
 def triangle_count_from_chain(
     edges: DataFrame, deg: DataFrame, closed: DataFrame
 ) -> DataFrame:
@@ -73,9 +32,9 @@ def triangle_count_from_chain(
     SEVERAL graph analytics on one graph (triangle count + clustering
     coefficients here) can build the expensive wedge/closure chain
     once and aggregate it many ways, the way an engine materializes a
-    shared intermediate (r17 optimization).
+    shared intermediate.
 
-    ONE aggregation job (r18, guide §2.4): the three counts ride a
+    ONE aggregation job: the three counts ride a
     tagged union through a single global aggregate with map-side
     partials instead of three separate 1-row aggregation jobs glued
     by two broadcast-nested-loop cross joins — same integer-exact
@@ -99,35 +58,28 @@ def _closed_triangles(edges: DataFrame, materialize):
 
     ``materialize`` modes:
 
-    - ``True`` — localCheckpoint the reused frames (edges, deg,
-      oriented). The ONE-SHOT operator path: barriers are paid once
-      and discarded with the query. DataFrame reuse is not CSE (the
-      repo's q20/dedup_ingest lesson) so the barriers are mandatory
-      here.
     - ``"persist"`` — lazy StorageLevel caching with RECOMPUTABLE
       lineage for deg (the caller persists ``closed`` and brings its
       own persisted edges). The session-cache path
       (plans/graph_queries._graph_chain): cached frames OUTLIVE the
       query there, and a checkpoint's severed lineage would make any
       lost block unrecoverable for every later graph query in the
-      session.
+      session. DataFrame reuse is not common-subexpression
+      elimination, so without the cache every reference to ``deg``
+      re-runs its aggregate.
       ``oriented`` is deliberately NOT cached: both wedge sides read
       it, but it is one cheap projection over the cached edges+deg
       join, and skipping the cache avoids a third block set and the
       eager barrier.
-    - ``False`` — pure plan shape, for inspection.
+    - ``False`` — pure plan shape, for inspection and small graphs.
     """
-    if materialize is True:
-        edges = edges.localCheckpoint()
     deg = (
         edges.select(F.col("u").alias("w"))
         .unionAll(edges.select(F.col("v").alias("w")))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    if materialize is True:
-        deg = deg.localCheckpoint()
-    elif materialize == "persist":
+    if materialize == "persist":
         deg = deg.persist()
     du = deg.select(F.col("w").alias("u"), F.col("deg").alias("deg_u"))
     dv = deg.select(F.col("w").alias("v"), F.col("deg").alias("deg_v"))
@@ -140,8 +92,6 @@ def _closed_triangles(edges: DataFrame, materialize):
         F.when(src_is_u, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(src_is_u, F.col("v")).otherwise(F.col("u")).alias("dst"),
     )
-    if materialize is True:
-        oriented = oriented.localCheckpoint()
     # wedges at the apex: two out-edges (src→x), (src→y), x < y keeps
     # each unordered pair once. SHUFFLE_HASH hint: the planner's
     # default sort-merge pays two full sorts of the oriented edge
@@ -161,23 +111,6 @@ def _closed_triangles(edges: DataFrame, materialize):
         edges.select(F.col("u").alias("x"), F.col("v").alias("y")), ["x", "y"], "left_semi"
     )
     return edges, deg, closed
-
-
-def clustering_coefficient(edges: DataFrame, materialize: bool = True) -> DataFrame:
-    """Per-vertex local clustering coefficient: for each vertex w,
-    tri(w) / C(deg(w), 2) — the fraction of w's neighbor pairs that
-    are themselves connected; the community-density signal on a
-    co-occurrence graph.
-
-    Reuses the oriented triangle chain: every closed triangle
-    (src, x, y) credits its three vertices (one explode, triangle-
-    grain), then a left join back onto the degree table gives every
-    vertex a row (coefficient 0 when it closes no triangle, NULL-free
-    via coalesce). All counts integer-exact; the coefficient is one
-    double division — deterministic cross-engine.
-    """
-    _, deg, closed = _closed_triangles(edges, materialize)
-    return clustering_coefficient_from_chain(deg, closed)
 
 
 def clustering_coefficient_from_chain(

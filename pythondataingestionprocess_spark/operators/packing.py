@@ -45,7 +45,7 @@ def shard_by_offset(
     """
     # token_col tiebreak: order_col duplicates across a multi-source
     # union would otherwise make the running sum (and thus shard_id)
-    # partition-order nondeterministic (r13 review); rows tying on
+    # partition-order nondeterministic; rows tying on
     # both keys contribute identical token counts, so every tie order
     # yields the same start_offset multiset
     w = (
@@ -89,8 +89,8 @@ def pack_documents_greedy(
                 f"count per doc (filter or impute upstream)"
             )
         # (order_col, token_col) sort with a STABLE kind: order_col
-        # ties across shuffle-ordered input made bin assignment
-        # nondeterministic (r13 review); rows tying on BOTH keys are
+        # ties across shuffle-ordered input would make bin assignment
+        # nondeterministic; rows tying on BOTH keys are
         # column-identical here, so the output multiset is total-order
         # deterministic
         pdf = pdf.sort_values(
@@ -103,83 +103,6 @@ def pack_documents_greedy(
         return out
 
     return narrow.groupBy(group_col).applyInPandas(pack, schema=out_schema)
-
-
-def pack_documents_lookahead(
-    df: DataFrame,
-    group_col: str,
-    order_col: str,
-    token_col: str,
-    budget: int,
-) -> DataFrame:
-    """Whole-document packing with TWO open bins (bounded-space best
-    fit): each doc goes to whichever open bin it fills tighter; when it
-    fits neither, the fuller bin is sealed and a fresh one opens. Better
-    fill than single-bin greedy (a large doc no longer forces sealing a
-    half-empty bin — the next small docs can still top it up) at the
-    same O(n) per-group scan; same ``applyInPandas`` distribution shape
-    as :func:`pack_documents_greedy`.
-
-    Output: (group_col, order_col, token_col, bin_id, bin_fill) with
-    bin_id in order of opening and bin_fill the bin's fill right after
-    placing this doc.
-    """
-    narrow = df.select(group_col, order_col, token_col)
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in narrow.schema.fields)
-        + ", bin_id long, bin_fill long"
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf[token_col].isna().any():
-            raise ValueError(
-                f"{token_col} contains NULL in group "
-                f"{pdf[group_col].iloc[0]!r} — packing needs a token "
-                f"count per doc (filter or impute upstream)"
-            )
-        # see pack_documents_greedy: total-order determinism on ties
-        pdf = pdf.sort_values(
-            [order_col, token_col], kind="mergesort", ignore_index=True
-        )
-        bins, fills = lookahead_bins([int(t) for t in pdf[token_col]], budget)
-        out = pdf[[group_col, order_col, token_col]].copy()
-        out["bin_id"] = bins
-        out["bin_fill"] = fills
-        return out
-
-    return narrow.groupBy(group_col).applyInPandas(pack, schema=out_schema)
-
-
-def lookahead_bins(tokens: list[int], budget: int) -> tuple[list[int], list[int]]:
-    """Bounded-space (2 open bins) best-fit packing core — pure,
-    engine-free, property-tested directly. Per doc: place in the open
-    bin with the LEAST remaining room that still fits (ties → older
-    bin); if neither fits, seal the fuller open bin (ties → older) and
-    open a new one. A doc alone may exceed the budget, as in
-    :func:`greedy_bins`. Returns per-doc (bin_id, fill-after-placement);
-    bin ids are assigned in opening order but docs in one bin need not
-    be contiguous in input order.
-    """
-    open_bins: list[list[int]] = []  # [bin_id, fill], at most 2
-    next_id = 0
-    bins: list[int] = []
-    fills: list[int] = []
-    for tok in tokens:
-        fitting = [b for b in open_bins if b[1] + tok <= budget]
-        if fitting:
-            # best fit: fullest fitting bin; tie → oldest (lowest id)
-            target = max(fitting, key=lambda b: (b[1], -b[0]))
-        else:
-            if len(open_bins) == 2:
-                sealed = max(open_bins, key=lambda b: (b[1], -b[0]))
-                open_bins.remove(sealed)
-            target = [next_id, 0]
-            next_id += 1
-            open_bins.append(target)
-        target[1] += tok
-        bins.append(target[0])
-        fills.append(target[1])
-    return bins, fills
 
 
 def greedy_bins(tokens: list[int], budget: int) -> tuple[list[int], list[int]]:

@@ -10,8 +10,8 @@ reduction of what a scan must read, while search stays a cheap
 table-lookup sum (ADC). At a billion vectors the raw corpus is
 ~256 GB/replica; the PQ corpus rides in ~8 GB — the difference between
 an in-memory scan tier and an IO-bound one. IVF composes on top
-(partition the CODES table by ivf_list and probe; see
-tests/test_pq.py) exactly as PAMI 2011's IVFADC.
+(partition the CODES table by ivf_list and probe) exactly as PAMI
+2011's IVFADC.
 
 Design for Spark's execution model:
 
@@ -30,8 +30,8 @@ Design for Spark's execution model:
   RAW query builds an (m × ksub) lookup table of partial squared-L2
   distances to every codebook entry once; corpus codes are scored by
   m table lookups + a sum, vectorized as one numpy gather per batch.
-  Queries ride the closure like knn_int8's q_mat (declared-small query
-  side); the corpus is never shuffled — per-partition top-k partials
+  Queries ride the kernel closure (declared-small query side); the
+  corpus is never shuffled — per-partition top-k partials
   feed one final top-k.
 
 Vectors are L2-normalized at fit/encode/search, so squared-L2 order
@@ -121,9 +121,9 @@ def pq_fit(
         # one aggregation at (subspace, code, dim-within-subspace) grain;
         # vectors are re-normalized in SQL so the update averages the
         # same geometry the assign UDF saw. norm() (functions/vectors)
-        # casts each element to double BEFORE squaring — the previous
-        # hand-rolled fold squared array<float> elements in float32,
-        # diverging from the UDF's float64 geometry (r13 review) — and
+        # casts each element to double BEFORE squaring — a fold that
+        # squared array<float> elements in float32 would diverge from
+        # the UDF's float64 geometry — and
         # the zero-norm filter keeps a single all-zero vector (an empty
         # document's embedding) from killing the whole fit under ANSI
         # mode's DIVIDE_BY_ZERO (a directionless vector contributes
@@ -181,8 +181,7 @@ def pq_encode(
 def _adc_scores_udf(codebooks: np.ndarray, q_mat: np.ndarray):
     """Approximate squared-L2 of every (corpus code, query) pair via
     the per-query ADC lookup tables; q_mat is (n_q, dim) RAW queries
-    riding the closure (declared-small query side, the knn_int8
-    contract)."""
+    riding the closure (declared-small query side)."""
     cb = codebooks.astype(np.float64)
     m, ksub, dsub = cb.shape
     q = _norm_rows(q_mat.astype(np.float64))
@@ -254,9 +253,3 @@ def pq_search(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def pq_code_bytes(m: int, ksub: int) -> int:
-    """At-rest bytes per vector for the given PQ shape (1 byte per code
-    up to ksub=256, 2 beyond) — the number the 100 TB planning uses."""
-    return m * (1 if ksub <= 256 else 2)

@@ -32,7 +32,8 @@ Distributed shape (never all-pairs):
    bounded — that is the paper's own scaling knob.
 3. **verdict** — dropped rows aggregate to ``(id, dup_of)`` where
    ``dup_of`` is the dominating neighbor with the best (lowest)
-   keep-rank; survivors are the corpus anti-joined on the dropped set.
+   keep-rank; survivors are the corpus anti-joined on the dropped set
+   (the caller's anti-join; this module returns the dropped set).
 
 Keep-rule total order inside a cluster: ``(cos_to_centroid ASC,
 id ASC)`` — the paper's low-centroid-similarity preference with ids
@@ -278,25 +279,3 @@ def semdedup_dropped(
             "i"
         ].alias("dup_of")
     ).select(F.col("id_b").alias(id_col), "dup_of")
-
-
-def semdedup_keep(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.99,
-    assigner: str = "expr",
-) -> DataFrame:
-    """The deduplicated corpus: input rows minus the dropped set
-    (anti-join on the id — the dropped side is the duplicated tail,
-    small by construction, so AQE broadcasts it)."""
-    dropped = semdedup_dropped(
-        df,
-        centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        assigner=assigner,
-    )
-    return df.join(dropped.select(id_col), id_col, "left_anti")

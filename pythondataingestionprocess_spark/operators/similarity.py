@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.functions.vectors import cosine
@@ -67,25 +67,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def _bucket_expr(vec_col: str, planes: list[list[float]]):
-    """Sign-bit bucket id for one hyperplane table (pure-expression
-    form — fine for a handful of planes; the batch path below uses the
-    vectorized UDF instead)."""
-    bits = []
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col), plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out
-
-
 def _buckets_udf(tables: list[list[list[float]]]):
     """All tables' bucket ids in one Arrow-batched matmul.
 
@@ -96,7 +77,7 @@ def _buckets_udf(tables: list[list[list[float]]]):
     ~100× cheaper and stays vectorized end-to-end — the sanctioned
     Pandas-UDF escape hatch, not a row-at-a-time Python UDF.
 
-    Returned marked NON-DETERMINISTIC (r18, guide §4.4) although the
+    Returned marked NON-DETERMINISTIC although the
     GEMM is pure: every caller explodes the bucket array right after
     this projection, and InferFiltersFromGenerate inserts a
     ``size(bs) > 0 AND isnotnull(bs)`` predicate that
@@ -141,10 +122,10 @@ def hyperplane_bucket_rows(
     """(id, table, bucket) LSH membership rows — THE one construction
     of the hyperplane tables (``seed + 101 * t`` per table) and the
     posexplode shape, shared by the batch near-dup operators and the
-    streaming vector store (r13 review: three hand-synced copies of
-    this scheme meant a future seeding/encoding change would silently
-    desynchronize the streaming store/probe from the batch operators
-    — quietly different LSH recall, no error)."""
+    streaming vector store: separate copies of this scheme would let a
+    seeding/encoding change silently desynchronize the streaming
+    store/probe from the batch operators — quietly different LSH
+    recall, no error."""
     tables = [
         hyperplanes(dim, bits_per_table, seed + 101 * t)
         for t in range(n_tables)
@@ -210,7 +191,7 @@ def _rademacher_buckets_udf(masks: list[list[int]]):
     """All tables' bucket ids in one exact float64 GEMM per Arrow
     batch (see module comment: integer-valued doubles < 2^53 make
     BLAS bit-deterministic here). Marked non-deterministic for the
-    same §4.4 reason as :func:`_buckets_udf` — the posexplode right
+    same reason as :func:`_buckets_udf` — the posexplode right
     above it otherwise duplicates the GEMM per reference (the cosine
     face paid 8 corpus GEMMs where 2 suffice:
     plans/r17/dedup_embedding_cosine_before.txt)."""
@@ -331,116 +312,3 @@ def ann_lsh(
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-# ---------------------------------------------------------------------------
-# Int8 quantization: the memory/bandwidth tier under the float scan.
-# ---------------------------------------------------------------------------
-
-def quantize_int8(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """(id, qvec array<tinyint>) — symmetric per-vector int8
-    quantization: q = round(x · 127/max|x|), so every vector spans the
-    full int8 range. COSINE SURVIVES QUANTIZATION EXACTLY in
-    expectation: cos(a,b) ≈ (qa·qb)/(|qa||qb|) because the per-vector
-    scales cancel in the ratio — no scale column needs to ride along
-    for similarity search (store one only to reconstruct magnitudes).
-
-    Scale story: an array<double> embedding is 8 bytes/dim; int8 is 1.
-    At 100 TB of embeddings that is the difference between a corpus
-    that fits executor page cache and one that thrashes — the scan
-    tier below LSH/IVF pruning gets 8× the rows per byte of I/O. One
-    HOF pass per row (array_max + transform), map-side, no shuffle.
-    Zero vectors quantize to zero vectors (NULL-safe guard on the
-    scale divisor).
-    """
-    return df.select(F.col(id_col), int8_qvec_col(vec_col).alias("qvec"))
-
-
-def int8_qvec_col(vec_col: str) -> Column:
-    """The per-vector symmetric int8 quantization as a reusable column
-    expression — the ONE implementation of the SQ8 rule (shared with
-    the IVF-SQ8 index layout in operators/ivf.py)."""
-    v = F.col(vec_col)
-    absmax = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
-    scale = F.when(absmax > 0, 127.0 / absmax).otherwise(F.lit(0.0))
-    return F.transform(
-        v, lambda x: F.round(x.cast("double") * scale).cast("tinyint")
-    )
-
-
-def _int8_scores_udf(q_mat: np.ndarray):
-    """Arrow kernel: per corpus row, cosine against ALL queries from
-    int8 dots accumulated in int32 — one (batch × dim)·(dim × n_q)
-    integer GEMM per Arrow batch (same sanctioned escape hatch as
-    _buckets_udf; interpreted per-pair array folds would be ~100×
-    slower and defeat the bandwidth win)."""
-    from pyspark.sql.functions import pandas_udf
-
-    qm = q_mat.astype(np.int32)  # (n_q, dim)
-    q_norms = np.sqrt((qm * qm).sum(axis=1))
-
-    @pandas_udf("array<double>")
-    def _scores(qvec: pd.Series) -> pd.Series:
-        mat = np.vstack(qvec.to_numpy()).astype(np.int32)  # (n, dim)
-        dots = mat @ qm.T  # int32 exact: |dot| ≤ dim·127² ≪ 2³¹
-        norms = np.sqrt((mat * mat).sum(axis=1, keepdims=True))
-        denom = norms * q_norms[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(denom > 0, dots / denom, 0.0)
-        return pd.Series(list(cos))
-
-    return _scores
-
-
-def knn_int8(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Quantized exact-scan top-k: int8 corpus × int8 queries, same
-    output contract as knn_bruteforce (query_id, neighbor_id, cos,
-    rank). The corpus pass is map-side (quantize + integer GEMM per
-    Arrow batch); the only shuffle is the per-query top-k window,
-    same as the float brute scan. Recall vs the float scan is pinned
-    by test (≥0.9 @ k=5 on the real corpus; measured 0.98); rank ties
-    broken by neighbor_id for determinism.
-
-    The queries side is collected into the kernel closure — same
-    small-side assumption the float scan makes with its broadcast.
-
-    Honest measurement (200k×64 corpus, 20 queries, local[32]): this
-    path is ~2× SLOWER on wall than the float scan (≈5 s vs 2.6 s,
-    pre-quantized corpus; the Arrow serialize/deserialize of 200k
-    arrays costs more than the JVM-codegen'd float cosine it
-    replaces; a tolist() fast-path conversion recovers only ~5%).
-    The tier's real win is BYTES — 1/8 the storage, scan I/O, and
-    shuffle/network per vector, which is what binds a 100 TB corpus
-    on real clusters (the float scan reads 8× the data before either
-    path computes anything), plus cache locality the local benchmark
-    can't see. Use it as the STORAGE format with quantize-once
-    semantics; prefer the float scan when the corpus already sits in
-    memory as doubles.
-    """
-    cq = quantize_int8(corpus, id_col, vec_col)
-    qq = quantize_int8(queries, id_col, vec_col).orderBy(id_col).collect()
-    q_ids = [r[0] for r in qq]
-    q_mat = np.array([r[1] for r in qq], dtype=np.int32)
-    scores = _int8_scores_udf(q_mat)
-    id_map = F.array(*[F.lit(i) for i in q_ids])
-    exploded = (
-        cq.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.posexplode(scores(F.col("qvec"))).alias("qpos", "cos"),
-        )
-        .withColumn("query_id", F.element_at(id_map, F.col("qpos") + 1))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "cos")
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return exploded.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )

@@ -35,20 +35,3 @@ def salted_join(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<long>"))
     )
     return big.join(rep, [*on, "_salt"], how).drop("_salt")
-
-
-def salted_agg_count(
-    df: DataFrame, group_cols: list[str], n_salts: int = 16
-) -> DataFrame:
-    """Two-phase count for hot groups: partial count per (group,
-    salt), then final sum per group — the map-side-combine idea made
-    explicit when a single group dwarfs the rest. (Spark's
-    hash-aggregate already partial-combines; this form also splits
-    the REDUCE side of a hot group across n_salts tasks.)"""
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy(*group_cols, "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"))
-    )
-    return partial.groupBy(*group_cols).agg(F.sum("_partial").alias("n"))

@@ -36,8 +36,8 @@ removal can make previously-separated tokens adjacent, and if that
 new adjacency happens to duplicate another k-span, a second pass
 removes it too (tests pin both behaviors — no re-removal when no new
 adjacency forms, and the cascade case converging on a later pass).
-Run to fixpoint if exact suffix-array semantics are required; each
-pass only shrinks the corpus, so the loop terminates.
+A caller that needs exact suffix-array semantics reruns it to a
+fixpoint; each pass only shrinks the corpus, so that loop terminates.
 """
 
 from __future__ import annotations
@@ -122,72 +122,4 @@ def repeated_span_dedup(
             ).alias("n_removed"),
             F.coalesce("_text", F.lit("")).alias(text_col),
         )
-    )
-
-
-def repeated_span_dedup_fixpoint(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 10,
-    max_passes: int = 20,
-    stats: dict | None = None,
-) -> DataFrame:
-    """`repeated_span_dedup` iterated to FIXPOINT — exact
-    suffix-array semantics (r10 VERDICT item 5): the single pass is
-    not idempotent because removal can create a new adjacency that
-    duplicates another k-span; re-running on the output resolves those
-    cascades, and each pass strictly shrinks the corpus so the loop
-    terminates. Same output contract as the single pass, with
-    ``n_tokens`` the ORIGINAL count and ``n_removed`` the total across
-    all passes.
-
-    Each pass is localCheckpointed (flat lineage, the components.py
-    iterative discipline) and costs one corpus-grain job; the
-    fixpoint check is a 1-row aggregate. In practice the cascade tail
-    is tiny — the sf0.1 probe (BASELINE.md) converges in 2 passes with
-    ZERO pass-2 removals even on a planted 100%-dup overlay (a
-    removal-created adjacency must duplicate another k-gram to
-    cascade, which is rare at k=10) — so ``max_passes`` is a
-    fail-loud backstop against a pathological corpus, not a budget:
-    exceeding it raises instead of silently returning a
-    not-yet-converged corpus. ``stats`` records ``passes`` and
-    ``removed_per_pass`` (last entry always 0 — the fixpoint
-    certificate)."""
-    if stats is None:
-        stats = {}
-    stats["passes"] = 0
-    stats["removed_per_pass"] = []
-    cur = docs
-    totals = None
-    out = None
-    while stats["passes"] < max_passes:
-        out = repeated_span_dedup(cur, id_col, text_col, k).localCheckpoint(
-            eager=True
-        )
-        stats["passes"] += 1
-        removed = out.agg(F.sum("n_removed").alias("r")).collect()[0]["r"] or 0
-        stats["removed_per_pass"].append(int(removed))
-        if totals is None:
-            totals = out.select(id_col, "n_tokens")  # original counts
-        if removed == 0:
-            break
-        cur = out.select(id_col, text_col)
-    else:
-        raise RuntimeError(
-            f"repeated_span_dedup_fixpoint: no fixpoint within "
-            f"{max_passes} passes (removed_per_pass="
-            f"{stats['removed_per_pass']}) — pathological cascade; "
-            f"raise max_passes explicitly if this corpus is expected"
-        )
-    kept = out.select(
-        id_col,
-        (F.col("n_tokens") - F.col("n_removed")).alias("_kept"),
-        text_col,
-    )
-    return totals.join(kept, [id_col]).select(
-        id_col,
-        "n_tokens",
-        (F.col("n_tokens") - F.col("_kept")).alias("n_removed"),
-        text_col,
     )

@@ -397,7 +397,10 @@ def ingest_batch(
 
     Dims use insert-if-absent (catalog-cache semantics); facts append
     (post-dedup); price applies the SCD stamping. Each upsert is one
-    MERGE-shaped write — per-batch, not per-row.
+    MERGE-shaped write — per-batch, not per-row. On a plain store that
+    is seven commits; run it on a ``TableGroup`` transaction (built with
+    ``schemas=SCHEMAS``) and all seven tables land as ONE commit, the
+    all-or-nothing batch the reference gets from one DB session.
     ``verify_urls``/``url_transport`` opt into the reference's live
     provider-link verification (see stage_batch).
     """
@@ -415,36 +418,6 @@ def ingest_batch(
     merged_price = apply_price_scd(store.read("price"), result.prices, current_date)
     store.overwrite("price", merged_price)
     return result
-
-
-def ingest_batch_txn(
-    compras: DataFrame,
-    precios: DataFrame,
-    group,
-    current_date: date | None = None,
-    verify_urls: bool = False,
-    url_transport=None,
-) -> IngestResult:
-    """:func:`ingest_batch` as ONE atomic commit on a
-    :class:`~pythondataingestionprocess_spark.pipeline.txn_group.TableGroup`.
-
-    The plain path is seven independent store commits; a crash in the
-    middle exposes e.g. a purchase without its operations — exactly
-    the partial-batch state the reference avoids by holding one DB
-    session (import_files_to_postgre.py:145-227). Here the same seven
-    writes run on a group transaction (its reads are the group's
-    committed reads, its writes stage): every dim merge, both fact
-    appends, and the price SCD land as a single commit — all seven
-    tables move together or not at all, and a concurrent committer is
-    detected at the claim instead of interleaving between table
-    writes. The group should be built with ``schemas=SCHEMAS`` so
-    first-batch reads bootstrap typed-empty.
-    """
-    with group.transaction() as txn:
-        return ingest_batch(
-            compras, precios, txn, current_date,
-            verify_urls=verify_urls, url_transport=url_transport,
-        )
 
 
 def rows_payment(result: IngestResult) -> DataFrame:

@@ -17,8 +17,7 @@ format reduces to (public Delta PROTOCOL.md / Iceberg spec shapes):
 
    recording, per table touched, the action (overwrite/append), the
    data directories it added, per-file row counts + min/max skipping
-   stats (the :func:`storage.file_skipping_stats` shape) and the
-   schema, plus the base snapshot the writer built on.
+   stats and the schema, plus the base snapshot the writer built on.
 
 One engine, :class:`_SnapshotLog`, implements the protocol over one
 ``_txlog`` directory. :class:`SnapshotTableStore` holds one log per
@@ -63,9 +62,8 @@ the base snapshot their ``overwrite`` validates against.
 At 100 TB: commits are metadata-sized (one JSON per commit; stats are
 files-grained), readers plan from the manifest file list without
 listing storage, and the recorded min/max stats drive
-:func:`skippable_files` — the same pruning
-:func:`storage.prunable_files` does, served from the log instead of a
-directory walk.
+:func:`skippable_files` — file pruning served from the log instead of
+a directory walk or footer reads.
 """
 
 from __future__ import annotations
@@ -370,7 +368,7 @@ class _SnapshotLog:
         self, name: str, df: DataFrame
     ) -> tuple[str | None, list[dict]]:
         """Write ``df`` to a fresh immutable directory; return (dir,
-        per-file entries in the file_skipping_stats shape) for the
+        per-file row-count and min/max entries) for the
         files holding rows. The write is the only Spark job: row
         counts come from the parquet footers, and only a table with
         ``stats_cols`` pays a min/max read-back (given the written
@@ -857,8 +855,8 @@ class SnapshotTableStore(ParquetTableStore):
     def skippable_files(self, name: str, col: str, lo, hi) -> list[str]:
         """Files a ``col BETWEEN lo AND hi`` reader can skip, decided
         from the COMMIT MANIFEST's recorded min/max — no storage
-        listing, no footer reads (the prunable_files contract served
-        from the log). Stats are stored as strings; comparison uses
+        listing, no footer reads: a file is skippable iff its [min, max]
+        envelope misses [lo, hi]. Stats are stored as strings; comparison uses
         the caller's type via string round-trip, so use it for columns
         whose string order matches value order (dates, zero-padded
         keys) or numeric columns via the float fallback below."""

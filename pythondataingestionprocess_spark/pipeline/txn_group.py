@@ -58,6 +58,24 @@ from pythondataingestionprocess_spark.pipeline.snapshot_store import (
 from pythondataingestionprocess_spark.pipeline.store import TableMerge
 
 
+def stream_txn(app: str, batch_df: DataFrame, batch_id: int | None
+               ) -> tuple[str, int] | None:
+    """The exactly-once key of a ``foreachBatch`` commit for
+    :meth:`TableGroup.transaction`. Inside a streaming query the app id
+    is ``app:<queryId>``: Spark's query id is stable across restarts
+    from one checkpoint and new for a new one, so a second query
+    feeding the same store, or a restart from a lost checkpoint, starts
+    its own batch 0 instead of colliding with the recorded ids of
+    another query (Delta asks the same of its ``txnAppId``). A direct
+    call outside any query keys by ``app`` alone; ``batch_id=None`` (an
+    ad-hoc append) is no key."""
+    if batch_id is None:
+        return None
+    query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+        "sql.streaming.queryId")
+    return (app if query_id is None else f"{app}:{query_id}", batch_id)
+
+
 class TableGroup:
     """Snapshot-log table store with ONE log for many tables."""
 

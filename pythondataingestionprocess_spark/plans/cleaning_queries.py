@@ -126,12 +126,10 @@ def clean_signed_money(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------ date handling
 
-# F18 Excel-serial-date driver face `clean_excel_serial_date` RETIRED
-# late-r10 (capacity lever, freeing the slot for the SemDeDup face):
-# a 4-row year-grouped micro-aggregate whose entire substance —
-# functions/dates.py::excel_serial_to_date, epoch 1899-12-30 — stays
-# pinned by unit tests (tests/test_functions.py) and the Hypothesis
-# serial<->date roundtrip property (tests/test_properties.py).
+# The F18 Excel-serial rule (functions/dates.py::excel_serial_to_date,
+# epoch 1899-12-30) has no face of its own: unit tests
+# (tests/test_functions.py) and the Hypothesis serial<->date roundtrip
+# property (tests/test_properties.py) pin it.
 
 
 _STMT_DATE_ORACLE = """
@@ -322,27 +320,11 @@ def tiered_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED r11 (capacity lever, r10 VERDICT item 2): `margin_defaults`
-# — the F15/F16 landed-cost + margin/offer default face, last driver
-# row r10 hash-green. It exercised fx.landed_unit_cost /
-# fx.price_default / fx.offer_price_default over a synthetic NULL
-# lattice; that substance stays pinned by tests/test_functions.py::
-# {test_price_defaults,test_landed_unit_cost} (NULL/zero branches) and
-# the Hypothesis cleaning properties, while the driver-facing pricing
-# formulas (F16/F17 tier CASE chains) keep `tiered_pricing` as their
-# oracle face. Same documented-substance discipline as the F18
-# clean_excel_serial_date retirement (r10).
-
-
 # ------------------------------------------------------------------- JSON
 
-# RETIRED r11 (capacity lever, r10 VERDICT item 2):
-# `json_extract_props` — the string-path get_json_object face, last
-# driver row r7 hash-green. Engine-added (the reference has no JSON
-# surface) and fully shadowed by `json_variant_props_stats` below:
-# same `$.k` extraction over the same events.props against the same
-# DuckDB json_extract oracle, via the STRICTLY richer Variant path
-# (parse-once binary encoding — the form a 100 TB pipeline should
+# String-path `$.k` extraction over events.props is covered by
+# `json_variant_props_stats` below, through the strictly richer Variant
+# path (parse-once binary encoding — the form a 100 TB pipeline should
 # use), plus `json_map_functions` for the map-typed surface.
 
 

@@ -843,15 +843,14 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     its n-gram occurrences. Weights are emitted for ALL documents
     (ROUND 6 absorbs float-fold ulps: JVM vs DuckDB ln and SQL's
     unordered SUM both live ~1e-11 below the rounding grain, the
-    registry's established ROUND-oracle discipline) — selection
-    (deterministic Gumbel-top-k, operators/dsir.py::gumbel_topk) stays
+    registry's established ROUND-oracle discipline) — selection stays
     out of the driver face to avoid top-k boundary knife-edges.
 
     Plan shape (operators/dsir.py): featurize is map-side; each
     distribution is one occurrence-grain shuffle with map-side
     partials into m rows; the m log-ratios fold back as a LITERAL
     array so scoring is zero-shuffle whole-stage codegen
-    (element_at + aggregate) — the broadcast-join twin covers large m.
+    (element_at + aggregate).
     Driver state = the two m-vectors, the method's own contract."""
     from pythondataingestionprocess_spark.operators import dsir
 

@@ -1,5 +1,5 @@
 """Warehouse-maintenance + feature-engineering queries (beyond-
-reference depth, staged for the round-8 driver window).
+reference depth).
 
 Four 100 TB-shaped capabilities the registry lacked:
 
@@ -324,7 +324,7 @@ def zorder_layout_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ~43% of TPC-H orders predate the 1995-01-01 epoch; clamp at 0
         # so py honors the layout's documented 0..255 bucket contract
         # instead of relying on both engines truncating toward zero and
-        # &255 wrapping identically (r8 ADVICE).
+        # &255 wrapping identically.
         F.greatest(
             F.least(
                 (F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("date")).cast("long") / 10)
@@ -370,23 +370,17 @@ GROUP BY 1
     tags=("layout", "skipping", "agg"),
 )
 def zorder_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The file-skipping DECISION over a Z-ordered layout (registered
-    net-new at the tail of r8 WITHOUT the offsetting retirement the
-    capacity rule requires — flagged in the r8 VERDICT; staged into
-    the r9 driver window, capacity restored by the r9 retirements):
+    """The file-skipping DECISION over a Z-ordered layout:
     storage.zorder_manifest computes the per-cell (per-file) min/max
     envelopes of both layout dimensions — the manifest a lakehouse
     reader consults — and each cell gets the prunable verdict for a
     fixed 2-D box predicate (price band 40..80 × date band 100..140),
-    using storage.prunable_files' envelope-miss rule composed across
-    dimensions: skippable iff EITHER envelope misses its conjunct.
+    using the envelope-miss rule composed across dimensions: skippable
+    iff EITHER envelope misses its conjunct.
 
     Complements zorder_layout_cells (occupancy of the same layout):
-    this face proves the skipping math end to end cross-engine, while
-    tests/test_bucketing.py measures the physical payoff on written
-    files. Map-side exact; one shuffle at the 64-cell grain; the
-    sampled-range physical rewrite (storage.optimize_zorder) stays
-    test-covered because its boundaries are not reproducible in SQL.
+    this face proves the skipping math end to end cross-engine.
+    Map-side exact; one shuffle at the 64-cell grain.
     """
     from pythondataingestionprocess_spark.storage import zorder_manifest
 
@@ -396,7 +390,7 @@ def zorder_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ~43% of TPC-H orders predate the 1995-01-01 epoch; clamp at 0
         # so py honors the layout's documented 0..255 bucket contract
         # instead of relying on both engines truncating toward zero and
-        # &255 wrapping identically (r8 ADVICE).
+        # &255 wrapping identically.
         F.greatest(
             F.least(
                 (F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("date")).cast("long") / 10)

@@ -2,8 +2,8 @@
 north star): the cheap single-pass surface — exact/fingerprint dedup,
 brute-force kNN, text analysis, multimodal column plumbing. The
 expensive multi-stage dedup/ANN queries live in ``plans.llm_heavy``,
-registered last (VERDICT r1: a driver-side run-time budget should
-truncate on those, not on this otherwise-unverified surface).
+registered last, so a driver-side run-time budget truncates on those,
+not on this otherwise-unverified surface.
 """
 
 from __future__ import annotations
@@ -20,10 +20,10 @@ from pythondataingestionprocess_spark.plans.registry import query
 # Shared: a corpus with planted duplicates — documents plus re-tagged
 # copies of every 10th doc (the raw corpus is dup-free by
 # construction, so dedup queries plant their own). Plant ids sit at
-# +1e12 (r13 review: the old +1e6 collided with real ids at SF≈5,
+# +1e12: a smaller offset (+1e6) collides with real ids at SF≈5,
 # corrupting keep-min-id representatives and pair oracles invisibly;
 # real doc ids at the 100TB target are ~5e10 — 20x headroom, and
-# min-id representative semantics keep pointing at the REAL doc).
+# min-id representative semantics keep pointing at the REAL doc.
 _DUP_CORPUS_SQL = """
   SELECT doc_id, text, source FROM documents
   UNION ALL
@@ -121,12 +121,9 @@ def embedding_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.knn_bruteforce(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
-# `embedding_norms` (min/max L2 norm per label) RETIRED late-r10
-# (capacity lever, freeing the slot for the DSIR face): a thin per-row
-# map + 4-row aggregate whose entire substance — the
-# functions/vectors.py zip_with/aggregate double folds — is exercised
-# far harder by `embedding_knn_brute` (same folds inside a ranked
-# join, full oracle) and by every cosine-dedup query.
+# The functions/vectors.py zip_with/aggregate double folds are
+# exercised by `embedding_knn_brute` (inside a ranked join, full
+# oracle) and by every cosine-dedup query.
 
 
 # ----------------------------------------------------------- text analysis
@@ -188,21 +185,14 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-# RETIRED r14 (capacity lever, r13 VERDICT item 6 shortlist #2):
-# `text_token_count` — whitespace token counting is a strict subset of
+# Whitespace token counting is a strict subset of
 # `text_quality_score`'s feature columns (functions/text.py
 # quality_score computes token_count inside its mean-token-length and
 # stopword-ratio bands, and that face's oracle restates the same
 # string_split_regex tokenization) and of `text_bpe_token_count`'s
-# harder regex tokenization. The retired face's exact per-lang
-# whitespace-count aggregation now lives in tests/test_llm_operators.py
-# ::test_whitespace_token_count_per_lang_matches_duckdb (the migrated
-# oracle comparison). Last driver row r13 hash-green. Slot reused by
-# `embedding_ann_recall` (llm_heavy.py) — the ANN
-# family's oracle-checked recall certificate. Same documented-substance
-# discipline as the histogram_quantity (r13) / first_match_pick (r11) /
-# F18 (r10) retirements.
+# harder regex tokenization; the per-lang whitespace-count aggregation
+# is pinned against DuckDB by tests/test_llm_operators.py
+# ::test_whitespace_token_count_per_lang_matches_duckdb.
 
 
 _BPE_ORACLE = r"""
@@ -333,8 +323,8 @@ GROUP BY h.doc_id, fp.md5_fp
 def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive polynomial rolling hash per document, on a
     PORTABLE md5-based token hash (functions/text.rolling_hash).
-    Promoted from rows-only to a full oracle (VERDICT r2 item 5): the
-    sequential Spark fold ``((0·b+h1)·b+h2…) mod m`` is checked against
+    Full oracle: the sequential Spark fold ``((0·b+h1)·b+h2…) mod m``
+    is checked against
     DuckDB's closed form ``Σ h_i·b^(n−i) mod m`` via a recursive-CTE
     power table — two independent formulations of the same hash."""
     docs = load_table(spark, sf_dir, "documents")
@@ -390,11 +380,10 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads: utf-8 doc bytes stand in for media blobs, media_type
     assigned round-robin, deterministic fake decoder (container ships
     no image/audio libs — multimodal/media.py stubs the real one).
-    Promoted from rows-only to a FULL oracle in r16 (r15 VERDICT
-    item 5): the fake decoder is byte-length arithmetic, so DuckDB
+    Full oracle: the fake decoder is byte-length arithmetic, so DuckDB
     replays it exactly (_DECODE_STATS_ORACLE) and the driver row
-    certifies the Arrow binary-column plumbing end-to-end — the same
-    move the real-decode face made in r14 with synth.py's blobs.
+    certifies the Arrow binary-column plumbing end-to-end, as the
+    real-decode face does with synth.py's blobs.
     Determinism of the per-blob stats stays pinned by
     tests/test_llm_operators.py."""
     from pythondataingestionprocess_spark.multimodal.media import decode_media
@@ -460,7 +449,7 @@ FROM stats GROUP BY media_type
 @query("multimodal_real_decode_roundtrip", oracle=_REAL_DECODE_ORACLE,
        tags=("multimodal",))
 def multimodal_real_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL media decode, fully oracle-checked (r13): synthesize one
+    """REAL media decode, fully oracle-checked: synthesize one
     valid BMP/TIFF/WAV/MOV blob per document (multimodal/synth.py —
     every byte a function of doc_id), run the real decoders through
     the Arrow decode_media path (RLE8 expansion + palette, PackBits
@@ -636,8 +625,8 @@ FROM walk GROUP BY 1, 2
 @query("doc_packing_greedy", oracle=_GREEDY_PACK_ORACLE, tags=("packing", "pandas-udf"))
 def doc_packing_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-document greedy packing (budget 4096): per-(source, bin)
-    fill stats from the applyInPandas sequential packer. Promoted from
-    rows-only to a full oracle (VERDICT r2 item 5): greedy bin state
+    fill stats from the applyInPandas sequential packer. Full oracle:
+    greedy bin state
     isn't window-expressible, but DuckDB's recursive CTE can walk the
     per-group document sequence row-by-row and replay the exact
     open-bin state machine — an independent sequential formulation.
@@ -817,14 +806,6 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# doc_packing_shard_histogram was RETIRED in r10 (registry capacity
-# lever, VERDICT r9 item 2): its shard-fill histogram is a thin
-# aggregate over the same shard_by_offset output that
-# doc_packing_shards (offset semantics, above) and the greedy /
-# lookahead pair pin far more strictly; the fill-decile math itself is
-# covered by tests/test_llm_operators.py packing invariants.
-
-
 _MIX_ORACLE = """
 WITH rated AS (
   SELECT doc_id, source,
@@ -988,8 +969,8 @@ def events_distinct_users_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB pattern: partial sketches combine across
     partitions/days/tiers where exact distinct state cannot.
 
-    Promoted from rows-only to an ERROR-BOUND CERTIFICATE in r16 (r15
-    VERDICT item 5, the approx_distinct_customers pattern): the
+    An ERROR-BOUND CERTIFICATE (the approx_distinct_customers
+    pattern): the
     DataSketches estimate can never hash-match DuckDB's HLL, but the
     claim "every estimate — per type AND the sketch-union ALL row —
     is within 5% of exact" is decidable; the oracle asserts the exact
@@ -1315,11 +1296,9 @@ FROM top_words t JOIN (
 )
 
 
-# `text_bpe_merge_learn` (the SEQUENTIAL learner through the same
-# oracle) RETIRED r16 as a capacity lever for the TableGroup face:
-# the batched face below hash-matches the SAME sequential-replay
-# oracle on the same corpus, so the driver was running one comparison
-# twice; the sequential code path keeps driver-grade evidence via
+# The batched face below hash-matches the sequential-replay oracle, so
+# the SEQUENTIAL learner needs no face of its own: it keeps oracle
+# evidence via
 # tests/test_llm_operators.py::test_sequential_bpe_face_matches_oracle
 # (face body vs the oracle at sf0.001) plus the parity-batch
 # certificate tests. The sequential face's scale notes (one corpus
@@ -1345,8 +1324,8 @@ def text_bpe_merge_learn_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB the difference is jobs: 3 merges happen to fit one or
     two passes here, but a 30k-merge vocabulary runs O(passes) ≪
-    O(n_merges) corpus-table jobs — see the r12 BASELINE.md entry
-    (200 merges: 185 passes → 12 after the r12 certificate fix)."""
+    O(n_merges) corpus-table jobs (BASELINE.md: 200 merges took 185
+    passes before the certificate fix and 12 after)."""
     return _bpe_merge_face(spark, sf_dir, batched=True)
 
 
@@ -1397,7 +1376,7 @@ def _bpe_merge_face(spark: SparkSession, sf_dir: str, batched: bool) -> DataFram
     the localCheckpointed post-merge state; no second corpus scan, no
     re-folding). ascii_ws=True: DuckDB RE2 \\s is ASCII-only, so an
     oracle-paired path must tokenize ASCII on the Spark side too (the
-    operators/dsir.py constraint; r12 review)."""
+    operators/dsir.py constraint)."""
     from pythondataingestionprocess_spark.operators import bpe
 
     docs = load_table(spark, sf_dir, "documents")

@@ -28,13 +28,6 @@ def not_null(col: str) -> Expectation:
     return Expectation(f"not_null_{col}", F.col(col).isNull())
 
 
-def unique_key(*cols: str) -> Expectation:
-    """Violations = rows beyond the first per key (window-free:
-    counted via count - distinct-count in the report)."""
-    # handled specially in check(); the violation column marks nothing
-    return Expectation("unique_key_" + "_".join(cols), F.lit(False))
-
-
 def accepted_values(col: str, values: list) -> Expectation:
     return Expectation(
         f"accepted_values_{col}",

@@ -108,10 +108,6 @@ def sql_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         # advisoryPartitionSizeInBytes for post-shuffle partitions
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(64 * 1024 * 1024),
-        # events.ts may be parquet TIMESTAMP(NANOS), which vanilla
-        # Spark rejects; read as long and convert in the catalog
-        # loader (see catalog.load_table).
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # A handful of day-rollup windows use a constant partition key
         # to declare a tiny single-partition window INTENTIONAL (one
         # row per day) instead of tripping WindowExec's

@@ -935,8 +935,3 @@ def _extract_with_confidence(
         mapped += mm
     conf = (mapped / total) if total else 1.0
     return "\n".join(pages), conf, ("ok" if conf >= 0.9 else "quarantine")
-
-
-def extract_text(data: bytes) -> str:
-    """All text from a PDF's content streams, in file order."""
-    return extract_with_confidence(data)[0]

@@ -47,12 +47,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.operators import dedup as dd
-from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
+from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup, stream_txn
 
 # the one signature scheme of the store, its probes and its appends
 _LSH = dict(shingle_n=3, num_hashes=64, bands=16, seed=42)
-# the app id of each store's exactly-once commits: one store belongs
-# to one stream checkpoint, whose batch ids it records
+# the app ids of the stores' exactly-once commits (stream_txn adds the
+# streaming query's id)
 _APP_ID = "dedup_batch_fn"
 _BLOCK_APP_ID = "block_dedup_batch_fn"
 
@@ -155,9 +155,8 @@ def append_to_store(
     banded, shingles = _batch_frames(
         batch_df, id_col, text_col, banded, shingles
     )
-    txn = None if batch_id is None else (_APP_ID, batch_id)
     store = TableGroup(batch_df.sparkSession, store_dir)
-    with store.transaction(txn) as t:
+    with store.transaction(stream_txn(_APP_ID, batch_df, batch_id)) as t:
         t.append("buckets", banded)
         t.append("shingles", shingles)
 
@@ -175,7 +174,10 @@ def dedup_batch_fn(
     up with file_ingest.file_stream + run_ingestion for the full
     drop-dir → dedup-screen → store pipeline. ``bucket_cap`` tunes the per-bucket
     cross-candidate bound (tighter for boilerplate-skewed corpora,
-    looser when recall past the min-id anchors matters)."""
+    looser when recall past the min-id anchors matters).
+    Several queries may feed one store (each commits under its own query
+    id), but each needs its own ``pairs_out_dir``: the ``batch_id=N``
+    subdirs of two queries would overwrite each other."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -334,9 +336,8 @@ def append_blocks_to_store(
     )
     hashes = blocks.select("block_hash").distinct().withColumn(
         "ingest_batch", F.lit(batch_id).cast("long"))
-    txn = None if batch_id is None else (_BLOCK_APP_ID, batch_id)
     store = TableGroup(batch_df.sparkSession, store_dir)
-    with store.transaction(txn) as t:
+    with store.transaction(stream_txn(_BLOCK_APP_ID, batch_df, batch_id)) as t:
         t.append("blocks", hashes)
 
 
@@ -349,7 +350,10 @@ def block_dedup_batch_fn(
 ):
     """foreachBatch factory: screen blocks → write per-doc retention
     (idempotent per-batch subdir) → commit the batch's block hashes
-    once per batch id."""
+    once per batch id. Several queries may feed one store (each
+    commits under its own query id), but each needs its own
+    ``retention_out_dir``: the ``batch_id=N`` subdirs of two queries
+    would overwrite each other."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.operators import dsir
-from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
+from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup, stream_txn
 
 _APP_ID = "dsir_batch_fn"
 
@@ -81,9 +81,8 @@ def score_batch(
     ``(id, n_feats, logw, selected)`` against target vs all-seen-so-far
     (prior batches + this one), and this batch's mergeable count state
     (for the caller to persist). Docs with NULL/whitespace-only text
-    have no features and no score row — route them through a
-    quarantine screen upstream (file_ingest.quarantine_malformed) if
-    they must be accounted for."""
+    have no features and no score row — screen them upstream if they
+    must be accounted for."""
     store = TableGroup(spark, store_dir)
     sid = store.current_snapshot()
     bucketed = dsir.featurize(batch_df, id_col, text_col, m=m).localCheckpoint(
@@ -119,7 +118,9 @@ def dsir_batch_fn(
     subdir) → commit this batch's count state once per batch id. Wire
     it with file_ingest.file_stream + run_ingestion, after
     ``init_target_state`` has been run once against the curated target
-    corpus."""
+    corpus. Several queries may feed one store (each commits under its
+    own query id), but each needs its own ``scores_out_dir``: the
+    ``batch_id=N`` subdirs of two queries would overwrite each other."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -132,7 +133,7 @@ def dsir_batch_fn(
             os.path.join(scores_out_dir, f"batch_id={batch_id}")
         )
         store = TableGroup(spark, store_dir)
-        with store.transaction((_APP_ID, batch_id)) as t:
+        with store.transaction(stream_txn(_APP_ID, batch_df, batch_id)) as t:
             t.append("raw", _raw_rows(batch_counts, batch_id))
 
     return fn

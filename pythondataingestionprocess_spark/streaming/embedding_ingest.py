@@ -48,7 +48,7 @@ from pythondataingestionprocess_spark.operators import dedup as dd
 from pythondataingestionprocess_spark.operators.similarity import (
     hyperplane_bucket_rows,
 )
-from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
+from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup, stream_txn
 
 _DIM = 64
 _BITS = 12
@@ -193,8 +193,7 @@ def append_to_store(
     buckets = banded if banded is not None else _banded(
         batch_df, id_col, vec_col, dim
     )
-    txn = None if batch_id is None else (_APP_ID, batch_id)
-    with store.transaction(txn) as t:
+    with store.transaction(stream_txn(_APP_ID, batch_df, batch_id)) as t:
         if sid is None:
             t.append("meta", spark.createDataFrame([(int(dim),)], "dim int"))
         t.append("vec_buckets", buckets)
@@ -218,7 +217,10 @@ def embedding_dedup_batch_fn(
     ``dim`` must match the embedding model; every batch is checked
     up-front (min AND max vector size) with a clear error, and the
     store persists its dimension so a redeploy with a different model
-    fails loudly instead of silently finding zero duplicates."""
+    fails loudly instead of silently finding zero duplicates.
+    Several queries may feed one store (each commits under its own query
+    id), but each needs its own ``pairs_out_dir``: the ``batch_id=N``
+    subdirs of two queries would overwrite each other."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

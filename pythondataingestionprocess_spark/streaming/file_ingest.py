@@ -28,7 +28,6 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
@@ -86,39 +85,3 @@ def run_ingestion(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def with_corrupt_capture(schema: str) -> str:
-    """Extend a DDL schema string with the PERMISSIVE-mode corrupt
-    record column, so malformed source lines arrive as rows carrying
-    their raw text in ``_corrupt_record`` (and NULLs elsewhere)
-    instead of silently becoming indistinguishable all-NULL rows."""
-    return schema + ", _corrupt_record string"
-
-
-def quarantine_malformed(
-    batch_df: DataFrame, quarantine_dir: str, batch_id: int
-) -> DataFrame:
-    """ROW-level fault isolation inside a micro-batch (the dead-letter
-    routing in run_ingestion is BATCH-level: one poison row would
-    divert thousands of good neighbors). Malformed rows — identified
-    by a non-null ``_corrupt_record`` from with_corrupt_capture — are
-    appended under ``quarantine_dir/batch_<id>`` with their raw line
-    preserved for replay; the clean remainder is returned (without
-    the capture column) for the normal sink path.
-
-    Idempotent on micro-batch retry: the quarantine write is
-    mode("overwrite") into the batch-id directory, so a re-run of the
-    same batch replaces rather than duplicates its quarantined rows —
-    the same batchId-keyed pattern the dead-letter path uses.
-    """
-    bad = batch_df.filter(F.col("_corrupt_record").isNotNull())
-    # NOTE: keep all columns in the quarantine write — a projection of
-    # ONLY _corrupt_record over a raw file relation is disallowed by
-    # the analyzer (internal-column-only queries).
-    bad.write.mode("overwrite").parquet(
-        os.path.join(quarantine_dir, f"batch_{batch_id}")
-    )
-    return batch_df.filter(F.col("_corrupt_record").isNull()).drop(
-        "_corrupt_record"
-    )

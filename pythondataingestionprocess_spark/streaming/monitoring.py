@@ -11,10 +11,10 @@ pipelines themselves.
 Scale notes: the listener runs ON THE DRIVER and writes one tiny file
 per micro-batch — no executor involvement, no contention with the
 data path. At production batch rates, point ``log_dir`` at object
-storage and compact periodically (storage.plan_compaction applies);
-or subclass and push to a metrics bus instead. The listener is
-process-wide (SparkSession-level), so attach once per session, not
-per query; events carry the query id/name for fan-out.
+storage and compact periodically, or subclass and push to a metrics
+bus instead. The listener is process-wide (SparkSession-level), so
+attach once per session, not per query; events carry the query
+id/name for fan-out.
 """
 
 from __future__ import annotations
@@ -41,9 +41,9 @@ class ProgressFileLogger(StreamingQueryListener):
         # "point log_dir at object storage", and os.makedirs on
         # 's3://bucket/x' happily creates a LOCAL directory named
         # 's3:/bucket/x' — every event then lands on the driver's
-        # disk while spark.read.json(log_dir) finds nothing (r13
-        # review). Reject URI schemes loudly; an object-store
-        # deployment subclasses with a Hadoop-FS/metrics-bus writer.
+        # disk while spark.read.json(log_dir) finds nothing. Reject
+        # URI schemes loudly; an object-store deployment subclasses
+        # with a Hadoop-FS/metrics-bus writer.
         scheme = log_dir.split("://", 1)[0] if "://" in log_dir else ""
         if scheme and scheme != "file":
             raise ValueError(

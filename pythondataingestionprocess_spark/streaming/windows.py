@@ -3,9 +3,9 @@
 Engine-added (SURVEY.md §2.9: the reference has none of these; the
 driver's ``events`` table is the verification corpus). Every transform
 here takes a plain DataFrame and works identically on a batch read and
-a streaming source — watermarking is applied by the caller (see
-``with_watermark`` / the streaming tests) because a batch DataFrame
-has no watermark concept.
+a streaming source — watermarking is applied by the caller
+(``withWatermark`` on the stream) because a batch DataFrame has no
+watermark concept.
 
 Scale notes: tumbling/sliding aggregation shuffles once on
 (window, key) with map-side partial aggregation; session windows
@@ -19,7 +19,7 @@ declarative plan runs incrementally with watermark-bounded state.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.plans.registry import dec_sum
@@ -141,27 +141,3 @@ def sessionize_manual(
         F.max(ts_col).alias("session_last_event"),
         F.count(F.lit(1)).alias("n_events"),
     )
-
-
-def with_watermark(df: DataFrame, ts_col: str = "ts", delay: str = "10 minutes") -> DataFrame:
-    """Watermark wrapper — no-op on batch DataFrames (callers can
-    compose the same pipeline for both modes)."""
-    return df.withWatermark(ts_col, delay) if df.isStreaming else df
-
-
-def dedup_within_watermark(
-    df: DataFrame,
-    key_cols: tuple[str, ...] = ("event_id",),
-    ts_col: str = "ts",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exactly-once dedup with bounded state
-    (``dropDuplicatesWithinWatermark``); plain ``dropDuplicates`` on
-    batch — the reference's dedup-vs-all-history (J5,
-    database_utils.py:128-145) with state bounded by the watermark
-    instead of consulting the whole sink."""
-    if df.isStreaming:
-        return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
-            list(key_cols)
-        )
-    return df.dropDuplicates(list(key_cols))

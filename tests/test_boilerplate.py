@@ -1,4 +1,4 @@
-"""Line-frequency boilerplate removal (operators/boilerplate.py, r9):
+"""Line-frequency boilerplate removal (operators/boilerplate.py):
 per-source frequency thresholds, order-preserving reassembly, empty
 lines never counted as evidence, cross-source isolation, and the
 min_docs guard on tiny sources."""
@@ -123,50 +123,6 @@ def _corpus(spark):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-@pytest.mark.slow
-def test_state_fold_identity_across_batches(spark):
-    """The incremental contract: folding per-batch states (disjoint
-    doc sets) and thresholding the merged state must yield EXACTLY the
-    boilerplate set — and therefore the same screened output — as one
-    full-corpus strip_boilerplate pass."""
-    from pythondataingestionprocess_spark.operators.boilerplate import (
-        boilerplate_lines_from_state,
-        line_frequency_state,
-        merge_line_frequency_states,
-        strip_with_lines,
-    )
-
-    docs = _corpus(spark)
-    batches = [docs.filter(f"doc_id % 3 = {r}") for r in range(3)]
-    folded = line_frequency_state(batches[0])
-    for b in batches[1:]:
-        folded = merge_line_frequency_states(
-            folded, line_frequency_state(b)
-        )
-    # state identity: merged batch states == one-pass state
-    full_state = {
-        (r["source"], r["line_key"]): r["line_df"]
-        for r in line_frequency_state(docs).collect()
-    }
-    fold_state = {
-        (r["source"], r["line_key"]): r["line_df"]
-        for r in folded.collect()
-    }
-    assert fold_state == full_state
-    # screen identity end-to-end
-    lines = boilerplate_lines_from_state(folded, 0.5, 3)
-    via_state = {
-        r["doc_id"]: r.asDict()
-        for r in strip_with_lines(docs, lines).collect()
-    }
-    via_full = _rows(strip_boilerplate(docs, min_docs=3,
-                                       frac_threshold=0.5))
-    assert via_state == via_full
-    # and the screen really fired (headers/footers stripped)
-    assert HDR not in via_state[1]["text"]
-    assert "BLOG FOOTER" not in via_state[9]["text"]
-
-
 def test_batch_screen_with_stored_state(spark):
     """The daily-ingest shape: screen ONLY the new batch against the
     corpus-wide folded state — output rows equal the full recompute's
@@ -174,16 +130,12 @@ def test_batch_screen_with_stored_state(spark):
     from pythondataingestionprocess_spark.operators.boilerplate import (
         boilerplate_lines_from_state,
         line_frequency_state,
-        merge_line_frequency_states,
         strip_with_lines,
     )
 
     docs = _corpus(spark)
-    old = docs.filter("doc_id <= 10")
     batch = docs.filter("doc_id > 10")
-    state = merge_line_frequency_states(
-        line_frequency_state(old), line_frequency_state(batch)
-    )
+    state = line_frequency_state(docs)
     lines = boilerplate_lines_from_state(state, 0.5, 3)
     got = {
         r["doc_id"]: r.asDict()

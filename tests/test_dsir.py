@@ -1,8 +1,7 @@
 """DSIR importance resampling (operators/dsir.py): featurization
 (unigram+bigram occurrence buckets), smoothed multinomial fit vs a
-pure-Python twin, literal-array vs broadcast-join scoring parity,
-target-vocabulary docs outranking off-target docs, and deterministic
-Gumbel-top-k selection that actually tracks the weights."""
+pure-Python twin, and target-vocabulary docs outranking off-target
+docs."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import hashlib
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.operators import dsir
 
@@ -68,7 +66,7 @@ def test_bucket_log_dist_matches_python_twin(spark):
         assert got[b] == pytest.approx(expect, abs=1e-12), f"bucket {b}"
 
 
-def test_scoring_paths_agree_and_rank_target_vocab_first(spark):
+def test_scoring_ranks_target_vocab_first(spark):
     # target corpus speaks vocab A; raw corpus mixes A-docs and B-docs
     target = _docs(
         spark,
@@ -85,44 +83,12 @@ def test_scoring_paths_agree_and_rank_target_vocab_first(spark):
     ratio = dsir.log_ratio_vector(tdist, rdist, m=M)
 
     lit = {r["doc_id"]: r for r in dsir.dsir_logweights(rb, ratio).collect()}
-    ratio_df = tdist.select(
-        "bucket", (F.col("logp") - F.lit(0.0)).alias("lp")
-    ).join(rdist.select("bucket", F.col("logp").alias("lq")), "bucket").select(
-        "bucket", (F.col("lp") - F.col("lq")).alias("r")
-    )
-    joined = {
-        r["doc_id"]: r for r in dsir.dsir_logweights_join(rb, ratio_df).collect()
-    }
-    assert set(lit) == set(joined) == set(range(20))
-    for i in range(20):
-        assert lit[i]["n_feats"] == joined[i]["n_feats"] == 7
-        assert lit[i]["logw"] == pytest.approx(joined[i]["logw"], abs=1e-9)
+    assert set(lit) == set(range(20))
+    assert all(lit[i]["n_feats"] == 7 for i in range(20))
     # every A-doc outweighs every B-doc
     a_min = min(lit[i]["logw"] for i in range(10))
     b_max = max(lit[i]["logw"] for i in range(10, 20))
     assert a_min > b_max
-
-
-def test_gumbel_topk_deterministic_and_weight_tracking(spark):
-    target = _docs(spark, [(100, "alpha beta gamma delta")])
-    raw_rows = [(i, "alpha beta gamma delta") for i in range(0, 10)] + [
-        (i, "omega psi chi phi") for i in range(10, 20)
-    ]
-    raw = _docs(spark, raw_rows)
-    m = M
-    tb, rb = dsir.featurize(target, m=m), dsir.featurize(raw, m=m)
-    ratio = dsir.log_ratio_vector(
-        dsir.bucket_log_dist(tb, m=m), dsir.bucket_log_dist(rb, m=m), m=m
-    )
-    w = dsir.dsir_logweights(rb, ratio)
-    pick1 = sorted(r["doc_id"] for r in dsir.gumbel_topk(w, k=8, seed=7).collect())
-    pick2 = sorted(r["doc_id"] for r in dsir.gumbel_topk(w, k=8, seed=7).collect())
-    assert pick1 == pick2 and len(pick1) == 8
-    # the A/B weight gap dwarfs Gumbel noise here: picks are A-docs
-    assert all(i < 10 for i in pick1)
-    # a different seed may reorder within ties but stays deterministic
-    pick3 = sorted(r["doc_id"] for r in dsir.gumbel_topk(w, k=8, seed=8).collect())
-    assert len(pick3) == 8 and all(i < 10 for i in pick3)
 
 
 def test_incremental_state_fold_identity(spark):

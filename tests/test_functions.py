@@ -167,36 +167,6 @@ def test_tiered_pricing_formulas(spark):
                     pytest.approx(285.0), pytest.approx(239.0625)]
 
 
-def test_price_defaults(spark):
-    df = spark.createDataFrame(
-        [(None, 100.0, None), (250.0, 100.0, 240.0)],
-        schema="p_venta double, final_cost double, p_oferta double",
-    )
-    out = df.select(
-        fx.price_default("p_venta", "final_cost").alias("price"),
-        fx.offer_price_default(
-            "p_oferta", fx.price_default("p_venta", "final_cost")
-        ).alias("offer"),
-    ).collect()
-    assert out[0].price == pytest.approx(130.0)
-    assert out[0].offer == pytest.approx(130.0 * 0.85)
-    assert out[1].price == 250.0
-    assert out[1].offer == 240.0
-
-
-def test_landed_unit_cost(spark):
-    df = spark.createDataFrame(
-        [(100.0, 20.0, 10.0, 2), (100.0, None, None, 2), (100.0, 20.0, 0.0, 0)],
-        schema="c_unit double, envio double, desct double, cant int",
-    )
-    out = [r.v for r in df.select(
-        fx.landed_unit_cost("c_unit", "envio", "desct", "cant").alias("v")
-    ).collect()]
-    assert out[0] == pytest.approx(105.0)  # 100 + 10 - 5
-    assert out[1] == pytest.approx(100.0)  # NULL shipping/discount → 0
-    assert out[2] is None  # Cant=0 → try_divide NULL (no ANSI error)
-
-
 def test_quality_expectations_count_violations(spark):
     from pythondataingestionprocess_spark import quality as dq
 
@@ -284,9 +254,9 @@ def test_pii_redaction_staged_attribution(spark):
 
 
 def test_pricing_null_inputs_propagate(spark):
-    """r13 review: a NULL store price / unit cost used to fall through
-    the when-chains into a confident default multiplier (tier 1.75;
-    sale passthrough x1.0) — unknown cost now yields unknown price."""
+    """A NULL store price / unit cost must not fall through the
+    when-chains into a confident default multiplier (tier 1.75; sale
+    passthrough x1.0): unknown cost yields unknown price."""
     df = spark.createDataFrame(
         [(None, 200.0, 2), (300.0, None, 2), (300.0, 200.0, 2)],
         "p_tienda double, c_unit double, pzs long",

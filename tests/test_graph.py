@@ -1,5 +1,5 @@
-"""Triangle counting: known-graph answers, normalization, and the
-orientation invariant (wedges generated at the unique apex count each
+"""Triangle counting: known-graph answers, clustering coefficients, and
+the orientation invariant (wedges generated at the unique apex count each
 triangle exactly once)."""
 
 from __future__ import annotations
@@ -9,8 +9,9 @@ from itertools import combinations
 from pyspark.sql import Row
 
 from pythondataingestionprocess_spark.operators.graph import (
-    normalize_edges,
-    triangle_count,
+    _closed_triangles,
+    clustering_coefficient_from_chain,
+    triangle_count_from_chain,
 )
 
 
@@ -19,7 +20,7 @@ def _edges(spark, pairs):
 
 
 def _count(spark, pairs) -> tuple[int, int, int]:
-    r = triangle_count(_edges(spark, pairs)).collect()[0]
+    r = triangle_count_from_chain(*_closed_triangles(_edges(spark, pairs), False)).collect()[0]
     return r["n_vertices"], r["n_edges"], r["n_triangles"]
 
 
@@ -66,25 +67,18 @@ def test_matches_brute_force_on_random_graph(spark):
     assert _count(spark, list(pairs)) == (len(verts), len(pairs), brute)
 
 
-def test_normalize_edges_drops_loops_and_dups(spark):
-    df = spark.createDataFrame(
-        [Row(a=2, b=1), Row(a=1, b=2), Row(a=3, b=3), Row(a=1, b=3)]
-    )
-    rows = {(r["u"], r["v"]) for r in normalize_edges(df, "a", "b").collect()}
-    assert rows == {(1, 2), (1, 3)}
+def _coefficients(spark, pairs):
+    _, deg, closed = _closed_triangles(_edges(spark, pairs), False)
+    return clustering_coefficient_from_chain(deg, closed).collect()
 
 
 def test_clustering_coefficient_known_graphs(spark):
-    from pythondataingestionprocess_spark.operators.graph import (
-        clustering_coefficient,
-    )
-
     # two triangles sharing edge (1,2): vertices 1,2 have deg 3 and
     # sit in 2 triangles -> 2/3; vertices 0,3 have deg 2, 1 triangle -> 1.0
     pairs = [(0, 1), (1, 2), (0, 2), (1, 3), (2, 3)]
     rows = {
         r["w"]: (r["deg"], r["n_triangles"], r["coefficient"])
-        for r in clustering_coefficient(_edges(spark, pairs)).collect()
+        for r in _coefficients(spark, pairs)
     }
     assert rows[0] == (2, 1, 1.0)
     assert rows[3] == (2, 1, 1.0)
@@ -93,6 +87,5 @@ def test_clustering_coefficient_known_graphs(spark):
 
     # a star closes nothing: hub and leaves all coefficient 0
     star = [(0, i) for i in range(1, 6)]
-    srows = {r["w"]: r["coefficient"] for r in clustering_coefficient(_edges(spark, star)).collect()}
+    srows = {r["w"]: r["coefficient"] for r in _coefficients(spark, star)}
     assert set(srows.values()) == {0.0}
-

@@ -52,13 +52,17 @@ def test_minhash_lsh_matches_exact_jaccard(spark, sf_dir):
 def test_containment_catches_subset_jaccard_misses(spark):
     """A short doc pasted whole into a long one: containment ~1.0
     (near-superset) while Jaccard stays below any usable threshold —
-    the case the asymmetric screen exists for."""
+    the case the asymmetric screen exists for. Docs 4/5 sit at EXACTLY
+    the threshold (4 of 4's 5 shingles shared: 4/5 = 0.8) and must be
+    kept."""
     short = "alpha beta gamma delta epsilon zeta"
     filler = " ".join(f"word{i}" for i in range(60))
     rows = [
         (1, short),
         (2, short + " " + filler),
         (3, "totally unrelated content about engines and planes here"),
+        (4, "t1 t2 t3 t4 t5 t6 t7"),
+        (5, "t2 t3 t4 t5 t6 t7 u1 u2 u3"),
     ]
     df = spark.createDataFrame(rows, schema="doc_id long, text string")
     sh = dd.shingle_sets(df, "doc_id", "text", 3)
@@ -68,48 +72,7 @@ def test_containment_catches_subset_jaccard_misses(spark):
     assert (1, 2) in cont and cont[(1, 2)] >= 0.99
     assert (1, 2) not in jac, "size-skewed pair should be invisible to Jaccard"
     assert all(3 not in pair for pair in cont)
-
-
-def test_containment_prefix_exact_at_threshold_boundary(spark):
-    """Float-bound regression: a pair at EXACTLY the 0.8 threshold
-    (A has 5 shingles, B shares 4, containment 4/5 = 0.8) whose one
-    missing shingle is A's globally rarest. A prefix length computed
-    as floor((1-τ)·|A|)+1 evaluates 1.0-0.8 = 0.19999…96 and yields a
-    one-shingle prefix = exactly the missing shingle → candidate never
-    generated. The integer bound (smallest i with i/sz ≥ τ under the
-    verify's own division) must keep the pair."""
-    a_text = "t1 t2 t3 t4 t5 t6 t7"                 # shingles 1-5
-    b_text = "t2 t3 t4 t5 t6 t7 u1 u2 u3"           # shares A's 2-5
-    rows = [(1, a_text), (2, b_text)]
-    df = spark.createDataFrame(rows, schema="doc_id long, text string")
-    sh = dd.shingle_sets(df, "doc_id", "text", 3)
-    exact = {(r.id_a, r.id_b): r.containment
-             for r in dd.containment_pairs(sh, "doc_id", 0.8).collect()}
-    assert exact == {(1, 2): pytest.approx(0.8)}
-    blocked = {(r.id_a, r.id_b): r.containment
-               for r in dd.containment_pairs_prefix(df, "doc_id", "text", 3, 0.8).collect()}
-    assert blocked == {(1, 2): pytest.approx(0.8)}
-
-
-@pytest.mark.slow
-def test_containment_prefix_matches_exact(spark, sf_dir):
-    """The prefix-filter blocked form is EXACT-complete (pigeonhole on
-    the rarest-(1-τ)|A|+1 shingles), so its output must equal the
-    brute shared-shingle form on the real corpus — same pairs, same
-    containment values."""
-    docs = load_table(spark, sf_dir, "documents")
-    sh = dd.shingle_sets(docs, "doc_id", "text", 3)
-    exact = {
-        (r.id_a, r.id_b): r.containment
-        for r in dd.containment_pairs(sh, "doc_id", 0.8).collect()
-    }
-    blocked = {
-        (r.id_a, r.id_b): r.containment
-        for r in dd.containment_pairs_prefix(docs, "doc_id", "text", 3, 0.8).collect()
-    }
-    assert set(blocked) == set(exact)
-    for k in exact:
-        assert abs(blocked[k] - exact[k]) < 1e-12
+    assert cont[(4, 5)] == pytest.approx(0.8)
 
 
 @pytest.mark.slow
@@ -285,10 +248,8 @@ def test_bpe_token_count_known_strings(spark):
 
 
 def test_whitespace_token_count_per_lang_matches_duckdb(spark):
-    """Migrated substance of the retired `text_token_count` face (r14
-    capacity lever): the exact per-lang whitespace-count aggregation
-    the retired oracle pinned, compared against DuckDB on real
-    testdata — plus known-string spot checks of token_count itself,
+    """The exact per-lang whitespace-count aggregation, compared
+    against DuckDB on real testdata — plus known-string spot checks of token_count itself,
     which stays live inside text_quality_score's feature columns."""
     import duckdb
 
@@ -407,7 +368,7 @@ def test_ivf_high_recall_on_clustered_data(spark):
 
 
 def test_ivf_recall_survives_id_sorted_clusters(spark):
-    """Degenerate ordering regression (VERDICT r4 item 5): ids sorted
+    """Degenerate ordering regression: ids sorted
     BY cluster — the first k vectors by id all come from one true
     cluster, so a first-k-by-id seed would collapse k-means into one
     region and empty the other lists. The md5-spread init must keep
@@ -453,17 +414,8 @@ def test_ivf_assign_is_deterministic(spark):
     assert len({lst for _, lst in a1}) > 1  # actually partitions the space
 
 
-def test_salted_agg_count_matches_plain(spark):
-    from pythondataingestionprocess_spark.operators.skew import salted_agg_count
-
-    df = spark.createDataFrame([(i, "hot" if i % 10 else "cold") for i in range(200)], "v long, k string")
-    plain = {r["k"]: r["n"] for r in df.groupBy("k").count().withColumnRenamed("count", "n").collect()}
-    salted = {r["k"]: r["n"] for r in salted_agg_count(df, ["k"], n_salts=8).collect()}
-    assert salted == plain
-
-
 def test_bucket_cap_pathological_cluster_bounded(spark):
-    """VERDICT r1 item 2: a planted identical-content mega-cluster must
+    """A planted identical-content mega-cluster must
     complete with bounded per-row expansion (no gigarow collect_list),
     and the star expansion must preserve dedup connectivity — every
     cluster member reachable from the anchor at jaccard 1.0."""
@@ -529,32 +481,6 @@ def test_greedy_packing_invariants(spark):
     # 100+300 fits, +250 would overflow
     a_bins = {r.doc_id: r.bin_id for r in out if r.source == "a"}
     assert a_bins[0] == a_bins[1] == 0 and a_bins[2] == 1
-
-
-def test_lookahead_packing_beats_greedy_on_spark(spark):
-    """2-open-bin packer through applyInPandas: nothing dropped, budget
-    respected, and on a mix where a large doc forces greedy to seal a
-    half-empty bin, lookahead tops that bin up and uses fewer bins."""
-    from pythondataingestionprocess_spark.operators.packing import (
-        pack_documents_greedy,
-        pack_documents_lookahead,
-    )
-
-    # budget 10. greedy seals at each overflow: [5] [6] [5,4] → 3 bins.
-    # lookahead keeps both open: 5 | 6, then 5 tops bin0 to 10 and
-    # 4 tops bin1 to 10 → 2 bins.
-    rows = [("a", 0, 5), ("a", 1, 6), ("a", 2, 5), ("a", 3, 4)]
-    df = spark.createDataFrame(rows, "source string, doc_id long, n_tokens long")
-    look = pack_documents_lookahead(df, "source", "doc_id", "n_tokens", 10).collect()
-    greedy = pack_documents_greedy(df, "source", "doc_id", "n_tokens", 10).collect()
-    assert len(look) == len(rows)
-    assert max(r.bin_id for r in look) + 1 == 2
-    assert max(r.bin_id for r in greedy) + 1 == 3
-    by_bin: dict = {}
-    for r in look:
-        by_bin.setdefault(r.bin_id, 0)
-        by_bin[r.bin_id] += r.n_tokens
-    assert all(total <= 10 for total in by_bin.values())
 
 
 def test_connected_components_transitive_chain(spark):
@@ -638,8 +564,8 @@ def test_fuzzy_self_join_complete_at_k1(spark):
 def test_fuzzy_self_join_cap_matches_duckdb_replay(spark):
     """Where the bucket cap BINDS, the Spark pipeline and the DuckDB
     oracle replay (plans/core_relational._FUZZY_JOIN_ORACLE's shape)
-    must emit the IDENTICAL capped pair set — the r16 oracle-basis
-    change for fuzzy_join_symdelete rests on this equivalence. Corpus:
+    must emit the IDENTICAL capped pair set — fuzzy_join_symdelete's
+    oracle basis rests on this equivalence. Corpus:
     a 9-member identical-string group (over cap 8 → anchor-star) plus
     a small typo cluster (under cap → all-pairs)."""
     import duckdb
@@ -711,8 +637,8 @@ def test_resolve_roots_path_doubling(spark):
 
 
 def test_hll_sketch_estimates_within_bounds(spark, sf_dir):
-    """The tight ≤2% pin on the raw DataSketches estimates (the r16
-    driver face exposes only the 5%-bound CERTIFICATE booleans, so the
+    """The tight ≤2% pin on the raw DataSketches estimates (the driver
+    face exposes only the 5%-bound CERTIFICATE booleans, so the
     sharper bound stays pinned here) plus the face's own contract:
     every boolean true, exact counts exact, the ALL row present."""
     from pythondataingestionprocess_spark.plans import REGISTRY
@@ -737,49 +663,6 @@ def test_hll_sketch_estimates_within_bounds(spark, sf_dir):
     assert all_row.exact_users == exact_all
     got_types = {r.event_type: r.exact_users for r in rows if r.event_type != "ALL"}
     assert got_types == {r.event_type: r.exact for r in per_type}
-
-
-def test_int8_knn_recall_vs_float_brute(spark, sf_dir):
-    """Quantized exact scan vs the float brute scan on the real
-    corpus: int8 keeps ≥0.9 recall@5 (in practice near-1.0 — the
-    quantization error on cosine is O(1/127) while neighbor gaps on
-    random vectors are much wider), at 1/8 the bytes per vector."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    brute = sim.knn_bruteforce(emb, queries, k=5).select("query_id", "neighbor_id")
-    q8 = sim.knn_int8(emb, queries, k=5).select("query_id", "neighbor_id")
-    n_true = brute.count()
-    n_hit = brute.join(q8, ["query_id", "neighbor_id"], "left_semi").count()
-    assert n_true > 0
-    assert n_hit / n_true >= 0.9, f"int8 recall {n_hit / n_true}"
-
-
-def test_int8_quantization_bounds_and_zero_vector(spark):
-    """Full-range symmetric quantization: max|component| maps to ±127;
-    a zero vector survives as all-zeros (no NULLs, no division blowup);
-    quantized cosine of a vector with itself is 1."""
-    rows = [
-        (1, [0.5, -1.0, 0.25, 0.0]),
-        (2, [0.0, 0.0, 0.0, 0.0]),
-        (3, [2.0, 2.0, 2.0, 2.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vec_id"]: r["qvec"] for r in
-           sim.quantize_int8(df).collect()}
-    assert got[1] == [64, -127, 32, 0]
-    assert got[2] == [0, 0, 0, 0]
-    assert got[3] == [127, 127, 127, 127]
-
-    # self-cosine through the int8 kernel is exactly 1 (identical rows)
-    corpus = spark.createDataFrame(
-        [(1, [0.5, -1.0, 0.25, 0.1]), (2, [0.5, -1.0, 0.25, 0.1]),
-         (3, [-0.5, 1.0, -0.25, -0.1])],
-        "vec_id long, embedding array<double>",
-    )
-    out = sim.knn_int8(corpus, corpus.filter(F.col("vec_id") == 1), k=2).collect()
-    by_rank = {r["rank"]: r for r in out}
-    assert by_rank[1]["neighbor_id"] == 2 and abs(by_rank[1]["cos"] - 1.0) < 1e-12
-    assert by_rank[2]["neighbor_id"] == 3 and abs(by_rank[2]["cos"] + 1.0) < 1e-12
 
 
 def test_subsequence_match_finds_scaled_shifted_pattern(spark):
@@ -840,13 +723,12 @@ def test_subsequence_match_single_shuffle_no_python(spark):
 
 
 def test_subsequence_match_matches_duckdb_oracle(spark):
-    """Cross-engine parity for the r7 registration candidate: the
+    """Cross-engine parity for subsequence_match: the
     top-10 (user, position, dist) from subsequence_match equals a
     DuckDB list-window replay (dist rounded to 6 dp; the pattern's
     z-norm is hand-expanded in the SQL: mean 3, stddev_pop √2). This
-    is the oracle that will back an `events_pattern_match` registry
-    entry once a driver-window slot opens (r7 — r6's two slots are
-    spent)."""
+    is the oracle an `events_pattern_match` registry entry would
+    use."""
     import duckdb
 
     from pythondataingestionprocess_spark.operators.timeseries import (
@@ -941,8 +823,8 @@ def test_resample_interpolate_hourly_semantics(spark):
         # user 2: single obs exactly on the hour → one grid point, exact
         (2, "2024-01-01 05:00:00", 7.0),
         # user 3: single obs OFF the hour → one backfill grid point at
-        # hour-floor(ts) (r18 regression fixture: the r17 lead+explode
-        # form emitted zero rows for this key)
+        # hour-floor(ts) (regression fixture: a lead+explode form
+        # emits zero rows for this key)
         (3, "2024-01-01 06:45:00", 3.5),
     ]
     df = spark.createDataFrame(
@@ -1027,106 +909,6 @@ def test_resample_interpolate_property_bounded_and_exact(spark):
             assert v == series[i - 1][1]
 
 
-def test_containment_auto_picks_form_by_shingle_profile(spark):
-    """The adaptive screen chooses from the data: a uniform corpus
-    profiles 'plain'; planting a hyper-common shingle in every doc
-    flips the choice to 'prefix'; and on a corpus where both run, the
-    two forms return identical pairs (exact-complete either way)."""
-    import pythondataingestionprocess_spark.operators.dedup as dd
-
-    base = (
-        "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
-        "kilo lima mike november oscar papa"
-    ).split()
-    rows = []
-    for i in range(30):
-        words = base[i % 4 :] + [f"uniq{i}a", f"uniq{i}b", f"uniq{i}c"]
-        rows.append((i, " ".join(words)))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = dd.shingle_sets(df, "doc_id", "text", 3)
-
-    assert dd.choose_containment_form(sh, hot_df_threshold=40) == "plain"
-    # every doc shares the ("alpha","bravo","charlie")-family prefix
-    # shingles ~27 times; drop the threshold under that df and the
-    # profile flips
-    assert dd.choose_containment_form(sh, hot_df_threshold=10) == "prefix"
-
-    auto = {
-        (r.id_a, r.id_b)
-        for r in dd.containment_pairs_auto(df, "doc_id", "text", 3, 0.8).collect()
-    }
-    plain = {
-        (r.id_a, r.id_b)
-        for r in dd.containment_pairs(sh, "doc_id", 0.8).collect()
-    }
-    prefix = {
-        (r.id_a, r.id_b)
-        for r in dd.containment_pairs_prefix(df, "doc_id", "text", 3, 0.8).collect()
-    }
-    assert auto == plain == prefix
-
-
-@pytest.mark.slow
-def test_containment_heavy_tail_default_threshold_and_margin(spark):
-    """r16 VERDICT item 3 — the heavy-tail claim as a regression, not
-    a code comment: on a boilerplate-contaminated corpus (every doc
-    opens with the same header, the realistic crawl pathology) the
-    auto profile (a) trips at the DEFAULT 20k hot-df threshold, and
-    (b) the prefix form's MEASURED candidate volume beats the plain
-    self-join's Σ C(df,2) by ≥1000× — the predicted margin, asserted
-    on deterministic counts rather than wall clocks. A smaller twin
-    of the same corpus then runs BOTH forms to completion and pins
-    output equality (the switch is a physical-plan choice only)."""
-    import pythondataingestionprocess_spark.operators.dedup as dd
-
-    boiler = "breaking news update for subscribers today"
-
-    def corpus(n_docs):
-        return spark.createDataFrame(
-            [(i, f"{boiler} u{i}x u{i}y u{i}z") for i in range(n_docs)],
-            "doc_id long, text string",
-        )
-
-    big = corpus(21_000)
-    sh = dd.shingle_sets(big, "doc_id", "text", 3)
-    # (a) the DEFAULT threshold trips: boilerplate trigrams have
-    # df = 21 000 > 20 000
-    assert dd.choose_containment_form(sh) == "prefix"
-
-    # (b) candidate-volume margin. Plain's candidate multiset is
-    # exactly Σ C(df,2) over shingles (what _pair_overlap_counts
-    # explodes); the prefix stage is counted for real.
-    plain_cost = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("c"))
-        .collect()[0]["c"]
-    )
-    doc_sh = dd.shingle_array_table(big, "doc_id", "text", 3)
-    prefix_cands = dd._containment_prefix_candidates(doc_sh, "doc_id", 0.8).count()
-    # 4 boilerplate trigrams x C(21000, 2) = 882M candidate pairs
-    assert plain_cost > 500_000_000  # the quadratic cliff is real here
-    assert prefix_cands * 1000 < plain_cost, (
-        f"prefix candidates {prefix_cands} vs plain Σ C(df,2) {plain_cost}"
-    )
-
-    # equality twin at a size where plain still completes
-    small = corpus(600)
-    small_sh = dd.shingle_sets(small, "doc_id", "text", 3)
-    assert dd.choose_containment_form(small_sh, hot_df_threshold=300) == "prefix"
-    auto = {
-        (r.id_a, r.id_b)
-        for r in dd.containment_pairs_auto(
-            small, "doc_id", "text", 3, 0.8, hot_df_threshold=300
-        ).collect()
-    }
-    plain = {
-        (r.id_a, r.id_b)
-        for r in dd.containment_pairs(small_sh, "doc_id", 0.8).collect()
-    }
-    assert auto == plain
-
-
 def test_block_dedup_retention_semantics(spark):
     """Planted-duplicate semantics for C4-style block dedup: a full
     copy of a doc keeps zero blocks; a doc sharing only its first
@@ -1206,305 +988,10 @@ def test_temperature_mix_invariants(spark, sf_dir):
     assert all(a >= b for a, b in zip(rates, rates[1:])), rates
 
 
-@pytest.mark.slow
-def test_ivf_persistent_index_roundtrip_prune_and_append(spark, tmp_path):
-    """The at-rest IVF index: search_index over the saved layout must
-    equal ivf_search over the in-session frames; the vectors scan must
-    carry the probed-list partition filter (unprobed lists pruned at
-    listing time); an incremental append lands in existing lists and
-    is immediately searchable."""
-    import numpy as np
-
-    from pythondataingestionprocess_spark.operators import ivf
-
-    rng = np.random.default_rng(11)
-    centers = rng.standard_normal((8, 32)) * 10
-    rows = [
-        (i, [float(x) for x in centers[i % 8] + rng.standard_normal(32)])
-        for i in range(400)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = df.filter(F.col("vec_id") < 4)
-    centroids = ivf.kmeans_fit(df, k=8, max_iter=5)
-
-    idx = str(tmp_path / "ivf_index")
-    ivf.save_index(df, centroids, idx)
-    assert np.allclose(ivf.load_centroids(spark, idx), centroids)
-
-    live = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf.ivf_search(df, queries, centroids, k=5, n_probe=2).collect()
-    }
-    persisted_df = ivf.search_index(spark, idx, queries, k=5, n_probe=2)
-    persisted = {
-        (r["query_id"], r["neighbor_id"]) for r in persisted_df.collect()
-    }
-    assert persisted == live
-
-    # the partition filter reached the scan (pruning, not post-scan)
-    plan = persisted_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "ivf_list" in plan
-
-    # incremental add: a near-duplicate of query 0's center, new id
-    new = spark.createDataFrame(
-        [(9000, [float(x) for x in centers[0] + 0.01 * rng.standard_normal(32)])],
-        "vec_id long, embedding array<float>",
-    )
-    ivf.append_to_index(new, idx)
-    after = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf.search_index(spark, idx, queries, k=5, n_probe=2).collect()
-    }
-    assert (0, 9000) in after
-
-
-@pytest.mark.slow
-def test_ivf_sq8_quantized_index_recall(spark, tmp_path):
-    """IVF-SQ8: the int8-resident index (1/8 bytes/vector on top of
-    list pruning) must recover ≥0.9 of the float index's results on
-    clustered data — the asymmetric int8-corpus × float-query cosine
-    is exact in expectation. Appends inherit the index's format."""
-    import numpy as np
-
-    from pythondataingestionprocess_spark.operators import ivf
-
-    rng = np.random.default_rng(11)
-    centers = rng.standard_normal((8, 32)) * 10
-    rows = [
-        (i, [float(x) for x in centers[i % 8] + rng.standard_normal(32)])
-        for i in range(400)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = df.filter(F.col("vec_id") < 4)
-    centroids = ivf.kmeans_fit(df, k=8, max_iter=5)
-
-    fidx = str(tmp_path / "float_idx")
-    qidx = str(tmp_path / "q_idx")
-    ivf.save_index(df, centroids, fidx)
-    ivf.save_index(df, centroids, qidx, quantized=True)
-
-    fres = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf.search_index(spark, fidx, queries, k=5, n_probe=2).collect()
-    }
-    qres = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf.search_index(spark, qidx, queries, k=5, n_probe=2).collect()
-    }
-    assert len(fres & qres) / len(fres) >= 0.9
-
-    # appended vectors land quantized and searchable
-    new = spark.createDataFrame(
-        [(9000, [float(x) for x in centers[0] + 0.01 * rng.standard_normal(32)])],
-        "vec_id long, embedding array<float>",
-    )
-    ivf.append_to_index(new, qidx)
-    resident = spark.read.parquet(str(tmp_path / "q_idx" / "vectors"))
-    assert dict(resident.dtypes)["qvec"] == "array<tinyint>"
-    after = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf.search_index(spark, qidx, queries, k=5, n_probe=2).collect()
-    }
-    assert (0, 9000) in after
-
-
-@pytest.mark.slow
-def test_ivf_streaming_ingest_appends_to_index(spark, tmp_path):
-    """File stream → index_ingest_batch_fn: streamed vectors are
-    assigned into the persisted index's lists and immediately
-    searchable."""
-    import json
-    import os
-
-    import numpy as np
-
-    from pythondataingestionprocess_spark.operators import ivf
-    from pythondataingestionprocess_spark.streaming import file_ingest
-
-    rng = np.random.default_rng(11)
-    centers = rng.standard_normal((8, 32)) * 10
-    rows = [
-        (i, [float(x) for x in centers[i % 8] + rng.standard_normal(32)])
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    centroids = ivf.kmeans_fit(df, k=8, max_iter=5)
-    idx = str(tmp_path / "idx")
-    ivf.save_index(df, centroids, idx)
-
-    inbox = str(tmp_path / "inbox")
-    os.makedirs(inbox)
-    new_vec = [float(x) for x in centers[3] + 0.01 * rng.standard_normal(32)]
-    with open(os.path.join(inbox, "a.json"), "w") as f:
-        f.write(json.dumps({"vec_id": 9000, "embedding": new_vec}) + "\n")
-
-    stream = file_ingest.file_stream(
-        spark, inbox, "vec_id long, embedding array<float>"
-    )
-    file_ingest.run_ingestion(
-        stream, ivf.index_ingest_batch_fn(idx), str(tmp_path / "ckpt")
-    ).awaitTermination(120)
-
-    queries = df.filter(F.col("vec_id") == 3)
-    got = {
-        r["neighbor_id"]
-        for r in ivf.search_index(spark, idx, queries, k=5, n_probe=2).collect()
-    }
-    assert 9000 in got
-
-
-@pytest.mark.slow
-def test_ivf_index_append_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: re-delivering the same batch to
-    index_ingest_batch_fn must append nothing (id anti-join against
-    the touched lists), so top-k never sees duplicate neighbors."""
-    import numpy as np
-
-    from pythondataingestionprocess_spark.operators import ivf
-
-    rng = np.random.default_rng(11)
-    centers = rng.standard_normal((8, 32)) * 10
-    rows = [
-        (i, [float(x) for x in centers[i % 8] + rng.standard_normal(32)])
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    centroids = ivf.kmeans_fit(df, k=8, max_iter=5)
-    idx = str(tmp_path / "idx")
-    ivf.save_index(df, centroids, idx)
-
-    new = spark.createDataFrame(
-        [(9000, [float(x) for x in centers[0] + 0.01 * rng.standard_normal(32)])],
-        "vec_id long, embedding array<float>",
-    )
-    fn = ivf.index_ingest_batch_fn(idx)
-    fn(new, 0)
-    fn(new, 0)  # replay
-    resident = spark.read.parquet(str(tmp_path / "idx" / "vectors"))
-    assert resident.filter(F.col("vec_id") == 9000).count() == 1
-
-
-@pytest.mark.slow
-def test_ivf_compact_index_folds_files_and_preserves_search(spark, tmp_path):
-    """r7 VERDICT item 5: the streaming append accretes one-plus file
-    per touched list per batch; compact_index must fold the vectors
-    table to one file per list, leave search results invariant, and
-    clean up every staging leftover — including recovering a
-    crash-orphaned __building_* dir as an INPUT."""
-    import glob
-    import os
-    import shutil
-
-    import numpy as np
-
-    from pythondataingestionprocess_spark.operators import ivf
-
-    rng = np.random.default_rng(23)
-    centers = rng.standard_normal((4, 16)) * 10
-    rows = [
-        (i, [float(x) for x in centers[i % 4] + rng.standard_normal(16)])
-        for i in range(120)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = df.filter(F.col("vec_id") < 3)
-    centroids = ivf.kmeans_fit(df, k=4, max_iter=4)
-    idx = str(tmp_path / "ivf_index")
-    ivf.save_index(df, centroids, idx)
-
-    # accrete: five appends, each touching every list
-    for b in range(5):
-        batch = spark.createDataFrame(
-            [
-                (1000 + 10 * b + j,
-                 [float(x) for x in centers[j % 4] + rng.standard_normal(16)])
-                for j in range(8)
-            ],
-            "vec_id long, embedding array<float>",
-        )
-        ivf.append_to_index(batch, idx)
-
-    before_set = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf.search_index(spark, idx, queries, k=5, n_probe=2).collect()
-    }
-    n_before = len(glob.glob(os.path.join(idx, "vectors", "*", "*.parquet")))
-
-    fb, fa = ivf.compact_index(spark, idx)
-    assert fb == n_before
-    assert fa == 4  # one file per list
-    assert not glob.glob(os.path.join(idx, "vectors__*"))
-
-    after_set = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf.search_index(spark, idx, queries, k=5, n_probe=2).collect()
-    }
-    assert after_set == before_set
-
-    # idempotent: a second run is a no-op fold of an already-compact table
-    fb2, fa2 = ivf.compact_index(spark, idx)
-    assert (fb2, fa2) == (4, 4)
-
-    # crash recovery: the only copy orphaned under a staging name must
-    # fold back (leftovers are inputs)
-    shutil.move(
-        os.path.join(idx, "vectors"),
-        os.path.join(idx, "vectors__building_cafe01"),
-    )
-    ivf.compact_index(spark, idx)
-    recovered = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ivf.search_index(spark, idx, queries, k=5, n_probe=2).collect()
-    }
-    assert recovered == before_set
-
-
-@pytest.mark.slow
-def test_ivf_refit_trigger_and_refit(spark, tmp_path):
-    """needs_refit fires on list-size skew (hot list > threshold ×
-    mean) and stays quiet on a balanced index; refit_index rebalances
-    and preserves the stored-vector format marker."""
-    import numpy as np
-
-    from pythondataingestionprocess_spark.operators import ivf
-
-    rng = np.random.default_rng(31)
-    centers = rng.standard_normal((4, 16)) * 10
-    rows = [
-        (i, [float(x) for x in centers[i % 4] + rng.standard_normal(16)])
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    centroids = ivf.kmeans_fit(df, k=4, max_iter=4)
-    idx = str(tmp_path / "ivf_index")
-    ivf.save_index(df, centroids, idx, quantized=True)
-    assert ivf.needs_refit(spark, idx, skew_threshold=3.0) is False
-
-    # drift: a flood of inserts near ONE center → hot list
-    flood = spark.createDataFrame(
-        [
-            (5000 + j, [float(x) for x in centers[0] + rng.standard_normal(16)])
-            for j in range(600)
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    ivf.append_to_index(flood, idx)
-    assert ivf.needs_refit(spark, idx, skew_threshold=3.0) is True
-
-    # refit on the full float corpus rebalances and keeps IVF-SQ8
-    full = df.unionByName(flood)
-    ivf.refit_index(full, idx, k=4, max_iter=4)
-    assert ivf.needs_refit(spark, idx, skew_threshold=3.0) is False
-    assert ivf._index_quantized(spark, idx) is True
-    got = ivf.search_index(
-        spark, idx, df.filter(F.col("vec_id") < 2), k=3, n_probe=2
-    )
-    assert got.count() == 6
-
-
 def test_packing_null_token_fails_with_clear_message(spark):
-    """r13 review: a NULL token count used to die as an opaque
-    int(NaN) ValueError deep in the pandas task; now the error names
-    the column and group."""
+    """A NULL token count must not die as an opaque int(NaN)
+    ValueError deep in the pandas task: the error names the column and
+    group."""
     from pythondataingestionprocess_spark.operators.packing import (
         pack_documents_greedy,
     )
@@ -1518,8 +1005,8 @@ def test_packing_null_token_fails_with_clear_message(spark):
 
 
 def test_packing_tied_order_col_is_deterministic(spark):
-    """r13 review: duplicate order_col values across shuffle-ordered
-    input made bin assignment run-to-run nondeterministic; the
+    """Duplicate order_col values across shuffle-ordered input must not
+    make bin assignment run-to-run nondeterministic; the
     (order_col, token_col) stable sort pins a total order (rows tying
     on both keys are column-identical, so the output multiset is
     fixed)."""
@@ -1551,123 +1038,9 @@ def test_packing_tied_order_col_is_deterministic(spark):
         assert (got, shards) == baseline
 
 
-# Migrated from the retired `doc_packing_lookahead` driver face
-# (RETIRED_R16 — the r15 VERDICT's named capacity lever: the slot now
-# carries the snapshot-store change-feed face). The face's substance —
-# an independent DuckDB recursive-CTE replay of the two-open-bin
-# best-fit state machine, carrying both bin slots and the next-id
-# counter as recursion state — is pinned HERE instead, at sf0.001.
-_LOOKAHEAD_REPLAY_SQL = """
-WITH RECURSIVE t AS (
-  SELECT source, doc_id,
-         CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n,
-         row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-  FROM documents
-), walk AS (
-  SELECT source, rn,
-         CAST(0 AS BIGINT) AS a_id, n AS a_fill,
-         CAST(NULL AS BIGINT) AS b_id, CAST(NULL AS BIGINT) AS b_fill,
-         CAST(1 AS BIGINT) AS nid,
-         CAST(0 AS BIGINT) AS out_bin, n AS out_fill
-  FROM t WHERE rn = 1
-  UNION ALL
-  SELECT t.source, t.rn,
-    CASE WHEN (w.a_fill + t.n <= 4096)
-              AND (NOT (w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096)
-                   OR (w.a_fill > w.b_fill OR (w.a_fill = w.b_fill AND w.a_id < w.b_id)))
-         THEN w.a_id
-         WHEN w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096 THEN w.a_id
-         WHEN w.b_id IS NOT NULL
-              AND (w.a_fill > w.b_fill OR (w.a_fill = w.b_fill AND w.a_id < w.b_id))
-         THEN w.nid
-         ELSE w.a_id END,
-    CASE WHEN (w.a_fill + t.n <= 4096)
-              AND (NOT (w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096)
-                   OR (w.a_fill > w.b_fill OR (w.a_fill = w.b_fill AND w.a_id < w.b_id)))
-         THEN w.a_fill + t.n
-         WHEN w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096 THEN w.a_fill
-         WHEN w.b_id IS NOT NULL
-              AND (w.a_fill > w.b_fill OR (w.a_fill = w.b_fill AND w.a_id < w.b_id))
-         THEN t.n
-         ELSE w.a_fill END,
-    CASE WHEN (w.a_fill + t.n <= 4096)
-              AND (NOT (w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096)
-                   OR (w.a_fill > w.b_fill OR (w.a_fill = w.b_fill AND w.a_id < w.b_id)))
-         THEN w.b_id
-         WHEN w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096 THEN w.b_id
-         WHEN w.b_id IS NULL THEN w.nid
-         WHEN (w.a_fill > w.b_fill OR (w.a_fill = w.b_fill AND w.a_id < w.b_id))
-         THEN w.b_id
-         ELSE w.nid END,
-    CASE WHEN (w.a_fill + t.n <= 4096)
-              AND (NOT (w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096)
-                   OR (w.a_fill > w.b_fill OR (w.a_fill = w.b_fill AND w.a_id < w.b_id)))
-         THEN w.b_fill
-         WHEN w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096 THEN w.b_fill + t.n
-         WHEN w.b_id IS NULL THEN t.n
-         WHEN (w.a_fill > w.b_fill OR (w.a_fill = w.b_fill AND w.a_id < w.b_id))
-         THEN w.b_fill
-         ELSE t.n END,
-    CASE WHEN (w.a_fill + t.n <= 4096)
-              OR (w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096)
-         THEN w.nid ELSE w.nid + 1 END,
-    CASE WHEN (w.a_fill + t.n <= 4096)
-              AND (NOT (w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096)
-                   OR (w.a_fill > w.b_fill OR (w.a_fill = w.b_fill AND w.a_id < w.b_id)))
-         THEN w.a_id
-         WHEN w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096 THEN w.b_id
-         WHEN w.b_id IS NULL THEN w.nid
-         ELSE w.nid END,
-    CASE WHEN (w.a_fill + t.n <= 4096)
-              AND (NOT (w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096)
-                   OR (w.a_fill > w.b_fill OR (w.a_fill = w.b_fill AND w.a_id < w.b_id)))
-         THEN w.a_fill + t.n
-         WHEN w.b_id IS NOT NULL AND w.b_fill + t.n <= 4096 THEN w.b_fill + t.n
-         ELSE t.n END
-  FROM walk w JOIN t ON t.source = w.source AND t.rn = w.rn + 1
-)
-SELECT source, out_bin AS bin_id, COUNT(*) AS n_docs,
-       CAST(MAX(out_fill) AS BIGINT) AS bin_tokens
-FROM walk GROUP BY 1, 2
-"""
-
-
-def test_lookahead_packing_matches_duckdb_state_machine_replay(spark, sf_dir):
-    """operators/packing.pack_documents_lookahead vs the sequential
-    DuckDB replay of the same comparator (fullest fitting bin, ties to
-    the older bin; identical seal rule) — the retired driver face's
-    oracle contract, kept as a pytest gate."""
-    import duckdb
-
-    from pythondataingestionprocess_spark.functions import text as _tx
-    from pythondataingestionprocess_spark.operators.packing import (
-        pack_documents_lookahead,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    t = docs.select("source", "doc_id", _tx.token_count("text").alias("n_tokens"))
-    packed = pack_documents_lookahead(t, "source", "doc_id", "n_tokens", 4096)
-    got = sorted(
-        (r["source"], r["bin_id"], r["n_docs"], r["bin_tokens"])
-        for r in packed.groupBy("source", "bin_id").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.max("bin_fill").alias("bin_tokens"),
-        ).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    want = sorted(map(tuple, con.sql(_LOOKAHEAD_REPLAY_SQL).fetchall()))
-    assert got == want
-
-
 def test_sequential_bpe_face_matches_oracle(spark, sf_dir):
-    """Migrated from the retired `text_bpe_merge_learn` driver face
-    (RETIRED_R16 capacity lever — its oracle is byte-identical to the
-    batched face's, so the driver ran the same comparison twice): the
-    SEQUENTIAL learner path (_bpe_merge_face(batched=False)) must
+    """The batched BPE face shares this oracle, so the SEQUENTIAL
+    learner path (_bpe_merge_face(batched=False)) must
     still hash-match the DuckDB set-based replay."""
     import duckdb
 
@@ -1689,7 +1062,7 @@ def test_sequential_bpe_face_matches_oracle(spark, sf_dir):
 
 
 def test_auto_lsh_bits_calibration():
-    """The self-tuning depth rule (r16): ceil(log2 n)+9 clamped to
+    """The self-tuning depth rule: ceil(log2 n)+9 clamped to
     [12, 30] — pinned at the measured calibration points (22k → 24
     was the sf1 sweet spot; 220k → 27 measured at sf10) and at the
     int32 bucket-id ceiling."""
@@ -1703,7 +1076,7 @@ def test_auto_lsh_bits_calibration():
     assert auto_lsh_bits(10**12) == 30  # clamped: int32 bucket ids
 
 
-# ------------------------- replayable integer-Rademacher LSH (r17)
+# ------------------------- replayable integer-Rademacher LSH
 
 
 def test_rademacher_masks_pinned():
@@ -1767,7 +1140,7 @@ def test_rademacher_buckets_match_duckdb_replay(spark, sf_dir):
 
 @pytest.mark.parametrize("sf_dir_case", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
 def test_cosine_capped_face_recall_equals_exact_scan(spark, sf_dir_case):
-    """Recall certificate for the capped face basis (r17): on the
+    """Recall certificate for the capped face basis: on the
     planted-dup corpus the capped Rademacher pipeline's output equals
     the exact O(n^2) cosine scan — the cap is enforced AND lossless
     here (dup-bearing buckets sit far under 64 members at auto bit

@@ -237,7 +237,28 @@ def test_entry_wrapper_applies_session_tuning(spark):
         assert spark.conf.get(k) == v, k
 
 
-# ---------------------------------------------------------------- r4 guards
+def test_every_corpus_stores_events_ts_as_micros():
+    """The catalog reads ``events`` with no conversion, so every corpus
+    in reach must store ``ts`` as TIMESTAMP(MICROS): a NANOS file is
+    rejected by a vanilla session and would need a conf to read at all.
+    Covers each scale beside the test corpus and the benchmark's
+    committed copies."""
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    repo = Path(__file__).resolve().parents[1]
+    files = sorted(
+        [*Path(SF_DIR).parent.glob("sf*/events.parquet"),
+         *(repo / "perfbench" / "data").glob("sf*/events.parquet")]
+    )
+    assert len(files) >= 2, files
+    for f in files:
+        assert pq.read_schema(f).field("ts").type == pa.timestamp("us"), f
+
+
+# ---------------------------------------------------------------- plan-shape guards
 
 
 def test_q15_aggregates_before_scalar_max_join(spark):
@@ -296,9 +317,6 @@ def test_lateral_decorrelates_to_window_topk(spark):
     plan = _formatted_plan(spark, "lateral_top_orders")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-# --- round-5 additions ------------------------------------------------
 
 
 def test_q21_existence_checks_are_hash_joins(spark):
@@ -510,12 +528,11 @@ def test_curation_filter_mapside_single_rollup(spark):
 def test_resample_no_joins_all_window(spark):
     """The resample's successor lookup is ONE lead window over the
     deduped observations, and each row explodes its own half-open
-    hourly interval map-side (the r17 lead+explode design) — NOT a
-    pair of as-of joins and NOT the old union+window interleave: no
-    join nodes at all, no Python, exactly ONE exchange (the raw-event
-    repartition that also serves the in-partition dedup) and one
-    Generate for the interval explode (r17 ADVICE: this docstring
-    described the removed interleave)."""
+    hourly interval map-side (lead+explode) — NOT a pair of as-of
+    joins and NOT a union+window interleave: no join nodes at all, no
+    Python, exactly ONE exchange (the raw-event repartition that also
+    serves the in-partition dedup) and one Generate for the interval
+    explode."""
     plan = _formatted_plan(spark, "events_resample_interpolate")
     njoins = len(re.findall(
         r"\(\d+\) (?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|"
@@ -668,7 +685,10 @@ def test_triangle_count_materializes_reuse_no_python(spark):
     assert "CartesianProduct" not in plan
 
     from pythondataingestionprocess_spark.catalog import load_table
-    from pythondataingestionprocess_spark.operators.graph import triangle_count
+    from pythondataingestionprocess_spark.operators.graph import (
+        _closed_triangles,
+        triangle_count_from_chain,
+    )
     import pyspark.sql.functions as F
 
     li = (
@@ -684,7 +704,7 @@ def test_triangle_count_materializes_reuse_no_python(spark):
         .select("u", "v")
         .distinct()
     )
-    pure = triangle_count(edges, materialize=False)
+    pure = triangle_count_from_chain(*_closed_triangles(edges, False))
     pure_plan = pure._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -694,8 +714,8 @@ def test_triangle_count_materializes_reuse_no_python(spark):
 
 def test_clustering_coefficient_materialized_no_python(spark):
     """Same contract as the triangle count: the registered query reads
-    the session chain's PERSISTED frames (r18 — recomputable lineage;
-    at most the single cache-fill scan inside the innermost cached
+    the session chain's PERSISTED frames (recomputable lineage; at
+    most the single cache-fill scan inside the innermost cached
     relation shows in the plan), no Python, no cartesian; the top-20
     cut is a TakeOrderedAndProject, not a data-grain global sort."""
     import re as _re
@@ -836,9 +856,7 @@ def test_bm25_two_scans_windowed_idf(spark):
 
 
 def test_width_bucket_binning_equals_desugared_case(spark):
-    """Substance migration for the r13 `histogram_quantity` retirement
-    (core_relational.py): the retired face's oracle pinned that
-    width_bucket(x, 0, 50, 10) equals the hand-desugared CASE (below
+    """width_bucket(x, 0, 50, 10) equals the hand-desugared CASE (below
     range -> 0, at/above hi -> n+1, else floor(x/width)+1). Keep that
     equivalence pinned strategy-vs-strategy in Spark so the fixed-width
     binning expression stays verified without spending a registry
@@ -875,13 +893,11 @@ def test_width_bucket_binning_equals_desugared_case(spark):
 
 
 def test_topk_agg_formulation_matches_window_face(spark):
-    """Migrated substance of the retired `topk_per_group_agg` face
-    (r15 capacity lever for the Q2 registration): top-k per group as
-    an AGGREGATION — sorted-slice over collected structs, the
-    TakeOrdered generalization — must equal the window formulation
-    (`topk_per_group`-style row_number pick) row for row.
+    """Top-k per group as an AGGREGATION — sorted-slice over collected
+    structs, the TakeOrdered generalization — must equal the window
+    formulation (`topk_per_group`-style row_number pick) row for row.
 
-    Scale trade the retired docstring pinned: the agg form never
+    Scale trade: the agg form never
     sorts whole partitions (WindowExec must), only each group's own
     items — right when the group count is huge and per-group rows are
     modest. collect_list still buffers a full group before the slice,

@@ -9,7 +9,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pythondataingestionprocess_spark.operators import ivf
 from pythondataingestionprocess_spark.operators import pq
 from pythondataingestionprocess_spark.operators import similarity as sim
 
@@ -143,14 +142,6 @@ def test_pq_adc_exact_when_corpus_is_the_codebook(spark):
         assert dist == pytest.approx(exact, abs=1e-6), vid2
 
 
-def test_pq_code_bytes_accounting():
-    assert pq.pq_code_bytes(m=8, ksub=256) == 8    # 32x vs 64-d float32
-    assert pq.pq_code_bytes(m=8, ksub=16) == 8
-    assert pq.pq_code_bytes(m=4, ksub=1024) == 8   # 2 bytes past 256
-    # the 100 TB claim: 64-d float32 = 256 bytes -> m=8 codes = 8 bytes
-    assert 256 / pq.pq_code_bytes(8, 256) == 32.0
-
-
 def test_pq_rejects_bad_shapes(spark):
     df = _clustered_df(spark, n=20)
     with pytest.raises(ValueError, match="not divisible"):
@@ -159,67 +150,11 @@ def test_pq_rejects_bad_shapes(spark):
         pq.pq_fit(df, m=4, ksub=64)
 
 
-@pytest.mark.slow
-def test_ivfadc_composition_prunes_and_keeps_recall(spark):
-    """IVFADC (PAMI 2011 §V): coarse-quantize with IVF, store PQ codes
-    partitioned by list, search only the probed lists' codes. The
-    scan is bounded by n_probe/k of the corpus AND each scanned row is
-    m bytes — the two reductions compose. Recall stays high on
-    the graded planted-duplicate corpus (see the recall test for why
-    exact-top-5 on a blocky tie plateau is the wrong metric)."""
-    rng = np.random.default_rng(7)
-    rows = [
-        (i, [float(x) for x in rng.standard_normal(32)]) for i in range(400)
-    ]
-    planted, vid = [], 1000
-    base = {r[0]: np.array(r[1]) for r in rows[:8]}
-    for qid in range(8):
-        for _ in range(5):
-            planted.append(
-                (vid, [float(x) for x in base[qid] + 0.05 * rng.standard_normal(32)])
-            )
-            vid += 1
-    df = spark.createDataFrame(
-        rows + planted, "vec_id long, embedding array<float>"
-    )
-    queries = df.filter(F.col("vec_id") < 8)
-    brute = sim.knn_bruteforce(df, queries, k=5).select(
-        "query_id", "neighbor_id"
-    )
-
-    centroids = ivf.kmeans_fit(df, k=8, max_iter=5)
-    listed = ivf.ivf_assign(df, centroids)  # + ivf_list column
-    cb = pq.pq_fit(df, m=4, ksub=16, max_iter=5)
-    codes = pq.pq_encode(listed, cb).join(
-        listed.select("vec_id", "ivf_list"), "vec_id"
-    )
-
-    # probe 2 lists per query, search only those codes
-    probed = ivf.ivf_probe_lists(queries, centroids, n_probe=2)
-    hits = []
-    for r in probed.collect():
-        sub = codes.filter(F.col("ivf_list").isin([int(x) for x in r["probe_lists"]]))
-        q = queries.filter(F.col("vec_id") == r["vec_id"]).select(
-            F.col("vec_id").alias("q_id"), "embedding"
-        )
-        res = pq.pq_search(sub, q, cb, k=5, exclude_self=True).select(
-            F.col("q_id").alias("query_id"),
-            F.col("vec_id").alias("neighbor_id"),
-        )
-        hits.append(res)
-    approx = hits[0]
-    for h in hits[1:]:
-        approx = approx.unionByName(h)
-    n_true = brute.count()
-    n_hit = brute.join(approx, ["query_id", "neighbor_id"], "left_semi").count()
-    assert n_hit / n_true >= 0.7, f"IVFADC recall {n_hit / n_true}"
-
-
 def test_pq_fit_tolerates_zero_vector(spark):
-    """r13 review: a single all-zero embedding (an empty document)
-    used to kill the whole fit with ANSI DIVIDE_BY_ZERO inside the
-    SQL re-normalization — a directionless vector now simply drops
-    out of the codebook update."""
+    """A single all-zero embedding (an empty document) must not kill
+    the whole fit with ANSI DIVIDE_BY_ZERO inside the SQL
+    re-normalization: a directionless vector drops out of the codebook
+    update."""
     import numpy as np
 
     rng = np.random.default_rng(5)
@@ -232,7 +167,7 @@ def test_pq_fit_tolerates_zero_vector(spark):
 
 
 def test_ivf_pq_oracle_tie_margins_are_ulp_safe():
-    """r16 ADVICE (low): the IVF/PQ full oracles depend on cross-engine
+    """The IVF/PQ full oracles depend on cross-engine
     argmin/rank agreement under ~1-ulp float divergence (numpy GEMM vs
     DuckDB sequential folds). This certificate MEASURES the distance
     plateaus on the driver correctness corpus (sf0.01) with a pure

@@ -1,4 +1,4 @@
-"""Repeated-span exact dedup (operators/spandedup.py, r10): unaligned
+"""Repeated-span exact dedup (operators/spandedup.py): unaligned
 cross-doc repeats are caught (the case fixed-block dedup misses),
 first occurrence kept, overlapping spans merge, short docs pass
 through, the convergence contract holds (no re-removal without
@@ -117,7 +117,7 @@ def test_second_pass_removes_nothing_without_new_adjacency(spark):
 
 
 def test_removal_created_adjacency_resolves_on_a_later_pass(spark):
-    """Code-review r10 (the documented non-idempotence): removing a
+    """The documented non-idempotence: removing a
     span can make its neighbors adjacent; if THAT k-gram duplicates
     another doc, a second pass removes it — run to fixpoint for exact
     suffix-array semantics. Pins the single-pass contract (removals
@@ -149,9 +149,8 @@ def test_removal_created_adjacency_resolves_on_a_later_pass(spark):
     assert third[2]["text"] == "" and third[2]["n_removed"] == 0
 
 
-# The registered oracle (plans/corpus_ops.py, text_repeated_span_dedup
-# — pre-validated here BEFORE registration so the r11 fold was a
-# paste, not a debug; the test now reads the single registered copy).
+# The registered oracle (plans/corpus_ops.py, text_repeated_span_dedup);
+# the test reads the single registered copy.
 def _span_oracle() -> str:
     from pythondataingestionprocess_spark.plans.corpus_ops import (
         _SPAN_DEDUP_ORACLE,
@@ -184,86 +183,3 @@ def test_duckdb_oracle_parity_on_sf0001(spark, sf_dir):
     }
     assert got == oracle
     assert any(r[2] > 0 for r in got), "corpus has natural repeats"
-
-
-# ---- fixpoint wrapper (r10 VERDICT item 5) -------------------------
-
-def test_fixpoint_resolves_cascade_and_certifies(spark):
-    """The cascade corpus needs exactly 2 removal passes; the wrapper
-    runs them plus the certifying zero-pass, reports ORIGINAL token
-    counts with TOTAL removals, and its output is a true fixpoint."""
-    from pythondataingestionprocess_spark.operators.spandedup import (
-        repeated_span_dedup_fixpoint,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (0, "q1 q2 pad1 pad2"),
-            (1, "X Y"),
-            (2, "X q1 q2 Y"),
-        ],
-        SCHEMA,
-    )
-    stats: dict = {}
-    out = _rows(repeated_span_dedup_fixpoint(docs, k=2, stats=stats))
-    # pass 1 removes 'q1 q2' (2 tokens), pass 2 the removal-created
-    # 'X Y' (2 more), pass 3 certifies the fixpoint
-    assert stats["passes"] == 3
-    assert stats["removed_per_pass"] == [2, 2, 0]
-    assert out[2]["text"] == "" and out[2]["n_removed"] == 4
-    assert out[2]["n_tokens"] == 4  # ORIGINAL count, not pass-2 input
-    assert out[0]["n_removed"] == 0 and out[1]["n_removed"] == 0
-    # idempotence of the fixpoint output
-    again = _rows(
-        repeated_span_dedup(
-            spark.createDataFrame(
-                [(d, r["text"]) for d, r in out.items()], SCHEMA
-            ),
-            k=2,
-        )
-    )
-    for d in again:
-        assert again[d]["n_removed"] == 0
-
-
-def test_fixpoint_max_passes_fails_loud(spark):
-    """A pass budget too small for the cascade must raise, not return
-    a half-deduplicated corpus."""
-    import pytest
-
-    from pythondataingestionprocess_spark.operators.spandedup import (
-        repeated_span_dedup_fixpoint,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (0, "q1 q2 pad1 pad2"),
-            (1, "X Y"),
-            (2, "X q1 q2 Y"),
-        ],
-        SCHEMA,
-    )
-    with pytest.raises(RuntimeError, match="no fixpoint within 1"):
-        repeated_span_dedup_fixpoint(docs, k=2, max_passes=1)
-
-
-def test_fixpoint_single_pass_corpus_is_two_passes_total(spark):
-    """A corpus with no removal-created adjacency converges after one
-    removal pass + the certifying pass."""
-    from pythondataingestionprocess_spark.operators.spandedup import (
-        repeated_span_dedup_fixpoint,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, f"{PASSAGE} alpha beta gamma delta"),
-            (2, f"one two three {PASSAGE} epsilon zeta"),
-        ],
-        SCHEMA,
-    )
-    stats: dict = {}
-    single = _rows(repeated_span_dedup(docs, k=6))
-    fixed = _rows(repeated_span_dedup_fixpoint(docs, k=6, stats=stats))
-    assert stats["passes"] == 2
-    assert stats["removed_per_pass"][-1] == 0
-    assert fixed == single

@@ -1,7 +1,7 @@
 """Structured Streaming integration tests (SURVEY.md §2.9): the window
 transforms running behind real file-source streams, checkpointed
-exactly-once file ingestion with dead-letter routing, bounded-state
-dedup, and the keyed-state operator."""
+exactly-once file ingestion with dead-letter routing, the streaming
+dedup stores, and the keyed-state operator."""
 
 from __future__ import annotations
 
@@ -91,7 +91,7 @@ def test_streaming_tumbling_window_with_watermark(spark, tmp_path):
     _write_json_batch(inbox, "a.json", _rows(0, 30))  # minutes 0..29
 
     stream = file_ingest.file_stream(spark, inbox, EVENTS_SCHEMA)
-    agg = sw.tumbling_agg(sw.with_watermark(stream), duration="10 minutes")
+    agg = sw.tumbling_agg(stream.withWatermark("ts", "10 minutes"), duration="10 minutes")
     q = (
         agg.writeStream.format("memory")
         .queryName("tumbling_test")
@@ -122,7 +122,7 @@ def test_streaming_session_window(spark, tmp_path):
     _write_json_batch(inbox, "a.json", rows)
 
     stream = file_ingest.file_stream(spark, inbox, EVENTS_SCHEMA)
-    agg = sw.session_agg(sw.with_watermark(stream, delay="1 hour"), gap="30 minutes")
+    agg = sw.session_agg(stream.withWatermark("ts", "1 hour"), gap="30 minutes")
     q = (
         agg.writeStream.format("memory")
         .queryName("session_test")
@@ -136,34 +136,6 @@ def test_streaming_session_window(spark, tmp_path):
         for r in spark.sql("SELECT * FROM session_test").collect()
     )
     assert got == [("2024-01-01 00:00:00", 3), ("2024-01-01 01:00:00", 3)]
-
-
-def test_dedup_within_watermark_stream(spark, tmp_path):
-    """Duplicate event_ids inside the watermark window are dropped
-    across micro-batches (bounded-state J5)."""
-    inbox = str(tmp_path / "inbox")
-    _write_json_batch(inbox, "a.json", _rows(0, 3) + _rows(0, 2))  # dups in-file
-
-    stream = file_ingest.file_stream(spark, inbox, EVENTS_SCHEMA)
-    deduped = sw.dedup_within_watermark(stream, key_cols=("event_id",), delay="1 hour")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    assert spark.sql("SELECT count(*) n FROM dedup_test").first()["n"] == 3
-
-
-def test_dedup_within_watermark_batch_equivalent(spark):
-    """Batch fallback of the same operator is a plain dropDuplicates."""
-    df = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00"), (1, "2024-01-01 00:00:01"), (2, "2024-01-01 00:00:02")],
-        "event_id long, ts string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    assert sw.dedup_within_watermark(df).count() == 2
 
 
 def test_stateful_running_totals(spark, tmp_path):
@@ -717,6 +689,44 @@ def test_dedup_ingest_retry_is_idempotent(spark, tmp_path):
     }
 
 
+def test_two_streaming_queries_feed_one_store_exactly_once(spark, tmp_path):
+    """The store's exactly-once key is per streaming query: a second
+    query into the same store (its own landing dir and checkpoint, so
+    it starts again at batch 0) commits its batches instead of finding
+    batch 0 already recorded, screens against the first query's rows,
+    and a restart of the first query from its checkpoint keeps its own
+    key. Every doc of both queries lands once."""
+    from pythondataingestionprocess_spark.streaming.dedup_ingest import (
+        dedup_batch_fn,
+    )
+
+    base = (
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
+        "kilo lima mike november oscar papa quebec romeo sierra tango"
+    ).split()
+    store = str(tmp_path / "store")
+    schema = "doc_id long, text string"
+
+    def run(name: str, file: str, rows: list[tuple[int, str]]) -> None:
+        inbox = str(tmp_path / name / "inbox")
+        _write_json_batch(inbox, file, [{"doc_id": i, "text": t} for i, t in rows])
+        fn = dedup_batch_fn(store, str(tmp_path / name / "pairs"))
+        stream = file_ingest.file_stream(spark, inbox, schema)
+        file_ingest.run_ingestion(
+            stream, fn, str(tmp_path / name / "ckpt")
+        ).awaitTermination(120)
+
+    run("a", "1.json", [(1, " ".join(base)), (2, "unrelated words " * 8)])
+    run("b", "1.json", [(11, " ".join(["changedfirst"] + base[1:])), (12, "novel " * 9)])
+    b0 = spark.read.parquet(str(tmp_path / "b" / "pairs" / "batch_id=0")).collect()
+    assert {(r.id_a, r.id_b, r.kind) for r in b0} == {(11, 1, "cross")}
+    run("a", "2.json", [(3, "third doc here " * 4)])  # restart: query a's batch 1
+
+    ids = sorted(r.doc_id for r in TableGroup(spark, store).read("shingles").collect())
+    assert ids == [1, 2, 3, 11, 12]
+    assert len(TableGroup(spark, store).snapshot_ids()) == 3  # one commit per batch
+
+
 def test_rate_source_tumbling_window(spark, tmp_path):
     """The built-in rate source (synthetic load generator — the
     standard way to smoke a streaming topology without external
@@ -885,7 +895,7 @@ def test_stream_static_dim_enrichment_rollup(spark, tmp_path):
     stream = file_ingest.file_stream(spark, inbox, EVENTS_SCHEMA)
     enriched = enrich_with_static_dim(stream, dim, "user_id")
     agg = (
-        sw.with_watermark(enriched)
+        enriched.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "10 minutes"), "segment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -947,7 +957,7 @@ def test_streaming_agg_on_rocksdb_state_store(spark, tmp_path):
             "RocksDBStateStoreProvider",
         )
         stream = file_ingest.file_stream(spark, inbox, EVENTS_SCHEMA)
-        agg = sw.tumbling_agg(sw.with_watermark(stream), duration="10 minutes")
+        agg = sw.tumbling_agg(stream.withWatermark("ts", "10 minutes"), duration="10 minutes")
         q = (
             agg.writeStream.format("memory")
             .queryName("rocksdb_tumbling")
@@ -985,10 +995,8 @@ def test_streaming_partitioned_parquet_sink_exactly_once(spark, tmp_path):
     built-in file sink commits each micro-batch through its
     _spark_metadata transaction log, so a restart from the same
     checkpoint neither re-writes batch 1 nor loses batch 2 — the
-    streaming face of the warehouse's partitioned layout
-    (storage.write_partitioned covers the batch reload face).
-    Downstream readers get partition pruning on the day directories
-    immediately."""
+    streaming face of a partitioned table layout. Downstream readers
+    get partition pruning on the day directories immediately."""
     inbox = str(tmp_path / "inbox")
     out = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
@@ -1025,43 +1033,6 @@ def test_streaming_partitioned_parquet_sink_exactly_once(spark, tmp_path):
     assert _os.path.isdir(_os.path.join(out, "day=2024-01-02"))
 
 
-def test_row_level_malformed_quarantine(spark, tmp_path):
-    """PERMISSIVE parse + row-level quarantine: two poison lines in a
-    four-line file divert to quarantine/batch_0 WITH their raw text
-    (replayable), while the two clean rows reach the sink — one bad
-    row no longer dead-letters its whole batch. The stream finishes
-    normally."""
-    inbox = str(tmp_path / "inbox")
-    out = str(tmp_path / "out")
-    quarantine = str(tmp_path / "quarantine")
-    os.makedirs(inbox, exist_ok=True)
-    good = _rows(0, 2)
-    with open(os.path.join(inbox, "a.json"), "w") as f:
-        f.write(json.dumps(good[0]) + "\n")
-        f.write('{"event_id": 7, "ts": "2024-01-01T00:07:00.000Z", "user_id"\n')
-        f.write(json.dumps(good[1]) + "\n")
-        f.write("not json at all\n")
-
-    def process(batch_df, batch_id):
-        clean = file_ingest.quarantine_malformed(batch_df, quarantine, batch_id)
-        clean.write.mode("append").parquet(out)
-
-    stream = file_ingest.file_stream(
-        spark, inbox, file_ingest.with_corrupt_capture(EVENTS_SCHEMA)
-    )
-    file_ingest.run_ingestion(
-        stream, process, str(tmp_path / "ckpt")
-    ).awaitTermination(60)
-
-    clean = spark.read.parquet(out)
-    assert sorted(r["event_id"] for r in clean.collect()) == [0, 1]
-    assert "_corrupt_record" not in clean.columns
-    quarantined = spark.read.parquet(os.path.join(quarantine, "batch_0"))
-    raws = [r["_corrupt_record"] for r in quarantined.collect()]
-    assert len(raws) == 2
-    assert any("not json at all" in r for r in raws)
-
-
 def test_progress_listener_logs_metrics_as_queryable_table(spark, tmp_path):
     """The ops surface: a session-attached listener persists every
     micro-batch's StreamingQueryProgress as JSON lines that read back
@@ -1078,7 +1049,7 @@ def test_progress_listener_logs_metrics_as_queryable_table(spark, tmp_path):
     listener = attach_progress_log(spark, log_dir)
     try:
         stream = file_ingest.file_stream(spark, inbox, EVENTS_SCHEMA)
-        agg = sw.tumbling_agg(sw.with_watermark(stream), duration="10 minutes")
+        agg = sw.tumbling_agg(stream.withWatermark("ts", "10 minutes"), duration="10 minutes")
         q = (
             agg.writeStream.format("memory")
             .queryName("progress_log_test")

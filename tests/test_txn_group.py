@@ -151,14 +151,11 @@ def grp_count(grp):
 @pytest.mark.slow
 def test_ingest_batch_txn_matches_plain_path_and_is_atomic(spark, tmp_path):
     """The whole reference ingest (4 dim merges + 2 fact appends +
-    the price SCD) as ONE group commit, equal to the 7-commit plain
+    the price SCD) run on one group transaction is ONE commit, equal to the 7-commit plain
     path table for table — and all-or-nothing under a crash."""
     from datetime import date
 
-    from pythondataingestionprocess_spark.pipeline.ingest import (
-        ingest_batch,
-        ingest_batch_txn,
-    )
+    from pythondataingestionprocess_spark.pipeline.ingest import ingest_batch
     from pythondataingestionprocess_spark.pipeline.store import (
         SCHEMAS,
         ParquetTableStore,
@@ -184,7 +181,8 @@ def test_ingest_batch_txn_matches_plain_path_and_is_atomic(spark, tmp_path):
     ingest_batch(compras, precios, plain, current_date=D)
 
     grp = TableGroup(spark, str(tmp_path / "grp"), schemas=SCHEMAS)
-    ingest_batch_txn(compras, precios, grp, current_date=D)
+    with grp.transaction() as txn:
+        ingest_batch(compras, precios, txn, current_date=D)
     assert grp.current_snapshot() == 1  # seven tables, ONE commit
     for t in ("payment_type", "store", "provider", "product",
               "purchase", "operation", "price"):
@@ -202,8 +200,8 @@ def test_ingest_batch_txn_matches_plain_path_and_is_atomic(spark, tmp_path):
         pass
     assert grp.current_snapshot() == 1
     # a second real batch lands as exactly one more commit
-    ingest_batch_txn(compras2, make_precios(spark, []), grp,
-                     current_date=date(2024, 6, 2))
+    with grp.transaction() as txn:
+        ingest_batch(compras2, make_precios(spark, []), txn, current_date=date(2024, 6, 2))
     assert grp.current_snapshot() == 2
     assert grp.read("purchase").count() == plain.read("purchase").count() + 1
 

@@ -454,20 +454,19 @@ def test_wet_corpus_build_composition(spark, tmp_path):
         )
     )
     from pythondataingestionprocess_spark.functions import text as tx
-    from pythondataingestionprocess_spark.operators.dedup import exact_dedup
+    from pythondataingestionprocess_spark.operators.dedup import fingerprint_dedup
     from pythondataingestionprocess_spark.operators.packing import shard_by_offset
 
     docs = wl.wet_to_documents(wl.read_warc(spark, str(d)))
     assert docs.count() == 4
-    fp = docs.withColumn("fp", F.md5(F.lower(F.trim("text"))))
-    survivors = exact_dedup(fp, ["fp"], "doc_id").join(
-        fp.select("doc_id", "source", "text"), "doc_id"
-    )
+    survivors = fingerprint_dedup(docs, "doc_id", "text").select(
+        F.col("keep_id").alias("doc_id")
+    ).join(docs.select("doc_id", "source", "text"), "doc_id")
     assert survivors.count() == 3  # the cross-file duplicate collapsed
     # the winner is deterministic: min doc_id of the duplicate pair
     dup_ids = sorted(
         r["doc_id"]
-        for r in fp.filter(F.col("text") == dup.decode()).collect()
+        for r in docs.filter(F.col("text") == dup.decode()).collect()
     )
     kept_ids = {r["doc_id"] for r in survivors.collect()}
     assert dup_ids[0] in kept_ids and dup_ids[1] not in kept_ids
