@@ -99,6 +99,11 @@ class TableGroup:
     def current_snapshot(self) -> int | None:
         return self._log.head()
 
+    def committed(self, txn: tuple[str, int] | None) -> bool:
+        """Whether ``txn`` (a :func:`stream_txn` key) is in the log; an
+        unkeyed write (None) never is."""
+        return txn is not None and txn in self._log.committed_txns()
+
     def read(self, name: str, snapshot_id: int | None = None) -> DataFrame:
         sid = self._log.snapshot(snapshot_id)
         df = None if sid is None else self._log.frame(name, sid)

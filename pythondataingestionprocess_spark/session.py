@@ -28,8 +28,9 @@ AppCDS archive (JEP 350) of those classes instead:
   where the key hashes the JDK (``java.home`` and its ``release``
   file, which names the version), every jar under
   ``$SPARK_HOME/jars`` (name, size, mtime), the other classpath
-  sources the launcher reads, and the driver heap setting (it fixes
-  the compressed-pointer mode an archive is tied to).
+  sources the launcher reads (the trainer launches with the same
+  ``spark.driver.extraClassPath``), and the driver heap setting (it
+  fixes the compressed-pointer mode an archive is tied to).
 - *Classpath.* JDK 17 dumps no archive while a non-empty directory is
   on the classpath, and the launcher puts the Spark conf dir there.
   So the JVM is launched with ``SPARK_CONF_DIR`` pointing at the
@@ -232,7 +233,8 @@ def _driver_archive(conf: dict[str, str]) -> tuple[str, str] | None:
     try:
         os.makedirs(empty_conf_dir, exist_ok=True)
         if not os.path.exists(f"{base}.jsa"):
-            _train_archive(base, empty_conf_dir, conf["spark.driver.memory"])
+            _train_archive(base, empty_conf_dir, conf["spark.driver.memory"],
+                           conf.get("spark.driver.extraClassPath", ""))
         # JDK 17 dies with SIGBUS on a truncated archive instead of
         # falling back, so a launch maps only the size it was validated at
         with open(f"{base}.size") as f:
@@ -242,7 +244,7 @@ def _driver_archive(conf: dict[str, str]) -> tuple[str, str] | None:
     return (empty_conf_dir, f"{base}.jsa") if intact else None
 
 
-def _train_archive(base: str, empty_conf_dir: str, heap: str) -> None:
+def _train_archive(base: str, empty_conf_dir: str, heap: str, class_path: str) -> None:
     """Build and validate ``<base>.jsa`` (its size in ``<base>.size``)
     in one bounded child process, or leave ``<base>.failed``. Returns
     at once if either exists or another process holds ``<base>.lock``."""
@@ -266,7 +268,7 @@ def _train_archive(base: str, empty_conf_dir: str, heap: str) -> None:
             # its own process group: whatever it leaves running (its JVM
             # after a failure or timeout) is killed with it
             proc = subprocess.Popen(
-                [sys.executable, "-c", code, tmp, heap], env=env, stdin=subprocess.DEVNULL,
+                [sys.executable, "-c", code, tmp, heap, class_path], env=env, stdin=subprocess.DEVNULL,
                 stdout=log, stderr=subprocess.STDOUT, start_new_session=True,
             )
             try:
@@ -288,13 +290,13 @@ def _train_archive(base: str, empty_conf_dir: str, heap: str) -> None:
 
 
 def _train() -> None:
-    """Trainer child (``argv``: dump path, driver heap): exercise the
-    classes a typical session loads, let the JVM dump them, and exit 0
-    only if the dump validates (checksums and classpath) against the
-    launch it was made for."""
+    """Trainer child (``argv``: dump path, the launch's driver heap and
+    extra classpath): exercise the classes a typical session loads, let
+    the JVM dump them, and exit 0 only if the dump validates (checksums
+    and classpath) against the launch it was made for."""
     from pyspark.sql import functions as F
 
-    dump, heap = sys.argv[1:3]
+    dump, heap, extra_class_path = sys.argv[1:4]
     conf = {
         "spark.driver.memory": heap,
         "spark.ui.enabled": "false",
@@ -303,6 +305,8 @@ def _train() -> None:
             f"-XX:ArchiveClassesAtExit={dump} -XX:+VerifySharedSpaces"
         ),
     }
+    if extra_class_path:
+        conf["spark.driver.extraClassPath"] = extra_class_path
     spark = _builder("spark-graft-class-data", conf).getOrCreate()
     jvm = spark.sparkContext._gateway.proc
     props = spark._jvm.System

@@ -27,16 +27,15 @@ At 100 TB both tables live partitioned/bucketed by their join keys in
 a metastore (bucket the ``buckets`` table BY (band, band_hash) and the
 candidate join is co-located — zero corpus shuffle per batch).
 
-Failure semantics: Structured Streaming delivers a ``foreachBatch``
-batch at least once, and a replay re-runs the whole batch function.
-A micro-batch's store write is ONE group commit keyed by
-``(app_id, batch_id)``: both tables land together or not at all, and
-the replay of a committed batch commits nothing. Pair output lands in
-a ``batch_id=N`` subdir written with ``overwrite``, so a replay
-replaces its own output. A screen reads both tables at one snapshot;
-the incremental operator never makes a corpus row whose id is in the
-batch a candidate, so a replay after the commit does not screen the
-batch against itself.
+Exactly-once, the one rule of every store-backed ``foreachBatch``
+sink (here, ``embedding_ingest``, ``dsir_ingest``, ``table_sink``): a
+batch's store write is ONE commit keyed by ``stream_txn(app,
+batch_df, batch_id)`` (the streaming query's id and the batch id),
+and a batch whose key is already in the log returns before any work.
+Its ``batch_id=N`` output is written before the commit, so a
+committed replay has nothing left to do; another query into the
+store (a second landing dir, a restart from a lost checkpoint)
+commits under its own key and screens against every committed row.
 """
 
 from __future__ import annotations
@@ -51,8 +50,7 @@ from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup, stre
 
 # the one signature scheme of the store, its probes and its appends
 _LSH = dict(shingle_n=3, num_hashes=64, bands=16, seed=42)
-# the app ids of the stores' exactly-once commits (stream_txn adds the
-# streaming query's id)
+# the app ids of the stores' commit keys (stream_txn adds the query id)
 _APP_ID = "dedup_batch_fn"
 _BLOCK_APP_ID = "block_dedup_batch_fn"
 
@@ -169,8 +167,8 @@ def dedup_batch_fn(
     threshold: float = 0.5,
     bucket_cap: int = 1000,
 ):
-    """foreachBatch function factory: screen → write pairs (idempotent
-    per-batch subdir) → commit signatures once per batch id. Wire it
+    """foreachBatch function factory: screen → write pairs (per-batch
+    subdir) → commit signatures (module docstring: exactly-once). Wire it
     up with file_ingest.file_stream + run_ingestion for the full
     drop-dir → dedup-screen → store pipeline. ``bucket_cap`` tunes the per-bucket
     cross-candidate bound (tighter for boilerplate-skewed corpora,
@@ -181,6 +179,9 @@ def dedup_batch_fn(
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        if TableGroup(spark, store_dir).committed(
+                stream_txn(_APP_ID, batch_df, batch_id)):
+            return
         batch_df = batch_df.localCheckpoint(eager=True)  # read the source once
         # the tokenize+shingle+minhash stage is the batch's dominant
         # CPU: compute its two products ONCE and thread them through
@@ -242,7 +243,6 @@ def block_screen_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     block: int = _BLOCK_WORDS,
-    batch_id: int | None = None,
     blocks_df: DataFrame | None = None,
 ) -> DataFrame:
     """Streaming face of ``operators.dedup.block_dedup_retention``:
@@ -260,11 +260,6 @@ def block_screen_batch(
     ``blocks_df``: pass a pre-carved (ideally checkpointed) frame from
     ``_batch_blocks`` to avoid re-running the carve; the foreachBatch
     factory below carves ONCE per batch for both screen and append.
-
-    Retry-proof like ``screen_batch``: pass ``batch_id`` and the
-    store read EXCLUDES the rows whose ``ingest_batch`` column is
-    ``batch_id``, so the replay of a batch whose store commit landed
-    does not screen the batch against its own blocks.
 
     Scale: the store is NEVER shuffled (the minhash screen's
     semi-prune discipline): a naive batch-anti-store equi-join would
@@ -290,8 +285,6 @@ def block_screen_batch(
     sid = group.current_snapshot()
     if sid is not None:
         store = group.read("blocks", sid)
-        if batch_id is not None:
-            store = store.filter(~F.col("ingest_batch").eqNullSafe(batch_id))
         batch_hashes = blocks.select("block_hash").distinct()
         matched = (
             store.join(F.broadcast(batch_hashes), "block_hash", "left_semi")
@@ -325,8 +318,7 @@ def append_blocks_to_store(
     batch_id: int | None = None,
     blocks_df: DataFrame | None = None,
 ) -> None:
-    """Append this batch's DISTINCT block hashes, tagged with
-    ``ingest_batch`` (NULL without ``batch_id``), to the store. Same
+    """Append this batch's DISTINCT block hashes to the store. Same
     exactly-once contract as ``append_to_store``. ``blocks_df``: reuse
     a pre-carved frame (see block_screen_batch)."""
     blocks = (
@@ -334,8 +326,7 @@ def append_blocks_to_store(
         if blocks_df is not None
         else _batch_blocks(batch_df, id_col, text_col, block)
     )
-    hashes = blocks.select("block_hash").distinct().withColumn(
-        "ingest_batch", F.lit(batch_id).cast("long"))
+    hashes = blocks.select("block_hash").distinct()
     store = TableGroup(batch_df.sparkSession, store_dir)
     with store.transaction(stream_txn(_BLOCK_APP_ID, batch_df, batch_id)) as t:
         t.append("blocks", hashes)
@@ -349,21 +340,24 @@ def block_dedup_batch_fn(
     block: int = _BLOCK_WORDS,
 ):
     """foreachBatch factory: screen blocks → write per-doc retention
-    (idempotent per-batch subdir) → commit the batch's block hashes
-    once per batch id. Several queries may feed one store (each
+    (per-batch subdir) → commit the batch's block hashes (module
+    docstring: exactly-once). Several queries may feed one store (each
     commits under its own query id), but each needs its own
     ``retention_out_dir``: the ``batch_id=N`` subdirs of two queries
     would overwrite each other."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        if TableGroup(spark, store_dir).committed(
+                stream_txn(_BLOCK_APP_ID, batch_df, batch_id)):
+            return
         # carve ONCE per batch; screen (3 subtrees) and append share it
         blocks = _batch_blocks(batch_df, id_col, text_col, block).localCheckpoint(
             eager=True
         )
         retention = block_screen_batch(
             spark, batch_df, store_dir, id_col, text_col, block,
-            batch_id=batch_id, blocks_df=blocks,
+            blocks_df=blocks,
         )
         retention.write.mode("overwrite").parquet(
             os.path.join(retention_out_dir, f"batch_id={batch_id}")
@@ -382,8 +376,7 @@ def block_dedup_batch_fn(
 # buckets/shingles, block: blocks, embedding: vec_buckets/vectors).
 # Rows are value-identical across replays and backfills (a given id
 # always carries the same signature/payload), so full-row DISTINCT is
-# the compaction dedup; a block hash seen by several batches keeps its
-# FIRST ``ingest_batch``, which is all a replay's exclusion needs.
+# the compaction dedup.
 _STORE_TABLES = ("buckets", "shingles", "blocks", "vec_buckets", "vectors")
 
 
@@ -407,12 +400,6 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict[str, tuple[int, i
         for table in tables:
             df = txn.read(table)
             before[table] = len(df.inputFiles())
-            if "ingest_batch" in df.columns:
-                keys = [c for c in df.columns if c != "ingest_batch"]
-                df = df.groupBy(*keys).agg(
-                    F.min("ingest_batch").alias("ingest_batch"))
-            else:
-                df = df.distinct()
-            txn.overwrite(table, df.coalesce(max(1, before[table] // 64)))
+            txn.overwrite(table, df.distinct().coalesce(max(1, before[table] // 64)))
     store.vacuum(keep_last=1)
     return {t: (before[t], len(store.read(t).inputFiles())) for t in tables}

@@ -10,26 +10,26 @@ rooted at ``store_dir``, over two tables:
 - ``target`` (bucket, c) — the target corpus bucket counts, written
   ONCE at bootstrap (``init_target_state``) from the curated slice;
   m rows, never touched again.
-- ``raw`` (bucket, c, ingest_batch) — one mergeable count state per
-  ingested batch (operators/dsir.bucket_counts — an integer monoid,
-  so the fold over batches is exact, no float-order caveat); born
-  empty at bootstrap.
+- ``raw`` (bucket, c) — one mergeable count state per ingested batch
+  (operators/dsir.bucket_counts — an integer monoid, so the fold over
+  batches is exact, no float-order caveat); born empty at bootstrap.
 
 Per micro-batch (``dsir_batch_fn``):
 
 1. featurize the batch (map-side);
-2. read the raw states of all PRIOR batches at the same snapshot as
-   the target (``ingest_batch != N`` — the replay of a committed
-   batch must not count itself twice), fold them with this batch's
-   counts → the raw distribution over everything seen so far
-   INCLUDING this batch (scores converge to the full-corpus DSIR
-   weights as the stream drains);
+2. read the raw states of every committed batch at the same snapshot
+   as the target and fold them with this batch's counts → the raw
+   distribution over everything seen so far INCLUDING this batch
+   (scores converge to the full-corpus DSIR weights as the stream
+   drains);
 3. score the batch (the m log-ratios collapse to a literal array —
    zero-shuffle scoring, m-row driver state, the method's contract);
-4. write ``(id, n_feats, logw, selected)`` to
-   ``scores/batch_id=N`` with overwrite (idempotent on replay), and
-5. commit this batch's count state to ``raw``, keyed by
-   ``(app_id, N)`` so a replay commits nothing.
+4. write ``(id, n_feats, logw, selected)`` to ``scores/batch_id=N``
+   with overwrite, and
+5. commit this batch's count state to ``raw``.
+
+Exactly-once is ``dedup_ingest``'s one rule (its module docstring), so
+a replay never counts a batch twice.
 
 At 100 TB the raw state is m rows PER BATCH (kilobytes) — compaction
 is a trivial re-sum; the documents themselves never ride the state.
@@ -48,10 +48,6 @@ from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup, stre
 _APP_ID = "dsir_batch_fn"
 
 
-def _raw_rows(counts: DataFrame, batch_id: int | None) -> DataFrame:
-    return counts.withColumn("ingest_batch", F.lit(batch_id).cast("long"))
-
-
 def init_target_state(
     target_docs: DataFrame,
     store_dir: str,
@@ -64,7 +60,7 @@ def init_target_state(
     counts = dsir.bucket_counts(dsir.featurize(target_docs, id_col, text_col, m=m))
     with TableGroup(target_docs.sparkSession, store_dir).transaction() as t:
         t.overwrite("target", counts)
-        t.overwrite("raw", _raw_rows(counts.limit(0), None))
+        t.overwrite("raw", counts.limit(0))
 
 
 def score_batch(
@@ -74,7 +70,6 @@ def score_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     m: int = 1024,
-    batch_id: int = 0,
     threshold: float = 0.0,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns ``(scores, batch_counts)``: per-doc
@@ -89,12 +84,7 @@ def score_batch(
         eager=True
     )
     batch_counts = dsir.bucket_counts(bucketed)
-    prior = (
-        store.read("raw", sid)
-        .filter(F.col("ingest_batch") != batch_id)
-        .select("bucket", "c")
-    )
-    raw_counts = dsir.merge_bucket_counts(prior, batch_counts)
+    raw_counts = dsir.merge_bucket_counts(store.read("raw", sid), batch_counts)
     ratio = dsir.log_ratio_vector(
         dsir.log_dist_from_counts(store.read("target", sid), m=m),
         dsir.log_dist_from_counts(raw_counts, m=m),
@@ -114,8 +104,8 @@ def dsir_batch_fn(
     m: int = 1024,
     threshold: float = 0.0,
 ):
-    """foreachBatch factory: score → write scores (idempotent per-batch
-    subdir) → commit this batch's count state once per batch id. Wire
+    """foreachBatch factory: score → write scores (per-batch subdir) →
+    commit this batch's count state (module docstring: exactly-once). Wire
     it with file_ingest.file_stream + run_ingestion, after
     ``init_target_state`` has been run once against the curated target
     corpus. Several queries may feed one store (each commits under its
@@ -124,16 +114,19 @@ def dsir_batch_fn(
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        store = TableGroup(spark, store_dir)
+        txn = stream_txn(_APP_ID, batch_df, batch_id)
+        if store.committed(txn):
+            return
         batch_df = batch_df.localCheckpoint(eager=True)  # read the source once
         scores, batch_counts = score_batch(
             spark, batch_df, store_dir, id_col, text_col,
-            m=m, batch_id=batch_id, threshold=threshold,
+            m=m, threshold=threshold,
         )
         scores.write.mode("overwrite").parquet(
             os.path.join(scores_out_dir, f"batch_id={batch_id}")
         )
-        store = TableGroup(spark, store_dir)
-        with store.transaction(stream_txn(_APP_ID, batch_df, batch_id)) as t:
-            t.append("raw", _raw_rows(batch_counts, batch_id))
+        with store.transaction(txn) as t:
+            t.append("raw", batch_counts)
 
     return fn

@@ -26,15 +26,12 @@ rooted at ``store_dir`` — one commit log over three tables:
 - ``meta``        (dim) — the store's embedding dimension, committed
   with the first batch.
 
-Scale/failure semantics are IDENTICAL to dedup_ingest (see its module
-docstring): bucket the ``vec_buckets`` table BY (table, bucket) on a
-metastore for a co-located candidate join; a micro-batch's store
-write is one commit keyed by ``(app_id, batch_id)``, so a replayed
-batch commits nothing; the incremental operator never makes a store
-row whose id is in the batch a candidate, so a replay after the
-commit cannot screen a batch against itself, and it prunes the
-store's vectors to candidate ids before the verify join, so payload
-movement is bounded by the batch, not the corpus.
+Scale semantics are dedup_ingest's: bucket the ``vec_buckets`` table
+BY (table, bucket) on a metastore for a co-located candidate join;
+the incremental operator prunes the store's vectors to candidate ids
+before the verify join, so payload movement is bounded by the batch,
+not the corpus. Exactly-once is dedup_ingest's one rule (its module
+docstring).
 """
 
 from __future__ import annotations
@@ -209,12 +206,9 @@ def embedding_dedup_batch_fn(
     dim: int = _DIM,
     bucket_cap: int = 1000,
 ):
-    """foreachBatch factory: screen → write pairs (idempotent
-    per-batch subdir) → commit bucket membership + vectors once per
-    batch id. The screen needs no batch-id store exclusion: the
-    incremental operator never pairs a batch id with its own store
-    copy, which covers the replay of a committed batch.
-    ``dim`` must match the embedding model; every batch is checked
+    """foreachBatch factory: screen → write pairs (per-batch subdir) →
+    commit bucket membership + vectors (module docstring:
+    exactly-once). ``dim`` must match the embedding model; every batch is checked
     up-front (min AND max vector size) with a clear error, and the
     store persists its dimension so a redeploy with a different model
     fails loudly instead of silently finding zero duplicates.
@@ -224,6 +218,9 @@ def embedding_dedup_batch_fn(
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        if TableGroup(spark, store_dir).committed(
+                stream_txn(_APP_ID, batch_df, batch_id)):
+            return
         batch_df = batch_df.localCheckpoint(eager=True)  # read the source once
         _check_dim(batch_df, vec_col, dim)
         # ONE hyperplane matmul per batch (the vector path's dominant

@@ -6,14 +6,15 @@ replays the last uncommitted micro-batch. The JDBC sink
 (streaming/jdbc_sink.py) closes that window with a separate ledger
 table plus replay-DELETE machinery because a JDBC database offers no
 way to couple "did batch N commit" with the data write. The snapshot
-store DOES: :meth:`SnapshotTableStore.append_once` records
-``(app_id, batch_id)`` inside the commit manifest itself, so the
-dedup probe and the data commit are ONE atomic claim — a replay of a
-committed batch is a no-op by construction, a crash between data
-write and claim leaves an invisible orphan (vacuumed later), and two
-concurrent replays of the same batch resolve to exactly one commit.
-This is the Delta ``txnAppId``/``txnVersion`` idiom rebuilt on the
-from-scratch log.
+store DOES: :meth:`SnapshotTableStore.append_once` records the
+batch's key inside the commit manifest itself, so the dedup probe and
+the data commit are ONE atomic claim — a crash between data write and
+claim leaves an invisible orphan (vacuumed later), and two concurrent
+replays of the same batch resolve to exactly one commit. The key and
+the early return are ``dedup_ingest``'s one rule (its module
+docstring): ``stream_txn`` keys by the streaming query, so a second
+query into the table, or a restart from a lost checkpoint, commits
+under its own key.
 
 Scale notes: one commit per micro-batch accretes small files — run
 :meth:`SnapshotTableStore.optimize` + ``vacuum`` periodically (the
@@ -31,18 +32,18 @@ from pyspark.sql import DataFrame
 from pythondataingestionprocess_spark.pipeline.snapshot_store import (
     SnapshotTableStore,
 )
+from pythondataingestionprocess_spark.pipeline.txn_group import stream_txn
+
+_APP_ID = "table_sink_batch_fn"
 
 
-def table_sink_batch_fn(store: SnapshotTableStore, table: str,
-                        app_id: str):
+def table_sink_batch_fn(store: SnapshotTableStore, table: str):
     """The foreachBatch function: pass to
-    ``writeStream.foreachBatch(...)``. ``app_id`` must be stable
-    across restarts of the SAME logical query (use the checkpoint
-    location's name) — batch ids restart from the checkpoint, and the
-    (app_id, batch_id) pair is the exactly-once key."""
+    ``writeStream.foreachBatch(...)``."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        store.append_once(table, batch_df, app_id, int(batch_id))
+        store.append_once(table, batch_df,
+                          *stream_txn(_APP_ID, batch_df, int(batch_id)))
 
     return fn
 
@@ -51,7 +52,6 @@ def run_stream_to_table(
     stream_df: DataFrame,
     store: SnapshotTableStore,
     table: str,
-    app_id: str,
     checkpoint_dir: str,
 ):
     """Wire a streaming frame into the snapshot table: exactly-once
@@ -59,7 +59,7 @@ def run_stream_to_table(
     (caller owns awaitTermination/stop)."""
     return (
         stream_df.writeStream
-        .foreachBatch(table_sink_batch_fn(store, table, app_id))
+        .foreachBatch(table_sink_batch_fn(store, table))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

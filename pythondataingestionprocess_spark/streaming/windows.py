@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from pythondataingestionprocess_spark.plans.registry import dec_sum
+from pythondataingestionprocess_spark.functions.aggregates import dec_sum
 
 
 def tumbling_agg(

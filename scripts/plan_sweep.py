@@ -4,8 +4,10 @@ Builds (never executes) the plan for all registry entries at the given
 sf dir and flags the scale killers:
 
 - ``CartesianProduct`` / ``BroadcastNestedLoopJoin`` — O(n*m) joins;
-  only sanctioned where every input is a metrics-sized aggregate
-  (the graph family's three 1-row frames).
+  only sanctioned where the build side is a scalar or declared-small
+  frame (``NESTED_LOOP_OK``). An allowance whose plan no longer holds
+  such a node is stale and fails the sweep too, so the list cannot
+  outlive the joins it excuses.
 - ``BatchEvalPython`` — row-at-a-time Python in the plan; never
   sanctioned in a registered query (Arrow ``ArrowEvalPython`` /
   ``FlatMapGroupsInPandas`` / ``MapInPandas`` are the sanctioned
@@ -33,26 +35,15 @@ from pythondataingestionprocess_spark.plans import REGISTRY  # noqa: E402
 from pythondataingestionprocess_spark.session import get_spark  # noqa: E402
 
 # Queries allowed to carry a nested-loop/cartesian node, reviewed by
-# hand. Two sanctioned patterns:
-#
-# (a) graph family — three 1-row metric frames crossJoined
-#     (operators/graph.py:69); every input is a global aggregate.
+# hand, each of which must carry one: scalar-broadcast joins, where
+# the build side is a 1-row (or contract-small) aggregate attached
+# under a non-equi or conditionless join, so the "nested loop" is one
+# broadcast row probed per input row, O(n): Q11's value-fraction
+# threshold, the idle-segment scalar gate, tf-idf's corpus N, BM25's
+# avgdl, winsorize's clamp scalars, and brute-kNN's declared-small
+# query side (its only non-scalar member — the small side is the
+# operator's documented contract).
 NESTED_LOOP_OK = {
-    "pagerank_nations",
-    "copurchase_triangles",
-    "part_clustering_coefficient",
-    "dedup_groups_cc",
-    "dedup_keep_one",
-}
-# (b) scalar-broadcast joins — the build side is a 1-row (or
-#     contract-small) aggregate attached under a non-equi or
-#     conditionless join, so the "nested loop" is one broadcast row
-#     probed per input row, O(n): Q11's value-fraction threshold,
-#     funnel/idle-segment scalar gates, tf-idf's corpus N, BM25's
-#     avgdl, winsorize's clamp scalars, and brute-kNN's
-#     declared-small query side (its only non-scalar member — the
-#     small side is the operator's documented contract).
-NESTED_LOOP_OK |= {
     "q11_important_parts",
     "idle_customers_segment",
     "embedding_knn_brute",
@@ -64,11 +55,11 @@ NESTED_LOOP_OK |= {
     "bm25_retrieval_topk",
     "events_distinct_users_sketch",  # the ALL certificate row: a
     # 1-row hll_union_agg frame crossJoined with the 1-row exact
-    # distinct-count frame (r16 certificate promotion) — both sides
-    # are global aggregates, the 1x1 scalar join class of (a)
+    # distinct-count frame — both sides are global aggregates
 }
 
-ANTI = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython")
+NESTED_LOOP = ("CartesianProduct", "BroadcastNestedLoopJoin")
+ANTI = (*NESTED_LOOP, "BatchEvalPython")
 VECTORIZED = ("ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas")
 
 # Queries allowed to run a no-partition window over NON-aggregate
@@ -132,13 +123,15 @@ def _global_windows_over_raw_input(df) -> list[str]:
 
 
 def sweep(spark, sf_dir: str) -> dict:
-    """Build every registered plan; return {unsanctioned, vectorized_
-    python, n_queries, wall_sec}. Shared by the CLI below and
-    tests/test_plan_sweep.py (r7 review: the sanctioning policy must
-    live once). The NESTED_LOOP_OK whitelist excuses ONLY nested-loop
-    nodes — a BatchEvalPython hit is never sanctioned, whitelist or
-    not."""
+    """Build every registered plan; return {unsanctioned,
+    stale_allowance, vectorized_python, global_window_raw, n_queries,
+    wall_sec}. Shared by the CLI below and tests/test_plan_sweep.py, so
+    the sanctioning policy lives once. The NESTED_LOOP_OK whitelist
+    excuses ONLY nested-loop nodes — a BatchEvalPython hit is never
+    sanctioned, whitelist or not — and an entry whose plan has no
+    nested-loop node is reported as stale."""
     bad: dict[str, list[str]] = {}
+    stale: list[str] = []
     vec: dict[str, list[str]] = {}
     gw: dict[str, list[str]] = {}
     t0 = time.monotonic()
@@ -147,7 +140,9 @@ def sweep(spark, sf_dir: str) -> dict:
         plan = df._jdf.queryExecution().executedPlan().toString()
         hits = [a for a in ANTI if a in plan]
         if name in NESTED_LOOP_OK:
-            hits = [h for h in hits if h == "BatchEvalPython"]
+            if not any(h in NESTED_LOOP for h in hits):
+                stale.append(name)
+            hits = [h for h in hits if h not in NESTED_LOOP]
         if hits:
             bad[name] = hits
         v = [a for a in VECTORIZED if a in plan]
@@ -161,6 +156,7 @@ def sweep(spark, sf_dir: str) -> dict:
         "n_queries": len(REGISTRY),
         "wall_sec": round(time.monotonic() - t0, 1),
         "unsanctioned": bad,
+        "stale_allowance": stale,
         "vectorized_python": vec,
         "global_window_raw": gw,
     }
@@ -172,7 +168,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     out = sweep(spark, sf_dir)
     print(json.dumps(out, indent=1))
-    return 1 if out["unsanctioned"] or out["global_window_raw"] else 0
+    return 1 if out["unsanctioned"] or out["stale_allowance"] or out["global_window_raw"] else 0
 
 
 if __name__ == "__main__":

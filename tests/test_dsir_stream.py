@@ -124,9 +124,7 @@ def test_first_batch_crash_leaves_recoverable_state(
 
 def test_selection_routes_target_like_docs(spark, store, tmp_path):
     batch = _docs(spark, [(1, A_DOC), (2, B_DOC), (3, A_DOC)])
-    scores, _ = di.score_batch(
-        spark, batch, store, m=M, batch_id=0, threshold=0.0
-    )
+    scores, _ = di.score_batch(spark, batch, store, m=M, threshold=0.0)
     got = {r["doc_id"]: r["selected"] for r in scores.collect()}
     assert got == {1: True, 2: False, 3: True}
 

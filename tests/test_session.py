@@ -1,7 +1,8 @@
 """``session``: the local parallelism, and driver class-data sharing
 in ``get_spark``. A cache miss trains an archive that validates against
 the launch classpath; a later launch maps it next to the caller's own
-java options; a stale or truncated archive, a conf dir with real
+java options (and, trained under it, the caller's extra classpath); a
+stale or truncated archive, a conf dir with real
 config, or an unusable cache dir each start an unchanged, unshared
 session. Every JVM check starts a fresh driver in a subprocess against
 a cache dir of its own."""
@@ -13,6 +14,7 @@ import os
 import shutil
 import subprocess
 import sys
+import zipfile
 
 import pytest
 
@@ -56,7 +58,7 @@ def _session(cache: str, extra_conf: dict | None = None, conf_dir: str | None = 
     )
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
     assert proc.returncode == 0 and lines, proc.stderr[-3000:]
-    return {**json.loads(lines[-1][len("RESULT "):]), "stderr": proc.stderr}
+    return {**json.loads(lines[-1][len("RESULT "):]), "stdout": proc.stdout, "stderr": proc.stderr}
 
 
 def _files(cache: str) -> dict[str, int]:
@@ -118,6 +120,27 @@ def test_later_session_maps_the_archive_beside_caller_java_options(trained, tmp_
     assert out["answer"] == ANSWER
     assert out["probe_prop"] == "1"
     assert f"-XX:SharedArchiveFile={_archive(cache)}" in out["jvm_args"]
+    assert _shared_classes(str(log)) > 1000
+    assert _files(cache) == before  # no second training
+
+
+def test_launch_with_extra_class_path_maps_the_archive_it_trained(tmp_path):
+    """The trainer launches with the caller's extra classpath, so the
+    archive keyed by it validates against the launch that maps it."""
+    cache, jar = str(tmp_path / "cache"), str(tmp_path / "extra.jar")
+    os.makedirs(cache)
+    with zipfile.ZipFile(jar, "w") as z:
+        z.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
+    conf = {"spark.driver.extraClassPath": jar}
+    assert _session(cache, conf)["answer"] == ANSWER  # trains the archive
+    before = _files(cache)
+    log = tmp_path / "class-load.log"
+    out = _session(cache, {
+        **conf, "spark.driver.extraJavaOptions": f"-Xlog:class+load=info:file={log}",
+    })
+    assert out["answer"] == ANSWER
+    assert jar in out["class_path"].split(os.pathsep)
+    assert "Unable to use shared archive" not in out["stdout"] + out["stderr"]
     assert _shared_classes(str(log)) > 1000
     assert _files(cache) == before  # no second training
 

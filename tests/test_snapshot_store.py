@@ -380,9 +380,9 @@ def test_optimize_compacts_without_changing_rows(spark, tmp_path):
 @pytest.mark.slow
 def test_streaming_foreachbatch_sink_exactly_once(spark, tmp_path):
     """End-to-end: a file-stream source through the foreachBatch table
-    sink — every micro-batch is one atomic commit with its (app_id,
-    batch_id) in the manifest, and a crash-replay of a committed batch
-    (foreachBatch's at-least-once window) is a no-op."""
+    sink — every micro-batch is one atomic commit with its key (the
+    query's id, the batch id) in the manifest, and a crash-replay of a
+    committed batch (foreachBatch's at-least-once window) is a no-op."""
     import time as _t
 
     from pythondataingestionprocess_spark.streaming.table_sink import (
@@ -400,22 +400,66 @@ def test_streaming_foreachbatch_sink_exactly_once(spark, tmp_path):
     stream = spark.readStream.schema(
         "id_store long, store_name string, store_url string, status boolean"
     ).option("maxFilesPerTrigger", 1).parquet(str(inbox))
-    q = run_stream_to_table(stream, st, "store", "ingest-q1",
-                            str(tmp_path / "ckpt"))
+    q = run_stream_to_table(stream, st, "store", str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     got = sorted(r["id_store"] for r in st.read("store").collect())
     assert got == [0, 1, 2]
     txns = st.committed_txns("store")
-    assert {a for a, _ in txns} == {"ingest-q1"} and len(txns) >= 1
+    assert {a for a, _ in txns} == {f"table_sink_batch_fn:{q.id}"} and len(txns) >= 1
     n_commits = st.current_snapshot("store")
 
     # simulate the crash-replay window: re-invoke the batch function
-    # with an already-committed batch id — must not duplicate
-    fn = table_sink_batch_fn(st, "store", "ingest-q1")
+    # under the same query id with an already-committed batch id —
+    # must not duplicate
+    fn = table_sink_batch_fn(st, "store")
     replay_bid = max(b for _, b in txns)
-    fn(_df(spark, [(99, "dup", "u", True)]), replay_bid)
+    spark.sparkContext.setLocalProperty("sql.streaming.queryId", q.id)
+    try:
+        fn(_df(spark, [(99, "dup", "u", True)]), replay_bid)
+    finally:
+        spark.sparkContext.setLocalProperty("sql.streaming.queryId", None)
     assert st.current_snapshot("store") == n_commits
     assert sorted(r["id_store"] for r in st.read("store").collect()) == [0, 1, 2]
+
+
+def test_two_queries_feed_one_table_sink_exactly_once(spark, tmp_path):
+    """The table sink keys each batch by its streaming query: two
+    queries with separate checkpoints both start at batch 0 and feed
+    one table, a restart from a checkpoint continues under that
+    query's key, and the replay of a committed batch (the checkpoint
+    lost its commit) adds nothing. Every row lands once."""
+    from pythondataingestionprocess_spark.streaming.table_sink import (
+        run_stream_to_table,
+    )
+
+    st = SnapshotTableStore(spark, str(tmp_path / "tables"))
+
+    def run(name: str, rows=()):
+        inbox, ckpt = tmp_path / name / "inbox", str(tmp_path / name / "ckpt")
+        if rows:
+            _df(spark, rows).coalesce(1).write.mode("append").parquet(str(inbox))
+        stream = spark.readStream.schema(
+            "id_store long, store_name string, store_url string, status boolean"
+        ).parquet(str(inbox))
+        q = run_stream_to_table(stream, st, "store", ckpt)
+        q.awaitTermination(120)
+        return q, ckpt
+
+    qa, ckpt_a = run("a", [(1, "a1", "u", True), (2, "a2", "u", True)])
+    qb, _ = run("b", [(11, "b1", "u", True)])
+    run("a", [(3, "a3", "u", True)])  # restart of query a: its batch 1
+    for name in ("1", ".1.crc"):  # a's batch 1 committed, its checkpoint did not
+        os.remove(os.path.join(ckpt_a, "commits", name))
+    replay, _ = run("a")
+    assert [p["batchId"] for p in replay.recentProgress] == [1]
+
+    assert sorted(r["id_store"] for r in st.read("store").collect()) == [1, 2, 3, 11]
+    assert st.committed_txns("store") == {
+        (f"table_sink_batch_fn:{qa.id}", 0),
+        (f"table_sink_batch_fn:{qb.id}", 0),
+        (f"table_sink_batch_fn:{qa.id}", 1),
+    }
+    assert st.snapshot_ids("store") == [1, 2, 3]
 
 
 @pytest.mark.slow
@@ -641,7 +685,7 @@ def test_full_lakehouse_lifecycle_composes(spark, tmp_path):
             "id_store long, store_name string, store_url string, "
             "status boolean").option("maxFilesPerTrigger", 1)
         .parquet(str(inbox)),
-        st, "store", "lifecycle-q", str(tmp_path / "ckpt"))
+        st, "store", str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     ingested_at = st.current_snapshot("store")
 

@@ -8,6 +8,8 @@ from __future__ import annotations
 import json
 import time
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -689,42 +691,162 @@ def test_dedup_ingest_retry_is_idempotent(spark, tmp_path):
     }
 
 
-def test_two_streaming_queries_feed_one_store_exactly_once(spark, tmp_path):
+_WORDS = (
+    "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
+    "kilo lima mike november oscar papa quebec romeo sierra tango"
+).split()
+_DSIR_M = 64
+
+
+def _factory(kind: str, spark, store: str, out: str):
+    """The foreachBatch function of one store-backed factory; a DSIR
+    store is bootstrapped on first use."""
+    from pythondataingestionprocess_spark.streaming import (
+        dedup_ingest,
+        dsir_ingest,
+        embedding_ingest,
+    )
+
+    if kind == "minhash":
+        return dedup_ingest.dedup_batch_fn(store, out)
+    if kind == "block":
+        return dedup_ingest.block_dedup_batch_fn(store, out)
+    if kind == "embedding":
+        return embedding_ingest.embedding_dedup_batch_fn(store, out, dim=4)
+    if TableGroup(spark, store).current_snapshot() is None:
+        target = spark.createDataFrame([(100, " ".join(_WORDS[:8]))], "doc_id long, text string")
+        dsir_ingest.init_target_state(target, store, m=_DSIR_M)
+    return dsir_ingest.dsir_batch_fn(store, out, m=_DSIR_M)
+
+
+def _files_and_mtimes(root: str) -> dict[str, int]:
+    return {
+        os.path.relpath(os.path.join(d, f), root): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, files in os.walk(root) for f in files
+    }
+
+
+@pytest.mark.parametrize("kind", ["minhash", "block", "dsir"])
+def test_two_streaming_queries_feed_one_store_exactly_once(spark, tmp_path, kind):
     """The store's exactly-once key is per streaming query: a second
     query into the same store (its own landing dir and checkpoint, so
     it starts again at batch 0) commits its batches instead of finding
-    batch 0 already recorded, screens against the first query's rows,
-    and a restart of the first query from its checkpoint keeps its own
-    key. Every doc of both queries lands once."""
-    from pythondataingestionprocess_spark.streaming.dedup_ingest import (
-        dedup_batch_fn,
-    )
+    batch 0 already recorded, its batch 0 screens (or scores) against
+    every row the first query committed, that query's batch 0
+    included, and a restart of the first query from its checkpoint
+    keeps its own key. Every doc of both queries lands once."""
+    from pythondataingestionprocess_spark.operators import dsir
+    from pythondataingestionprocess_spark.streaming import dedup_ingest
 
-    base = (
-        "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
-        "kilo lima mike november oscar papa quebec romeo sierra tango"
-    ).split()
     store = str(tmp_path / "store")
     schema = "doc_id long, text string"
+    fns = {name: _factory(kind, spark, store, str(tmp_path / name / "out"))
+           for name in ("a", "b")}
+    n_bootstrap = len(TableGroup(spark, store).snapshot_ids())
 
     def run(name: str, file: str, rows: list[tuple[int, str]]) -> None:
         inbox = str(tmp_path / name / "inbox")
         _write_json_batch(inbox, file, [{"doc_id": i, "text": t} for i, t in rows])
-        fn = dedup_batch_fn(store, str(tmp_path / name / "pairs"))
         stream = file_ingest.file_stream(spark, inbox, schema)
         file_ingest.run_ingestion(
-            stream, fn, str(tmp_path / name / "ckpt")
+            stream, fns[name], str(tmp_path / name / "ckpt")
         ).awaitTermination(120)
 
-    run("a", "1.json", [(1, " ".join(base)), (2, "unrelated words " * 8)])
-    run("b", "1.json", [(11, " ".join(["changedfirst"] + base[1:])), (12, "novel " * 9)])
-    b0 = spark.read.parquet(str(tmp_path / "b" / "pairs" / "batch_id=0")).collect()
-    assert {(r.id_a, r.id_b, r.kind) for r in b0} == {(11, 1, "cross")}
-    run("a", "2.json", [(3, "third doc here " * 4)])  # restart: query a's batch 1
+    a0 = [(1, " ".join(_WORDS)), (2, "unrelated words " * 8)]
+    b0 = [(11, " ".join(["changedfirst"] + _WORDS[1:])), (12, "novel " * 9)]
+    a1 = [(3, "third doc here " * 4)]
+    run("a", "1.json", a0)
+    run("b", "1.json", b0)
+    got = spark.read.parquet(str(tmp_path / "b" / "out" / "batch_id=0")).collect()
+    if kind == "minhash":
+        assert {(r.id_a, r.id_b, r.kind) for r in got} == {(11, 1, "cross")}
+    elif kind == "block":
+        # doc 11's second block is doc 1's, committed by query a's batch 0
+        assert {r.doc_id: (r.n_blocks, r.n_kept) for r in got} == {11: (2, 1), 12: (1, 1)}
+    else:
+        # b's batch 0 is scored against the target vs a's batch 0 + itself
+        docs = spark.createDataFrame(a0 + b0, schema)
+        ratio = dsir.log_ratio_vector(
+            dsir.log_dist_from_counts(TableGroup(spark, store).read("target"), m=_DSIR_M),
+            dsir.bucket_log_dist(dsir.featurize(docs, m=_DSIR_M), m=_DSIR_M),
+            m=_DSIR_M,
+        )
+        want = dsir.dsir_logweights(
+            dsir.featurize(spark.createDataFrame(b0, schema), m=_DSIR_M), ratio)
+        assert {r.doc_id: (r.n_feats, r.logw) for r in got} == {
+            r.doc_id: (r.n_feats, r.logw) for r in want.collect()}
+    run("a", "2.json", a1)  # restart: query a's batch 1
 
-    ids = sorted(r.doc_id for r in TableGroup(spark, store).read("shingles").collect())
-    assert ids == [1, 2, 3, 11, 12]
-    assert len(TableGroup(spark, store).snapshot_ids()) == 3  # one commit per batch
+    batches = [spark.createDataFrame(rows, schema) for rows in (a0, b0, a1)]
+    group = TableGroup(spark, store)
+    if kind == "minhash":
+        ids = sorted(r.doc_id for r in group.read("shingles").collect())
+        assert ids == [1, 2, 3, 11, 12]
+    elif kind == "block":
+        per_batch = [
+            {bytes(r.block_hash) for r in dedup_ingest._batch_blocks(
+                b, "doc_id", "text", 10).select("block_hash").distinct().collect()}
+            for b in batches
+        ]
+        rows = [bytes(r.block_hash) for r in group.read("blocks").collect()]
+        assert sorted(rows) == sorted(h for hashes in per_batch for h in hashes)
+    else:
+        total = dsir.bucket_counts(dsir.featurize(
+            batches[0].unionAll(batches[1]).unionAll(batches[2]), m=_DSIR_M))
+        assert (group.read("raw").agg(F.sum("c")).first()[0]
+                == total.agg(F.sum("c")).first()[0])
+    assert len(group.snapshot_ids()) == n_bootstrap + 3  # one commit per batch
+
+
+@pytest.mark.parametrize("kind", ["minhash", "block", "embedding", "dsir"])
+def test_committed_batch_replay_returns_at_once(spark, tmp_path, kind):
+    """The replay of a batch whose key is already in the store's log
+    returns before it does any work: its output files (names and
+    mtimes), the store's files and the store's snapshot ids are all
+    unchanged, and the next batch still commits."""
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    fn = _factory(kind, spark, store, out)
+    if kind == "embedding":
+        batch = spark.createDataFrame(
+            [(1, [1.0, 0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0, 0.0])],
+            "vec_id long, embedding array<float>")
+        nxt = spark.createDataFrame([(3, [0.0, 1.0, 0.0, 0.0])],
+                                    "vec_id long, embedding array<float>")
+    else:
+        batch = spark.createDataFrame(
+            [(1, " ".join(_WORDS)), (2, " ".join(_WORDS[:-1] + ["changedlast"]))],
+            "doc_id long, text string")
+        nxt = spark.createDataFrame([(3, "third doc here " * 4)], "doc_id long, text string")
+    fn(batch, 0)
+    group = TableGroup(spark, store)
+    snapshots = group.snapshot_ids()
+    outputs, stored = _files_and_mtimes(out), _files_and_mtimes(store)
+    assert any(name.startswith("batch_id=0") for name in outputs)
+
+    fn(batch, 0)  # Structured Streaming's at-least-once redelivery
+    assert TableGroup(spark, store).snapshot_ids() == snapshots
+    assert _files_and_mtimes(out) == outputs
+    assert _files_and_mtimes(store) == stored
+
+    fn(nxt, 1)
+    assert len(TableGroup(spark, store).snapshot_ids()) == len(snapshots) + 1
+
+
+def test_streaming_ingest_modules_leave_the_query_registry_unloaded():
+    """The streaming layer imports no plan module: a fresh interpreter
+    that loads the file stream and the dedup sink has not imported
+    ``plans`` (its face modules and the round-evidence files it
+    parses at import)."""
+    code = (
+        "import sys\n"
+        "import pythondataingestionprocess_spark.streaming.file_ingest\n"
+        "import pythondataingestionprocess_spark.streaming.dedup_ingest\n"
+        "print('pythondataingestionprocess_spark.plans' in sys.modules)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "False"
 
 
 def test_rate_source_tumbling_window(spark, tmp_path):
@@ -1245,9 +1367,8 @@ def test_streaming_block_dedup_matches_batch_operator(spark, tmp_path):
     retention unioned across micro-batches must match
     block_dedup_retention on all docs at once. A same-batch duplicate
     block, a cross-batch duplicate, and a fresh doc are all exercised;
-    a manual RETRY of the last batch (after its store commit landed)
-    must reproduce identical retention — the ingest_batch exclusion
-    at work."""
+    a REPLAY of the last batch (its store commit landed, the
+    checkpoint's commit did not) must leave the retention unchanged."""
     from pythondataingestionprocess_spark.operators.dedup import (
         block_dedup_retention,
     )
@@ -1294,10 +1415,15 @@ def test_streaming_block_dedup_matches_batch_operator(spark, tmp_path):
     assert got[2] == (2, 1, len(b3))  # within-batch dup dropped b1
     assert got[3] == (2, 0, 0)        # fully screened by the store
 
-    # retry the last batch: its own batch-1 hashes are in the store,
-    # but the exclusion makes the re-run reproduce batch output
-    batch1 = full.filter(F.col("doc_id").isin(3, 4)).localCheckpoint()
-    fn(batch1, 1)
+    # crash after batch 1's foreachBatch, before the checkpoint's
+    # commit: the restarted query (same query id) replays batch 1,
+    # whose key is in the store, so the replay returns at once
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    stream = file_ingest.file_stream(spark, inbox, schema)
+    q = file_ingest.run_ingestion(stream, fn, ckpt)
+    q.awaitTermination(120)
+    assert [p["batchId"] for p in q.recentProgress] == [1]
     retry = {
         r["doc_id"]: (r["n_blocks"], r["n_kept"], r["kept_chars"])
         for r in spark.read.parquet(out).collect()
@@ -1418,8 +1544,9 @@ def test_streaming_embedding_dedup_matches_incremental_operator(spark, tmp_path)
     }
     assert incr == {(a, b) for a, b, k in got if k == "cross"}
 
-    # retry batch 1: its vectors are already in the store; the screen's
-    # own-id exclusion must keep the output identical
+    # batch 1 again from a direct call (outside the query, so under a
+    # key of its own): its vectors are already in the store, and the
+    # screen's own-id exclusion must keep the output identical
     batch1 = new.localCheckpoint()
     fn(batch1, 1)
     retry = {
