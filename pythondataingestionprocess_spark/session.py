@@ -19,6 +19,25 @@ local disk (block-cache reads) instead of heap, so dedup/session/
 funnel state scales with SSD, not memory. Engine compatibility is
 proven by tests/test_streaming.py::test_streaming_agg_on_rocksdb_state_store.
 
+Lean driver launch. The driver JVM starts from a cached view of
+``$SPARK_HOME``, ``${XDG_CACHE_HOME:-~/.cache}/spark-graft/home-<key>/``,
+instead of the install itself:
+
+- *Contents.* Symlinks to every top-level entry of the install except
+  ``jars/`` and ``conf/``; ``conf`` links to the empty conf dir below;
+  ``jars/`` links every jar except :data:`LEAN_EXCLUDED_JARS` (each
+  with its reason). The key hashes the install's path, its top-level
+  names, the exclusion list and every jar's name, size and mtime, so
+  an install change builds a new view beside the old.
+- *Build.* Into a temp dir renamed into place, so a concurrent builder
+  or a crash never leaves a partial view. Any error launches from the
+  plain install instead.
+- *Overlap.* PySpark imports ``pyspark.testing.utils``, and pandas
+  with it, on the first py4j call that carries an argument
+  (``NumpyArrayConverter.can_convert``, first reached in
+  ``SparkConf.__init__``). A launch starts that import on a daemon
+  thread, so it runs while the main thread waits for the JVM.
+
 Driver class-data sharing. Most of a fresh session's start is the
 driver JVM loading and verifying ~10k Spark/Netty/Janino classes. When
 :func:`get_spark` launches the process's driver JVM, it maps a dynamic
@@ -26,8 +45,9 @@ AppCDS archive (JEP 350) of those classes instead:
 
 - *Location and key.* ``${XDG_CACHE_HOME:-~/.cache}/spark-graft/<key>.jsa``,
   where the key hashes the JDK (``java.home`` and its ``release``
-  file, which names the version), every jar under
-  ``$SPARK_HOME/jars`` (name, size, mtime), the other classpath
+  file, which names the version), the launch's jars dir (the view's,
+  or the install's on a fallback) by path and by every jar in it
+  (name, size, mtime), the other classpath
   sources the launcher reads (the trainer launches with the same
   ``spark.driver.extraClassPath``), and the driver heap setting (it
   fixes the compressed-pointer mode an archive is tied to).
@@ -36,8 +56,10 @@ AppCDS archive (JEP 350) of those classes instead:
   So the JVM is launched with ``SPARK_CONF_DIR`` pointing at the
   empty ``spark-graft/conf/``, but only when the effective conf dir
   holds nothing Spark reads (every file a ``*.template``, as in a
-  stock install); the variable is restored once the session is up.
-  A conf dir with real files keeps the unchanged launch, unshared.
+  stock install). The same gate applies to the view, and both
+  ``SPARK_HOME`` and ``SPARK_CONF_DIR`` are restored once the session
+  is up. A conf dir with real files keeps the unchanged launch:
+  plain install, unshared.
 - *Flag.* ``-XX:SharedArchiveFile`` goes through
   ``spark.driver.defaultJavaOptions``, which the JVM takes together
   with any caller ``spark.driver.extraJavaOptions``.
@@ -55,8 +77,13 @@ AppCDS archive (JEP 350) of those classes instead:
   the JVM prints one ``[cds]`` warning and starts without sharing. A
   truncated one would crash JDK 17 (SIGBUS), so an archive whose size
   differs from its record is not passed at all. An unusable cache dir
-  or JDK starts unshared, unredirected. Nothing is pruned: a new key
-  (a JDK or Spark update) trains a new archive beside the old.
+  starts unshared from the plain install, unredirected. Nothing is
+  pruned: a new key (a JDK or Spark update) trains a new archive
+  beside the old.
+
+Driver heap. ``spark.driver.memory`` defaults to half the memory this
+process may use (the cgroup limit when one is set, else ``MemTotal``),
+between 1g and 16g; ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -70,12 +97,39 @@ import signal
 import subprocess
 import sys
 import tempfile
+import threading
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-# the trainer takes ~12-30 s; past this it is killed and marked failed
+# the trainer took 40-50 s on a 4-core host; past this it is killed and marked failed
 TRAIN_TIMEOUT_S = 300
+
+# Name prefixes of the jars the lean view leaves off the driver
+# classpath. No face, pipeline or test uses pyspark.ml, VectorUDT,
+# graphx or the image/libsvm sources they carry.
+LEAN_EXCLUDED_JARS = (
+    # its SparkSessionExtensionsProvider registers mllib's SQL functions
+    # in every session (~85% of the session build), and no conf turns
+    # it off
+    "spark-mllib_",
+    # mllib's local linear algebra, reached only through spark-mllib
+    "spark-mllib-local_",
+    # Scala numerics, reached only through mllib
+    "breeze_",
+    "breeze-macros_",
+    # the graph library; no Python API
+    "spark-graphx_",
+    # the JDBC/ODBC server; in a driver it only registers a
+    # history-server plugin
+    "spark-hive-thriftserver_",
+)
+
+# this process's cgroup memory limit: v2, then v1
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
 
 
 def default_parallelism() -> int:
@@ -136,34 +190,69 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session: :func:`sql_conf` plus the confs
     only a new SparkContext can take, then ``extra_conf``. A launch of
-    the driver JVM maps the class-data archive (module docstring)."""
+    the driver JVM starts from the lean view and maps the class-data
+    archive (module docstring)."""
     conf = {
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory(),
         "spark.ui.enabled": "false",
         **sql_conf(shuffle_partitions),
         **(extra_conf or {}),
     }
+    env: dict[str, str] = {}
     # a process launches its driver JVM once; later contexts reuse it
-    shared = _driver_archive(conf) if SparkContext._gateway is None else None
-    if shared is None:
+    if SparkContext._gateway is None:
+        launch = _driver_launch(conf)
+        if launch is not None:
+            env, archive = launch
+            if archive is not None:
+                conf["spark.driver.defaultJavaOptions"] = " ".join(
+                    filter(None, [f"-XX:SharedArchiveFile={archive}",
+                                  conf.get("spark.driver.defaultJavaOptions")])
+                )
+        threading.Thread(target=_import_numpy_bridge, daemon=True).start()
+    with _environ(env):
         spark = _builder(app_name, conf).getOrCreate()
-    else:
-        empty_conf_dir, archive = shared
-        conf["spark.driver.defaultJavaOptions"] = " ".join(
-            filter(None, [f"-XX:SharedArchiveFile={archive}",
-                          conf.get("spark.driver.defaultJavaOptions")])
-        )
-        saved = os.environ.get("SPARK_CONF_DIR")
-        os.environ["SPARK_CONF_DIR"] = empty_conf_dir
-        try:
-            spark = _builder(app_name, conf).getOrCreate()
-        finally:
-            if saved is None:
-                del os.environ["SPARK_CONF_DIR"]
-            else:
-                os.environ["SPARK_CONF_DIR"] = saved
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _driver_memory(
+    meminfo: str = "/proc/meminfo", cgroup_limits: tuple[str, ...] = _CGROUP_MEMORY_LIMITS
+) -> str:
+    """Half the memory this process may use, between 1g and 16g: the
+    smaller of ``MemTotal`` and a cgroup limit (``max``, or a v1 limit
+    above ``MemTotal``, means none)."""
+    limits = []
+    with contextlib.suppress(OSError, ValueError), open(meminfo) as f:
+        limits += [int(ln.split()[1]) * 1024 for ln in f if ln.startswith("MemTotal:")]
+    for path in cgroup_limits:
+        with contextlib.suppress(OSError, ValueError), open(path) as f:  # absent, or "max"
+            limits.append(int(f.read()))
+    mib = min(limits) // 2**21 if limits else 16384
+    return f"{max(1024, min(16384, mib))}m"
+
+
+def _import_numpy_bridge() -> None:
+    """Import what PySpark imports on its first py4j call with an
+    argument (module docstring, *Overlap*)."""
+    with contextlib.suppress(ImportError):
+        import pyspark.testing.utils  # noqa: F401
+
+
+@contextlib.contextmanager
+def _environ(values: dict[str, str]):
+    """Set ``values`` in ``os.environ`` for the block, then restore
+    each key as it was (unset when it was unset)."""
+    saved = {k: os.environ.get(k) for k in values}
+    os.environ.update(values)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
 
 
 # ---- driver class-data sharing ------------------------------------------------
@@ -182,21 +271,59 @@ def _holds_only_templates(conf_dir: str) -> bool:
         return False
 
 
+def _lean_home(spark_home: str, root: str) -> str | None:
+    """The lean view of ``spark_home`` under ``root`` (module
+    docstring), built on first use; None when it cannot be built."""
+    spark_home = os.path.abspath(spark_home)
+    try:
+        names = sorted(os.listdir(spark_home))
+        jars = sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name)
+        h = hashlib.sha256(f"{spark_home}\n{names}\n{LEAN_EXCLUDED_JARS}\n".encode())
+        for jar in jars:
+            st = jar.stat()
+            h.update(f"{jar.name}:{st.st_size}:{st.st_mtime_ns}\n".encode())
+        view = os.path.join(root, f"home-{h.hexdigest()[:24]}")
+        if os.path.isdir(view):
+            return view
+        tmp = f"{view}.{os.getpid()}.tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(os.path.join(tmp, "jars"))
+        os.symlink(os.path.join(os.pardir, "conf"), os.path.join(tmp, "conf"))
+        for name in names:
+            if name not in ("conf", "jars"):
+                os.symlink(os.path.join(spark_home, name), os.path.join(tmp, name))
+        for jar in jars:
+            if not jar.name.startswith(LEAN_EXCLUDED_JARS):
+                os.symlink(jar.path, os.path.join(tmp, "jars", jar.name))
+        try:
+            os.rename(tmp, view)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.isdir(view):  # else a concurrent builder won
+                raise
+        return view
+    except OSError:
+        return None
+
+
 def _archive_key(spark_home: str, conf: dict[str, str]) -> str | None:
-    """The hash that names the archive of this launch, or None when
-    the JDK cannot be found. Inputs as spark-class resolves them."""
+    """The hash that names the archive of a launch from ``spark_home``,
+    or None when the JDK cannot be found. Inputs as spark-class resolves
+    them."""
     java_home = os.environ.get("JAVA_HOME")
     if not java_home:
         java = shutil.which("java")
         if java is None:
             return None
         java_home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
-    h = hashlib.sha256()
+    # CDS checks the classpath strings, so the dir the launcher names
+    # the jars by is part of the key, not only what is in it
+    jars_dir = os.path.join(os.path.abspath(spark_home), "jars")
+    h = hashlib.sha256(f"{jars_dir}\n".encode())
     try:
         with open(os.path.join(java_home, "release"), "rb") as f:
             h.update(f.read())
-        jars = sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name)
-        for jar in jars:
+        for jar in sorted(os.scandir(jars_dir), key=lambda e: e.name):
             st = jar.stat()
             h.update(f"{jar.name}:{st.st_size}:{st.st_mtime_ns}\n".encode())
     except OSError:
@@ -211,12 +338,14 @@ def _archive_key(spark_home: str, conf: dict[str, str]) -> str | None:
     return h.hexdigest()[:24]
 
 
-def _driver_archive(conf: dict[str, str]) -> tuple[str, str] | None:
-    """(empty conf dir, archive path) for a driver JVM launched with
-    ``conf``, training the archive on a key miss; None when this
-    launch cannot share (real conf files, no JDK, unusable cache dir,
-    failed or concurrent training, an archive no longer its recorded
-    size)."""
+def _driver_launch(conf: dict[str, str]) -> tuple[dict[str, str], str | None] | None:
+    """The environment a new driver JVM launched with ``conf`` starts
+    under (``SPARK_HOME`` the lean view, or the install when the view
+    cannot be built; ``SPARK_CONF_DIR`` the empty conf dir) and the
+    archive it maps, trained on a key miss. None when the launch keeps
+    the caller's environment (real conf files, unusable cache dir); the
+    archive is None when it cannot share (no JDK, failed or concurrent
+    training, an archive no longer its recorded size)."""
     from pyspark.find_spark_home import _find_spark_home
 
     spark_home = _find_spark_home()
@@ -224,29 +353,35 @@ def _driver_archive(conf: dict[str, str]) -> tuple[str, str] | None:
         os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     ):
         return None
-    key = _archive_key(spark_home, conf)
-    if key is None:
-        return None
     root = _cache_dir()
     empty_conf_dir = os.path.join(root, "conf")
-    base = os.path.join(root, key)
     try:
         os.makedirs(empty_conf_dir, exist_ok=True)
+    except OSError:
+        return None
+    home = _lean_home(spark_home, root) or spark_home
+    env = {"SPARK_HOME": home, "SPARK_CONF_DIR": empty_conf_dir}
+    key = _archive_key(home, conf)
+    if key is None:
+        return env, None
+    base = os.path.join(root, key)
+    try:
         if not os.path.exists(f"{base}.jsa"):
-            _train_archive(base, empty_conf_dir, conf["spark.driver.memory"],
+            _train_archive(base, env, conf["spark.driver.memory"],
                            conf.get("spark.driver.extraClassPath", ""))
         # JDK 17 dies with SIGBUS on a truncated archive instead of
         # falling back, so a launch maps only the size it was validated at
         with open(f"{base}.size") as f:
             intact = int(f.read()) == os.path.getsize(f"{base}.jsa")
     except (OSError, ValueError):
-        return None
-    return (empty_conf_dir, f"{base}.jsa") if intact else None
+        return env, None
+    return env, (f"{base}.jsa" if intact else None)
 
 
-def _train_archive(base: str, empty_conf_dir: str, heap: str, class_path: str) -> None:
+def _train_archive(base: str, launch_env: dict[str, str], heap: str, class_path: str) -> None:
     """Build and validate ``<base>.jsa`` (its size in ``<base>.size``)
-    in one bounded child process, or leave ``<base>.failed``. Returns
+    in one bounded child process that launches under ``launch_env``,
+    or leave ``<base>.failed``. Returns
     at once if either exists or another process holds ``<base>.lock``."""
     archive, failed = f"{base}.jsa", f"{base}.failed"
     with open(f"{base}.lock", "w") as lock:
@@ -260,7 +395,7 @@ def _train_archive(base: str, empty_conf_dir: str, heap: str, class_path: str) -
         pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         env = {
             **os.environ,
-            "SPARK_CONF_DIR": empty_conf_dir,
+            **launch_env,
             "PYTHONPATH": os.pathsep.join(filter(None, [pkg_parent, os.environ.get("PYTHONPATH")])),
         }
         code = f"from {__package__}.session import _train; _train()"
