@@ -77,9 +77,13 @@ AppCDS archive (JEP 350) of those classes instead:
   the JVM prints one ``[cds]`` warning and starts without sharing. A
   truncated one would crash JDK 17 (SIGBUS), so an archive whose size
   differs from its record is not passed at all. An unusable cache dir
-  starts unshared from the plain install, unredirected. Nothing is
-  pruned: a new key (a JDK or Spark update) trains a new archive
-  beside the old.
+  starts unshared from the plain install, unredirected.
+- *Pruning.* A new key (a JDK or Spark update) trains a new archive
+  beside the old. Every launch that maps ``<key>.jsa`` touches
+  ``<key>.size``, and after a successful training the files of every
+  other key unused for :data:`PRUNE_AFTER_S` are deleted, unless
+  another process holds its lock. The ``home-*`` views stay: a running
+  JVM opens jars from its view lazily.
 
 Driver heap. ``spark.driver.memory`` defaults to half the memory this
 process may use (the cgroup limit when one is set, else ``MemTotal``),
@@ -98,12 +102,17 @@ import subprocess
 import sys
 import tempfile
 import threading
+import time
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # the trainer took 40-50 s on a 4-core host; past this it is killed and marked failed
 TRAIN_TIMEOUT_S = 300
+# an archive key no launch has used for this long is deleted after the next training
+PRUNE_AFTER_S = 14 * 24 * 3600
+# the files one archive key owns in the cache dir
+_KEY_FILES = (".jsa", ".size", ".log", ".failed", ".lock")
 
 # Name prefixes of the jars the lean view leaves off the driver
 # classpath. No face, pipeline or test uses pyspark.ml, VectorUDT,
@@ -375,7 +384,11 @@ def _driver_launch(conf: dict[str, str]) -> tuple[dict[str, str], str | None] | 
             intact = int(f.read()) == os.path.getsize(f"{base}.jsa")
     except (OSError, ValueError):
         return env, None
-    return env, (f"{base}.jsa" if intact else None)
+    if not intact:
+        return env, None
+    with contextlib.suppress(OSError):
+        os.utime(f"{base}.size")  # the key's last use, for _prune_keys
+    return env, f"{base}.jsa"
 
 
 def _train_archive(base: str, launch_env: dict[str, str], heap: str, class_path: str) -> None:
@@ -418,10 +431,35 @@ def _train_archive(base: str, launch_env: dict[str, str], heap: str, class_path:
             with open(f"{base}.size", "w") as f:
                 f.write(str(os.path.getsize(tmp)))
             os.replace(tmp, archive)
+            with contextlib.suppress(OSError):
+                _prune_keys(os.path.dirname(base), keep=os.path.basename(base))
         else:
             open(failed, "w").close()
             with contextlib.suppress(FileNotFoundError):
                 os.remove(tmp)
+
+
+def _prune_keys(root: str, keep: str) -> None:
+    """Delete the files of every archive key in ``root`` but ``keep``
+    whose newest file is older than :data:`PRUNE_AFTER_S`, skipping a
+    key whose lock another process holds."""
+    last_use: dict[str, float] = {}
+    with os.scandir(root) as entries:
+        for e in entries:
+            key, _, ext = e.name.partition(".")
+            if f".{ext}" in _KEY_FILES and key != keep and e.is_file(follow_symlinks=False):
+                last_use[key] = max(last_use.get(key, 0.0), e.stat().st_mtime)
+    cutoff = time.time() - PRUNE_AFTER_S
+    for key in (k for k, t in last_use.items() if t < cutoff):
+        base = os.path.join(root, key)
+        with open(f"{base}.lock", "a") as lock:
+            try:
+                fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                continue
+            for ext in _KEY_FILES:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(base + ext)
 
 
 def _train() -> None:

@@ -6,8 +6,9 @@ each workbook, move it to ``processed``/``errors`` — the reference's
 loop (import_files_to_postgre.py:283-296) and ``move_file``
 (utils_tools.py:199-231) with two fixes kept deliberately:
 
-- collision renaming appends a timestamp suffix; the reference's
-  implementation would raise ``AttributeError`` on that path
+- collision renaming appends a timestamp suffix, and a counter when
+  that name is taken too, so no archived file is overwritten; the
+  reference's implementation would raise ``AttributeError`` on that path
   (``datetime.datetime.now()`` on a ``from datetime import datetime``
   import, utils_tools.py:212 — latent bug); intent preserved, bug not.
 - moves retry with backoff (3 tries, like utils_tools.py:217-227).
@@ -30,13 +31,19 @@ def scan_directory(data_dir: str, suffix: str = ".xlsx") -> list[str]:
 
 
 def _collision_free(dest_dir: str, file_name: str) -> str:
-    """F20 intent: on name collision, suffix with a timestamp."""
+    """F20 intent: on name collision, suffix with a timestamp, then with
+    a counter, so a move never lands on an existing file (the stamp has
+    one-second resolution and a name can recur within that second)."""
     dest = os.path.join(dest_dir, file_name)
     if not os.path.exists(dest):
         return dest
     base, ext = os.path.splitext(file_name)
     stamp = datetime.now().strftime("%Y%m%d_%H%M%S")
-    return os.path.join(dest_dir, f"{base}_{stamp}{ext}")
+    dest, n = os.path.join(dest_dir, f"{base}_{stamp}{ext}"), 0
+    while os.path.exists(dest):
+        n += 1
+        dest = os.path.join(dest_dir, f"{base}_{stamp}_{n}{ext}")
+    return dest
 
 
 def move_file(
@@ -83,12 +90,11 @@ def ingest_directory(
     per-file fault isolation — one bad workbook dead-letters, the rest
     continue. ``process`` raises to signal failure.
 
-    Fault isolation covers the MOVE too (r13 review): the old shape
-    routed a successfully-INGESTED file to the dead-letter dir when
-    its archive move failed, and a failing dead-letter move aborted
-    the whole directory loop — both contradicting the one-bad-file
-    contract. A failed move now leaves the file in place, reported in
-    ``unmoved`` alongside its processing outcome."""
+    Fault isolation covers the MOVE too: a file's outcome is decided by
+    ``process`` alone, so an ingested file whose archive move fails is
+    never dead-lettered, and a failed move never stops the loop. The
+    file stays in place, reported in ``unmoved`` alongside its
+    processing outcome."""
     ok: list[str] = []
     bad: list[str] = []
     unmoved: list[str] = []

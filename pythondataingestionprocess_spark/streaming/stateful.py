@@ -1,14 +1,19 @@
-"""Custom stateful streaming operator (SURVEY.md §2.9 tail).
+"""Keyed-state streaming operators (SURVEY.md §2.9 tail), each the
+incremental twin of a batch surface, on ``applyInPandasWithState``:
 
-The reference's one genuinely stateful computation is the cross-row
-forward-fill (import_files_to_postgre.py:148-153) — in batch we do it
-with a window (operators/window-wave), but a long-lived stream needs
-explicit keyed state: ``applyInPandasWithState`` with one state slot
-per key holding the last seen non-null value / running counters.
+- :func:`locf_fill_stream` — the reference's cross-row forward-fill
+  (import_files_to_postgre.py:148-153), one last-value slot per key;
+- :func:`funnel_stream_watermarked` — view→purchase conversions across
+  micro-batches, with event-time lateness and expiry
+  (``events_funnel_watermark``);
+- :func:`decayed_feature_stream` — the exact EWMA recursion
+  (``events_decayed_feature``);
+- :func:`weighted_sample_stream` — A-ES top-k per source
+  (``corpus_weighted_sample``).
 
-This module implements a per-user running aggregate (count + sum +
-last-event-ts) as the canonical state demo; the same skeleton carries
-any per-key running state (LOCF, running dedup sets, rate limiting).
+Within a micro-batch each update sorts one key's rows on (ts, event_id)
+before it folds them, because Arrow hands a key's rows over in chunks
+with no cross-chunk order.
 """
 
 from __future__ import annotations
@@ -18,48 +23,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-RUNNING_SCHEMA = "user_id long, n_events long, sum_value double, last_ts timestamp"
-_STATE_SCHEMA = "n long, s double, last_ts timestamp"
-
-
-def _update_running(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    # last_ts is RUNNING state like n and s: without it in the state
-    # tuple, a batch of only LATE events would emit a last-event-ts
-    # that moves BACKWARD while the counters move forward, breaking
-    # the running-aggregate contract for latest-by-key consumers
-    n, s, last_ts = state.get if state.exists else (0, 0.0, None)
-    for pdf in pdfs:
-        if not len(pdf):
-            continue  # empty Arrow chunk: .max() would inject NaT
-        n += len(pdf)
-        s += float(pdf["value"].sum())
-        batch_max = pdf["ts"].max()
-        last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-    state.update((n, s, last_ts))
-    yield pd.DataFrame(
-        [{"user_id": user_id, "n_events": n, "sum_value": s, "last_ts": last_ts}]
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Per-user running totals with explicit keyed state. On a
-    streaming DataFrame each micro-batch emits the updated totals per
-    user seen in that batch; state never expires (NoTimeout) — a real
-    deployment at 100 TB keys state by a bounded-cardinality entity
-    and/or uses ProcessingTimeTimeout to shed idle keys."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_running,
-        outputStructType=RUNNING_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 # ---- streaming LOCF forward-fill (keyed state) ---------------------
@@ -173,39 +136,6 @@ def _funnel_update(key, pdfs, state):
     state.update((last_view,))
 
 
-def funnel_stream(events: DataFrame) -> DataFrame:
-    """Streaming view→purchase funnel (30-min conversion window) with
-    one timestamp of keyed state per user. The batch twins are the
-    registered funnel_three_step and events_funnel_watermark queries
-    (they subsume the narrower view→purchase semi-join with a
-    time-range residual); this operator is the incremental form for
-    unbounded streams, including conversions that straddle
-    micro-batch boundaries. State never expires — for unbounded key
-    spaces use :func:`funnel_stream_expiring`."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _funnel_update,
-        outputStructType=FUNNEL_SCHEMA,
-        stateStructType=_FUNNEL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _funnel_update_expiring(idle_expiry_ms: int):
-    def update(key, pdfs, state):
-        if state.hasTimedOut:
-            # key idle past expiry: drop its state; nothing to emit.
-            state.remove()
-            return
-        yield from _funnel_update(key, pdfs, state)
-        # _funnel_update left the latest view ts in state; arm (re-arm)
-        # the processing-time alarm — it resets on every batch that
-        # touches this key, so only genuinely idle keys expire.
-        state.setTimeoutDuration(idle_expiry_ms)
-
-    return update
-
-
 def _funnel_update_watermarked(window_ms: int):
     def update(key, pdfs, state):
         import pandas as pd  # noqa: F811 (executor-side import)
@@ -253,10 +183,13 @@ def funnel_stream_watermarked(
     delay: str = "10 minutes",
     window_ms: int = 30 * 60 * 1000,
 ) -> DataFrame:
-    """:func:`funnel_stream` with LATE-DATA discipline: an event-time
-    watermark (``delay`` behind the max observed ts) defines lateness,
-    and the update function drops rows older than it — a purchase that
-    arrives after the watermark passed its timestamp never converts.
+    """Streaming view→purchase funnel (30-min conversion window) with
+    one timestamp of keyed state per user, including conversions that
+    straddle micro-batch boundaries, and LATE-DATA discipline: an
+    event-time watermark (``delay`` behind the max observed ts)
+    defines lateness, and the update function drops rows older than
+    it — a purchase that arrives after the watermark passed its
+    timestamp never converts.
     (The drop must live in the function: Spark's watermark does NOT
     auto-filter input to arbitrary stateful operators, it only drives
     their timers.) State expires on an EVENT-TIME timer at last_view +
@@ -264,11 +197,10 @@ def funnel_stream_watermarked(
     purchase would be late by construction, so the slot is provably
     dead.
 
-    vs :func:`funnel_stream_expiring`: that variant bounds state by
-    PROCESSING-time idleness (wall clock, replay-fragile); this one is
-    deterministic w.r.t. the data — replaying the same stream gives
-    the same drops and the same expiries, which is what an audited
-    100 TB backfill needs. Batch face (oracle-checked):
+    Both the drops and the expiries follow event time, not the wall
+    clock, so replaying the same stream gives the same drops and the
+    same expiries, which is what an audited backfill needs. Batch face
+    (oracle-checked):
     plans/streaming_queries.py::events_funnel_watermark."""
     return (
         events.withWatermark("ts", delay)
@@ -280,27 +212,6 @@ def funnel_stream_watermarked(
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-    )
-
-
-def funnel_stream_expiring(
-    events: DataFrame, idle_expiry_ms: int = 60 * 60 * 1000
-) -> DataFrame:
-    """:func:`funnel_stream` for unbounded key spaces: identical
-    conversion semantics, but a user idle (no events) for
-    ``idle_expiry_ms`` of processing time has their one-timestamp state
-    slot dropped — the state store stays bounded by the ACTIVE key set,
-    not the all-time key set. The 100 TB shape: billions of cumulative
-    users but only millions active per hour means state shrinks ~1000×.
-    An expired user's later purchase simply doesn't convert (their
-    anchoring view is older than the expiry, which the caller sets ≥
-    the conversion window, so nothing eligible is ever lost)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _funnel_update_expiring(idle_expiry_ms),
-        outputStructType=FUNNEL_SCHEMA,
-        stateStructType=_FUNNEL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 

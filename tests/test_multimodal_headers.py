@@ -2,11 +2,13 @@
 library, failing loudly on junk (the quarantine discipline), the
 sample-table walk to the first video frame, and first-frame stats for
 uncompressed video — wired through real_decode and the Arrow decode
-plumbing."""
+plumbing; and the per-row quarantine of every media family real_decode
+does not decode."""
 
 from __future__ import annotations
 
 import struct
+import zlib
 
 import pytest
 
@@ -324,3 +326,135 @@ def test_mp4_oversized_sample_count_quarantines_per_row(spark):
     assert rows[1].decode_status == "quarantine:ValueError"
     assert rows[2].decode_status == "ok"
     assert rows[2].mean_intensity == pytest.approx(148 / 255, abs=1e-6)
+
+
+# ------------------------------------------------- unsupported formats
+
+def _crc(data: bytes, poly: int, width: int) -> int:
+    """MSB-first CRC with zero init (FLAC's CRC-8 and CRC-16)."""
+    crc, top, mask = 0, 1 << (width - 1), (1 << width) - 1
+    for b in data:
+        crc ^= b << (width - 8)
+        for _ in range(8):
+            crc = ((crc << 1) ^ poly if crc & top else crc << 1) & mask
+    return crc
+
+
+def _removed_format_blobs() -> list[tuple[str, bytes]]:
+    """One small, well-formed file per media family real_decode does not
+    decode: each parses cleanly with a decoder for its format, so only
+    the missing decoder makes it a quarantine row."""
+    def png_chunk(ctype, body):
+        return (struct.pack(">I", len(body)) + ctype + body
+                + struct.pack(">I", zlib.crc32(ctype + body)))
+
+    jpeg = (  # SOI, 1x1 grayscale baseline SOF0, EOI
+        b"\xff\xd8\xff\xc0" + struct.pack(">HBHHB", 11, 8, 1, 1, 1)
+        + bytes(3) + b"\xff\xd9"
+    )
+    pcm = struct.pack(">4h", 1000, -1000, 500, -500)  # big-endian PCM16
+    # FLAC: STREAMINFO (8 kHz, mono, 16-bit, 64 samples), then one
+    # frame holding a CONSTANT subframe, each header CRC-checked
+    flac = (b"fLaC\x80" + (34).to_bytes(3, "big")
+            + struct.pack(">HH6x", 16, 65535)
+            + ((8000 << 44) | (15 << 36) | 64).to_bytes(8, "big")
+            + bytes(16))
+    head = b"\xff\xf8\x60\x00\x00\x3f"  # block 64, rate/bps from STREAMINFO
+    frame = head + bytes([_crc(head, 0x07, 8)]) + b"\x00" + struct.pack(">h", -1000)
+    flac += frame + _crc(frame, 0x8005, 16).to_bytes(2, "big")
+    comm = struct.pack(">hIh", 1, 4, 16) + struct.pack(">HQ", 0x400B, 8000 << 51)
+    ssnd = struct.pack(">II", 0, 0) + pcm
+    aiff = b"AIFF" + b"".join(
+        ck + struct.pack(">I", len(body)) + body
+        for ck, body in ((b"COMM", comm), (b"SSND", ssnd)))
+    aiff = b"FORM" + struct.pack(">I", len(aiff)) + aiff
+
+    def ogg_page(payload, granule, header_type, seq):
+        return (b"OggS\x00" + bytes([header_type])
+                + struct.pack("<QIII", granule, 3, seq, 0)
+                + bytes([1, len(payload)]) + payload)
+
+    opus_head = b"OpusHead\x01\x02" + struct.pack("<HIhB", 312, 44100, 0, 0)
+    mp3_frame = b"\xff\xfb\x90\x00" + bytes(413)  # MPEG1 L3, 128 kbps, 44.1 kHz
+    adts_frame = b"\xff\xf1\x50\x80\x0d\x7f\xfc" + bytes(100)  # AAC LC, 44.1 kHz
+    full = bytes(4)  # version 0, flags 0
+    avif = _box(b"ftyp", b"avif" + bytes(4) + b"mif1avif") + _box(b"meta", full + (
+        _box(b"hdlr", full + bytes(4) + b"pict" + bytes(12))
+        + _box(b"pitm", full + struct.pack(">H", 1))
+        + _box(b"iinf", full + struct.pack(">H", 1) + _box(
+            b"infe", b"\x02\x00\x00\x00" + struct.pack(">HH", 1, 0) + b"av01\x00"))
+        + _box(b"iprp", _box(b"ipco", _box(b"ispe", full + struct.pack(">II", 320, 200)))
+               + _box(b"ipma", full + struct.pack(">IHBB", 1, 1, 1, 1)))))
+    return [
+        ("image/png", b"\x89PNG\r\n\x1a\n"
+         + png_chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0))
+         + png_chunk(b"IDAT", zlib.compress(b"\x00\x80"))
+         + png_chunk(b"IEND", b"")),
+        ("image/jpeg", jpeg),
+        ("image/webp", b"RIFF\x1a\x00\x00\x00WEBPVP8L\x0d\x00\x00\x00"
+         b"\x2f\x00\x00\x00\x10\x07\x10\x11\x11\x88\x88\xfe\x07\x00"),
+        ("image/qoi", b"qoif" + struct.pack(">IIBB", 1, 1, 3, 0)
+         + b"\xfe\x80\x80\x80" + bytes(7) + b"\x01"),
+        ("video/mjpeg", jpeg * 2),
+        # the canonical 43-byte 1x1 transparent GIF89a
+        ("image/gif", bytes.fromhex(
+            "47494638396101000100800000000000ffffff21f9040100000000"
+            "2c00000000010001000002024401003b")),
+        ("audio/flac", flac),
+        ("audio/aiff", aiff),
+        ("audio/basic", b".snd" + struct.pack(">5I", 24, len(pcm), 3, 8000, 1) + pcm),
+        ("audio/ogg", ogg_page(opus_head, 0, 2, 0)
+         + ogg_page(bytes(10), 480312, 4, 1)),
+        ("audio/mpeg", mp3_frame * 3),
+        ("audio/aac", adts_frame * 2),
+        ("image/avif", avif),
+    ]
+
+
+def test_decode_media_quarantines_unsupported_rows(spark):
+    """Real crawls carry application/http response payloads and media
+    types the engine does not decode — those rows must come back
+    NULL-stats (byte_len real), never crash the Arrow batch task; and
+    the fake decoder must agree with the real one on MIME-typed rows
+    (both normalize the major type themselves)."""
+    bmp = synth.bmp_rle8(4, 4, 60)
+    rows = [
+        (1, "image/bmp", bytearray(bmp)),
+        (2, "application/http; msgtype=response", bytearray(b"HTTP/1.1 200 OK\r\n\r\nhi")),
+        # GIF junk is an unsupported image format (ValueError)
+        (3, "image/gif", bytearray(b"GIF89a junk")),
+        # non-ValueError escapes must quarantine, not crash: a BMP cut
+        # inside its info header raises struct.error from bmp_lite.
+        # ID3-prefixed junk and junk RIFF both fail the stdlib wave
+        # reader and then wav_lite, which raises ValueError.
+        (4, "image/bmp", bytearray(bmp[:40])),
+        (5, "audio/mpeg", bytearray(b"ID3\x04\x00junk-not-a-wav")),
+        (6, "audio/wav", bytearray(b"RIFFjunk-not-a-wav")),
+    ]
+    # formats real_decode does not decode: each is a quarantine row,
+    # however well-formed its payload
+    rows += [
+        (len(rows) + i, mt, bytearray(blob))
+        for i, (mt, blob) in enumerate(_removed_format_blobs(), start=1)
+    ]
+    df = spark.createDataFrame(rows, "id long, media_type string, content binary")
+    real = {r["id"]: r for r in media.decode_media(df, use_fake=False).collect()}
+    assert real[1]["mean_intensity"] == pytest.approx(60.0 / 255.0)
+    assert real[1]["decode_status"] == "ok"
+    for bad in range(2, len(rows) + 1):
+        assert real[bad]["byte_len"] == len(rows[bad - 1][2])
+        assert real[bad]["width"] is None
+        assert real[bad]["mean_intensity"] is None
+        assert real[bad]["decode_status"].startswith("quarantine:"), bad
+    # the reason string distinguishes data problems by exception type
+    assert real[4]["decode_status"] == "quarantine:error"  # struct.error
+    assert real[5]["decode_status"] == "quarantine:ValueError"  # wav_lite
+    assert real[6]["decode_status"] == "quarantine:ValueError"  # wav_lite
+    # an unsupported format is refused by real_decode (image), wav_lite
+    # (audio) or mp4_lite (video) with ValueError, not a parser crash
+    for removed in range(7, len(rows) + 1):
+        assert real[removed]["decode_status"] == "quarantine:ValueError", removed
+    # fake decoder sees the same normalized major type: an image/bmp
+    # row is image-shaped (n_frames == 1), not video-shaped
+    fake = {r["id"]: r for r in media.decode_media(df, use_fake=True).collect()}
+    assert fake[1]["n_frames"] == 1

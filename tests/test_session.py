@@ -3,7 +3,8 @@ lean launch view and driver class-data sharing in ``get_spark``. A
 fresh-cache launch starts from the view, without the excluded jars. A
 cache miss trains an archive that validates against
 the launch classpath; a later launch maps it next to the caller's own
-java options (and, trained under it, the caller's extra classpath); a
+java options (and, trained under it, the caller's extra classpath) and
+records its use, and a training prunes other keys unused for two weeks; a
 stale or truncated archive, a conf dir with real
 config, or an unusable cache dir each start an unchanged, unshared
 session. Every JVM check starts a fresh driver in a subprocess against
@@ -11,11 +12,13 @@ a cache dir of its own."""
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import shutil
 import subprocess
 import sys
+import time
 import zipfile
 
 import pytest
@@ -143,6 +146,8 @@ def test_fresh_cache_session_launches_from_the_lean_view(trained):
 def test_later_session_maps_the_archive_beside_caller_java_options(trained, tmp_path):
     cache, _ = trained
     before = _files(cache)
+    size_file = _archive(cache)[:-4] + ".size"
+    os.utime(size_file, (0, 0))
     log = tmp_path / "class-load.log"
     out = _session(cache, {
         "spark.driver.extraJavaOptions": f"-Dgraft.probe=1 -Xlog:class+load=info:file={log}",
@@ -152,6 +157,41 @@ def test_later_session_maps_the_archive_beside_caller_java_options(trained, tmp_
     assert f"-XX:SharedArchiveFile={_archive(cache)}" in out["jvm_args"]
     assert _shared_classes(str(log)) > 1000
     assert _files(cache) == before  # no second training
+    # the launch that mapped the archive recorded its use
+    assert os.path.getmtime(size_file) > time.time() - 3600
+
+
+def test_training_prunes_only_other_keys_unused_for_the_window(tmp_path):
+    root = str(tmp_path)
+    old = time.time() - session.PRUNE_AFTER_S - 3600
+    recent = time.time() - session.PRUNE_AFTER_S + 3600
+    stale, failed, used, locked, trained = (c * 24 for c in "abcde")
+    for key, exts in {
+        stale: (".jsa", ".size", ".log", ".lock"),
+        failed: (".failed", ".log", ".lock"),
+        used: (".jsa", ".size"),  # a launch touched .size within the window
+        locked: (".jsa", ".size", ".lock"),  # another process holds its lock
+        trained: (".jsa", ".size", ".log", ".lock"),  # the key that just trained
+    }.items():
+        for ext in exts:
+            open(os.path.join(root, key + ext), "w").close()
+            os.utime(os.path.join(root, key + ext), (old, old))
+    os.utime(os.path.join(root, used + ".size"), (recent, recent))
+    # a view and a crashed trainer's temp file are not key files
+    view, tmp = os.path.join(root, "home-" + "f" * 24), os.path.join(root, f"{stale}.123.tmp")
+    os.mkdir(view)
+    open(tmp, "w").close()
+    for path in (view, tmp):
+        os.utime(path, (old, old))
+    with open(os.path.join(root, locked + ".lock")) as held:
+        fcntl.flock(held, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        session._prune_keys(root, keep=trained)
+    assert sorted(os.listdir(root)) == sorted([
+        f"{used}.jsa", f"{used}.size",
+        f"{locked}.jsa", f"{locked}.size", f"{locked}.lock",
+        f"{trained}.jsa", f"{trained}.size", f"{trained}.log", f"{trained}.lock",
+        os.path.basename(view), os.path.basename(tmp),
+    ])
 
 
 def test_launch_with_extra_class_path_maps_the_archive_it_trained(tmp_path):

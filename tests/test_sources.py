@@ -5,7 +5,7 @@ validation + positional attach, directory routing."""
 from __future__ import annotations
 
 import os
-from datetime import date
+from datetime import date, datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -124,6 +124,26 @@ def test_directory_routing(tmp_path):
     assert len(report2.processed) == 1
     assert os.path.basename(report2.processed[0]).startswith("good_")
     assert len(list((tmp_path / "done").iterdir())) == 2
+
+
+def test_archive_collisions_within_one_second_keep_every_file(tmp_path, monkeypatch):
+    """The collision suffix has one-second resolution: a third file of
+    one name archived within that second must get a fresh name, not
+    replace the second one."""
+
+    class _FrozenClock(datetime):
+        @classmethod
+        def now(cls, tz=None):
+            return cls(2024, 1, 2, 3, 4, 5)
+
+    monkeypatch.setattr(srcfiles, "datetime", _FrozenClock)
+    inbox, done = tmp_path / "in", str(tmp_path / "done")
+    inbox.mkdir()
+    for body in ("first", "second", "third"):
+        (inbox / "a.xlsx").write_text(body)
+        srcfiles.move_file(str(inbox / "a.xlsx"), True, done, str(tmp_path / "err"))
+    kept = sorted(p.read_text() for p in (tmp_path / "done").iterdir())
+    assert kept == ["first", "second", "third"]
 
 
 def _make_statement_pdf(page_texts: list[list[str]], compress: bool) -> bytes:

@@ -140,34 +140,6 @@ def test_streaming_session_window(spark, tmp_path):
     assert got == [("2024-01-01 00:00:00", 3), ("2024-01-01 01:00:00", 3)]
 
 
-def test_stateful_running_totals(spark, tmp_path):
-    """applyInPandasWithState accumulates across micro-batches: two
-    files forced into separate batches via maxFilesPerTrigger."""
-    pytest.importorskip("pandas")
-    from pythondataingestionprocess_spark.streaming.stateful import running_user_totals
-
-    inbox = str(tmp_path / "inbox")
-    _write_json_batch(inbox, "a.json", _rows(0, 2, user=7))
-    _write_json_batch(inbox, "b.json", _rows(10, 3, user=7))
-
-    stream = file_ingest.file_stream(
-        spark, inbox, EVENTS_SCHEMA, max_files_per_trigger=1
-    )
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("state_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM state_test").collect()
-    # one emission per micro-batch; the final one carries the full total
-    assert max(r["n_events"] for r in rows) == 5
-    assert any(abs(r["sum_value"] - (0 + 1 + 10 + 11 + 12)) < 1e-9 for r in rows)
-
-
 @pytest.mark.slow
 def test_streaming_workbook_ingestion_into_store(spark, tmp_path):
     """Streaming twin of EP1: workbook-shaped rows arrive as files,
@@ -311,7 +283,9 @@ def test_streaming_funnel_cross_batch_conversion(spark, tmp_path):
     batch join can't handle incrementally). A purchase outside the
     window or without a prior view emits nothing."""
     pytest.importorskip("pandas")
-    from pythondataingestionprocess_spark.streaming.stateful import funnel_stream
+    from pythondataingestionprocess_spark.streaming.stateful import (
+        funnel_stream_watermarked,
+    )
 
     inbox = str(tmp_path / "inbox")
     schema = "user_id long, event_id long, ts timestamp, event_type string, value double"
@@ -321,6 +295,9 @@ def test_streaming_funnel_cross_batch_conversion(spark, tmp_path):
         {"user_id": 9, "event_id": 2, "ts": "2024-01-01T00:00:30Z",
          "event_type": "view", "value": 0.0},
     ])
+    # After batch a the watermark is 00:00:30 - 10 min, so no batch-b
+    # row is late. Batches follow mtime order, ties broken arbitrarily.
+    time.sleep(1.1)
     _write_json_batch(inbox, "b.json", [
         # user 7: purchase 10 min after batch-1 view → converts
         {"user_id": 7, "event_id": 3, "ts": "2024-01-01T00:10:00Z",
@@ -336,7 +313,7 @@ def test_streaming_funnel_cross_batch_conversion(spark, tmp_path):
         spark, inbox, schema, max_files_per_trigger=1
     )
     q = (
-        funnel_stream(stream)
+        funnel_stream_watermarked(stream)
         .writeStream.format("memory")
         .queryName("funnel_test")
         .outputMode("append")
@@ -351,94 +328,13 @@ def test_streaming_funnel_cross_batch_conversion(spark, tmp_path):
     assert conv.view_ts.minute == 0 and conv.purchase_ts.minute == 10
 
 
-def test_streaming_funnel_state_expiry(spark, tmp_path):
-    """ProcessingTimeTimeout variant: a user idle past the expiry has
-    their view-state dropped, so a later purchase (still inside the
-    EVENT-time window) no longer converts — while a fresh user's
-    view→purchase in the second batch converts normally, proving the
-    expiry didn't break the operator."""
-    pytest.importorskip("pandas")
-    from pythondataingestionprocess_spark.streaming.stateful import (
-        funnel_stream_expiring,
-    )
-
-    inbox = str(tmp_path / "inbox")
-    schema = "user_id long, event_id long, ts timestamp, event_type string, value double"
-    _write_json_batch(inbox, "a.json", [
-        {"user_id": 7, "event_id": 1, "ts": "2024-01-01T00:00:00Z",
-         "event_type": "view", "value": 0.0},
-    ])
-    # ProcessingTimeTimeout needs a continuous trigger (no-data batches
-    # fire the timers), and every no-data batch runs the stateful
-    # operator over ALL state partitions — at the suite's 32 shuffle
-    # partitions that churn starves processAllAvailable, so run this
-    # query on 2 partitions.
-    n_part = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        stream = file_ingest.file_stream(spark, inbox, schema, max_files_per_trigger=1)
-        q = (
-            funnel_stream_expiring(stream, idle_expiry_ms=1500)
-            .writeStream.format("memory")
-            .queryName("funnel_expiry_test")
-            .outputMode("append")
-            .trigger(processingTime="500 millisecond")
-            .start()
-        )
-        try:
-            # processAllAvailable is unusable here: with
-            # ProcessingTimeTimeout every finished batch "requires
-            # another batch" (a timer may fire later), so the no-new-data
-            # latch never sets — poll progress instead.
-            def wait_until(pred, timeout_s=90):
-                deadline = time.time() + timeout_s
-                while time.time() < deadline:
-                    if pred():
-                        return True
-                    if q.exception() is not None:
-                        raise AssertionError(q.exception())
-                    time.sleep(0.5)
-                return False
-
-            # batch 0 (a.json, the view) committed
-            assert wait_until(
-                lambda: (q.lastProgress or {}).get("batchId", -1) >= 0
-            )
-            # idle long past the 1.5 s expiry; no-data micro-batches
-            # fire the timeout and drop user 7's state
-            time.sleep(6)
-            _write_json_batch(inbox, "b.json", [
-                # user 7: purchase 10 min after the view in event time —
-                # inside the 30-min window, but the state expired
-                {"user_id": 7, "event_id": 2, "ts": "2024-01-01T00:10:00Z",
-                 "event_type": "purchase", "value": 99.0},
-                # user 8: fresh view + purchase in this batch → converts
-                {"user_id": 8, "event_id": 3, "ts": "2024-01-01T00:11:00Z",
-                 "event_type": "view", "value": 0.0},
-                {"user_id": 8, "event_id": 4, "ts": "2024-01-01T00:12:00Z",
-                 "event_type": "purchase", "value": 7.0},
-            ])
-            assert wait_until(
-                lambda: spark.sql("SELECT * FROM funnel_expiry_test").count() >= 1
-            ), "user 8's conversion never arrived"
-            time.sleep(3)  # settle: give a late user-7 row time to (not) appear
-            rows = spark.sql("SELECT * FROM funnel_expiry_test").collect()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", n_part)
-    assert [r.user_id for r in rows] == [8]
-    assert abs(rows[0].value - 7.0) < 1e-9
-
-
 def test_streaming_funnel_watermarked_late_drop(spark, tmp_path):
     """EventTimeTimeout variant: the watermark (10 min behind max
     event time) advances past a late purchase's timestamp between
     micro-batches, so the late row is dropped BEFORE the stateful
     operator and its conversion never fires — while an on-time
     purchase in the same batch converts normally. Deterministic
-    w.r.t. the data, unlike the processing-time expiry test above.
-    Batch-face oracle twin: events_funnel_watermark."""
+    w.r.t. the data. Batch-face oracle twin: events_funnel_watermark."""
     pytest.importorskip("pandas")
     from pythondataingestionprocess_spark.streaming.stateful import (
         funnel_stream_watermarked,
@@ -1807,43 +1703,6 @@ def test_compact_store_heals_under_glob_metachar_store_dir(spark, tmp_path):
     stats = di.compact_store(spark, store)
     assert set(stats) == {"buckets", "shingles"}
     assert cross_pairs() == {(10, 1), (11, 2)}
-
-
-def test_stateful_running_totals_late_batch_keeps_last_ts(spark, tmp_path):
-    """last_ts is RUNNING state — a later micro-batch
-    carrying only EARLIER (late) events must not move the emitted
-    last-event-ts backward while the counters move forward."""
-    import time as _time
-
-    pytest.importorskip("pandas")
-    from pythondataingestionprocess_spark.streaming.stateful import (
-        running_user_totals,
-    )
-
-    inbox = str(tmp_path / "inbox")
-    _write_json_batch(inbox, "a.json", _rows(10, 2, user=7))  # :10, :11
-    _time.sleep(1.1)  # FileStreamSource orders batches by mtime
-    _write_json_batch(inbox, "b.json", _rows(0, 1, user=7))   # LATE :00
-
-    stream = file_ingest.file_stream(
-        spark, inbox, EVENTS_SCHEMA, max_files_per_trigger=1
-    )
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("state_late_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "SELECT * FROM state_late_test ORDER BY n_events"
-    ).collect()
-    final = rows[-1]
-    assert final["n_events"] == 3
-    # the late-only batch must keep the running max (:11), not :00
-    assert final["last_ts"].minute == 11
 
 
 def test_progress_logger_rejects_object_store_scheme(spark, tmp_path):
