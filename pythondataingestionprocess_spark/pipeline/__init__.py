@@ -9,12 +9,14 @@ dedup, defaults, SCD stamping) replicate the reference exactly — see
 ingest.py docstrings for the per-rule citations and the two places the
 reference's behavior is surprising (lag-1 link fill; truthy price
 defaults).
+
+Two stores serve it: ``ParquetTableStore`` (one parquet directory per
+table) and ``TableGroup``, the transactional store (one snapshot log
+per root: atomic multi-table commits, time travel, the change feed and
+exactly-once keyed commits).
 """
 
 from pythondataingestionprocess_spark.pipeline.ingest import IngestResult, ingest_batch  # noqa: F401
 from pythondataingestionprocess_spark.pipeline.store import ParquetTableStore  # noqa: F401
-from pythondataingestionprocess_spark.pipeline.snapshot_store import (  # noqa: F401
-    ConcurrentWriteError,
-    SnapshotTableStore,
-)
+from pythondataingestionprocess_spark.pipeline.snapshot_store import ConcurrentWriteError  # noqa: F401
 from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup  # noqa: F401

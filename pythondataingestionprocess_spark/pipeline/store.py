@@ -48,8 +48,12 @@ SCHEMAS: dict[str, str] = {
 
 class TableMerge:
     """The MERGE shapes, defined once for every table store in terms
-    of its ``read(name)`` and ``overwrite(name, df)``: the parquet and
-    snapshot stores, the JDBC store, and a staged group transaction."""
+    of its ``read(name)`` and ``overwrite(name, df)``: the parquet
+    store, the JDBC store, and a staged group transaction. Every
+    store's ``overwrite`` accepts a frame derived from the table it
+    replaces: parquet stages to a sibling dir and swaps, JDBC
+    checkpoints first, a group transaction only stages (its commit
+    writes new files)."""
 
     def upsert(
         self,
@@ -112,37 +116,6 @@ class TableMerge:
             .filter(F.col(rn) == 1)
             .drop(rn)
         )
-
-    def delete_keys(
-        self,
-        name: str,
-        keys_df: DataFrame,
-        keys: list[str],
-    ) -> int:
-        """MERGE WHEN MATCHED THEN DELETE — the erasure path the
-        reference lacks entirely (its Postgres schema is append/update
-        only): remove every row whose key appears in ``keys_df``,
-        returning the number of rows removed. Set-oriented anti-join,
-        one shuffle on the key, never a per-row loop — the GDPR
-        right-to-erasure shape where ``keys_df`` is a small frame of
-        subject ids swept across each table holding their data.
-
-        The count is one semi-join aggregate over the SOURCE table
-        taken before the overwrite (matched rows == removed rows,
-        since the rewrite keeps exactly the anti-join complement) —
-        the table is scanned twice per sweep (count + rewrite), not
-        three times via pre/post counts. Every store's ``overwrite``
-        accepts a frame derived from the table it replaces (the
-        contract upsert relies on too): parquet stages to a sibling
-        dir and swaps, the snapshot store writes new files, JDBC
-        checkpoints first, a group transaction only stages.
-        """
-        existing = self.read(name)
-        victims = keys_df.select(*keys).distinct()
-        n_removed = existing.join(victims, keys, "left_semi").count()
-        survivors = existing.join(victims, keys, "left_anti")
-        self.overwrite(name, survivors)
-        return n_removed
 
     def insert_if_absent(
         self,

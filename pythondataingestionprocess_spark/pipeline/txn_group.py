@@ -1,37 +1,40 @@
-"""Multi-table atomic transactions: a TABLE GROUP sharing one commit
-log.
+"""The transactional table store: a TABLE GROUP, every table under
+one root sharing one commit log.
 
 The reference's ingest writes purchase + operation + price as one
 logical unit (import_files_to_postgre.py:145-227 inside one DB
-session); ``SnapshotTableStore`` gives each table its OWN log, so a
-crash between two tables' commits could expose a purchase without its
-operations. Per-table logs cannot fix this — two independent claim
-points can never be atomic together. The standard lakehouse answer
-(Delta's catalog-level commit / Iceberg's multi-table transaction
-proposals) is a SHARED log: one ordered sequence of commit manifests,
-each listing the actions of EVERY table it touches, claimed by the
-same os.link-atomic rename as the single-table store. A crash
-anywhere before the claim leaves orphan data files in any number of
-tables and ZERO visible change in all of them.
+session). Two independent claim points can never be atomic together,
+so the group keeps ONE ordered sequence of commit manifests per root
+— the standard lakehouse answer (Delta's catalog-level commit /
+Iceberg's multi-table transaction proposals) — each listing the
+actions of EVERY table it touches, claimed by one os.link-atomic
+rename. A crash anywhere before the claim leaves orphan data files in
+any number of tables and ZERO visible change in all of them.
 
-The log is the single-table store's engine
-(:class:`~pythondataingestionprocess_spark.pipeline.snapshot_store._SnapshotLog`)
+The log is
+:class:`~pythondataingestionprocess_spark.pipeline.snapshot_store._SnapshotLog`
 over ``<root>/_txlog``: replay, read pins, the commit loop, vacuum
-(with its time-travel horizon and checkpoint) and history are the
-same code. This module adds only what is specific to groups: staging
-several tables into one :class:`GroupTransaction`.
+(with its time-travel horizon and checkpoint) and history live there.
+This module adds the store's surface: reads, the append-grain change
+feed, and staging several tables into one :class:`GroupTransaction`.
+A group with one table numbers its snapshots 1, 2, 3, … as that
+table's own log would.
 
 Scope rule: tables in a group are read and written ONLY through the
-group (the shared log IS their total order — mixing in per-table
-commits would create unorderable histories). Group membership is the
+group (the shared log IS their total order). Group membership is the
 schema's natural transaction boundary: the reference's star schema is
 one group.
 
-Concurrency: same write-serializable rules as the single-table store,
-applied at GROUP grain — a transaction containing any overwrite
-validates that no commit landed after the snapshot it read (the
-tables it derived from are stale otherwise); append-only transactions
-commute and rebase on claim races.
+Concurrency: the engine's write-serializable rules at GROUP grain — a
+transaction containing any overwrite validates that no commit landed
+after the snapshot it read, whichever table that commit touched;
+append-only transactions commute and rebase on claim races.
+
+Exactly-once: a transaction keyed by ``(app_id, batch_id)`` (see
+:func:`stream_txn`) carries the key in its manifest, so the dedup
+check and the data commit are one atomic claim and the replay of a
+committed key commits nothing — the Delta ``txnAppId`` pattern every
+store-backed ``foreachBatch`` sink here commits through.
 
 Usage::
 
@@ -45,17 +48,20 @@ Usage::
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pythondataingestionprocess_spark.pipeline.snapshot_store import (
-    _TXLOG,
     DEFAULT_ORPHAN_RETENTION_S,
     _SnapshotLog,
 )
 from pythondataingestionprocess_spark.pipeline.store import TableMerge
+from pythondataingestionprocess_spark.storage import glob_escape
 
 
 def stream_txn(app: str, batch_df: DataFrame, batch_id: int | None
@@ -90,11 +96,7 @@ class TableGroup:
         # KeyError — the ParquetTableStore bootstrap contract, which
         # lets ingest/merge code run unchanged on a fresh group
         self.schemas = schemas or {}
-        self._log = _SnapshotLog(spark, root, os.path.join(root, _TXLOG),
-                                 self.writer_id, "group", {})
-
-    def snapshot_ids(self) -> list[int]:
-        return self._log.ids()
+        self._log = _SnapshotLog(spark, root, self.writer_id)
 
     def current_snapshot(self) -> int | None:
         return self._log.head()
@@ -133,8 +135,59 @@ class TableGroup:
         orphans included — and advance the group's time-travel
         horizon. Manifests are never deleted (audit trail). Returns
         removed paths; in-flight orphan rules as in
-        :meth:`SnapshotTableStore.vacuum`."""
+        :meth:`_SnapshotLog.vacuum`."""
         return self._log.vacuum(keep_last, orphan_retention_s)
+
+    def changes(self, name: str, after: int, until: int | None = None
+                ) -> DataFrame:
+        """Rows APPENDED to ``name`` in snapshots (after, until] with a
+        ``_snapshot_id`` column — the incremental-consumer feed (read
+        what landed since my last cursor, advance the cursor). Fails
+        loud if an overwrite of ``name`` sits in the range: a rewrite
+        has no append-grain delta in the log."""
+        current = self._log.head()
+        if current is None:
+            raise ValueError(f"table {name!r} has no commits")
+        until = current if until is None else until
+        # every part is projected onto the schema recorded at
+        # ``until`` — parquet projection NULL-fills columns an older
+        # vintage predates, so a range crossing an additive
+        # merge_schema boundary unions cleanly instead of raising
+        schema = StructType.fromJson(
+            json.loads(self._log.state(until)[name]["schema"]))
+        parts = []
+        for sid, e in self._log.entries(name, until):
+            if sid <= after:
+                continue
+            if e["action"] != "append":
+                raise ValueError(
+                    f"snapshot {sid} is an {e['action']} of {name!r} — "
+                    "no append-grain delta"
+                )
+            if any(not os.path.isdir(d) for d in e["dirs"]):
+                raise ValueError(
+                    f"snapshot {sid}'s data files were vacuumed — "
+                    "the change feed cursor fell behind the retention "
+                    "window"
+                )
+            if e["dirs"]:
+                parts.append(
+                    self.spark.read.schema(schema)
+                    .parquet(*[glob_escape(d) for d in e["dirs"]])
+                    # cast: this branch, the empty-range branch and the
+                    # driver face's oracle must agree on bigint — a bare
+                    # IntegerType lit would make the feed's schema
+                    # range-dependent
+                    .withColumn("_snapshot_id", F.lit(sid).cast("long"))
+                )
+        if not parts:
+            return self.spark.createDataFrame(
+                [], schema.add("_snapshot_id", "long")
+            )
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
 
     def transaction(self, txn: tuple[str, int] | None = None
                     ) -> "GroupTransaction":
@@ -159,9 +212,8 @@ class GroupTransaction(TableMerge):
     """Stages per-table actions; commits atomically on clean exit,
     commits NOTHING on an exception inside the block. ``read`` is the
     group's committed read and ``overwrite`` stages, so the MERGE
-    shapes (``upsert``, ``insert_if_absent``, ``delete_keys``) stage
-    one overwrite each and ``ingest_batch`` runs on a transaction as
-    on any store."""
+    shapes (``upsert``, ``insert_if_absent``) stage one overwrite each
+    and ``ingest_batch`` runs on a transaction as on any store."""
 
     def __init__(self, group: TableGroup, txn: tuple[str, int] | None):
         self._group = group

@@ -280,9 +280,8 @@ def state_change_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scratch stores for the transaction-layer faces: md5+pid-keyed under
 # /tmp, wiped at the START of each same-process invocation (the
 # returned DataFrame is lazy, so an end-of-call rmtree would race the
-# driver's collect) and swept at interpreter exit — without the
-# atexit hook every driver/bench/pytest process abandoned one
-# multi-hundred-thousand-row parquet store per corpus (r16 review).
+# driver's collect) and swept at interpreter exit, so no process
+# leaves a multi-hundred-thousand-row parquet store per corpus behind.
 _SCRATCH_REGISTERED: set = set()
 _SCRATCH_SEQ = itertools.count()
 
@@ -291,7 +290,7 @@ class _SimulatedCrash(Exception):
     """Sentinel for the txn face's simulated mid-transaction failure.
     Deliberately NOT a RuntimeError: the probe's except clause must
     never swallow ConcurrentWriteError (a RuntimeError subclass) or
-    any genuine RuntimeError from the abort path (r16 ADVICE)."""
+    any genuine RuntimeError from the abort path."""
 
 
 def _scratch_store_root(prefix: str, sf_dir: str) -> str:
@@ -304,8 +303,8 @@ def _scratch_store_root(prefix: str, sf_dir: str) -> str:
     # Keyed by an invocation counter: each call gets a FRESH root, so
     # a lazy DataFrame returned by a prior invocation of the same face
     # in this process keeps reading ITS OWN store when collected later
-    # (a start-of-call rmtree of a shared root silently rebound such
-    # frames to the rebuilt store — r16 ADVICE). Old roots are left
+    # (a start-of-call rmtree of a shared root would silently rebind
+    # such frames to the rebuilt store). Old roots are left
     # for the atexit sweep; each is a few-MB scratch, bounded by
     # invocations-per-process. pid-keyed under /tmp: fine in local
     # mode (executors share the driver filesystem); on a real cluster
@@ -326,7 +325,7 @@ def _scratch_store_root(prefix: str, sf_dir: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Snapshot-store change feed: the transaction layer's driver-facing face.
+# Table-group change feed: the exactly-once append path's face.
 # ---------------------------------------------------------------------------
 
 # Expected feed reconstructed relationally: snapshots 2 and 3 appended
@@ -346,15 +345,15 @@ FROM orders WHERE o_orderkey % 7 = 2
 @query("snapshot_change_feed", oracle=_SNAPSHOT_FEED_ORACLE,
        tags=("lakehouse", "cdc", "snapshot"))
 def snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SnapshotTableStore's first driver-facing correctness row
-    (r15 VERDICT item 3 — the r15 transaction layer had 31 pytest
-    pins but no oracle evidence). End-to-end through the REAL commit
-    protocol in a scratch store: three appends of deterministic order
-    slices (o_orderkey % 7 ∈ {0,1,2} → snapshots 1,2,3), an
-    exactly-once REPLAY of snapshot 2's (app_id, batch_id) between
-    them that must be a no-op (the Delta txnAppId idiom — a duplicate
-    would poison the feed and the hash), then ``changes(after=1)`` —
-    the incremental consumer's cursor read. The oracle reconstructs
+    """The change feed and exactly-once appends of a one-table
+    ``TableGroup``, checked against an independent engine. End-to-end
+    through the REAL commit protocol in a scratch group: three appends
+    of deterministic order slices (o_orderkey % 7 ∈ {0,1,2} →
+    snapshots 1,2,3), an exactly-once REPLAY of snapshot 2's
+    (app_id, batch_id) transaction between them that must commit
+    nothing (the Delta txnAppId idiom — a duplicate would poison the
+    feed and the hash), then ``changes(after=1)`` — the incremental
+    consumer's cursor read. The oracle reconstructs
     the expected feed (slices 1 and 2 tagged with their snapshot ids)
     straight from the orders parquet, so manifest bookkeeping, the
     append-grain log replay, exactly-once dedup, and the feed's
@@ -362,12 +361,10 @@ def snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scratch store is rebuilt per invocation and swept at exit
     (see _scratch_store_root) — commits are data-write-bound,
     metadata is one JSON per snapshot (BASELINE.md protocol probe)."""
-    from pythondataingestionprocess_spark.pipeline.snapshot_store import (
-        SnapshotTableStore,
-    )
+    from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
 
     root = _scratch_store_root("snapfeed", sf_dir)
-    st = SnapshotTableStore(spark, root, writer_id="feed-face")
+    grp = TableGroup(spark, root, writer_id="feed-face")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
@@ -375,13 +372,15 @@ def snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     def batch(r: int) -> DataFrame:
         return orders.filter(F.col("o_orderkey") % 7 == r)
 
-    st.append("orders_feed", batch(0))  # snapshot 1 (before the cursor)
-    if not st.append_once("orders_feed", batch(1), "feed", 1):  # snapshot 2
-        raise AssertionError("first append_once must commit")
-    if st.append_once("orders_feed", batch(1), "feed", 1):  # crash replay
-        raise AssertionError("replayed (app_id, batch_id) must be a no-op")
-    st.append("orders_feed", batch(2))  # snapshot 3
-    return st.changes("orders_feed", after=1)
+    grp.append("orders_feed", batch(0))  # snapshot 1 (before the cursor)
+    for replay in (False, True):  # snapshot 2, then its crash replay
+        with grp.transaction(("feed", 1)) as t:
+            t.append("orders_feed", batch(1))
+        if (t.snapshot_id is None) != replay:
+            raise AssertionError(
+                "a keyed transaction commits once; its replay is a no-op")
+    grp.append("orders_feed", batch(2))  # snapshot 3
+    return grp.changes("orders_feed", after=1)
 
 
 # ---------------------------------------------------------------------------
@@ -415,10 +414,9 @@ SELECT 2, 'ord_flagged', 'append',
 @query("txn_group_atomic_ingest", oracle=_TXN_GROUP_ORACLE,
        tags=("lakehouse", "txn", "snapshot"))
 def txn_group_atomic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TableGroup's first driver-facing correctness row (r16; the
-    multi-table transaction layer had 12 pytest pins but no oracle
-    evidence — the snapshot_change_feed face covers only the
-    single-table store). End-to-end through the REAL shared-log
+    """The multi-table atomicity of a ``TableGroup``, checked against an
+    independent engine (snapshot_change_feed covers a one-table
+    group). End-to-end through the REAL shared-log
     protocol in a scratch group: ONE transaction staging three tables
     (an overwrite, an append, and a per-priority aggregate overwrite)
     must land as EXACTLY one group snapshot; a second transaction that

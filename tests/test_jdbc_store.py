@@ -10,7 +10,6 @@ from __future__ import annotations
 from datetime import date
 
 import pytest
-from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.pipeline.jdbc_store import (
     JdbcTableStore,
@@ -146,28 +145,6 @@ def test_streaming_foreachbatch_upserts_into_jdbc(spark, jdbc_store, tmp_path):
     rows = {r.store_name: r for r in jdbc_store.read("store").collect()}
     assert rows["Store A"].id_store == 1 and rows["Store A"].store_url == "a.example"
     assert rows["Store B"].id_store == 2
-
-
-def test_delete_keys_erasure_roundtrip(spark, tmp_path):
-    """Right-to-erasure sweep on the parquet store: deleting a key
-    frame removes exactly those rows (count returned), leaves everyone
-    else untouched, and is idempotent — a second sweep deletes 0."""
-    from pythondataingestionprocess_spark.pipeline.store import ParquetTableStore
-
-    store = ParquetTableStore(spark, str(tmp_path / "s"))
-    rows = [(i, f"u{i}", float(i)) for i in range(20)]
-    store.overwrite(
-        "purchase_like",
-        spark.createDataFrame(rows, "user_id long, name string, total double"),
-    )
-    victims = spark.createDataFrame([(3,), (7,), (99,)], "user_id long")
-
-    n = store.delete_keys("purchase_like", victims, ["user_id"])
-    assert n == 2  # id 99 never existed
-    left = store.read("purchase_like")
-    assert left.count() == 18
-    assert left.filter(F.col("user_id").isin(3, 7)).count() == 0
-    assert store.delete_keys("purchase_like", victims, ["user_id"]) == 0
 
 
 def test_exists_reraises_non_missing_probe_failures(spark):

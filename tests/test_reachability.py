@@ -1,13 +1,20 @@
-"""Every top-level function and class in the package is reached from a root, or hangs off a
-LIBRARY_API entry that says why it is kept.
+"""Every top-level function and class in the package, and every method of a class, is reached
+from a root, or hangs off a LIBRARY_API entry that says why it is kept.
 
 The roots are every top-level def in ``plans/`` (the registered faces), the module-level
 statements of every package module (which is all ENTRY_MODULES add: their defs need a
 caller like any other) and the whole text of the entry files. Names resolve through each
-module's imports, re-exports included. A non-docstring string references the defs it names
-(bare names in its own module, dotted names in any) inside a def body or an entry file, so
-code run through ``python -c`` (``session._train``) is reached; a module-level constant
-that merely spells a def's name is not a caller.
+module's imports, re-exports included. A non-docstring string references the top-level defs
+it names (bare names in its own module, dotted names in any) inside a def body or an entry
+file, so code run through ``python -c`` (``session._train``) is reached; a module-level
+constant that merely spells a def's name is not a caller.
+
+Each method is its own node; a class reaches only its bases, its decorators and its
+class-level statements. A method of a reached class is reached when it is a dunder, when
+its class has a base from outside the package (a framework callback: Spark calls a
+``StreamingQueryListener``'s or a ``DataSource``'s methods), or when reached code names it
+as an attribute (``.name``). Strings and docstrings never reach a method. A LIBRARY_API key
+may name ``Class.method``.
 
 The same holds one level up: a package module that no entry point imports (function-local
 imports and strings naming a module, as in LAYER_IMPORTS, count) holds a LIBRARY_API
@@ -17,6 +24,7 @@ from __future__ import annotations
 
 import ast
 import re
+from dataclasses import dataclass
 from functools import cache
 from pathlib import Path
 
@@ -25,7 +33,7 @@ PKG = "pythondataingestionprocess_spark"
 ENTRY_FILES = ["__spark_entry__.py", "bench.py", "perfbench/*.py", "scripts/*.py"]
 ENTRY_MODULES = [f"{PKG}.plans", f"{PKG}.oracle", f"{PKG}.pipeline.ingest"]
 
-# Top-level defs that no root reaches, kept as library API: the reference's surfaces and
+# Defs and methods that no root reaches, kept as library API: the reference's surfaces and
 # the streaming twin of each registered face. Each entry's body is a root for the check, so
 # helpers it alone calls need no entry of their own. A module no entry file imports must
 # hold at least one entry.
@@ -37,6 +45,8 @@ LIBRARY_API = {
     f"{PKG}.operators.dsir.importance_logratio_expected": "pure-Python reference for DSIR fit",
     f"{PKG}.oracle.check_query": "one face against its DuckDB oracle (test_queries_oracle)",
     f"{PKG}.pipeline.jdbc_store.derby_url": _S9,
+    f"{PKG}.pipeline.store.TableMerge.upsert":
+        "the reference's `ON CONFLICT DO UPDATE` (SURVEY §0 (d))",
     f"{PKG}.sources.datasource.register": "the PDF -> xlsx path's stmt_text reader",
     f"{PKG}.sources.files.ingest_directory": "reference S5/S6 directory loop with archive moves",
     f"{PKG}.sources.statement.extract_pdf_text": _PDF_XLSX,
@@ -57,7 +67,7 @@ LIBRARY_API = {
         "streaming twin of events_funnel_watermark",
     f"{PKG}.streaming.stateful.locf_fill_stream": "the reference's forward-fill as a stream",
     f"{PKG}.streaming.stateful.weighted_sample_stream": "streaming twin of corpus_weighted_sample",
-    f"{PKG}.streaming.table_sink.run_stream_to_table": "exactly-once stream into a snapshot store",
+    f"{PKG}.streaming.table_sink.run_stream_to_table": "exactly-once stream into a table group",
 }
 
 
@@ -96,11 +106,14 @@ def test_every_package_module_is_reached_or_holds_library_api():
         for name in _imported(todo.pop(), modules) - seen:
             seen.add(name)
             todo.append(modules[name])
-    unlisted = sorted(modules.keys() - seen - {k.rpartition(".")[0] for k in LIBRARY_API})
+    # a key is module.def or module.Class.method
+    listed = {k.rsplit(".", i)[0] for k in LIBRARY_API for i in (1, 2)}
+    unlisted = sorted(modules.keys() - seen - listed)
     assert not unlisted, f"modules no entry point imports, without a LIBRARY_API entry: {unlisted}"
 
 
-_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_FN = (ast.FunctionDef, ast.AsyncFunctionDef)
+_DEF = (*_FN, ast.ClassDef)
 _WORD = re.compile(r"[A-Za-z_][\w.]*")
 
 
@@ -126,8 +139,18 @@ class _Scope:
                     self.aliases[a.asname or a.name] = f"{mod}.{a.name}"
 
 
-def _graph() -> tuple[dict[str, set[str]], set[str], set[str]]:
-    """(edges from each top-level def, roots, every top-level def), all as dotted names."""
+@dataclass
+class _Graph:
+    edges: dict[str, set[str]]  # node -> the defs its code names
+    attrs: dict[str, set[str]]  # node -> the attribute names its code reads
+    methods: dict[str, tuple[str, str, bool]]  # method -> (its class, its name, always reached)
+    roots: set[str]
+    defs: set[str]  # every top-level def and every method
+
+
+def _graph() -> _Graph:
+    """Nodes are dotted names: ``mod.def``, ``mod.Class.method``, plus one ``mod:`` node per
+    module's import-time code and one ``entry:`` node per entry file (both roots)."""
     modules = _modules()
     scopes = {m: _Scope(m, p, p.name == "__init__.py") for m, p in modules.items()}
 
@@ -175,43 +198,92 @@ def _graph() -> tuple[dict[str, set[str]], set[str], set[str]]:
         out.discard(None)
         return out
 
-    edges, roots = {}, set()
+    def attrs(nodes) -> set[str]:
+        return {n.attr for top in nodes for n in ast.walk(top) if isinstance(n, ast.Attribute)}
+
+    classes = {
+        f"{m}.{d}" for m, s in scopes.items() for d, n in s.defs.items()
+        if isinstance(n, ast.ClassDef)
+    }
+
+    @cache
+    def framework(cls: str) -> bool:
+        """Whether the class has a base from outside the package, directly or through an
+        in-package base."""
+        mod, _, name = cls.rpartition(".")
+        scope = scopes[mod]
+        for b in scope.defs[name].bases:
+            inside = refs(scope, [b], strings=False) & classes
+            if not inside or any(framework(c) for c in inside):
+                return True
+        return False
+
+    g = _Graph({}, {}, {}, set(), set())
+
+    def add(node: str, scope: _Scope, code: list, strings: bool = True) -> None:
+        g.edges[node] = refs(scope, code, strings)
+        g.attrs[node] = attrs(code)
+
     for m, s in scopes.items():
         for name, node in s.defs.items():
-            edges[f"{m}.{name}"] = refs(s, [node])
+            dotted = f"{m}.{name}"
+            g.defs.add(dotted)
             if m == f"{PKG}.plans" or m.startswith(f"{PKG}.plans."):
-                roots.add(f"{m}.{name}")
-        body = [n for n in s.tree.body if not isinstance(n, _DEF)]
+                g.roots.add(dotted)
+            if not isinstance(node, ast.ClassDef):
+                add(dotted, s, [node])
+                continue
+            # a class: its bases, decorators and class-level statements (with its methods'
+            # decorators and defaults, which run when the class body does)
+            fns = [n for n in node.body if isinstance(n, _FN)]
+            code = node.decorator_list + node.bases + [n for n in node.body if n not in fns]
+            for fn in fns:
+                code += fn.decorator_list + [d for d in fn.args.defaults + fn.args.kw_defaults if d]
+                method = f"{dotted}.{fn.name}"
+                g.defs.add(method)
+                add(method, s, [fn])
+                g.edges[method].add(dotted)
+                dunder = fn.name.startswith("__") and fn.name.endswith("__")
+                g.methods[method] = (dotted, fn.name, dunder or framework(dotted))
+            add(dotted, s, code)
         # decorators, defaults and bases run at import time
+        body = [n for n in s.tree.body if not isinstance(n, _DEF)]
         for node in s.defs.values():
             body += node.decorator_list + getattr(node, "bases", [])
             if not isinstance(node, ast.ClassDef):
                 body += [d for d in node.args.defaults + node.args.kw_defaults if d]
-        roots |= refs(s, body, strings=False)
-    for path in (p for g in ENTRY_FILES for p in ROOT.glob(g)):
-        roots |= refs(_Scope("__entry__", path, False), [_tree(path)])
-    return edges, roots, set(edges)
+        add(f"{m}:", s, body, strings=False)
+        g.roots.add(f"{m}:")
+    for path in (p for pat in ENTRY_FILES for p in ROOT.glob(pat)):
+        add(f"entry:{path}", _Scope("__entry__", path, False), [_tree(path)])
+        g.roots.add(f"entry:{path}")
+    return g
 
 
-def _reach(edges: dict[str, set[str]], start: set[str]) -> set[str]:
-    seen, todo = set(start), list(start)
+def _reach(g: _Graph, start: set[str]) -> set[str]:
+    seen, named, todo = set(), set(), list(start)
     while todo:
-        for name in edges.get(todo.pop(), ()):
-            if name not in seen:
-                seen.add(name)
-                todo.append(name)
+        while todo:
+            node = todo.pop()
+            if node not in seen:
+                seen.add(node)
+                named |= g.attrs.get(node, set())
+                todo.extend(g.edges.get(node, ()))
+        todo = [
+            m for m, (cls, name, always) in g.methods.items()
+            if m not in seen and cls in seen and (always or name in named)
+        ]
     return seen
 
 
 def test_every_top_level_def_is_reached_or_library_api():
-    edges, roots, defs = _graph()
-    unreached = defs - _reach(edges, roots)
+    g = _graph()
+    unreached = g.defs - _reach(g, g.roots)
     stale = sorted(set(LIBRARY_API) - unreached)
     assert not stale, f"LIBRARY_API names missing or reached from a root: {stale}"
     redundant = sorted(
-        k for k in LIBRARY_API
-        if any(k in _reach(edges, edges[j] - {j}) for j in LIBRARY_API if j != k)
+        k for k in LIBRARY_API if k in _reach(g, g.roots | set(LIBRARY_API) - {k})
     )
     assert not redundant, f"LIBRARY_API names reached from another entry: {redundant}"
-    orphans = sorted(unreached - _reach(edges, set(LIBRARY_API)))
-    assert not orphans, f"top-level defs no root or LIBRARY_API entry reaches: {orphans}"
+    orphans = sorted(g.defs - _reach(g, g.roots | set(LIBRARY_API)))
+    assert not orphans, f"defs and methods no root or LIBRARY_API entry reaches: {orphans}"

@@ -638,7 +638,7 @@ def test_two_streaming_queries_feed_one_store_exactly_once(spark, tmp_path, kind
     schema = "doc_id long, text string"
     fns = {name: _factory(kind, spark, store, str(tmp_path / name / "out"))
            for name in ("a", "b")}
-    n_bootstrap = len(TableGroup(spark, store).snapshot_ids())
+    n_bootstrap = TableGroup(spark, store).current_snapshot() or 0
 
     def run(name: str, file: str, rows: list[tuple[int, str]]) -> None:
         inbox = str(tmp_path / name / "inbox")
@@ -691,7 +691,7 @@ def test_two_streaming_queries_feed_one_store_exactly_once(spark, tmp_path, kind
             batches[0].unionAll(batches[1]).unionAll(batches[2]), m=_DSIR_M))
         assert (group.read("raw").agg(F.sum("c")).first()[0]
                 == total.agg(F.sum("c")).first()[0])
-    assert len(group.snapshot_ids()) == n_bootstrap + 3  # one commit per batch
+    assert group.current_snapshot() == n_bootstrap + 3  # one commit per batch
 
 
 @pytest.mark.parametrize("kind", ["minhash", "block", "embedding", "dsir"])
@@ -715,17 +715,17 @@ def test_committed_batch_replay_returns_at_once(spark, tmp_path, kind):
         nxt = spark.createDataFrame([(3, "third doc here " * 4)], "doc_id long, text string")
     fn(batch, 0)
     group = TableGroup(spark, store)
-    snapshots = group.snapshot_ids()
+    snapshots = group.current_snapshot()
     outputs, stored = _files_and_mtimes(out), _files_and_mtimes(store)
     assert any(name.startswith("batch_id=0") for name in outputs)
 
     fn(batch, 0)  # Structured Streaming's at-least-once redelivery
-    assert TableGroup(spark, store).snapshot_ids() == snapshots
+    assert TableGroup(spark, store).current_snapshot() == snapshots
     assert _files_and_mtimes(out) == outputs
     assert _files_and_mtimes(store) == stored
 
     fn(nxt, 1)
-    assert len(TableGroup(spark, store).snapshot_ids()) == len(snapshots) + 1
+    assert TableGroup(spark, store).current_snapshot() == snapshots + 1
 
 
 def test_streaming_ingest_modules_leave_the_query_registry_unloaded():

@@ -63,6 +63,21 @@ def test_read_of_many_commits_runs_no_listing_job(spark, tmp_path):
     assert df.count() == 40
 
 
+def test_crash_between_data_write_and_claim_is_invisible(spark, tmp_path):
+    """The partial-ingest failure the per-table design could expose:
+    data for BOTH tables written, no claim — zero visible change in
+    either table."""
+    grp = TableGroup(spark, str(tmp_path))
+    grp.overwrite("purchase", _p(spark, [(1, 5.0)]))
+    d1 = grp._log.write_data("purchase", _p(spark, [(2, 6.0)]))
+    d2 = grp._log.write_data("operation", _op(spark, [(2, 1, 1)]))
+    assert os.path.isdir(d1) and os.path.isdir(d2)  # orphans exist
+    assert grp.current_snapshot() == 1
+    assert grp.read("purchase").count() == 1
+    with pytest.raises(KeyError):
+        grp.read("operation")
+
+
 def test_exception_inside_txn_commits_nothing(spark, tmp_path):
     grp = TableGroup(spark, str(tmp_path))
     grp.overwrite("purchase", _p(spark, [(1, 5.0)]))
@@ -74,21 +89,6 @@ def test_exception_inside_txn_commits_nothing(spark, tmp_path):
     # nothing moved: purchase still snapshot 1, operation never born
     assert grp.current_snapshot() == 1
     assert [r["id_purchase"] for r in grp.read("purchase").collect()] == [1]
-    with pytest.raises(KeyError):
-        grp.read("operation")
-
-
-def test_crash_between_data_write_and_claim_is_invisible(spark, tmp_path):
-    """The partial-ingest failure the per-table design could expose:
-    data for BOTH tables written, no claim — zero visible change in
-    either table."""
-    grp = TableGroup(spark, str(tmp_path))
-    grp.overwrite("purchase", _p(spark, [(1, 5.0)]))
-    d1, _ = grp._log.write_data("purchase", _p(spark, [(2, 6.0)]))
-    d2, _ = grp._log.write_data("operation", _op(spark, [(2, 1, 1)]))
-    assert os.path.isdir(d1) and os.path.isdir(d2)  # orphans exist
-    assert grp.current_snapshot() == 1
-    assert grp.read("purchase").count() == 1
     with pytest.raises(KeyError):
         grp.read("operation")
 
@@ -269,9 +269,9 @@ def test_group_append_schema_mismatch_fails_loud(spark, tmp_path):
 
 
 def test_group_schema_evolution_additive(spark, tmp_path):
-    """merge_schema parity with the single-table store: an evolving
-    append widens the recorded union (older files NULL-fill), type
-    changes fail loud, and time travel keeps the old vintage."""
+    """merge_schema across a group: an evolving append widens the
+    recorded union (older files NULL-fill), type changes fail loud, and
+    time travel keeps the old vintage."""
     grp = TableGroup(spark, str(tmp_path))
     grp.overwrite("purchase", _p(spark, [(1, 5.0)]))
     wide = spark.createDataFrame(
@@ -293,9 +293,10 @@ def test_group_schema_evolution_additive(spark, tmp_path):
 
 def test_straddling_reads_pin_first_snapshot_not_last(spark, tmp_path):
     """The lost update: A reads table X, writer B
-    commits, A reads table Y (base must NOT advance to B's snapshot),
-    A's overwrite-bearing transaction must fail loud — validating
-    against the LAST read would let A silently clobber B's changes."""
+    commits, A reads table Y and X again (base must NOT advance to B's
+    snapshot), A's overwrite-bearing transaction must fail loud —
+    validating against the LAST read would let A silently clobber B's
+    changes."""
     a = TableGroup(spark, str(tmp_path), writer_id="a")
     b = TableGroup(spark, str(tmp_path), writer_id="b")
     with a.transaction() as t0:
@@ -304,6 +305,7 @@ def test_straddling_reads_pin_first_snapshot_not_last(spark, tmp_path):
     x = a.read("purchase")  # pins A's base at snapshot 1
     b.append("operation", _op(spark, [(9, 9, 9)]))  # B lands snapshot 2
     a.read("operation")  # must NOT re-pin A's base to 2
+    a.read("purchase")  # nor may a second read of the same table
     derived = _p(spark, [(r["id_purchase"], r["total"] + 1.0)
                          for r in x.collect()])
     with pytest.raises(ConcurrentWriteError, match="advanced 1 -> 2"):
@@ -363,16 +365,18 @@ def test_fresh_orphan_survives_default_group_vacuum(spark, tmp_path):
     vacuum must not sweep it."""
     grp = TableGroup(spark, str(tmp_path))
     grp.overwrite("purchase", _p(spark, [(1, 5.0)]))
-    d, _ = grp._log.write_data("purchase", _p(spark, [(2, 6.0)]))
+    d = grp._log.write_data("purchase", _p(spark, [(2, 6.0)]))
     assert grp.vacuum(keep_last=1) == []
     assert os.path.isdir(d)
     assert grp.vacuum(keep_last=1, orphan_retention_s=0) == [d]
 
 
 def test_blind_retry_after_failed_group_txn_keeps_failing(spark, tmp_path):
-    """Group twin of the single-table sentinel test: a failed
-    overwrite-bearing group transaction invalidates the group base —
-    retrying the same stale staging without a re-read fails loud."""
+    """A caller that catches ConcurrentWriteError and retries the SAME
+    stale staging without re-reading must keep failing loud: the
+    failed overwrite-bearing transaction invalidates the group base
+    (a sentinel), it does not clear it, so only an actual re-read
+    re-arms validation."""
     a = TableGroup(spark, str(tmp_path), writer_id="a")
     b = TableGroup(spark, str(tmp_path), writer_id="b")
     a.overwrite("purchase", _p(spark, [(1, 5.0)]))
@@ -393,11 +397,13 @@ def test_blind_retry_after_failed_group_txn_keeps_failing(spark, tmp_path):
 
 
 def test_append_only_txn_stales_group_read_pin(spark, tmp_path):
-    """Group twin of the pin-staling rule: an append-only transaction
-    that reset the group read pin to None would let a following
-    overwrite staged from an EARLIER read skip base validation
-    entirely and clobber concurrent commits. The append-only commit
-    must stale a live pin instead; only a fresh read re-arms."""
+    """Read pins base 1 -> writer B appends (snapshot 2) -> own
+    append-only transaction claims snapshot 3. Resetting the pin to
+    None would let a following overwrite staged from the EARLIER read
+    skip base validation, and advancing it to 3 would let that
+    overwrite validate clean: either clobbers B's rows. The
+    append-only commit must stale a live pin instead; only a fresh
+    read re-arms."""
     a = TableGroup(spark, str(tmp_path), writer_id="a")
     b = TableGroup(spark, str(tmp_path), writer_id="b")
     a.overwrite("purchase", _p(spark, [(1, 5.0)]))
@@ -511,7 +517,7 @@ def test_vacuum_during_inflight_group_txn_real_process_contention(
     assert stale_orphan in swept
     live_dirs = {
         d
-        for sid in grp.snapshot_ids()
+        for sid in range(1, grp.current_snapshot() + 1)
         for entry in grp._log.load(sid)["tables"].values()
         for d in entry["dirs"]
     }
